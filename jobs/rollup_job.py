@@ -17,7 +17,7 @@ or on a cluster::
 Pipeline per slice (slice = doc-id hash bucket; on Iceberg it would be a
 partition/file-scan task):
 
-1. per-sequence kernel stats (fused mapInPandas, zero shuffle)
+1. per-sequence kernel stats (fused mapInArrow, zero shuffle)
 2. append to the raw tier store, partitioned (day, source)
 3. manifest commit: (job_id, slice, input_fingerprint, row_count,
    metrics json, wall) — resume skips committed slices whose fingerprint

@@ -77,26 +77,30 @@ void sliding_stats_int32(const int32_t *restrict vals,
             continue;
         }
         const int32_t *t = vals + s;
-        int64_t ws = 0, ws2 = 0;
+        /* unsigned accumulators: sums of squares of large tokens wrap
+         * modulo 2^64 exactly like numpy's int64 cumsums, and unsigned
+         * wrap (unlike signed overflow) is defined behaviour */
+        uint64_t ws = 0, ws2 = 0;
         for (int64_t i = 0; i < m; i++) {
-            int64_t v = t[i];
+            uint64_t v = (uint64_t)(int64_t)t[i];
             ws += v;
             ws2 += v * v;
         }
-        int64_t acc = ws;
-        double mu = (double)ws / dm;
-        double var = (double)ws2 / dm - mu * mu;
+        uint64_t acc = ws;
+        double mu = (double)(int64_t)ws / dm;
+        double var = (double)(int64_t)ws2 / dm - mu * mu;
         if (var < 0.0)
             var = 0.0;
         double sd = sqrt(var);
         double mn_mu = mu, mx_mu = mu, mn_sd = sd, mx_sd = sd;
         for (int64_t i = m; i < n; i++) {
-            int64_t add = t[i], sub = t[i - m];
+            uint64_t add = (uint64_t)(int64_t)t[i];
+            uint64_t sub = (uint64_t)(int64_t)t[i - m];
             ws += add - sub;
             ws2 += add * add - sub * sub;
             acc += ws;
-            mu = (double)ws / dm;
-            var = (double)ws2 / dm - mu * mu;
+            mu = (double)(int64_t)ws / dm;
+            var = (double)(int64_t)ws2 / dm - mu * mu;
             if (var < 0.0)
                 var = 0.0;
             sd = sqrt(var);
@@ -106,7 +110,7 @@ void sliding_stats_int32(const int32_t *restrict vals,
             mx_sd = sd > mx_sd ? sd : mx_sd;
         }
         n_windows[d] = (int32_t)(n - m + 1);
-        sum_ws[d] = acc;
+        sum_ws[d] = (int64_t)acc;
         min_mean[d] = mn_mu;
         max_mean[d] = mx_mu;
         min_std[d] = mn_sd;

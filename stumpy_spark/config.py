@@ -27,6 +27,3 @@ EXCL_ZONE_DENOM = 4
 
 # Engine-side knobs (not from the reference).
 DEFAULT_SHUFFLE_PARTITIONS = 32
-# Cap on sequence length handled by a single task before the operator
-# switches to the chunked (diagonal-range) scale path.
-MAX_SEQ_LEN_PER_TASK = 65536

@@ -455,11 +455,6 @@ def _pearson_from_qt(QT, mu_A, sig_A, mu_B, sig_B, m, clamp=True):
 #: fills favor a smaller single-tile region than per-row loop fills did.
 ONE_TILE_CELLS = 65536
 
-#: windows at least this long route to the O(n^2) diagonal recurrence
-#: (below it, BLAS GEMM wins on cache-resident tiles; measured crossover
-#: ~m=200 single-threaded on 8k-window series)
-QT_REC_MIN_M = 192
-
 
 def _qt_recurrence_ok(T: np.ndarray, m: int) -> bool:
     """True iff the STOMP QT recurrence is *bit-exact* for this series:
@@ -480,98 +475,35 @@ def _qt_recurrence_ok(T: np.ndarray, m: int) -> bool:
 
 
 class _QTProvider:
-    """Pearson tile source for the blocked matrix-profile kernels.
+    """Pearson / shifted-distance tile source for the blocked GEMM
+    matrix-profile kernels: cache-tiled ``windows_A @ windows_B.T``,
+    O(n^2 m) but BLAS-absorbed."""
 
-    Small ``m``: cache-tiled GEMM (``windows_A @ windows_B.T``), O(n^2 m)
-    but BLAS-absorbed.  Large integer ``m`` (``use_rec``): the tile's
-    first row/column come from two GEMVs and the interior from the exact
-    diagonal recurrence ``QT[i,j] = QT[i-1,j-1] + T_A[i+m-1] T_B[j+m-1]
-    - T_A[i-1] T_B[j-1]`` — O(n^2) total, reference stomp.py:146-149 /
-    stumpi semantics, taken only when :func:`_qt_recurrence_ok` proves it
-    drift-free."""
-
-    def __init__(self, windows_A, windows_B, mu_A, sig_A, mu_B, sig_B,
-                 m, TA=None, TB=None):
+    def __init__(self, windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m):
         self.wA, self.wB = windows_A, windows_B
         self.mu_A, self.sig_A = mu_A, sig_A
         self.mu_B, self.sig_B = mu_B, sig_B
         self.m = m
-        self.TA, self.TB = TA, TB
-        self.use_rec = TA is not None
-        self._mmu_A = None        # sqdist() scale vectors, lazily built
-        self._Ax = None           # xdist() scaled-centered copies (GEMM)
+        self._Ax = None           # xdist() scaled-centered copies
         self._Bx = None
-
-    def _qt(self, r0, r1, c0, c1):
-        """Raw dot-product tile (GEMM, or GEMV-border + recurrence)."""
-        m = self.m
-        if not self.use_rec:
-            return self.wA[r0:r1] @ self.wB[c0:c1].T
-        nr, nc = r1 - r0, c1 - c0
-        QT = np.empty((nr, nc))
-        QT[0, :] = self.wB[c0:c1] @ self.wA[r0]
-        if nr > 1 and nc > 1:
-            QT[1:, 0] = self.wA[r0 + 1:r1] @ self.wB[c0]
-            TA, TB = self.TA, self.TB
-            sub_a = TA[r0:r1 - 1]
-            add_a = TA[r0 + m:r1 - 1 + m]
-            tb_sub = TB[c0:c1 - 1]
-            tb_add = TB[c0 + m:c1 - 1 + m]
-            buf = np.empty(nc - 1)
-            buf2 = np.empty(nc - 1)
-            for i in range(1, nr):
-                np.multiply(tb_add, add_a[i - 1], out=buf)
-                np.multiply(tb_sub, sub_a[i - 1], out=buf2)
-                buf -= buf2
-                buf += QT[i - 1, :-1]
-                QT[i, 1:] = buf
-        elif nr > 1:
-            QT[1:, 0] = self.wA[r0 + 1:r1] @ self.wB[c0]
-        return QT
 
     def pearson(self, r0, r1, c0, c1, clamp=True):
         return _pearson_from_qt(
-            self._qt(r0, r1, c0, c1), self.mu_A[r0:r1], self.sig_A[r0:r1],
-            self.mu_B[c0:c1], self.sig_B[c0:c1], self.m, clamp=clamp)
-
-    def sqdist(self, r0, r1, c0, c1):
-        """Tile straight to *squared* z-norm distance, fused:
-        ``D^2 = (QT - m mu_i mu_j) * (-2/(sig_i sig_j)) + 2m`` with the
-        snap-to-zero threshold applied in squared space (sqrt is
-        monotone, so argmin/threshold semantics are unchanged; same
-        algebra as the diagonal kernel).  Saves the divide, the rho
-        round-trip and the per-cell sqrt of ``pearson`` +
-        ``_rho_to_distance_inplace``.  ``sig == 0`` (constant /
-        non-finite windows) maps to factor 0 -> D^2 = 2m, a finite
-        placeholder always overwritten by the caller's con/fin masks."""
-        m = self.m
-        if self._mmu_A is None:
-            with np.errstate(divide="ignore"):
-                self._mmu_A = m * self.mu_A
-                self._negfac_A = np.where(self.sig_A > 0.0,
-                                          -2.0 / self.sig_A, 0.0)
-                self._mu_B_v = self.mu_B
-                self._rsig_B = np.where(self.sig_B > 0.0,
-                                        1.0 / self.sig_B, 0.0)
-        QT = self._qt(r0, r1, c0, c1)
-        with np.errstate(invalid="ignore"):
-            QT -= np.outer(self._mmu_A[r0:r1], self._mu_B_v[c0:c1])
-            QT *= np.outer(self._negfac_A[r0:r1], self._rsig_B[c0:c1])
-        QT += 2.0 * m
-        QT[QT < config.P_NORM_THRESHOLD] = 0.0
-        return QT
+            self.wA[r0:r1] @ self.wB[c0:c1].T, self.mu_A[r0:r1],
+            self.sig_A[r0:r1], self.mu_B[c0:c1], self.sig_B[c0:c1],
+            self.m, clamp=clamp)
 
     def _build_x(self):
         """Scaled-centered window copies for the zero-pass GEMM tile:
         ``Ax[i] = (wA[i] - mu_i) * (-2/sig_i)``, ``Bx[j] = (wB[j] - mu_j)
         / sig_j`` so ``Ax @ Bx.T = -2m*rho = D^2 - 2m`` directly — the
-        outer-subtract, outer-multiply and ``+2m`` per-tile passes of
-        :meth:`sqdist` all fold into the one GEMM.  Non-finite windows
-        (``mu == inf``) and constant windows (``sig == 0``) become zero
-        rows -> X = 0 (the same finite ``D^2 = 2m`` placeholder sqdist
-        emits), always overwritten by the caller's con/fin masks.
-        Contiguous copies double as the BLAS fast-path operands (GEMM on
-        strided sliding-window views is ~10x slower)."""
+        outer-subtract, outer-multiply and ``+2m`` per-tile passes all
+        fold into the one GEMM.  Non-finite windows (``mu == inf``) and
+        constant windows (``sig == 0``) become zero rows -> X = 0 (a
+        finite ``D^2 = 2m`` placeholder), always overwritten by the
+        caller's con/fin masks.  Contiguous copies double as the BLAS
+        fast-path operands (GEMM on strided sliding-window views is ~10x
+        slower)."""
         with np.errstate(divide="ignore", invalid="ignore"):
             okA = np.isfinite(self.mu_A) & (self.sig_A > 0.0)
             muA = np.where(okA, self.mu_A, 0.0)
@@ -588,33 +520,14 @@ class _QTProvider:
         (monotone shift), callers add ``2m`` back once per finished
         l-vector before the final sqrt.  The snap-to-zero threshold is
         applied in shifted space (``X < thr - 2m  <=>  D^2 < thr``),
-        snapped cells land on exactly ``-2m`` (= D^2 == 0).  GEMM path:
-        one BLAS call per tile and the snap pass — every other per-cell
-        pass of :meth:`sqdist` is folded into the precomputed
-        scaled-centered operands (:meth:`_build_x`).  Recurrence path
-        (large integer m): same passes as :meth:`sqdist` minus the
-        ``+2m``."""
-        m = self.m
-        thr = config.P_NORM_THRESHOLD - 2.0 * m
-        if not self.use_rec:
-            if self._Ax is None:
-                self._build_x()
-            X = self._Ax[r0:r1] @ self._Bx[c0:c1].T
-            X[X < thr] = -2.0 * m
-            return X
-        if self._mmu_A is None:
-            with np.errstate(divide="ignore"):
-                self._mmu_A = m * self.mu_A
-                self._negfac_A = np.where(self.sig_A > 0.0,
-                                          -2.0 / self.sig_A, 0.0)
-                self._mu_B_v = self.mu_B
-                self._rsig_B = np.where(self.sig_B > 0.0,
-                                        1.0 / self.sig_B, 0.0)
-        X = self._qt(r0, r1, c0, c1)
-        with np.errstate(invalid="ignore"):
-            X -= np.outer(self._mmu_A[r0:r1], self._mu_B_v[c0:c1])
-            X *= np.outer(self._negfac_A[r0:r1], self._rsig_B[c0:c1])
-        X[X < thr] = -2.0 * m
+        snapped cells land on exactly ``-2m`` (= D^2 == 0).  One BLAS
+        call per tile and the snap pass — every other per-cell pass is
+        folded into the precomputed scaled-centered operands
+        (:meth:`_build_x`)."""
+        if self._Ax is None:
+            self._build_x()
+        X = self._Ax[r0:r1] @ self._Bx[c0:c1].T
+        X[X < config.P_NORM_THRESHOLD - 2.0 * self.m] = -2.0 * self.m
         return X
 
 
@@ -825,20 +738,30 @@ def _mp_top1_diag(T, mu, sig, m, con, fin, any_con, all_fin, ez,
                 bargr = np.argmin(sub, axis=0)
                 il_[d0 + cols] = cols - (B - 1 - bargr)
             d0 += B
-    left_wins = (pl_ <= pr_) & np.isfinite(pl_)
-    P[:, 0] = np.sqrt(np.minimum(pl_, pr_) + twom)
-    I[:, 0] = np.where(left_wins, il_,
-                       np.where(np.isfinite(pr_), ir_, -1))
+    P[:, 0], I[:, 0] = top1_from_shifted(pl_, pr_, il_, ir_, m)
     PL[:] = np.sqrt(pl_ + twom)
     PR[:] = np.sqrt(pr_ + twom)
     IL[:] = il_
     IR[:] = ir_
 
 
+def top1_from_shifted(pl, pr, il, ir, m):
+    """Top-1 epilogue of the diagonal kernels (numpy and compiled).
+
+    ``pl``/``pr`` are the left/right running minima in the shifted
+    ``D^2 - 2m`` space, ``il``/``ir`` their neighbor indices.  Returns
+    the l-vectors ``P0 = sqrt(min(pl, pr) + 2m)`` and ``I0``: the left
+    neighbor wins exact ties (ascending neighbor order), -1 where no
+    finite neighbor exists."""
+    P0 = np.sqrt(np.minimum(pl, pr) + 2.0 * m)
+    I0 = np.where((pl <= pr) & np.isfinite(pl), il,
+                  np.where(np.isfinite(pr), ir, -1))
+    return P0, I0
+
+
 def _mp_top1_blocked_sym(qtp, windows, mu, sig, m, con, fin, any_con,
                          all_fin, ez, compute_left_right,
-                         P, I, IL, IR, PL, PR,
-                         br: int = 128, bc: int = 128):
+                         P, I, IL, IR, PL, PR):
     """Self-join top-1 profile over upper-triangle cache tiles.
 
     Each tile (r0:r1, c0:c1) with c-block >= r-block is computed once;
@@ -860,8 +783,7 @@ def _mp_top1_blocked_sym(qtp, windows, mu, sig, m, con, fin, any_con,
     symmetric update (present at any tile size) and is absorbed by the
     6-decimal rounding of the correctness oracle."""
     l = windows.shape[0]
-    if l * l <= ONE_TILE_CELLS:
-        br = bc = l
+    br = bc = l if l * l <= ONE_TILE_CELLS else 128
     best_p = np.full(l, np.inf)
     best_j = np.full(l, -1, dtype=np.int64)
     bl_p = np.full(l, np.inf)
@@ -948,31 +870,21 @@ def _mp_top1_blocked_sym(qtp, windows, mu, sig, m, con, fin, any_con,
         IR[:] = np.where(np.isfinite(br_p), br_j, -1)
 
 
-def _mp_top1_blocked(qtp, windows_A, windows_B, mu_A, sig_A, mu_B, sig_B,
-                     m, con_A, con_B, fin_A, fin_B, any_con, all_fin_A,
-                     all_fin_B, self_join, ez, compute_left_right,
-                     P, I, IL, IR, PL, PR,
-                     br: int = 128, bc: int = 128):
-    """Top-1 matrix profile over (br × bc) cache-resident tiles with
-    running per-row minima (and left/right minima for self-joins).
-    Shifted squared-distance space ``D^2 - 2m`` throughout
-    (``qtp.xdist``), un-shift + sqrt once per finished row block."""
+def _mp_top1_blocked(qtp, windows_A, windows_B, m, con_A, con_B, fin_A,
+                     fin_B, any_con, all_fin_A, all_fin_B, P, I):
+    """AB-join top-1 matrix profile over (br × bc) cache-resident tiles
+    with running per-row minima.  Shifted squared-distance space
+    ``D^2 - 2m`` throughout (``qtp.xdist``), un-shift + sqrt once per
+    finished row block."""
     la = windows_A.shape[0]
     lb = windows_B.shape[0]
-    if la * lb <= ONE_TILE_CELLS:
-        # whole matrix fits in cache: one tile, no blocking overhead
-        br, bc = la, lb
+    # whole matrix fits in cache: one tile, no blocking overhead
+    br, bc = (la, lb) if la * lb <= ONE_TILE_CELLS else (128, 128)
     for r0 in range(0, la, br):
         r1 = min(r0 + br, la)
-        nr = r1 - r0
-        rr = np.arange(nr)
-        rows_abs = np.arange(r0, r1)
-        best_p = np.full(nr, np.inf)
-        best_j = np.full(nr, -1, dtype=np.int64)
-        bl_p = np.full(nr, np.inf)
-        bl_j = np.full(nr, -1, dtype=np.int64)
-        br_p = np.full(nr, np.inf)
-        br_j = np.full(nr, -1, dtype=np.int64)
+        rr = np.arange(r1 - r0)
+        best_p = np.full(r1 - r0, np.inf)
+        best_j = np.full(r1 - r0, -1, dtype=np.int64)
         for c0 in range(0, lb, bc):
             c1 = min(c0 + bc, lb)
             D = qtp.xdist(r0, r1, c0, c1)     # D^2 - 2m space throughout
@@ -985,75 +897,34 @@ def _mp_top1_blocked(qtp, windows_A, windows_B, mu_A, sig_A, mu_B, sig_B,
                 D[~fin_A[r0:r1], :] = np.inf
             if not all_fin_B:
                 D[:, ~fin_B[c0:c1]] = np.inf
-            if self_join and c0 - ez <= r1 and r0 - ez <= c1:
-                D[np.abs(np.arange(c0, c1)[None, :]
-                         - rows_abs[:, None]) <= ez] = np.inf
             j = np.argmin(D, axis=1)
             v = D[rr, j]
             upd = v < best_p
             best_p[upd] = v[upd]
             best_j[upd] = j[upd] + c0
-            if self_join and compute_left_right:
-                if c1 <= r0:                     # tile fully left
-                    upd = v < bl_p
-                    bl_p[upd] = v[upd]
-                    bl_j[upd] = j[upd] + c0
-                elif c0 > r1 - 1:                # tile fully right
-                    upd = v < br_p
-                    br_p[upd] = v[upd]
-                    br_j[upd] = j[upd] + c0
-                else:                            # diagonal tile: split
-                    below = (np.arange(c0, c1)[None, :]
-                             >= rows_abs[:, None])
-                    buf = np.where(below, np.inf, D)    # keep j < i
-                    jl = np.argmin(buf, axis=1)
-                    vl = buf[rr, jl]
-                    upd = vl < bl_p
-                    bl_p[upd] = vl[upd]
-                    bl_j[upd] = jl[upd] + c0
-                    np.greater(np.arange(c0, c1)[None, :],
-                               rows_abs[:, None], out=below)
-                    buf = np.where(below, D, np.inf)    # keep j > i
-                    jr = np.argmin(buf, axis=1)
-                    vr = buf[rr, jr]
-                    upd = vr < br_p
-                    br_p[upd] = vr[upd]
-                    br_j[upd] = jr[upd] + c0
-        two_m = 2.0 * m
-        P[rows_abs, 0] = np.sqrt(best_p + two_m)
-        I[rows_abs, 0] = np.where(np.isfinite(best_p), best_j, -1)
-        if self_join and compute_left_right:
-            PL[rows_abs] = np.sqrt(bl_p + two_m)
-            PR[rows_abs] = np.sqrt(br_p + two_m)
-            IL[rows_abs] = np.where(np.isfinite(bl_p), bl_j, -1)
-            IR[rows_abs] = np.where(np.isfinite(br_p), br_j, -1)
+        P[r0:r1, 0] = np.sqrt(best_p + 2.0 * m)
+        I[r0:r1, 0] = np.where(np.isfinite(best_p), best_j, -1)
+
+
 def _mp_top1_c(A: np.ndarray, m: int):
     """Compiled-kernel wrapper: returns ``(P, I, IL, IR, PL, PR)`` or
     None when the C kernel is unavailable or the series is ineligible
-    (non-integer values, constant windows, ...).  The final un-shift +
-    sqrt + left/right combine is the same epilogue as
+    (non-integer values, constant windows, ...).  Same epilogue as
     :func:`_mp_top1_diag` (bit-identical outputs, asserted by
     tests/test_kernels.py::test_ckernel_bit_parity_with_diag)."""
     from . import cnative
 
-    l = A.shape[0] - m + 1
-    if l < 1:
+    if A.shape[0] < m:
         return None
     res = cnative.mp_top1_self_int(A, m, excl_zone(m),
                                    config.P_NORM_THRESHOLD)
     if res is None or res[0] != 0:
         return None
     _, pr_, ir_, pl_, il_ = res
+    P0, I0 = top1_from_shifted(pl_, pr_, il_, ir_, m)
     twom = 2.0 * m
-    P = np.empty((l, 1))
-    I = np.empty((l, 1), dtype=np.int64)
-    left_wins = (pl_ <= pr_) & np.isfinite(pl_)
-    P[:, 0] = np.sqrt(np.minimum(pl_, pr_) + twom)
-    I[:, 0] = np.where(left_wins, il_,
-                       np.where(np.isfinite(pr_), ir_, -1))
-    PL = np.sqrt(pl_ + twom)
-    PR = np.sqrt(pr_ + twom)
-    return P, I, il_, ir_, PL, PR
+    return (P0[:, None], I0[:, None], il_, ir_,
+            np.sqrt(pl_ + twom), np.sqrt(pr_ + twom))
 
 
 def matrix_profile(
@@ -1071,10 +942,17 @@ def matrix_profile(
 
     Semantics of stumpy/stump.py:513-753: for every subsequence of ``T_A``
     return the k nearest subsequences of ``T_B`` (z-normalized Euclidean),
-    plus top-1 left/right neighbors for self-joins.  Executed as blocked
-    GEMM distance matrices (BLAS), or — for integer self-joins where
-    :func:`_use_diag` says it wins — the vectorized diagonal cumsum-STOMP
-    of :func:`_mp_top1_diag`; both exact, memory-bounded, vectorized.
+    plus top-1 left/right neighbors for self-joins.  Routes, first match
+    wins (all exact and memory-bounded):
+
+    1. compiled diagonal STOMP (:func:`_mp_top1_c`): top-1 self-join of
+       an integer series without constant windows or a constant hook;
+    2. numpy diagonal STOMP (:func:`_mp_top1_diag`): top-1 self-join of
+       an integer series where :func:`_use_diag` says it beats GEMM
+       (bit-identical to route 1);
+    3. GEMM tiles (:func:`_mp_top1_blocked_sym` for self-joins,
+       :func:`_mp_top1_blocked` for AB-joins): any other top-1 profile;
+    4. GEMM row blocks with a tie-aware top-k: ``k > 1``.
 
     Returns ``(P, I, IL, IR)``: P (l, k) float64, I (l, k) int64,
     IL/IR (l,) int64 (-1 where absent; IL/IR are meaningless for AB-joins,
@@ -1132,17 +1010,7 @@ def matrix_profile(
         np.lib.stride_tricks.sliding_window_view(B, m))
     windows_A = windows_B if self_join else np.ascontiguousarray(
         np.lib.stride_tricks.sliding_window_view(A, m))
-    # large-m fast path: exact O(n^2) diagonal recurrence instead of
-    # O(n^2 m) GEMM, taken only when provably drift-free (integer series)
-    use_rec = (m >= QT_REC_MIN_M and _qt_recurrence_ok(A, m)
-               and (self_join or _qt_recurrence_ok(B, m)))
-    qtp = _QTProvider(windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m,
-                      TA=A if use_rec else None,
-                      TB=(A if self_join else B) if use_rec else None)
-    # recurrence tiles are wider than tall: the row loop's per-row numpy
-    # overhead amortizes over the column span while QT rows stay
-    # cache-resident (measured best at 256x2048)
-    br_t, bc_t = (256, 2048) if use_rec else (128, 128)
+    qtp = _QTProvider(windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m)
     if k == 1:
         # cache-blocked fast path: 2-D tiles sized to stay in L2/L3 so the
         # elementwise rho→distance passes don't stream DRAM (the full-width
@@ -1154,13 +1022,11 @@ def matrix_profile(
             _mp_top1_blocked_sym(
                 qtp, windows_A, mu_A, sig_A, m, con_A, fin_A, any_con,
                 all_fin_A, ez, compute_left_right,
-                P, I, IL, IR, PL, PR, br=br_t, bc=bc_t)
+                P, I, IL, IR, PL, PR)
         else:
             _mp_top1_blocked(
-                qtp, windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m,
-                con_A, con_B, fin_A, fin_B, any_con, all_fin_A,
-                all_fin_B, False, ez, compute_left_right,
-                P, I, IL, IR, PL, PR, br=br_t, bc=bc_t)
+                qtp, windows_A, windows_B, m, con_A, con_B, fin_A, fin_B,
+                any_con, all_fin_A, all_fin_B, P, I)
         if return_left_right_P:
             return P, I, IL, IR, PL, PR
         return P, I, IL, IR

@@ -1,16 +1,17 @@
 """Per-sequence matrix-profile / MASS / sliding-stat operators.
 
-Spark-first design (SURVEY §2.3): one input row = one sequence, so these are
-**mapInPandas** operators — zero shuffle, each Arrow batch processed
-independently by a vectorized numpy kernel.  The reference's thread-chunked
-diagonal scheme (stumpy/stump.py:252-506) maps to "one task per Arrow batch
-of sequences"; its Dask scatter/gather (stumpy/stumped.py:13-203) maps to
-Spark's own task scheduling — no driver-side collect anywhere.
+Spark-first design (SURVEY §2.3): one input row = one sequence, so these
+are per-batch map operators — zero shuffle, each Arrow batch processed
+independently.  ``sliding_stats`` and ``profile_summary`` are
+``mapInArrow`` over the batch's flat token values + offsets; ``stump``
+and ``mass`` are ``mapInPandas``.  The reference's thread-chunked
+diagonal scheme (stumpy/stump.py:252-506) maps to "one task per Arrow
+batch of sequences"; its Dask scatter/gather (stumpy/stumped.py:13-203)
+maps to Spark's own task scheduling — no driver-side collect anywhere.
 
-Sequences longer than ``config.MAX_SEQ_LEN_PER_TASK`` go through the
-chunked scale path in :mod:`stumpy_spark.plans.longseq` (overlapping
-segments + seam merge); at the fixture scale (max 2048) every sequence is a
-single kernel call.
+Every sequence is one kernel call inside its task; series too long for
+one task are the job of :mod:`stumpy_spark.plans.longseq` (overlapping
+segments + seam merge), which callers choose explicitly.
 
 Column contract: ``id_col`` (string), ``tokens_col`` (array<numeric>).
 Outputs are exploded long-form ``(doc_id, i, ...)`` or per-sequence
@@ -188,60 +189,69 @@ def stump(df: DataFrame, m: int, k: int = 1, normalize: bool = True,
         run, schema=_PROFILE_SCHEMA)
 
 
+def _profile_top1(a, m: int, normalize: bool, p: float):
+    """Top-1 self-join profile ``(P0, I0)`` of one series.
+
+    Integer z-normalized series take the lean compiled route: the
+    kernel's shifted-space minima go straight through the shared
+    epilogue, without the P/I/PL/PR arrays.  Everything else reads
+    column 0 of the full kernels."""
+    if normalize:
+        from .. import cnative
+
+        res = cnative.mp_top1_self_int(
+            a, m, kernels.excl_zone(m), kernels.config.P_NORM_THRESHOLD)
+        if res is not None and res[0] == 0:
+            _, pr, ir, pl, il = res
+            return kernels.top1_from_shifted(pl, pr, il, ir, m)
+        P, I, _, _ = kernels.matrix_profile(a, m, compute_left_right=False)
+    else:
+        P, I, _, _ = kernels.matrix_profile_absolute(a, m, p=p)
+    return P[:, 0], I[:, 0]
+
+
+def _flat_profile_summary(flat, off, m: int, normalize: bool = True,
+                          p: float = 2.0):
+    """Per-document top-1 profile summary of one flat token batch.
+
+    Returns ``(keep, n_windows, min_p, max_p, motif_i, motif_j)``, each
+    of length ``n_docs``.  ``keep`` marks documents with at least ``2m``
+    tokens and one finite profile value; ``min_p``/``max_p`` are NaN and
+    the other arrays 0 elsewhere.  Motif and discord are the first
+    argmin/argmax over the same finite ``P0`` on every route, so the
+    output does not depend on whether the compiled kernel is loaded."""
+    n_docs = len(off) - 1
+    keep = np.zeros(n_docs, dtype=bool)
+    nw = np.zeros(n_docs, dtype=np.int32)
+    minp = np.full(n_docs, np.nan)
+    maxp = np.full(n_docs, np.nan)
+    mi = np.zeros(n_docs, dtype=np.int64)
+    mj = np.zeros(n_docs, dtype=np.int64)
+    for r in range(n_docs):
+        s, e = off[r], off[r + 1]
+        if e - s < 2 * m:
+            continue
+        P0, I0 = _profile_top1(flat[s:e].astype(np.float64), m,
+                               normalize, p)
+        finite = np.isfinite(P0)
+        if not finite.any():
+            continue
+        i = int(np.argmin(np.where(finite, P0, np.inf)))
+        keep[r] = True
+        nw[r] = len(P0)
+        minp[r] = P0[i]
+        maxp[r] = P0[int(np.argmax(np.where(finite, P0, -np.inf)))]
+        mi[r] = i
+        mj[r] = I0[i]
+    return keep, nw, minp, maxp, mi, mj
+
+
 def profile_summary(df: DataFrame, m: int, normalize: bool = True,
                     p: float = 2.0, id_col: str = "doc_id",
                     tokens_col: str = "tokens") -> DataFrame:
     """Per-sequence matrix-profile summary: motif (min P) and discord (max
     finite P) with positions.  One output row per input sequence — the
     shape rollup tiers consume."""
-    def summarize(a):
-        """(n_windows, min_p, max_p, motif_i, motif_j) for one series,
-        or None when no finite profile value exists."""
-        if normalize:
-            P, I, _, _ = kernels.matrix_profile(
-                a, m, compute_left_right=False)
-        else:
-            P, I, _, _ = kernels.matrix_profile_absolute(a, m, p=p)
-        p0 = P[:, 0]
-        finite = np.isfinite(p0)
-        if not finite.any():
-            return None
-        mi = int(np.argmin(np.where(finite, p0, np.inf)))
-        ma = int(np.argmax(np.where(finite, p0, -np.inf)))
-        return len(p0), float(p0[mi]), float(p0[ma]), mi, int(I[mi, 0])
-
-    def summarize_fast(a):
-        """Lean twin of :func:`summarize` on the compiled kernel's raw
-        shifted-space outputs: ``sqrt(x + 2m)`` is strictly increasing
-        (the snap guarantees ``x >= -2m``), so argmin/argmax and their
-        ties are identical in shifted space, and the final values are
-        the same ``sqrt`` expressions — bit-equal results without
-        materializing the P/I arrays.  Returns None to fall back."""
-        if not normalize:
-            return None
-        from .. import cnative
-
-        l = a.shape[0] - m + 1
-        if l < 1:
-            return None
-        res = cnative.mp_top1_self_int(
-            a, m, kernels.excl_zone(m), kernels.config.P_NORM_THRESHOLD)
-        if res is None or res[0] != 0:
-            return None
-        _, pr_, ir_, pl_, il_ = res
-        s = np.minimum(pl_, pr_)
-        if not np.isfinite(s).all():      # rows with no neighbor at all
-            return None
-        twom = 2.0 * m
-        mi = int(np.argmin(s))
-        ma = int(np.argmax(s))
-        if pl_[mi] <= pr_[mi] and np.isfinite(pl_[mi]):
-            mj = int(il_[mi])
-        else:
-            mj = int(ir_[mi]) if np.isfinite(pr_[mi]) else -1
-        return (l, float(np.sqrt(s[mi] + twom)),
-                float(np.sqrt(s[ma] + twom)), mi, mj)
-
     def run(batches) -> "Iterator":
         import pyarrow as pa
 
@@ -249,39 +259,13 @@ def profile_summary(df: DataFrame, m: int, normalize: bool = True,
             if rb.num_rows == 0:
                 continue
             flat, off = _flat_tokens(rb, tokens_col)
-            keep = []
-            nw = []
-            minp = []
-            maxp = []
-            mis = []
-            mjs = []
-            for r in range(rb.num_rows):
-                s, e = off[r], off[r + 1]
-                if e - s < 2 * m:
-                    continue
-                a = flat[s:e].astype(np.float64)
-                row = summarize_fast(a)
-                if row is None:
-                    row = summarize(a)
-                if row is None:
-                    continue
-                keep.append(r)
-                nw.append(row[0])
-                minp.append(row[1])
-                maxp.append(row[2])
-                mis.append(row[3])
-                mjs.append(row[4])
-            if not keep:
+            keep, *cols = _flat_profile_summary(flat, off, m, normalize, p)
+            if not keep.any():
                 continue
-            ids = rb.column(rb.schema.get_field_index(id_col)).take(
-                pa.array(keep, type=pa.int32()))
+            ids = rb.column(rb.schema.get_field_index(id_col)).filter(
+                pa.array(keep))
             yield pa.RecordBatch.from_arrays(
-                [ids,
-                 pa.array(nw, type=pa.int32()),
-                 pa.array(minp, type=pa.float64()),
-                 pa.array(maxp, type=pa.float64()),
-                 pa.array(mis, type=pa.int64()),
-                 pa.array(mjs, type=pa.int64())],
+                [ids] + [pa.array(c[keep]) for c in cols],
                 names=["doc_id", "n_windows", "min_p", "max_p",
                        "motif_i", "motif_j"])
 

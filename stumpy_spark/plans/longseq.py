@@ -1,8 +1,8 @@
 """Distributed matrix profile for a single long sequence.
 
-The scale path for series too long for one task (> config.MAX_SEQ_LEN_PER
-_TASK) — the Spark restatement of the reference's distributed plans
-(stumpy/stumped.py:13-203 z-norm, stumpy/aamped.py:334-441 p-norm):
+The scale path for series too long for one task — the Spark restatement
+of the reference's distributed plans (stumpy/stumped.py:13-203 z-norm,
+stumpy/aamped.py:334-441 p-norm):
 *scatter* the series + stats once (``sc.broadcast``), split the
 distance-matrix workload into **tiles**, and reduce partial per-row
 results with a commutative merge (Catalyst partial/final aggregation).

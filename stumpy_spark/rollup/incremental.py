@@ -8,7 +8,7 @@ store and swapped in atomically, untouched partitions keep their files.
 
 Flow (:func:`upsert_late_rows`):
 
-1. kernel stats for the late rows (same fused mapInPandas as the batch
+1. kernel stats for the late rows (same fused mapInArrow as the batch
    path — one code path, no divergence),
 2. append them to the raw store (partitioned day/source),
 3. collect the affected (day, source) set — this is driver-side metadata,

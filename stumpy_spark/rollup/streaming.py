@@ -1,7 +1,7 @@
 """Structured Streaming tier aggregation with event-time watermark.
 
 The streaming twin of :func:`tiers.rollup_tier`: a streaming tokseq source
-flows through the same fused kernel stage (``mapInPandas`` is stateless,
+flows through the same fused kernel stage (``mapInArrow`` is stateless,
 so it composes with streaming scans), then an event-time window aggregate
 with a watermark bounds state for late data.  Within the watermark a late
 sequence re-aggregates its bucket (exactly the

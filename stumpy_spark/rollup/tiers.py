@@ -72,7 +72,7 @@ def per_sequence_stats(df: DataFrame, m: int = 25) -> DataFrame:
     The kernel output joins back on doc_id; both sides keep their original
     partitioning and the join is a cheap shuffle on the (high-cardinality,
     unskewed) doc_id.  At 10^12 scale this would instead be a single
-    mapInPandas pass emitting the combined row — provided here as the
+    mapInArrow pass emitting the combined row — provided here as the
     default ``fused=True`` path.
     """
     stats = sliding_stats(df, m)
@@ -85,19 +85,22 @@ def per_sequence_stats_fused(df: DataFrame, m: int = 25,
     """Zero-shuffle raw tier: carry source/event_ts through the kernel UDF.
 
     Equivalent to :func:`per_sequence_stats` but emits the combined row in
-    one mapInPandas pass — the 100 TB-scale default (no join, no shuffle).
+    one mapInArrow pass over the batch's flat tokens — the 100 TB-scale
+    default (no join, no shuffle).
 
-    ``include_profile=True`` additionally computes the top-1 matrix-profile
-    min/max per sequence (FIXTURES.md F3's per-sequence kernel outputs) —
-    the MASS-style windowed-kernel component of the north star.  It's the
-    compute-heavy path used by the scaling benchmark; the cheap variant is
-    what the SQL-oracle-checked rollup queries use.
+    ``include_profile=True`` additionally carries the top-1 matrix-profile
+    min/max per sequence (FIXTURES.md F3's per-sequence kernel outputs)
+    from the same per-batch summary as
+    :func:`~stumpy_spark.operators.profile.profile_summary`: ``min_p``/
+    ``max_p`` are NULL exactly where ``profile_summary`` drops the row.
+    It's the compute-heavy path used by the scaling benchmark; the cheap
+    variant is what the SQL-oracle-checked rollup queries use.
     """
     import numpy as np
     from pyspark.sql import types as T
 
-    from .. import kernels
-    from ..operators.profile import _flat_sliding_stats, _flat_tokens
+    from ..operators.profile import (_flat_profile_summary,
+                                     _flat_sliding_stats, _flat_tokens)
 
     fields = [
         T.StructField("doc_id", T.StringType()),
@@ -141,22 +144,7 @@ def per_sequence_stats_fused(df: DataFrame, m: int = 25,
                 maxstd[elig] = mxs_e
             stat_cols = [mins, maxs, minstd, maxstd]
             if include_profile:
-                # per-sequence top-1 profile min/max (compute-heavy
-                # kernel; the compiled diagonal kernel handles each doc)
-                minp = np.full(n, np.nan)
-                maxp = np.full(n, np.nan)
-                for r in range(n):
-                    s, e = off[r], off[r + 1]
-                    if e - s < 2 * m:
-                        continue
-                    P = kernels.matrix_profile(
-                        flat[s:e].astype(np.float64), m,
-                        compute_left_right=False)[0][:, 0]
-                    finite = np.isfinite(P)
-                    if finite.any():
-                        minp[r] = P[finite].min()
-                        maxp[r] = P[finite].max()
-                stat_cols += [minp, maxp]
+                stat_cols += _flat_profile_summary(flat, off, m)[2:4]
             gi = rb.schema.get_field_index
             arrays = [rb.column(gi("doc_id")), rb.column(gi("source")),
                       rb.column(gi("event_ts")), rb.column(gi("n_tok")),

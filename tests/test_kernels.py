@@ -128,7 +128,7 @@ def test_matrix_profile_nan_inf(sub, loc):
 def test_matrix_profile_ab_nan_inf_constant(sub, loc):
     """AB-join masking parity under non-finite punctures on either side
     plus a constant run in T_A: the blocked AB kernel overwrites its
-    sqdist placeholder cells (sig == 0 -> D^2 = 2m) with the con/fin
+    xdist placeholder cells (sig == 0 -> D^2 = 2m) with the con/fin
     masks; every such cell must match the naive oracle exactly."""
     rs = np.random.RandomState(17)
     T_A = rs.uniform(-1000, 1000, 48)
@@ -358,42 +358,6 @@ def test_mass_distance_matrix_rows_equal_mass():
                                 decimal=10)
 
 
-def test_qt_recurrence_large_m_parity():
-    """The large-m exact diagonal-recurrence path (QT_REC_MIN_M) must
-    agree with the GEMM path on integer series.  Values can wobble by
-    <=1 ULP where a pair's two orientations fall in different tile
-    geometries (see _mp_top1_blocked_sym docstring), so compare at
-    oracle precision (6 decimals) and require self-consistent indices."""
-    import numpy as np
-    import numpy.testing as npt
-    from stumpy_spark import kernels
-
-    rs = np.random.RandomState(5)
-    T = rs.randint(0, 50000, 3000).astype(np.float64)
-    m = 256
-    assert kernels._qt_recurrence_ok(T, m)
-    orig = kernels.QT_REC_MIN_M
-    try:
-        kernels.QT_REC_MIN_M = 10 ** 9          # force GEMM
-        P_g, I_g, _, _ = kernels.matrix_profile(T, m)
-        kernels.QT_REC_MIN_M = 192              # recurrence engages
-        P_r, I_r, _, _ = kernels.matrix_profile(T, m)
-    finally:
-        kernels.QT_REC_MIN_M = orig
-    npt.assert_allclose(P_r, P_g, rtol=1e-9)
-    # AB-join + top-k parity too
-    TB = rs.randint(0, 50000, 2000).astype(np.float64)
-    try:
-        kernels.QT_REC_MIN_M = 10 ** 9
-        ref = kernels.matrix_profile(T, m, T_B=TB, k=3)
-        kernels.QT_REC_MIN_M = 192
-        got = kernels.matrix_profile(T, m, T_B=TB, k=3)
-    finally:
-        kernels.QT_REC_MIN_M = orig
-    npt.assert_allclose(got[0], ref[0], rtol=1e-9)
-    npt.assert_array_equal(got[1], ref[1])
-
-
 def test_qt_recurrence_gates():
     """Recurrence only engages when provably exact: integral values,
     magnitude bounded so every partial sum stays under 2^53."""
@@ -433,16 +397,32 @@ def test_topk_ties_constant_windows():
         npt.assert_array_equal(I[i], exp_idx)
 
 
+def _gemm_top1_self(T, m):
+    """Top-1 self-join profile by the GEMM tile route
+    (_mp_top1_blocked_sym), whatever matrix_profile would dispatch to."""
+    A, mu, sig, fin, con = kernels.preprocess(T, m)
+    w = np.ascontiguousarray(np.lib.stride_tricks.sliding_window_view(A, m))
+    l = w.shape[0]
+    P = np.full((l, 1), np.inf)
+    I = np.full((l, 1), -1, dtype=np.int64)
+    IL = np.full(l, -1, dtype=np.int64)
+    IR = np.full(l, -1, dtype=np.int64)
+    PL = np.full(l, np.inf)
+    PR = np.full(l, np.inf)
+    qtp = kernels._QTProvider(w, w, mu, sig, mu, sig, m)
+    kernels._mp_top1_blocked_sym(qtp, w, mu, sig, m, con, fin,
+                                 bool(con.any()), bool(fin.all()),
+                                 kernels.excl_zone(m), True,
+                                 P, I, IL, IR, PL, PR)
+    return P, I, IL, IR, PL, PR
+
+
 def test_diag_kernel_parity_randomized():
     """The vectorized diagonal-STOMP path (_mp_top1_diag) must agree
     with the blocked GEMM path across lengths, window sizes, vocab
     skews, constant runs, and NaN punctures.  Values may differ by
     <=1 ULP (pair-orientation asymmetry, see _mp_top1_blocked_sym
-    docstring), so P/PL/PR compare at 1e-8 and indices must point at
-    equal-at-1e-8 distances."""
-    import numpy as np
-    from stumpy_spark import kernels
-
+    docstring), so P/PL/PR compare at 1e-8."""
     rng = np.random.default_rng(42)
     for trial in range(18):
         n = [150, 300, 700, 1500, 3000][trial % 5]
@@ -462,13 +442,7 @@ def test_diag_kernel_parity_randomized():
             if not kernels._use_diag(n - m + 1, m):
                 continue
         r_diag = kernels.matrix_profile(T, m, return_left_right_P=True)
-        orig = kernels.DIAG_MIN_L
-        try:
-            kernels.DIAG_MIN_L = 10 ** 9        # force the GEMM path
-            r_gemm = kernels.matrix_profile(T, m,
-                                            return_left_right_P=True)
-        finally:
-            kernels.DIAG_MIN_L = orig
+        r_gemm = _gemm_top1_self(T, m)
         for nm, a, b in zip(["P", "I", "IL", "IR", "PL", "PR"],
                             r_diag, r_gemm):
             if nm in ("P", "PL", "PR"):
@@ -499,17 +473,13 @@ def test_mueen_distance_profile_equals_mass():
         kernels.mueen_calculate_distance_profile(Q, T), decimal=PRECISION)
 
 
-def test_xdist_matches_sqdist_shifted():
+def test_xdist_matches_pearson_shifted():
     """_QTProvider.xdist (scaled-centered GEMM operands, shifted
-    D^2 - 2m space) must equal sqdist - 2m on both provider paths —
-    including NaN-punctured, constant, and sig==0 placeholder cells
-    (both schemes emit the same finite 2m placeholder there).  The
-    operand fold changes the rounding route (per-element scaling vs
-    per-cell outer), so values compare at 1e-9 absolute, and snapped
-    cells must land on exactly -2m."""
-    import numpy as np
-    from stumpy_spark import kernels
-
+    D^2 - 2m space) must equal -2m * rho from the unfolded Pearson
+    tile, snapped the same way — including NaN-punctured, constant, and
+    sig==0 placeholder cells.  The operand fold changes the rounding
+    route (per-element scaling vs per-cell outer), so values compare at
+    1e-9 absolute, and snapped cells must land on exactly -2m."""
     rng = np.random.default_rng(7)
     for trial in range(8):
         n = [120, 400, 900][trial % 3]
@@ -524,23 +494,16 @@ def test_xdist_matches_sqdist_shifted():
         A, mu, sig, fin, con = kernels.preprocess(T, m)
         w = np.ascontiguousarray(
             np.lib.stride_tricks.sliding_window_view(A, m))
-        use_rec = m >= kernels.QT_REC_MIN_M and kernels._qt_recurrence_ok(
-            A, m) and not trial % 2
-        qtp = kernels._QTProvider(w, w, mu, sig, mu, sig, m,
-                                  TA=A if use_rec else None,
-                                  TB=A if use_rec else None)
+        qtp = kernels._QTProvider(w, w, mu, sig, mu, sig, m)
         l = w.shape[0]
         r0, r1 = 3, min(l, 90)
         c0, c1 = 1, min(l, 77)
         X = qtp.xdist(r0, r1, c0, c1)
-        qtp2 = kernels._QTProvider(w, w, mu, sig, mu, sig, m,
-                                   TA=A if use_rec else None,
-                                   TB=A if use_rec else None)
-        D2 = qtp2.sqdist(r0, r1, c0, c1)
-        ref = D2 - 2.0 * m
+        ref = qtp.pearson(r0, r1, c0, c1, clamp=False) * (-2.0 * m)
+        ref[ref < kernels.config.P_NORM_THRESHOLD - 2.0 * m] = -2.0 * m
         # compare only rows/cols both paths treat as live: non-finite
         # windows get a zero row in xdist (finite placeholder) but a
-        # NaN/inf row in sqdist — the callers' fin masks overwrite both
+        # NaN/inf row in pearson — the callers' fin masks overwrite both
         live_r = fin[r0:r1] & (sig[r0:r1] > 0)
         live_c = fin[c0:c1] & (sig[c0:c1] > 0)
         both = live_r[:, None] & live_c[None, :]
@@ -678,3 +641,59 @@ def test_c_sliding_stats_bit_parity():
                   got[5][elig]]
         for i, (a, b) in enumerate(zip(packed, ref[1:])):
             assert np.array_equal(a, b), (m, i)
+
+
+def _fresh_cnative(monkeypatch, cache_dir):
+    """Point cnative at ``cache_dir`` with no kernel loaded yet (state is
+    restored by monkeypatch after the test)."""
+    from stumpy_spark import cnative
+
+    monkeypatch.setenv("STUMPY_SPARK_CKERNEL_DIR", str(cache_dir))
+    monkeypatch.delenv("STUMPY_SPARK_NO_CKERNEL", raising=False)
+    monkeypatch.setattr(cnative, "_fn", None)
+    monkeypatch.setattr(cnative, "_failed", False)
+    monkeypatch.setattr(cnative, "_reason", None)
+    return cnative
+
+
+def test_cnative_build_failure_reason(tmp_path, monkeypatch):
+    """A failed compile disables the kernel and keeps gcc's stderr in
+    status() instead of swallowing it."""
+    import shutil
+
+    if shutil.which("gcc") is None:
+        pytest.skip("no gcc")
+    cnative = _fresh_cnative(monkeypatch, tmp_path / "ck")
+    bad = tmp_path / "broken.c"
+    bad.write_text("int mp_top1_self_int(void) { return 0 }\n")
+    monkeypatch.setattr(cnative, "_SRC", str(bad))
+    assert cnative.load() is None
+    st = cnative.status()
+    assert st["loaded"] is False
+    assert "gcc exited" in st["reason"] and "error" in st["reason"]
+    assert cnative.mp_top1_self_int(np.arange(40.0), 8, 2, 1e-14) is None
+
+
+def test_cnative_refuses_writable_cache_dir(tmp_path, monkeypatch):
+    """A group/world-writable kernel cache dir is refused before any
+    build or dlopen; a private 0755 dir owned by the user loads."""
+    import os
+
+    shared = tmp_path / "shared"
+    shared.mkdir()
+    os.chmod(shared, 0o777)
+    cnative = _fresh_cnative(monkeypatch, shared)
+    assert cnative.load() is None
+    reason = cnative.status()["reason"]
+    assert f"refusing {shared}" in reason and "writable" in reason
+    assert os.listdir(shared) == []
+
+    own = tmp_path / "own"
+    own.mkdir()
+    os.chmod(own, 0o755)
+    cnative = _fresh_cnative(monkeypatch, own)
+    if cnative.load() is None:
+        pytest.skip(f"compiled kernel unavailable: {cnative.status()}")
+    assert cnative.status() == {"loaded": True, "reason": None}
+    so, = os.listdir(own)
+    assert not os.stat(own / so).st_mode & 0o022

@@ -112,29 +112,82 @@ def test_sliding_stats_exact(spark, seq_df):
         assert row.sum_window_sums == wsum
 
 
-def test_profile_summary_fast_path_parity(spark):
-    """profile_summary's lean compiled-kernel summary path must produce
-    row-identical output to the numpy fallback route."""
-    import numpy as np
-    import pandas as pd
-    from stumpy_spark import cnative
-    from stumpy_spark import operators as ops
-    from stumpy_spark.sources import tokseq
+def _planted_batch(m, seed):
+    """Flat int32 batch (values, offsets) of mixed-length token docs:
+    too short, boundary lengths, planted exact-duplicate windows (motif
+    ties) and leading constant runs (compiled-kernel fallback)."""
+    rng = np.random.default_rng(seed)
+    docs = []
+    for k in range(60):
+        n = int(rng.choice([m, 2 * m - 1, 2 * m, 3 * m, 300, 700]))
+        t = rng.integers(0, int(rng.choice([5, 56, 1000, 50257])), n)
+        if n >= 3 * m and k % 3:
+            i0 = int(rng.integers(0, n // 2 - m))
+            j0 = int(rng.integers(n // 2, n - m))
+            t[j0:j0 + m] = t[i0:i0 + m]
+        if k % 7 == 0 and n >= 2 * m:
+            t[:m + 2] = 9
+        docs.append(t.astype(np.int32))
+    flat = np.concatenate(docs)
+    off = np.concatenate(
+        [[0], np.cumsum([len(d) for d in docs])]).astype(np.int64)
+    return flat, off
+
+
+def test_profile_summary_fast_path_parity(monkeypatch):
+    """The per-batch profile summary gives the same rows with the
+    compiled kernel loaded and without it.  m=96 falls back to the
+    numpy diagonal kernel: bit-identical, motif indices included.  m=8
+    falls back to GEMM tiles, whose squared distances differ from the
+    diagonal kernel's in the last bits (~1e-14): discords match at
+    1e-9, motif values at 1e-12 in squared space (sqrt magnifies
+    near-zero differences), and every reported motif pair lies outside
+    the exclusion zone at distance ``min_p``."""
+    from stumpy_spark import cnative, kernels
 
     if cnative.load() is None:
-        import pytest
         pytest.skip("compiled kernel unavailable")
+    for m in (96, 8):
+        flat, off = _planted_batch(m, seed=m)
+        on = ops._flat_profile_summary(flat, off, m)
+        with monkeypatch.context() as mp:
+            mp.setattr(cnative, "_fn", None)
+            mp.setattr(cnative, "_failed", True)
+            fb = ops._flat_profile_summary(flat, off, m)
+        keep = on[0]
+        assert keep.sum() >= 30 and (~keep).sum() >= 5
+        assert (on[2][keep] == 0).sum() >= 5        # planted repeats
+        if m == 96:
+            for a, b in zip(on, fb):
+                assert np.array_equal(a, b, equal_nan=True)
+            continue
+        for a, b in zip(on[:2], fb[:2]):
+            assert np.array_equal(a, b)
+        npt.assert_allclose(on[3][keep], fb[3][keep], rtol=0, atol=1e-9)
+        npt.assert_allclose(on[2][keep] ** 2, fb[2][keep] ** 2, rtol=0,
+                            atol=1e-12)
+        for r in np.flatnonzero(keep):
+            T = flat[off[r]:off[r + 1]].astype(np.float64)
+            for _, _, minp, _, mi, mj in (on, fb):
+                assert abs(mi[r] - mj[r]) > kernels.excl_zone(m)
+                d = naive.znorm_dist(T[mi[r]:mi[r] + m], T[mj[r]:mj[r] + m])
+                assert abs(d * d - minp[r] ** 2) < 1e-9, (r, mi[r], mj[r])
+
+
+def test_fused_tier_profile_matches_profile_summary(spark):
+    """The fused raw tier's min_p/max_p are profile_summary's values,
+    and NULL exactly where profile_summary drops the sequence."""
+    from stumpy_spark.rollup import tiers
+    from stumpy_spark.sources import tokseq
+
     df = tokseq.tokseq_df(spark, 300, partitions=2)
-    got = (ops.profile_summary(df, 8).toPandas()
-           .sort_values("doc_id").reset_index(drop=True))
-    try:
-        cnative._failed = True
-        saved, cnative._fn = cnative._fn, None
-        ref = (ops.profile_summary(df, 8).toPandas()
-               .sort_values("doc_id").reset_index(drop=True))
-    finally:
-        cnative._fn = saved
-        cnative._failed = False
-    pd.testing.assert_frame_equal(got, ref)
-    assert (got.n_windows > 0).all()
-    assert np.isfinite(got.min_p).all()
+    m = 8
+    summ = ops.profile_summary(df, m).toPandas().set_index("doc_id")
+    raw = (tiers.per_sequence_stats_fused(df, m, include_profile=True)
+           .toPandas().set_index("doc_id"))
+    assert len(raw) == 300 and 0 < len(summ) < len(raw)
+    kept = raw.index.isin(summ.index)
+    assert raw.min_p[~kept].isna().all() and raw.max_p[~kept].isna().all()
+    got = raw.loc[summ.index]
+    assert np.array_equal(got.min_p.to_numpy(), summ.min_p.to_numpy())
+    assert np.array_equal(got.max_p.to_numpy(), summ.max_p.to_numpy())
