@@ -423,36 +423,25 @@ def mueen_calculate_distance_profile(Q: np.ndarray,
 # ---------------------------------------------------------------------------
 
 def _pearson_block(windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m):
-    """QT block via GEMM -> rho block, all in-place on the GEMM output.
+    """QT block via GEMM -> rho block (clamped <= 1), all in-place on the
+    GEMM output.
 
     Exact (no recurrence drift).  sigma==0 columns produce denom 0 →
     clamped to DENOM_THRESHOLD (callers overwrite constant/non-finite
     cells afterwards anyway)."""
     QT = windows_A @ windows_B.T            # (ba, lb) BLAS
-    return _pearson_from_qt(QT, mu_A, sig_A, mu_B, sig_B, m)
-
-
-def _pearson_from_qt(QT, mu_A, sig_A, mu_B, sig_B, m, clamp=True):
-    """Normalize a raw dot-product block to Pearson rho, in place.
-
-    ``clamp=False`` skips the rho <= 1 pass for callers that immediately
-    run ``_rho_to_distance_inplace(..., clamped=False)`` — the distance
-    threshold maps any rho > 1 to exactly 0 there, so the fused pair is
-    value-identical with two fewer full-matrix passes."""
     QT -= np.outer(m * mu_A, mu_B)
     denom = np.outer(m * sig_A, sig_B)
     np.maximum(denom, config.DENOM_THRESHOLD, out=denom)
     QT /= denom
-    if clamp:
-        np.minimum(QT, 1.0, out=QT)
+    np.minimum(QT, 1.0, out=QT)
     return QT
 
 
 #: matrices up to this many cells run as a single tile (no blocking
-#: overhead); above it, cache-sized tiles.  Tuned on the real short-doc
-#: length mix (cost-weighted sweep over the sf0.01 n_tok distribution):
-#: 65536 (l <= 256) beat 262144 by ~23% — the vectorized band/split
-#: fills favor a smaller single-tile region than per-row loop fills did.
+#: overhead); above it, 128-square cache tiles.  Tuned on the real
+#: short-doc length mix (cost-weighted sweep over the sf0.01 n_tok
+#: distribution): 65536 (l <= 256) beat 262144 by ~23%.
 ONE_TILE_CELLS = 65536
 
 
@@ -474,80 +463,298 @@ def _qt_recurrence_ok(T: np.ndarray, m: int) -> bool:
     return bool(np.all(T == np.floor(T)))
 
 
-class _QTProvider:
-    """Pearson / shifted-distance tile source for the blocked GEMM
-    matrix-profile kernels: cache-tiled ``windows_A @ windows_B.T``,
-    O(n^2 m) but BLAS-absorbed."""
+#: the row operand of every tile GEMM is padded with zero rows to a
+#: multiple of this, the column operand to at least 2 rows.  OpenBLAS
+#: sums a cell of a call's trailing partial row panel (and of each
+#: thread's share of a threaded call) in a different order than a cell
+#: of a full panel, and numpy sends a 1-row or 1-column product to
+#: gemv/dot; without the padding a cell's value would depend on the tile
+#: geometry, so a tiled plan could disagree with the single-task sweep
+#: in the last ULP and flip a near-tie.  Observed bit-identical across
+#: tile shapes, offsets and 1 vs 2 BLAS threads for m <= 256 (an
+#: OpenBLAS 0.3.23 build); a threaded call with m > 256 splits the inner
+#: dimension differently.
+_GEMM_ROWS = 32
 
-    def __init__(self, windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m):
-        self.wA, self.wB = windows_A, windows_B
-        self.mu_A, self.sig_A = mu_A, sig_A
-        self.mu_B, self.sig_B = mu_B, sig_B
-        self.m = m
-        self._Ax = None           # xdist() scaled-centered copies
-        self._Bx = None
 
-    def pearson(self, r0, r1, c0, c1, clamp=True):
-        return _pearson_from_qt(
-            self.wA[r0:r1] @ self.wB[c0:c1].T, self.mu_A[r0:r1],
-            self.sig_A[r0:r1], self.mu_B[c0:c1], self.sig_B[c0:c1],
-            self.m, clamp=clamp)
+class _TileSource:
+    """Tile-distance source: row windows ``rows = (r0, r1)`` of series A
+    against column windows ``cols = (c0, c1)`` of series B, addressed by
+    absolute window offsets.  Only the two window slices are
+    materialized, so a source over tile-sized ranges costs O(tile * m),
+    never O(l * m).
 
-    def _build_x(self):
-        """Scaled-centered window copies for the zero-pass GEMM tile:
-        ``Ax[i] = (wA[i] - mu_i) * (-2/sig_i)``, ``Bx[j] = (wB[j] - mu_j)
-        / sig_j`` so ``Ax @ Bx.T = -2m*rho = D^2 - 2m`` directly — the
-        outer-subtract, outer-multiply and ``+2m`` per-tile passes all
-        fold into the one GEMM.  Non-finite windows (``mu == inf``) and
-        constant windows (``sig == 0``) become zero rows -> X = 0 (a
-        finite ``D^2 = 2m`` placeholder), always overwritten by the
-        caller's con/fin masks.  Contiguous copies double as the BLAS
-        fast-path operands (GEMM on strided sliding-window views is ~10x
-        slower)."""
-        with np.errstate(divide="ignore", invalid="ignore"):
-            okA = np.isfinite(self.mu_A) & (self.sig_A > 0.0)
-            muA = np.where(okA, self.mu_A, 0.0)
-            facA = np.where(okA, -2.0 / self.sig_A, 0.0)
-            self._Ax = (self.wA - muA[:, None]) * facA[:, None]
-            okB = np.isfinite(self.mu_B) & (self.sig_B > 0.0)
-            muB = np.where(okB, self.mu_B, 0.0)
-            facB = np.where(okB, 1.0 / self.sig_B, 0.0)
-            self._Bx = (self.wB - muB[:, None]) * facB[:, None]
+    :meth:`xdist` returns a tile in the source's root-deferred space
+    (monotone in the distance, so min/argmin/top-k are unchanged) with
+    every special case already applied — snap-to-zero, constant windows,
+    and inf for non-finite rows/columns; :meth:`dist` maps finished
+    values back to distances."""
 
-    def xdist(self, r0, r1, c0, c1):
-        """Tile of ``D^2 - 2m`` (root-deferred squared z-norm distance,
-        shifted by the constant ``-2m``): min/argmin order is unchanged
-        (monotone shift), callers add ``2m`` back once per finished
-        l-vector before the final sqrt.  The snap-to-zero threshold is
-        applied in shifted space (``X < thr - 2m  <=>  D^2 < thr``),
-        snapped cells land on exactly ``-2m`` (= D^2 == 0).  One BLAS
-        call per tile and the snap pass — every other per-cell pass is
-        folded into the precomputed scaled-centered operands
-        (:meth:`_build_x`)."""
-        if self._Ax is None:
-            self._build_x()
-        X = self._Ax[r0:r1] @ self._Bx[c0:c1].T
-        X[X < config.P_NORM_THRESHOLD - 2.0 * self.m] = -2.0 * self.m
+    def __init__(self, fin_A, fin_B, rows, cols):
+        self.r0, self.r1 = rows if rows else (0, len(fin_A))
+        self.c0, self.c1 = cols if cols else (0, len(fin_B))
+        self._fa = fin_A[self.r0:self.r1]
+        self._fb = fin_B[self.c0:self.c1]
+        self._all_fin = bool(self._fa.all()) and bool(self._fb.all())
+
+    @staticmethod
+    def _operand(W, lo, hi, pad):
+        """Contiguous ``W[lo:hi]`` plus ``pad`` trailing zero rows (BLAS
+        GEMM on strided sliding-window views is ~10x slower)."""
+        out = np.zeros((hi - lo + pad, W.shape[1]))
+        out[:hi - lo] = W[lo:hi]
+        return out
+
+    def _gemm(self, i0, i1, j0, j1):
+        """``Ax[i0:i1] @ Bx[j0:j1].T`` (local offsets), shaped per
+        :data:`_GEMM_ROWS` so every cell's value is independent of the
+        tile geometry."""
+        nr, nc = i1 - i0, j1 - j0
+        X = (self._Ax[i0:i0 + -(-nr // _GEMM_ROWS) * _GEMM_ROWS]
+             @ self._Bx[j0:j0 + max(nc, 2)].T)
+        return X[:nr, :nc]
+
+    def xdist(self, a0, a1, b0, b1):
+        i0, i1 = a0 - self.r0, a1 - self.r0
+        j0, j1 = b0 - self.c0, b1 - self.c0
+        X = self._tile(i0, i1, j0, j1)
+        if not self._all_fin:
+            X[~self._fa[i0:i1], :] = np.inf
+            X[:, ~self._fb[j0:j1]] = np.inf
         return X
 
 
-def _rho_to_distance_inplace(rho, m, clamped=True):
-    """rho block -> z-norm distance block, in place: D = sqrt(|2m(1-rho)|)
-    with snap-to-zero (stump.py:482-506).
+class _QTProvider(_TileSource):
+    """z-norm source over :func:`preprocess` tuples: tiles of the shifted
+    squared distance ``D^2 - 2m``, one GEMM each on scaled-centered
+    operands ``Ax[i] = (w_i - mu_i) * (-2/sig_i)``, ``Bx[j] = (w_j -
+    mu_j) / sig_j`` so ``Ax @ Bx.T = -2m*rho = D^2 - 2m`` — the
+    outer-subtract, outer-multiply and ``+2m`` per-tile passes all fold
+    into the one GEMM.  Non-finite (``mu == inf``) and constant (``sig ==
+    0``) windows become zero rows, a finite placeholder the masks
+    overwrite.  Snap-to-zero runs in shifted space (``X < thr - 2m <=>
+    D^2 < thr``); snapped cells land on exactly ``-2m``."""
 
-    ``clamped=False`` accepts unclamped rho (may exceed 1): 2m(1-rho) is
-    then negative and falls below the snap-to-zero threshold, producing
-    the same 0 the clamp+abs path produces — one less full-matrix pass,
-    bit-identical output."""
-    rho -= 1.0
-    rho *= -2.0 * m
-    if clamped:
-        np.abs(rho, out=rho)
-    rho[rho < config.P_NORM_THRESHOLD] = 0.0
-    np.sqrt(rho, out=rho)
-    return rho
+    def __init__(self, prep_A, prep_B, m, rows=None, cols=None):
+        TA, muA, sigA, finA, conA = prep_A
+        TB, muB, sigB, finB, conB = prep_B
+        super().__init__(finA, finB, rows, cols)
+        self.m = m
+        self._Ax = self._scaled(TA, muA, sigA, self.r0, self.r1, -2.0,
+                                _GEMM_ROWS - 1)
+        self._Bx = self._scaled(TB, muB, sigB, self.c0, self.c1, 1.0, 1)
+        self._ca = conA[self.r0:self.r1]
+        self._cb = conB[self.c0:self.c1]
+        self._any_con = bool(self._ca.any()) or bool(self._cb.any())
+
+    def _scaled(self, T, mu, sig, lo, hi, num, pad):
+        W = np.lib.stride_tricks.sliding_window_view(T, self.m)
+        mu, sig = mu[lo:hi], sig[lo:hi]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ok = np.isfinite(mu) & (sig > 0.0)
+            fac = np.where(ok, num / sig, 0.0)
+            out = self._operand(W, lo, hi, pad)
+            out[:hi - lo] -= np.where(ok, mu, 0.0)[:, None]
+            out[:hi - lo] *= fac[:, None]
+        return out
+
+    def _tile(self, i0, i1, j0, j1):
+        m = self.m
+        X = self._gemm(i0, i1, j0, j1)
+        X[X < config.P_NORM_THRESHOLD - 2.0 * m] = -2.0 * m
+        if self._any_con:
+            ca = self._ca[i0:i1][:, None]
+            cb = self._cb[j0:j1][None, :]
+            X[ca & cb] = -2.0 * m         # D^2 == 0
+            X[ca ^ cb] = -float(m)        # D^2 == m
+        return X
+
+    def dist(self, x):
+        return np.sqrt(x + 2.0 * self.m)
 
 
+def _preprocess_abs(T, m):
+    """aamp preprocessing (aamp.py:38-55): ``(T_clean, sq, fin)`` —
+    non-finite values zeroed (not nan_to_num, whose inf -> 1.8e308
+    overflows the sums of masked cells), window square sums for the
+    p == 2 GEMM expansion, and the finite-window mask."""
+    T = np.asarray(T, dtype=np.float64)
+    Tc = np.where(np.isfinite(T), T, 0.0)
+    cs = np.concatenate(([0.0], np.cumsum(Tc * Tc)))
+    return Tc, cs[m:] - cs[:-m], rolling_isfinite(T, m)
+
+
+class _PNormSource(_TileSource):
+    """p-norm (aamp) source over :func:`_preprocess_abs` tuples: tiles of
+    ``D^p``.  p == 2 uses the GEMM expansion ``|a|^2 - 2 a.b + |b|^2``
+    (``Ax = -2 * windows`` folds the factor into the GEMM) and recomputes
+    the cells where it cancels catastrophically — near-duplicate pairs —
+    directly, so exact repeats come out exactly 0; any other p
+    accumulates ``|a_o - b_o|^p`` offset by offset, O(tile) memory."""
+
+    def __init__(self, prep_A, prep_B, m, p=2.0, rows=None, cols=None):
+        TA, a2, finA = prep_A
+        TB, b2, finB = prep_B
+        super().__init__(finA, finB, rows, cols)
+        self.m, self.p = m, p
+        self._TA, self._TB = TA, TB
+        if p == 2.0:
+            W = np.lib.stride_tricks.sliding_window_view
+            self._Ax = self._operand(W(TA, m), self.r0, self.r1,
+                                     _GEMM_ROWS - 1)
+            self._Ax *= -2.0
+            self._Bx = self._operand(W(TB, m), self.c0, self.c1, 1)
+            self._a2 = a2[self.r0:self.r1]
+            self._b2 = b2[self.c0:self.c1]
+
+    def _tile(self, i0, i1, j0, j1):
+        if self.p != 2.0:
+            a0, b0 = self.r0 + i0, self.c0 + j0
+            nr, nc = i1 - i0, j1 - j0
+            X = np.zeros((nr, nc))
+            for o in range(self.m):
+                X += np.abs(self._TA[a0 + o:a0 + o + nr, None]
+                            - self._TB[None, b0 + o:b0 + o + nc]) ** self.p
+            return X
+        a2 = self._a2[i0:i1][:, None]
+        b2 = self._b2[j0:j1][None, :]
+        X = self._gemm(i0, i1, j0, j1)
+        X += a2
+        X += b2
+        np.maximum(X, 0.0, out=X)
+        suspect = X <= 1e-8 * (a2 + b2)
+        if suspect.any():
+            si, sj = np.nonzero(suspect)
+            diff = self._Ax[i0 + si] * -0.5 - self._Bx[j0 + sj]
+            X[si, sj] = np.einsum("ij,ij->i", diff, diff)
+        return X
+
+    def dist(self, x):
+        return np.sqrt(x) if self.p == 2.0 else x ** (1.0 / self.p)
+
+
+def _mask_band(X, a0, b0, ez, lower=False):
+    """inf on the exclusion band ``|j - i| <= ez`` of the tile whose
+    first cell is (a0, b0); ``lower=True`` masks every ``j - i <= ez``
+    (band plus lower triangle).  Only the columns the band reaches are
+    touched."""
+    nr, nc = X.shape
+    lo = 0 if lower else max(0, a0 - ez - b0)
+    hi = min(nc, a0 + nr + ez - b0)
+    if lo < hi:
+        d = np.arange(b0 + lo, b0 + hi)[None, :] \
+            - np.arange(a0, a0 + nr)[:, None]
+        X[:, lo:hi][(d if lower else np.abs(d)) <= ez] = np.inf
+
+
+def _improve(pv, jv, lo, vals, js):
+    """First-strictly-smaller running-min update of ``pv/jv[lo:...]`` —
+    candidates arrive in ascending neighbor order, so this keeps the
+    smallest neighbor index among exact ties."""
+    sl_p = pv[lo:lo + len(vals)]
+    sl_j = jv[lo:lo + len(vals)]
+    better = vals < sl_p
+    sl_p[better] = vals[better]
+    sl_j[better] = js[better]
+
+
+def _top1(pl, pr, il, ir, dist):
+    """Top-1 ``(P, I)`` from left/right running minima in a source's
+    root-deferred space: the left neighbor wins exact ties (ascending
+    neighbor order), -1 where no finite neighbor exists."""
+    I = np.where((pl <= pr) & np.isfinite(pl), il,
+                 np.where(np.isfinite(pr), ir, -1))
+    return dist(np.minimum(pl, pr)), I
+
+
+def _top1_sweep(src, r0, r1, c0, c1, ez):
+    """The top-1 GEMM matrix profile of rows r0:r1 against columns c0:c1
+    of a tile-distance source; ``ez >= 0`` is a self-join (exclusion
+    band ``|j - i| <= ez``, left/right profiles), ``ez < 0`` an AB-join.
+
+    A self-join block is either diagonal (same row and column range) or
+    strictly above the diagonal (``c0 >= r1``).  Every pair is evaluated
+    once, in the orientation row < column, on the upper triangle of
+    (``ONE_TILE_CELLS``-single, else 128-square) cache tiles: a tile's
+    row minima are its rows' right neighbors, its column minima its
+    columns' left neighbors, and cells with ``j - i <= ez`` are masked.
+    Tiles run in ascending row, then column order, so each index sees
+    its candidates in ascending neighbor order and strict-``<`` updates
+    keep the first index among exact ties.
+
+    Returns ``(rows, cols)``: ``rows = (P, I, PL, IL, PR, IR)`` for
+    r0:r1 — on a diagonal block the column minima fold into the rows'
+    left profile; ``cols`` is the same tuple for c0:c1 (left neighbors
+    only) on a block strictly above the diagonal, else None.  AB-joins
+    report PL/PR = inf, IL/IR = -1 (``ignore_trivial=False``)."""
+    nr, nc = r1 - r0, c1 - c0
+    br, bc = (nr, nc) if nr * nc <= ONE_TILE_CELLS else (128, 128)
+    self_join = ez >= 0
+    diag = self_join and (r0, r1) == (c0, c1)
+    pr = np.full(nr, np.inf)
+    ir = np.full(nr, -1, dtype=np.int64)
+    pl = np.full(nc, np.inf)
+    il = np.full(nc, -1, dtype=np.int64)
+    for a0 in range(r0, r1, br):
+        a1 = min(a0 + br, r1)
+        rr = np.arange(a1 - a0)
+        for b0 in range(a0 if diag else c0, c1, bc):
+            b1 = min(b0 + bc, c1)
+            X = src.xdist(a0, a1, b0, b1)
+            if self_join and b0 <= a1 - 1 + ez:
+                _mask_band(X, a0, b0, ez, lower=True)
+            j = np.argmin(X, axis=1)
+            _improve(pr, ir, a0 - r0, X[rr, j], j + b0)
+            if self_join:
+                i = np.argmin(X, axis=0)
+                _improve(pl, il, b0 - c0, X[i, np.arange(b1 - b0)], i + a0)
+    dist = src.dist
+    none_p = np.full(nr, np.inf)
+    none_i = np.full(nr, -1, dtype=np.int64)
+    if not self_join:
+        return (dist(pr), ir, none_p, none_i, none_p, none_i), None
+    if diag:
+        return (*_top1(pl, pr, il, ir, dist), dist(pl), il,
+                dist(pr), ir), None
+    PR, PL = dist(pr), dist(pl)
+    none_pc = np.full(nc, np.inf)
+    none_ic = np.full(nc, -1, dtype=np.int64)
+    return ((PR, ir, none_p, none_i, PR, ir),
+            (PL, il, PL, il, none_pc, none_ic))
+
+
+def _topk_rows(src, k, ez, block_rows, left_right):
+    """Top-k profile (``k > 1``) of a whole-series source over row blocks
+    of ``block_rows`` x all columns, tie-aware (:func:`topk_tie_aware`);
+    ``left_right`` adds the top-1 left/right profiles of a self-join.
+    Returns ``(P, I, IL, IR, PL, PR)``."""
+    la, lb = src.r1, src.c1
+    P = np.full((la, k), np.inf)
+    I = np.full((la, k), -1, dtype=np.int64)
+    IL = np.full(la, -1, dtype=np.int64)
+    IR = np.full(la, -1, dtype=np.int64)
+    PL = np.full(la, np.inf)
+    PR = np.full(la, np.inf)
+    kk = min(k, lb)
+    for start in range(0, la, block_rows):
+        stop = min(start + block_rows, la)
+        rows = np.arange(start, stop)
+        D = src.xdist(start, stop, 0, lb)
+        if ez >= 0:
+            _mask_band(D, start, 0, ez)
+        if left_right:
+            r = np.arange(stop - start)
+            left = np.arange(lb)[None, :] < rows[:, None]
+            for keep, Pd, Id in ((left, PL, IL), (~left, PR, IR)):
+                Dd = np.where(keep, D, np.inf)
+                j = np.argmin(Dd, axis=1)
+                v = Dd[r, j]
+                Pd[rows] = src.dist(v)
+                Id[rows] = np.where(np.isfinite(v), j, -1)
+        vals, idxs = topk_tie_aware(D, kk)
+        P[rows, :kk] = src.dist(vals)
+        I[rows, :kk] = np.where(np.isfinite(vals), idxs, -1)
+    return P, I, IL, IR, PL, PR
 
 
 #: per-chunk cell budget for the diagonal kernel: B diagonals x L0 cells
@@ -601,12 +808,12 @@ def _mp_top1_diag(T, mu, sig, m, con, fin, any_con, all_fin, ez,
     transpose, no gather), and the band ``|j - i| <= ez`` costs nothing
     because diagonals start at ``d = ez + 1``.
 
-    Tie rule parity with the tiled kernel: right-side candidates arrive
+    Tie rule parity with the tile sweep: right-side candidates arrive
     in ascending ``j`` (strict ``<`` keeps the first), left-side
     candidates arrive in *descending* ``i`` across chunks (``<=`` keeps
     the last = smallest ``i``), and the final combine prefers the left
     neighbor on exact ties — the same "ascending neighbor order" rule
-    the blocked kernels implement.
+    :func:`_top1_sweep` implements.
 
     Minima are tracked in the shifted ``D^2 - 2m`` space of
     :meth:`_QTProvider.xdist` (snapped cells land on exactly ``-2m``;
@@ -750,160 +957,9 @@ def top1_from_shifted(pl, pr, il, ir, m):
 
     ``pl``/``pr`` are the left/right running minima in the shifted
     ``D^2 - 2m`` space, ``il``/``ir`` their neighbor indices.  Returns
-    the l-vectors ``P0 = sqrt(min(pl, pr) + 2m)`` and ``I0``: the left
-    neighbor wins exact ties (ascending neighbor order), -1 where no
-    finite neighbor exists."""
-    P0 = np.sqrt(np.minimum(pl, pr) + 2.0 * m)
-    I0 = np.where((pl <= pr) & np.isfinite(pl), il,
-                  np.where(np.isfinite(pr), ir, -1))
-    return P0, I0
-
-
-def _mp_top1_blocked_sym(qtp, windows, mu, sig, m, con, fin, any_con,
-                         all_fin, ez, compute_left_right,
-                         P, I, IL, IR, PL, PR):
-    """Self-join top-1 profile over upper-triangle cache tiles.
-
-    Each tile (r0:r1, c0:c1) with c-block >= r-block is computed once;
-    its per-row minima update rows (right-side neighbors) and its per-col
-    minima update cols (left-side neighbors).  Candidates for any index
-    arrive in ascending neighbor order, so first-strictly-smaller updates
-    reproduce the argmin-first-index tie rule of the row-wise kernel.
-    Tiles and running minima live in shifted squared-distance space
-    ``D^2 - 2m`` (``qtp.xdist`` — the GEMM emits it directly from
-    scaled-centered operands, zero per-cell normalization passes); the
-    ``+2m`` shift and the sqrt run once over the final l-vectors, like
-    the diagonal kernel.
-
-    ULP note: a pair (i, j) that falls inside a diagonal-crossing tile is
-    seen in both orientations, and the Pearson normalization is not
-    bit-symmetric ((m*mu_i)*mu_j vs (m*mu_j)*mu_i round differently), so
-    the kept minimum can differ from the single-orientation value by
-    <= 1 ULP depending on tile geometry.  This is inherent to the
-    symmetric update (present at any tile size) and is absorbed by the
-    6-decimal rounding of the correctness oracle."""
-    l = windows.shape[0]
-    br = bc = l if l * l <= ONE_TILE_CELLS else 128
-    best_p = np.full(l, np.inf)
-    best_j = np.full(l, -1, dtype=np.int64)
-    bl_p = np.full(l, np.inf)
-    bl_j = np.full(l, -1, dtype=np.int64)
-    br_p = np.full(l, np.inf)
-    br_j = np.full(l, -1, dtype=np.int64)
-
-    def upd(pv, jv, idx, vals, js):
-        better = vals < pv[idx]
-        ii = idx[better]
-        pv[ii] = vals[better]
-        jv[ii] = js[better]
-
-    for r0 in range(0, l, br):
-        r1 = min(r0 + br, l)
-        nr = r1 - r0
-        rr = np.arange(nr)
-        rows_abs = np.arange(r0, r1)
-        for c0 in range(r0 - (r0 % bc), l, bc):
-            c1 = min(c0 + bc, l)
-            if c1 <= r0:
-                continue                      # strictly lower tile grid
-            D = qtp.xdist(r0, r1, c0, c1)     # D^2 - 2m space throughout
-            if any_con:
-                ca = con[r0:r1][:, None]
-                cb = con[c0:c1][None, :]
-                D[ca & cb] = -2.0 * m         # D^2 == 0
-                D[ca ^ cb] = -float(m)        # D^2 == m
-            if not all_fin:
-                D[~fin[r0:r1], :] = np.inf
-                D[:, ~fin[c0:c1]] = np.inf
-            cc = np.arange(c1 - c0)
-            cols_abs = np.arange(c0, c1)
-            crossing = c0 <= r1 - 1 + ez and r0 - ez <= c1 - 1
-            if crossing:
-                # vectorized band fill |j - i| <= ez (a per-row Python
-                # slice loop here dominated short-series profiles)
-                D[np.abs(cols_abs[None, :] - rows_abs[:, None])
-                  <= ez] = np.inf
-            # col-direction minima first (neighbors i in [r0, r1), i.e.
-            # smaller indices): keeps per-index candidates arriving in
-            # ascending neighbor order so strict-< updates reproduce the
-            # argmin-first-index tie rule
-            i2 = np.argmin(D, axis=0)
-            v2 = D[i2, cc]
-            upd(best_p, best_j, cols_abs, v2, i2 + r0)
-            # row-direction minima (neighbors j in [c0, c1))
-            j = np.argmin(D, axis=1)
-            v = D[rr, j]
-            upd(best_p, best_j, rows_abs, v, j + c0)
-            if compute_left_right:
-                if not crossing and c0 >= r1:
-                    # strictly-upper tile: rows see right neighbors,
-                    # cols see left neighbors
-                    upd(br_p, br_j, rows_abs, v, j + c0)
-                    upd(bl_p, bl_j, cols_abs, v2, i2 + r0)
-                else:
-                    # diagonal-crossing tile: split both directions with
-                    # broadcast masks (vectorized; was per-row loops)
-                    below = (cols_abs[None, :] >= rows_abs[:, None])
-                    buf = np.where(below, np.inf, D)    # keep j < i
-                    jl = np.argmin(buf, axis=1)
-                    vl = buf[rr, jl]
-                    upd(bl_p, bl_j, rows_abs, vl, jl + c0)
-                    il = np.argmin(buf, axis=0)
-                    vli = buf[il, cc]
-                    upd(br_p, br_j, cols_abs, vli, il + r0)
-                    np.greater(cols_abs[None, :], rows_abs[:, None],
-                               out=below)
-                    buf = np.where(below, D, np.inf)    # keep j > i
-                    jr = np.argmin(buf, axis=1)
-                    vr = buf[rr, jr]
-                    upd(br_p, br_j, rows_abs, vr, jr + c0)
-                    ir = np.argmin(buf, axis=0)
-                    vri = buf[ir, cc]
-                    upd(bl_p, bl_j, cols_abs, vri, ir + r0)
-    two_m = 2.0 * m
-    P[:, 0] = np.sqrt(best_p + two_m)
-    I[:, 0] = np.where(np.isfinite(best_p), best_j, -1)
-    if compute_left_right:
-        PL[:] = np.sqrt(bl_p + two_m)
-        PR[:] = np.sqrt(br_p + two_m)
-        IL[:] = np.where(np.isfinite(bl_p), bl_j, -1)
-        IR[:] = np.where(np.isfinite(br_p), br_j, -1)
-
-
-def _mp_top1_blocked(qtp, windows_A, windows_B, m, con_A, con_B, fin_A,
-                     fin_B, any_con, all_fin_A, all_fin_B, P, I):
-    """AB-join top-1 matrix profile over (br × bc) cache-resident tiles
-    with running per-row minima.  Shifted squared-distance space
-    ``D^2 - 2m`` throughout (``qtp.xdist``), un-shift + sqrt once per
-    finished row block."""
-    la = windows_A.shape[0]
-    lb = windows_B.shape[0]
-    # whole matrix fits in cache: one tile, no blocking overhead
-    br, bc = (la, lb) if la * lb <= ONE_TILE_CELLS else (128, 128)
-    for r0 in range(0, la, br):
-        r1 = min(r0 + br, la)
-        rr = np.arange(r1 - r0)
-        best_p = np.full(r1 - r0, np.inf)
-        best_j = np.full(r1 - r0, -1, dtype=np.int64)
-        for c0 in range(0, lb, bc):
-            c1 = min(c0 + bc, lb)
-            D = qtp.xdist(r0, r1, c0, c1)     # D^2 - 2m space throughout
-            if any_con:
-                ca = con_A[r0:r1][:, None]
-                cb = con_B[c0:c1][None, :]
-                D[ca & cb] = -2.0 * m         # D^2 == 0
-                D[ca ^ cb] = -float(m)        # D^2 == m
-            if not all_fin_A:
-                D[~fin_A[r0:r1], :] = np.inf
-            if not all_fin_B:
-                D[:, ~fin_B[c0:c1]] = np.inf
-            j = np.argmin(D, axis=1)
-            v = D[rr, j]
-            upd = v < best_p
-            best_p[upd] = v[upd]
-            best_j[upd] = j[upd] + c0
-        P[r0:r1, 0] = np.sqrt(best_p + 2.0 * m)
-        I[r0:r1, 0] = np.where(np.isfinite(best_p), best_j, -1)
+    the l-vectors ``P0 = sqrt(min(pl, pr) + 2m)`` and ``I0`` by the
+    :func:`_top1` tie rule."""
+    return _top1(pl, pr, il, ir, lambda x: np.sqrt(x + 2.0 * m))
 
 
 def _mp_top1_c(A: np.ndarray, m: int):
@@ -950,9 +1006,16 @@ def matrix_profile(
     2. numpy diagonal STOMP (:func:`_mp_top1_diag`): top-1 self-join of
        an integer series where :func:`_use_diag` says it beats GEMM
        (bit-identical to route 1);
-    3. GEMM tiles (:func:`_mp_top1_blocked_sym` for self-joins,
-       :func:`_mp_top1_blocked` for AB-joins): any other top-1 profile;
-    4. GEMM row blocks with a tie-aware top-k: ``k > 1``.
+    3. the GEMM tile sweep (:func:`_top1_sweep` over a
+       :class:`_QTProvider`): any other top-1 profile;
+    4. GEMM row blocks of ``block_rows`` with a tie-aware top-k
+       (:func:`_topk_rows`, same source): ``k > 1``.
+
+    Routes 2 and 3 may differ by an ULP on a pair: the GEMM folds the
+    normalization into its operands, the diagonal kernel applies it per
+    cell.  The 6-decimal rounding of the correctness oracle absorbs it.
+    ``compute_left_right=False`` saves work on route 4 only; the other
+    routes get left/right neighbors for free.
 
     Returns ``(P, I, IL, IR)``: P (l, k) float64, I (l, k) int64,
     IL/IR (l,) int64 (-1 where absent; IL/IR are meaningless for AB-joins,
@@ -971,111 +1034,35 @@ def matrix_profile(
             if return_left_right_P:
                 return res
             return res[:4]
-    A, mu_A, sig_A, fin_A, con_A = preprocess(
-        np.asarray(T_A, np.float64), m, T_A_subseq_isconstant)
-    if self_join:
-        B, mu_B, sig_B, fin_B, con_B = A, mu_A, sig_A, fin_A, con_A
-    else:
-        B, mu_B, sig_B, fin_B, con_B = preprocess(
-            np.asarray(T_B, np.float64), m, T_B_subseq_isconstant)
-
+    prep_A = preprocess(np.asarray(T_A, np.float64), m,
+                        T_A_subseq_isconstant)
+    prep_B = prep_A if self_join else preprocess(
+        np.asarray(T_B, np.float64), m, T_B_subseq_isconstant)
+    A, mu_A, sig_A, fin_A, con_A = prep_A
     la = A.shape[0] - m + 1
-    lb = B.shape[0] - m + 1
     ez = excl_zone(m) if self_join else -1
-
-    P = np.full((la, k), np.inf)
-    I = np.full((la, k), -1, dtype=np.int64)
-    IL = np.full(la, -1, dtype=np.int64)
-    IR = np.full(la, -1, dtype=np.int64)
-    PL = np.full(la, np.inf)
-    PR = np.full(la, np.inf)
-
-    any_con = bool(con_A.any()) or bool(con_B.any())
-    all_fin_A = bool(fin_A.all())
-    all_fin_B = bool(fin_B.all())
     # diagonal fast path (self-join top-1): O(n^2) exact cumsum-STOMP
     # with an O(cache) working set and no window matrix at all — taken
     # for any m when provably drift-free (integer series)
     if (self_join and k == 1 and _use_diag(la, m)
             and _qt_recurrence_ok(A, m)):
-        _mp_top1_diag(A, mu_A, sig_A, m, con_A, fin_A, any_con,
-                      all_fin_A, ez, P, I, IL, IR, PL, PR)
-        if return_left_right_P:
-            return P, I, IL, IR, PL, PR
-        return P, I, IL, IR
-
-    # contiguous copies: BLAS GEMM on strided sliding-window views falls
-    # off the fast path (~10x slower); l*m doubles is a cheap price
-    windows_B = np.ascontiguousarray(
-        np.lib.stride_tricks.sliding_window_view(B, m))
-    windows_A = windows_B if self_join else np.ascontiguousarray(
-        np.lib.stride_tricks.sliding_window_view(A, m))
-    qtp = _QTProvider(windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m)
-    if k == 1:
-        # cache-blocked fast path: 2-D tiles sized to stay in L2/L3 so the
-        # elementwise rho→distance passes don't stream DRAM (the full-width
-        # row-block variant is memory-bandwidth-bound at high core counts)
-        if self_join:
-            # upper-triangle tiles only; each tile updates its rows AND
-            # (transposed) its columns — the reference's symmetric
-            # diagonal update (stump.py:219-230), halving the compute
-            _mp_top1_blocked_sym(
-                qtp, windows_A, mu_A, sig_A, m, con_A, fin_A, any_con,
-                all_fin_A, ez, compute_left_right,
-                P, I, IL, IR, PL, PR)
-        else:
-            _mp_top1_blocked(
-                qtp, windows_A, windows_B, m, con_A, con_B, fin_A, fin_B,
-                any_con, all_fin_A, all_fin_B, P, I)
-        if return_left_right_P:
-            return P, I, IL, IR, PL, PR
-        return P, I, IL, IR
-    for start in range(0, la, block_rows):
-        stop = min(start + block_rows, la)
-        D = qtp.pearson(start, stop, 0, lb, clamp=False)
-        _rho_to_distance_inplace(D, m, clamped=False)
-        # constant-window special cases (core.py:1155-1158); the mask work
-        # is skipped entirely on the common all-non-constant path
-        if any_con:
-            blk_con_A = con_A[start:stop][:, None]
-            D[blk_con_A & con_B[None, :]] = 0.0
-            D[blk_con_A ^ con_B[None, :]] = math.sqrt(m)
-        if not all_fin_A:
-            D[~fin_A[start:stop], :] = np.inf
-        if not all_fin_B:
-            D[:, ~fin_B] = np.inf
-
-        rows = np.arange(start, stop)
-        r = np.arange(stop - start)
-        if self_join:
-            # band exclusion |j - i| <= ez: narrow per-row slice fills
-            for rr in range(start, stop):
-                D[rr - start, max(0, rr - ez):rr + ez + 1] = np.inf
-        if self_join and compute_left_right:
-            # left / right top-1 (stump.py:232-241) via triangular fills
-            buf = D.copy()
-            for rr in range(start, stop):
-                buf[rr - start, rr:] = np.inf          # keep j < i
-            jl = np.argmin(buf, axis=1)
-            vl = buf[r, jl]
-            buf[:] = D
-            for rr in range(start, stop):
-                buf[rr - start, :rr + 1] = np.inf      # keep j > i
-            jr = np.argmin(buf, axis=1)
-            vr = buf[r, jr]
-            PL[rows] = vl
-            PR[rows] = vr
-            IL[rows] = np.where(np.isfinite(vl), jl, -1)
-            IR[rows] = np.where(np.isfinite(vr), jr, -1)
+        P = np.full((la, 1), np.inf)
+        I = np.full((la, 1), -1, dtype=np.int64)
+        IL = np.full(la, -1, dtype=np.int64)
+        IR = np.full(la, -1, dtype=np.int64)
+        PL = np.full(la, np.inf)
+        PR = np.full(la, np.inf)
+        _mp_top1_diag(A, mu_A, sig_A, m, con_A, fin_A, bool(con_A.any()),
+                      bool(fin_A.all()), ez, P, I, IL, IR, PL, PR)
+    else:
+        src = _QTProvider(prep_A, prep_B, m)
         if k == 1:
-            j = np.argmin(D, axis=1)
-            P[rows, 0] = D[r, j]
-            I[rows, 0] = np.where(np.isfinite(D[r, j]), j, -1)
+            (P0, I0, PL, IL, PR, IR), _ = _top1_sweep(src, 0, la, 0,
+                                                      src.c1, ez)
+            P, I = P0[:, None], I0[:, None]
         else:
-            kk = min(k, lb)
-            vals, idxs = topk_tie_aware(D, kk)
-            P[rows, :kk] = vals
-            I[rows, :kk] = np.where(np.isfinite(vals), idxs, -1)
+            P, I, IL, IR, PL, PR = _topk_rows(
+                src, k, ez, block_rows, self_join and compute_left_right)
     if return_left_right_P:
         return P, I, IL, IR, PL, PR
     return P, I, IL, IR
@@ -1178,79 +1165,20 @@ def matrix_profile_absolute(
     """Non-normalized (aamp) matrix profile (stumpy/aamp.py:334-441).
 
     Same join/topk/left-right semantics as :func:`matrix_profile`, distance
-    ``(sum |a-b|^p)^(1/p)``.
+    ``(sum |a-b|^p)^(1/p)`` from a :class:`_PNormSource`: the
+    :func:`_top1_sweep` for ``k == 1``, row blocks of ``block_rows`` for
+    ``k > 1``.
     """
     self_join = T_B is None
-    A = np.asarray(T_A, np.float64)
-    B = A if self_join else np.asarray(T_B, np.float64)
-    fin_A = rolling_isfinite(A, m)
-    fin_B = fin_A if self_join else rolling_isfinite(B, m)
-    # zero non-finite (aamp.py:38-55 contract; NOT nan_to_num, which maps
-    # inf -> 1.8e308 and overflows the squared sums in masked cells)
-    Ac = np.where(np.isfinite(A), A, 0.0)
-    Bc = np.where(np.isfinite(B), B, 0.0)
-    la = A.shape[0] - m + 1
-    lb = B.shape[0] - m + 1
+    prep_A = _preprocess_abs(T_A, m)
+    prep_B = prep_A if self_join else _preprocess_abs(T_B, m)
+    src = _PNormSource(prep_A, prep_B, m, p)
     ez = excl_zone(m) if self_join else -1
-    windows_B = np.ascontiguousarray(
-        np.lib.stride_tricks.sliding_window_view(Bc, m))
-    windows_A = windows_B if self_join else np.ascontiguousarray(
-        np.lib.stride_tricks.sliding_window_view(Ac, m))
-
-    P = np.full((la, k), np.inf)
-    I = np.full((la, k), -1, dtype=np.int64)
-    IL = np.full(la, -1, dtype=np.int64)
-    IR = np.full(la, -1, dtype=np.int64)
-    cols = np.arange(lb)
-    if p == 2.0:
-        csB = np.concatenate(([0.0], np.cumsum(Bc * Bc)))
-        b2 = csB[m:] - csB[:-m]
-        csA = csB if self_join else \
-            np.concatenate(([0.0], np.cumsum(Ac * Ac)))
-        a2 = b2 if self_join else csA[m:] - csA[:-m]
-    for start in range(0, la, block_rows):
-        stop = min(start + block_rows, la)
-        if p == 2.0:
-            QT = windows_A[start:stop] @ windows_B.T
-            D2 = a2[start:stop][:, None] - 2.0 * QT + b2[None, :]
-            np.maximum(D2, 0.0, out=D2)
-            # GEMM expansion cancels catastrophically for near-duplicate
-            # pairs; recompute those few entries directly (exact)
-            scale = a2[start:stop][:, None] + b2[None, :]
-            suspect = D2 <= 1e-8 * scale
-            if suspect.any():
-                si, sj = np.nonzero(suspect)
-                diff = windows_A[start + si] - windows_B[sj]
-                D2[si, sj] = np.einsum("ij,ij->i", diff, diff)
-            D = np.sqrt(D2)
-        else:
-            diff = np.abs(windows_A[start:stop, None, :] - windows_B[None])
-            D = np.power(np.sum(diff ** p, axis=2), 1.0 / p)
-        D[~fin_A[start:stop], :] = np.inf
-        D[:, ~fin_B] = np.inf
-        rows = np.arange(start, stop)
-        if self_join:
-            dist_to_diag = np.abs(cols[None, :] - rows[:, None])
-            D = np.where(dist_to_diag <= ez, np.inf, D)
-            left_mask = cols[None, :] < rows[:, None]
-            DL = np.where(left_mask, D, np.inf)
-            DR = np.where(~left_mask, D, np.inf)
-            jl = np.argmin(DL, axis=1)
-            jr = np.argmin(DR, axis=1)
-            r = np.arange(stop - start)
-            IL[rows] = np.where(np.isfinite(DL[r, jl]), jl, -1)
-            IR[rows] = np.where(np.isfinite(DR[r, jr]), jr, -1)
-        kk = min(k, lb)
-        if kk == 1:
-            j = np.argmin(D, axis=1)
-            r = np.arange(stop - start)
-            P[rows, 0] = D[r, j]
-            I[rows, 0] = np.where(np.isfinite(D[r, j]), j, -1)
-        else:
-            vals, idxs = topk_tie_aware(D, kk)
-            P[rows, :kk] = vals
-            I[rows, :kk] = np.where(np.isfinite(vals), idxs, -1)
-    return P, I, IL, IR
+    if k == 1:
+        (P0, I0, _, IL, _, IR), _ = _top1_sweep(src, 0, src.r1, 0, src.c1,
+                                                ez)
+        return P0[:, None], I0[:, None], IL, IR
+    return _topk_rows(src, k, ez, block_rows, self_join)[:4]
 
 
 def topk_tie_aware(D: np.ndarray, kk: int):

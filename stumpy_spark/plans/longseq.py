@@ -15,8 +15,11 @@ Differences from the reference's decomposition, on purpose:
   Upper-triangle tiles are enumerated only once and each tile emits
   contributions for both its row range and its col range (the symmetric
   update the reference does per diagonal cell, stump.py:219-230).
-- tile size bounds per-task memory (tile_rows × tile_cols doubles);
-  AQE coalesces the small final merge.
+- a top-1 tile is one ``kernels._top1_sweep`` — the same sweep the
+  single-task ``kernels.matrix_profile(_absolute)`` runs — over a tile
+  source built on the tile's row and column windows only, so per-task
+  memory is O(tile × m) operands plus one 128-square cache tile (a
+  128 × tile strip for top-k); AQE coalesces the small final merge.
 
 Top-k (``k > 1``): each tile emits its per-row k smallest (p, j)
 candidates; because the tiles partition the column space for any row, a
@@ -58,6 +61,23 @@ _PARTIAL_SCHEMA_TOPK = T.StructType([
     T.StructField("p", T.DoubleType()),
     T.StructField("j", T.LongType()),
 ])
+
+
+def _profile_frame(i0, prof) -> pd.DataFrame:
+    """Partial top-1 rows from a ``kernels._top1_sweep`` profile tuple."""
+    P, I, PL, IL, PR, IR = prof
+    return pd.DataFrame({"i": np.arange(i0, i0 + len(P)), "p": P, "j": I,
+                         "pl": PL, "jl": IL, "pr": PR, "jr": IR})
+
+
+def _topk_frame(src, i0, vals, js) -> pd.DataFrame:
+    """Partial top-k rows: per-row candidates in root-deferred space."""
+    nr, kk = vals.shape
+    return pd.DataFrame({
+        "i": np.repeat(np.arange(i0, i0 + nr), kk),
+        "p": src.dist(vals.ravel()),
+        "j": np.where(np.isfinite(vals.ravel()), js.ravel(), -1),
+    })
 
 
 def _binned_tiles_df(spark: SparkSession, tiles, work) -> DataFrame:
@@ -107,28 +127,17 @@ def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
     """
     T_arr = np.asarray(T_arr, dtype=np.float64)
     self_join = T_B is None
-    n = len(T_arr)
-    l = n - m + 1
+    l = len(T_arr) - m + 1
+    lb = l if self_join else len(T_B) - m + 1
     ez = kernels.excl_zone(m) if self_join else -1
 
-    if normalize:
-        prepA = kernels.preprocess(T_arr, m)
-        prepB = prepA if self_join else kernels.preprocess(
-            np.asarray(T_B, dtype=np.float64), m)
-    else:
-        # aamp preprocessing (aamp.py:38-55): finite mask + nan_to_num;
-        # window square-sums for the p == 2 GEMM expansion
-        def prep_abs(X):
-            fin = kernels.rolling_isfinite(X, m)
-            Xc = np.where(np.isfinite(X), X, 0.0)   # inf -> 0, not 2e308
-            cs = np.concatenate(([0.0], np.cumsum(Xc * Xc)))
-            return Xc, cs[m:] - cs[:-m], None, fin, None
-        prepA = prep_abs(T_arr)
-        prepB = prepA if self_join else prep_abs(
-            np.asarray(T_B, dtype=np.float64))
-    lb = len(prepB[3])
-    sc = spark.sparkContext
-    b = sc.broadcast((prepA, prepB, self_join))
+    # z-norm (stumped) or aamp (aamped.py:38-55) preprocessing, once
+    # before the tiles fan out: O(n) arrays, broadcast to every task
+    prep = kernels.preprocess if normalize else kernels._preprocess_abs
+    prepA = prep(T_arr, m)
+    prepB = prepA if self_join else prep(
+        np.asarray(T_B, dtype=np.float64), m)
+    b = spark.sparkContext.broadcast((prepA, prepB))
 
     n_tiles = (l + tile - 1) // tile
     nb_tiles = (lb + tile - 1) // tile
@@ -140,311 +149,73 @@ def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
 
     # weighted work assignment (the Spark analog of the reference's
     # per-diagonal work weighting, core.py:2424-2466): tile work = actual
-    # cell count (remainder tiles are smaller; diagonal-crossing tiles
-    # lose the excluded band), greedily LPT-binned so every stage
+    # cell count (remainder tiles are smaller; a diagonal tile evaluates
+    # its upper triangle only), greedily LPT-binned so every stage
     # partition carries near-equal work — no straggler tail at 100x
     def _work(r, c):
         h = min(tile, l - r * tile)
         w = min(tile, lb - c * tile)
         cells = h * w
         if self_join and r == c:
-            cells = max(cells // 2, 1)          # upper-triangle + excl band
+            cells = max(cells // 2, 1)
         return cells
 
     tiles_df = _binned_tiles_df(spark, tiles, _work)
 
-    # Cache sub-block geometry: the distance sub-block (BR x BC doubles =
-    # 2 MB) stays L2/L3-resident, so the rho->distance / masking / argmin
-    # passes never stream a tile-sized array through DRAM.  Materializing
-    # the full tile (8192^2 = 512 MB) is memory-bandwidth-bound and
-    # measured ~20x slower on this host; the single-task kernel uses the
-    # same cache-tiling for the same reason (kernels.py:650-653).
-    BR, BC = 256, 1024
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        (Ta, mu, sig, fin, con), (Tb2, mub, sigb, finb, conb), sj = b.value
-        windows = np.lib.stride_tricks.sliding_window_view(Ta, m)
-        windows_B = windows if sj else \
-            np.lib.stride_tricks.sliding_window_view(Tb2, m)
-        # sub-blocks live in root-deferred space: shifted squared z-norm
-        # distance ``X = D^2 - 2m`` when normalized (the GEMM on
-        # scaled-centered operands emits it directly — zero per-cell
-        # normalization passes, same fold as kernels._QTProvider.xdist),
-        # D^2 / D^p otherwise.  min/top-k are monotone-invariant, so the
-        # un-shift + root run once per emitted l-vector instead of per
-        # cell.
-        if normalize:
-            inv = lambda x: np.sqrt(x + 2.0 * m)
-        elif p == 2.0:
-            inv = np.sqrt
-        else:
-            inv = lambda x: x ** (1.0 / p)
-        if normalize:
-            # scaled-centered tile rows/cols: Ax[i] = (w_i - mu_i) *
-            # (-2/sig_i), Bx[j] = (w_j - mu_j)/sig_j so Ax @ Bx.T =
-            # -2m*rho = D^2 - 2m.  Non-finite (mu == inf) and constant
-            # (sig == 0) windows become zero rows -> X = 0, always
-            # overwritten by the con/fin masks below.
-            with np.errstate(divide="ignore"):
-                okA = np.isfinite(mu) & (sig > 0.0)
-                muA0 = np.where(okA, mu, 0.0)
-                facA = np.where(okA, -2.0 / sig, 0.0)
-                okB = np.isfinite(mub) & (sigb > 0.0)
-                muB0 = np.where(okB, mub, 0.0)
-                facB = np.where(okB, 1.0 / sigb, 0.0)
-            thrx = kernels.config.P_NORM_THRESHOLD - 2.0 * m
+        pa, pb = b.value
 
-            def xrows(r0, r1):
-                return ((windows[r0:r1] - muA0[r0:r1, None])
-                        * facA[r0:r1, None])
-
-            def xcols(c0, c1):
-                return ((windows_B[c0:c1] - muB0[c0:c1, None])
-                        * facB[c0:c1, None])
-
-        def dist_sub(wr_s, wc_s, a0, a1, b0, b1):
-            """Squared/p-powered distance sub-block for absolute rows
-            a0:a1 x cols b0:b1.  ``wr_s``/``wc_s`` are contiguous window
-            slices (BLAS GEMM on strided sliding-window views is ~10x
-            slower, kernels.py:633)."""
+        def source(r0, r1, c0, c1):
+            """Tile-distance source over this tile's row and column
+            windows only: O(tile * m) per task."""
             if normalize:
-                # one GEMM per sub-block: the scaled-centered operands
-                # already carry the whole normalization, X = D^2 - 2m
-                D = wr_s @ wc_s.T
-                D[D < thrx] = -2.0 * m        # snap-to-zero, shifted
-                ca = con[a0:a1]
-                cb = conb[b0:b1]
-                if ca.any() or cb.any():
-                    cam = ca[:, None]
-                    cbm = cb[None, :]
-                    D[cam & cbm] = -2.0 * m   # D^2 == 0
-                    D[cam ^ cbm] = -float(m)  # D^2 == m
-                D[~fin[a0:a1], :] = np.inf
-                D[:, ~finb[b0:b1]] = np.inf
-            else:
-                # mu/mub carry the window square-sums in the p-norm prep
-                if p == 2.0:
-                    QT = wr_s @ wc_s.T
-                    D2 = mu[a0:a1][:, None] - 2.0 * QT + mub[b0:b1][None, :]
-                    np.maximum(D2, 0.0, out=D2)
-                    # GEMM expansion cancels catastrophically for near-dup
-                    # pairs; recompute those few entries directly (exact),
-                    # mirroring kernels.matrix_profile_absolute
-                    scale = mu[a0:a1][:, None] + mub[b0:b1][None, :]
-                    suspect = D2 <= 1e-8 * scale
-                    if suspect.any():
-                        si, sjx = np.nonzero(suspect)
-                        diff = wr_s[si] - wc_s[sjx]
-                        D2[si, sjx] = np.einsum("ij,ij->i", diff, diff)
-                    D = D2
-                else:
-                    acc = np.zeros((a1 - a0, b1 - b0))
-                    for o in range(m):
-                        acc += np.abs(Ta[a0 + o:a1 + o, None]
-                                      - Tb2[None, b0 + o:b1 + o]) ** p
-                    D = acc
-                D[~fin[a0:a1], :] = np.inf
-                D[:, ~finb[b0:b1]] = np.inf
-            if sj and b0 <= a1 - 1 + ez and a0 - ez <= b1 - 1:
-                for ra in range(a0, a1):
-                    lo = max(b0, ra - ez) - b0
-                    hi = min(b1, ra + ez + 1) - b0
-                    if lo < hi:
-                        D[ra - a0, lo:hi] = np.inf
-            return D
+                return kernels._QTProvider(pa, pb, m, (r0, r1), (c0, c1))
+            return kernels._PNormSource(pa, pb, m, p, (r0, r1), (c0, c1))
 
-        def upd(pv, jv, lo, vals, js):
-            """First-strictly-smaller running-min update on slice [lo:...]
-            — sub-blocks iterate in ascending neighbor order, so this
-            reproduces the argmin-first-index tie rule."""
-            sl_p = pv[lo:lo + len(vals)]
-            sl_j = jv[lo:lo + len(vals)]
-            better = vals < sl_p
-            sl_p[better] = vals[better]
-            sl_j[better] = js[better]
-
-        def eval_tile_top1(r0, r1, c0, c1, emit_cols):
-            nr, nc = r1 - r0, c1 - c0
-            if normalize:
-                wr = xrows(r0, r1)
-                wc_ = xcols(c0, c1)
-            else:
-                wr = np.ascontiguousarray(windows[r0:r1])
-                wc_ = wr if (sj and r0 == c0) else \
-                    np.ascontiguousarray(windows_B[c0:c1])
-            bp = np.full(nr, np.inf)
-            bj = np.full(nr, -1, dtype=np.int64)
-            if sj:
-                bpl = np.full(nr, np.inf)
-                bjl = np.full(nr, -1, dtype=np.int64)
-                bpr = np.full(nr, np.inf)
-                bjr = np.full(nr, -1, dtype=np.int64)
-            if emit_cols:
-                cp = np.full(nc, np.inf)
-                cj = np.full(nc, -1, dtype=np.int64)
-            for sr0 in range(0, nr, BR):
-                sr1 = min(sr0 + BR, nr)
-                a0, a1 = r0 + sr0, r0 + sr1
-                rr = np.arange(sr1 - sr0)
-                rows_abs = np.arange(a0, a1)
-                for sc0 in range(0, nc, BC):
-                    sc1 = min(sc0 + BC, nc)
-                    b0, b1 = c0 + sc0, c0 + sc1
-                    D = dist_sub(wr[sr0:sr1], wc_[sc0:sc1], a0, a1, b0, b1)
-                    j = np.argmin(D, axis=1)
-                    v = D[rr, j]
-                    jab = j + b0
-                    upd(bp, bj, sr0, v, jab)
-                    if sj:
-                        if b0 >= a1:          # strictly right of all rows
-                            upd(bpr, bjr, sr0, v, jab)
-                        elif b1 <= a0:        # strictly left
-                            upd(bpl, bjl, sr0, v, jab)
-                        else:                 # diagonal-crossing sub-block
-                            left_mask = np.arange(b0, b1)[None, :] \
-                                < rows_abs[:, None]
-                            DL = np.where(left_mask, D, np.inf)
-                            DR = np.where(~left_mask, D, np.inf)
-                            jl = np.argmin(DL, axis=1)
-                            jr = np.argmin(DR, axis=1)
-                            upd(bpl, bjl, sr0, DL[rr, jl], jl + b0)
-                            upd(bpr, bjr, sr0, DR[rr, jr], jr + b0)
-                    if emit_cols:
-                        cc = np.arange(sc1 - sc0)
-                        i2 = np.argmin(D, axis=0)
-                        v2 = D[i2, cc]
-                        upd(cp, cj, sc0, v2, i2 + a0)
-            out = {
-                "i": np.arange(r0, r1), "p": inv(bp),
-                "j": np.where(np.isfinite(bp), bj, -1),
-            }
-            if sj:
-                out.update({
-                    "pl": inv(bpl),
-                    "jl": np.where(np.isfinite(bpl), bjl, -1),
-                    "pr": inv(bpr),
-                    "jr": np.where(np.isfinite(bpr), bjr, -1),
-                })
-            else:
-                # ignore_trivial=False contract: left/right profiles are
-                # meaningless for AB-joins — report inf / -1
-                out.update({
-                    "pl": np.full(nr, np.inf),
-                    "jl": np.full(nr, -1, dtype=np.int64),
-                    "pr": np.full(nr, np.inf),
-                    "jr": np.full(nr, -1, dtype=np.int64),
-                })
-            frames = [pd.DataFrame(out)]
-            if emit_cols:
-                # off-diagonal upper tile: every col's neighbors here are
-                # left neighbors (j > i for all cells)
-                cps = inv(cp)
-                frames.append(pd.DataFrame({
-                    "i": np.arange(c0, c1), "p": cps,
-                    "j": np.where(np.isfinite(cp), cj, -1),
-                    "pl": cps,
-                    "jl": np.where(np.isfinite(cp), cj, -1),
-                    "pr": np.full(nc, np.inf),
-                    "jr": np.full(nc, -1, dtype=np.int64),
-                }))
+        def tile_top1(src, r0, r1, c0, c1):
+            rows, cols = kernels._top1_sweep(src, r0, r1, c0, c1, ez)
+            frames = [_profile_frame(r0, rows)]
+            if cols is not None:
+                frames.append(_profile_frame(c0, cols))
             return frames
 
-        def _pad_cands(vals, jabs, kk):
-            """Pad per-row candidate blocks to exactly k columns."""
-            nr = vals.shape[0]
-            if kk < k:
-                vals = np.concatenate(
-                    [vals, np.full((nr, k - kk), np.inf)], axis=1)
-                jabs = np.concatenate(
-                    [jabs, np.full((nr, k - kk), -1, dtype=np.int64)],
-                    axis=1)
-            return vals, jabs
-
-        def _merge_tile_topk(val_blocks, j_blocks, i0, n_idx):
-            """Exact per-row top-k merge of padded candidate blocks via
-            one global lexsort on (row, val, j) — ties to the smaller j,
-            matching core._merge_topk_PI."""
-            vals = np.concatenate(val_blocks, axis=1)
-            jabs = np.concatenate(j_blocks, axis=1)
-            C = vals.shape[1]
-            rows = np.repeat(np.arange(n_idx), C)
-            order = np.lexsort((jabs.ravel(), vals.ravel(), rows))
-            vs = vals.ravel()[order].reshape(n_idx, C)[:, :k]
-            js = jabs.ravel()[order].reshape(n_idx, C)[:, :k]
-            return pd.DataFrame({
-                "i": np.repeat(np.arange(i0, i0 + n_idx), min(k, C)),
-                "p": inv(vs.ravel()),
-                "j": np.where(np.isfinite(vs.ravel()), js.ravel(), -1),
-            })
-
-        def eval_tile_topk(r0, r1, c0, c1, emit_cols):
-            nr, nc = r1 - r0, c1 - c0
-            if normalize:
-                wr = xrows(r0, r1)
-                wc_ = xcols(c0, c1)
-            else:
-                wr = np.ascontiguousarray(windows[r0:r1])
-                wc_ = wr if (sj and r0 == c0) else \
-                    np.ascontiguousarray(windows_B[c0:c1])
-            rv, rj = [], []
-            cv, cjn = [], []
-            for sr0 in range(0, nr, BR):
-                sr1 = min(sr0 + BR, nr)
-                a0, a1 = r0 + sr0, r0 + sr1
-                row_v = []
-                row_j = []
-                for sc0 in range(0, nc, BC):
-                    sc1 = min(sc0 + BC, nc)
-                    b0, b1 = c0 + sc0, c0 + sc1
-                    D = dist_sub(wr[sr0:sr1], wc_[sc0:sc1], a0, a1, b0, b1)
-                    kk = min(k, D.shape[1])
-                    # tie-aware selection: plain argpartition keeps an
-                    # arbitrary subset of exactly-tied boundary values
-                    # and can drop a tied smaller-j candidate before the
-                    # (value, j) merge (kernels.topk_tie_aware docstring)
-                    vals, jcols = kernels.topk_tie_aware(D, kk)
-                    v_p, j_p = _pad_cands(vals, jcols + b0, kk)
-                    row_v.append(v_p)
-                    row_j.append(j_p)
-                    if emit_cols:
-                        kkc = min(k, D.shape[0])
-                        valsc, icols = kernels.topk_tie_aware(D.T, kkc)
-                        v_c, j_c = _pad_cands(valsc, icols + a0, kkc)
-                        cv.append((sc0, v_c))
-                        cjn.append((sc0, j_c))
-                rv.append(np.concatenate(row_v, axis=1))
-                rj.append(np.concatenate(row_j, axis=1))
-            frames = [_merge_tile_topk(
-                [np.concatenate(rv, axis=0)],
-                [np.concatenate(rj, axis=0)], r0, nr)]
+        def tile_topk(src, r0, r1, c0, c1):
+            # 128-row strips x the whole tile width: a strip's row top-k
+            # is already the tile's; column candidates (left neighbors of
+            # a tile strictly above the diagonal) merge across strips
+            emit_cols = ez >= 0 and c0 >= r1
+            frames, col_v, col_j = [], [], []
+            for a0 in range(r0, r1, 128):
+                a1 = min(a0 + 128, r1)
+                D = src.xdist(a0, a1, c0, c1)
+                if ez >= 0:
+                    kernels._mask_band(D, a0, c0, ez)
+                vals, js = kernels.topk_tie_aware(D, min(k, c1 - c0))
+                frames.append(_topk_frame(src, a0, vals, js + c0))
+                if emit_cols:
+                    vals, js = kernels.topk_tie_aware(D.T, min(k, a1 - a0))
+                    col_v.append(vals)
+                    col_j.append(js + a0)
             if emit_cols:
-                # regroup col candidates: one (nc, k) block per row
-                # strip; the inner loop appended exactly n_col_blocks
-                # entries per strip, in strip-major order
-                n_col_blocks = (nc + BC - 1) // BC
-                per_strip_v = []
-                per_strip_j = []
-                for s0 in range(0, len(cv), n_col_blocks):
-                    sv = np.full((nc, k), np.inf)
-                    sjb = np.full((nc, k), -1, dtype=np.int64)
-                    for (sc0, v_c), (_, j_c) in zip(
-                            cv[s0:s0 + n_col_blocks],
-                            cjn[s0:s0 + n_col_blocks]):
-                        sv[sc0:sc0 + v_c.shape[0]] = v_c
-                        sjb[sc0:sc0 + j_c.shape[0]] = j_c
-                    per_strip_v.append(sv)
-                    per_strip_j.append(sjb)
-                frames.append(_merge_tile_topk(per_strip_v, per_strip_j,
-                                               c0, nc))
+                # per-column top-k of the strips' candidates: they lie in
+                # ascending i among equal values, so the tie-aware
+                # selection keeps the smaller i
+                vals = np.concatenate(col_v, axis=1)
+                js = np.concatenate(col_j, axis=1)
+                top, pos = kernels.topk_tie_aware(vals,
+                                                  min(k, vals.shape[1]))
+                frames.append(_topk_frame(
+                    src, c0, top, np.take_along_axis(js, pos, axis=1)))
             return frames
 
-        eval_tile = eval_tile_topk if k > 1 else eval_tile_top1
+        eval_tile = tile_topk if k > 1 else tile_top1
         for pdf in batches:
             out = []
             for tr, tc in zip(pdf["tr"], pdf["tc"]):
                 r0, r1 = tr * tile, min((tr + 1) * tile, l)
                 c0, c1 = tc * tile, min((tc + 1) * tile, lb)
-                out.extend(eval_tile(r0, r1, c0, c1, sj and tr != tc))
+                out.extend(eval_tile(source(r0, r1, c0, c1),
+                                     r0, r1, c0, c1))
             if out:
                 yield pd.concat(out, ignore_index=True)
 
@@ -608,15 +379,8 @@ def mstumped(spark: SparkSession, Ts, m: int, tile: int = 2048,
     if include is not None:
         include = np.asarray(include, dtype=np.int64)
 
-    if normalize:
-        prep = [kernels.preprocess(Ts[dim], m) for dim in range(d)]
-    else:
-        def prep_abs(X):
-            fin = kernels.rolling_isfinite(X, m)
-            Xc = np.where(np.isfinite(X), X, 0.0)
-            cs = np.concatenate(([0.0], np.cumsum(Xc * Xc)))
-            return Xc, cs[m:] - cs[:-m], None, fin, None
-        prep = [prep_abs(Ts[dim]) for dim in range(d)]
+    prep_fn = kernels.preprocess if normalize else kernels._preprocess_abs
+    prep = [prep_fn(X, m) for X in Ts]
     sc = spark.sparkContext
     b = sc.broadcast((prep, include, discords, normalize))
 
@@ -655,8 +419,8 @@ def mstumped(spark: SparkSession, Ts, m: int, tile: int = 2048,
             anytime.multi_matrix_profile's per-cell formulas."""
             Dd = np.empty((dd_, a1 - a0, b1 - b0))
             for dim in range(dd_):
-                Tc, mu, sig, fin, con = prep_w[dim]
                 if norm:
+                    Tc, mu, sig, fin, con = prep_w[dim]
                     rho = kernels._pearson_block(
                         wr_list[dim], wc_list[dim], mu[a0:a1], sig[a0:a1],
                         mu[b0:b1], sig[b0:b1], m)
@@ -666,7 +430,7 @@ def mstumped(spark: SparkSession, Ts, m: int, tile: int = 2048,
                     D2 = np.where(ca & cb, 0.0, D2)
                     D2 = np.where(ca ^ cb, float(m), D2)
                 else:
-                    w2 = mu          # square-sums in the p-norm prep
+                    Tc, w2, fin = prep_w[dim]
                     QT = wr_list[dim] @ wc_list[dim].T
                     D2 = w2[a0:a1][:, None] - 2.0 * QT + w2[b0:b1][None, :]
                     np.maximum(D2, 0.0, out=D2)

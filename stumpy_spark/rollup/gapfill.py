@@ -1,13 +1,20 @@
 """Gap-filled continuous aggregates.
 
 Missing (source, bucket) combinations get explicit rows: zeros for additive
-columns, NULL (or last-observation-carried-forward) for min/max columns.
-Built entirely from Catalyst ops: ``sequence()`` + ``explode`` generates the
-dense bucket spine, a **broadcast** of the (tiny) source dimension crosses
-it, and a left join lands the observed points.  The spine side is bounded
-(#sources × #buckets), so the join broadcasts the *aggregated* fact side
-only when small; at scale the spine is broadcast instead — either way no
-skewed shuffle.
+columns, NULL (or last-observation-carried-forward, or linear
+interpolation) for the others.  Built entirely from Catalyst ops:
+
+- default bounds (each source's first to last observed bucket): one pass.
+  A ``lag`` window gives each observed row its predecessor, and
+  ``sequence()`` + ``explode`` emit the missing buckets between them
+  together with the row itself — no spine, no join.  The input must be
+  an aggregated tier: a repeated (source, bucket) or a gap that is not a
+  positive multiple of the tier step fails the query (``raise_error``
+  in the same projection) instead of silently dropping rows;
+- explicit ``start``/``end``: a dense per-source bucket spine
+  (``sequence()`` + ``explode``) left-joined with the tier, which is
+  broadcast when Catalyst estimates it small, else shuffle-joined on the
+  unskewed (source, bucket) key.
 """
 
 from __future__ import annotations
@@ -66,10 +73,15 @@ def gapfill(tier_df: DataFrame, tier: str, start=None, end=None,
     before the first / after the last observation stay NULL — no
     extrapolation.  Mutually exclusive with ``locf``.
 
-    ``broadcast``: force (True/False) the broadcast of the aggregated tier
-    side; default auto — broadcast only when Catalyst's size estimate is
-    under ``BROADCAST_ROW_LIMIT`` rows, else shuffle-join on the unskewed
-    (source, bucket) key and let AQE pick the strategy at runtime.
+    ``broadcast`` applies only with explicit ``start``/``end`` (the
+    default bounds need no join): force (True/False) the broadcast of the
+    aggregated tier side; default auto — broadcast only when Catalyst's
+    size estimate is under ``BROADCAST_ROW_LIMIT`` rows, else shuffle-join
+    on the unskewed (source, bucket) key and let AQE pick the strategy at
+    runtime.
+
+    Default bounds require one row per (source, bucket) on the tier's
+    step grid; anything else raises when the query runs.
     """
     if locf and interpolate:
         raise ValueError("locf and interpolate are mutually exclusive")
@@ -84,14 +96,26 @@ def gapfill(tier_df: DataFrame, tier: str, start=None, end=None,
         # ``(prev_bucket, bucket]`` so the gaps between consecutive
         # observations (all NULL metrics, zero-filled below) and the
         # observed row itself come out of the same window+explode.
-        # Bucket sets and values are identical to the spine join:
-        # buckets are step-aligned (date_trunc), so the sequence lands
-        # exactly on each observed bucket.  ``broadcast`` is
-        # meaningless here (no join) and ignored.
-        step_iv = F.expr(f"interval {TIER_SECONDS[tier]} seconds")
+        # Bucket sets and values are identical to the spine join as
+        # long as buckets are unique and step-aligned (date_trunc), so
+        # the sequence lands exactly on each observed bucket; the same
+        # projection fails the query otherwise — a repeat would be a
+        # sequence boundary error, a misaligned gap a silently dropped
+        # row.  ``broadcast`` is meaningless here (no join) and ignored.
+        step = TIER_SECONDS[tier]
+        step_iv = F.expr(f"interval {step} seconds")
         w = Window.partitionBy("source").orderBy("bucket")
-        seq_start = F.coalesce(F.lag("bucket").over(w) + step_iv,
-                               F.col("bucket"))
+        prev = F.lag("bucket").over(w)
+        gap = F.unix_micros("bucket") - F.unix_micros(prev)
+        where = F.concat(F.lit(" at source="), F.col("source").cast("string"),
+                         F.lit(", bucket="), F.col("bucket").cast("string"))
+        seq_start = (
+            F.when(gap == 0, F.raise_error(F.concat(
+                F.lit("gapfill: duplicate (source, bucket)"), where)))
+            .when(gap % (step * 1_000_000) != 0, F.raise_error(F.concat(
+                F.lit(f"gapfill: bucket not on the {tier} step grid"),
+                where)))
+            .otherwise(F.coalesce(prev + step_iv, F.col("bucket"))))
         fill_cols = [c for c in tier_df.columns
                      if c not in ("source", "bucket")]
         exploded = (tier_df

@@ -398,31 +398,21 @@ def test_topk_ties_constant_windows():
 
 
 def _gemm_top1_self(T, m):
-    """Top-1 self-join profile by the GEMM tile route
-    (_mp_top1_blocked_sym), whatever matrix_profile would dispatch to."""
-    A, mu, sig, fin, con = kernels.preprocess(T, m)
-    w = np.ascontiguousarray(np.lib.stride_tricks.sliding_window_view(A, m))
-    l = w.shape[0]
-    P = np.full((l, 1), np.inf)
-    I = np.full((l, 1), -1, dtype=np.int64)
-    IL = np.full(l, -1, dtype=np.int64)
-    IR = np.full(l, -1, dtype=np.int64)
-    PL = np.full(l, np.inf)
-    PR = np.full(l, np.inf)
-    qtp = kernels._QTProvider(w, w, mu, sig, mu, sig, m)
-    kernels._mp_top1_blocked_sym(qtp, w, mu, sig, m, con, fin,
-                                 bool(con.any()), bool(fin.all()),
-                                 kernels.excl_zone(m), True,
-                                 P, I, IL, IR, PL, PR)
-    return P, I, IL, IR, PL, PR
+    """Top-1 self-join profile by the GEMM tile sweep (_top1_sweep over a
+    _QTProvider), whatever matrix_profile would dispatch to."""
+    prep = kernels.preprocess(T, m)
+    src = kernels._QTProvider(prep, prep, m)
+    (P, I, PL, IL, PR, IR), _ = kernels._top1_sweep(
+        src, 0, src.r1, 0, src.r1, kernels.excl_zone(m))
+    return P[:, None], I[:, None], IL, IR, PL, PR
 
 
 def test_diag_kernel_parity_randomized():
     """The vectorized diagonal-STOMP path (_mp_top1_diag) must agree
     with the blocked GEMM path across lengths, window sizes, vocab
     skews, constant runs, and NaN punctures.  Values may differ by
-    <=1 ULP (pair-orientation asymmetry, see _mp_top1_blocked_sym
-    docstring), so P/PL/PR compare at 1e-8."""
+    <=1 ULP (per-cell vs operand-folded normalization, see the
+    matrix_profile docstring), so P/PL/PR compare at 1e-8."""
     rng = np.random.default_rng(42)
     for trial in range(18):
         n = [150, 300, 700, 1500, 3000][trial % 5]
@@ -476,10 +466,11 @@ def test_mueen_distance_profile_equals_mass():
 def test_xdist_matches_pearson_shifted():
     """_QTProvider.xdist (scaled-centered GEMM operands, shifted
     D^2 - 2m space) must equal -2m * rho from the unfolded Pearson
-    tile, snapped the same way — including NaN-punctured, constant, and
-    sig==0 placeholder cells.  The operand fold changes the rounding
-    route (per-element scaling vs per-cell outer), so values compare at
-    1e-9 absolute, and snapped cells must land on exactly -2m."""
+    tile (_pearson_block), snapped the same way — including
+    NaN-punctured, constant, and sig==0 placeholder cells.  The operand
+    fold changes the rounding route (per-element scaling vs per-cell
+    outer), so values compare at 1e-9 absolute, and snapped cells must
+    land on exactly -2m."""
     rng = np.random.default_rng(7)
     for trial in range(8):
         n = [120, 400, 900][trial % 3]
@@ -491,19 +482,22 @@ def test_xdist_matches_pearson_shifted():
         if trial % 2:
             T[-2:] = np.nan     # tail punctures (kill only the last
             # m windows, so the probed block keeps live rows/cols)
-        A, mu, sig, fin, con = kernels.preprocess(T, m)
+        prep = kernels.preprocess(T, m)
+        A, mu, sig, fin, con = prep
         w = np.ascontiguousarray(
             np.lib.stride_tricks.sliding_window_view(A, m))
-        qtp = kernels._QTProvider(w, w, mu, sig, mu, sig, m)
+        qtp = kernels._QTProvider(prep, prep, m)
         l = w.shape[0]
         r0, r1 = 3, min(l, 90)
         c0, c1 = 1, min(l, 77)
         X = qtp.xdist(r0, r1, c0, c1)
-        ref = qtp.pearson(r0, r1, c0, c1, clamp=False) * (-2.0 * m)
+        ref = kernels._pearson_block(
+            w[r0:r1], w[c0:c1], mu[r0:r1], sig[r0:r1], mu[c0:c1],
+            sig[c0:c1], m) * (-2.0 * m)
         ref[ref < kernels.config.P_NORM_THRESHOLD - 2.0 * m] = -2.0 * m
-        # compare only rows/cols both paths treat as live: non-finite
-        # windows get a zero row in xdist (finite placeholder) but a
-        # NaN/inf row in pearson — the callers' fin masks overwrite both
+        # compare only rows/cols both paths treat as live: xdist masks
+        # non-finite windows to inf and constant ones to -2m / -m, the
+        # unfolded tile leaves NaN/inf or placeholder values there
         live_r = fin[r0:r1] & (sig[r0:r1] > 0)
         live_c = fin[c0:c1] & (sig[c0:c1] > 0)
         both = live_r[:, None] & live_c[None, :]
@@ -697,3 +691,31 @@ def test_cnative_refuses_writable_cache_dir(tmp_path, monkeypatch):
     assert cnative.status() == {"loaded": True, "reason": None}
     so, = os.listdir(own)
     assert not os.stat(own / so).st_mode & 0o022
+
+
+def test_tile_source_geometry_independent():
+    """A cell's value from a tile source does not depend on the tile
+    that computes it — its shape, its offset, or the source's window
+    ranges (the tiled long-series plan builds one source per tile) — so
+    tiled and single-task sweeps agree bit for bit."""
+    rng = np.random.default_rng(11)
+    T = rng.uniform(-100, 100, 700)
+    T[300:340] = T[100:140]
+    m = 12
+    l = len(T) - m + 1
+    for normalize in (True, False):
+        if normalize:
+            prep = kernels.preprocess(T, m)
+            make = lambda rows, cols: kernels._QTProvider(  # noqa: E731
+                prep, prep, m, rows, cols)
+        else:
+            prep = kernels._preprocess_abs(T, m)
+            make = lambda rows, cols: kernels._PNormSource(  # noqa: E731
+                prep, prep, m, 2.0, rows, cols)
+        full = make(None, None).xdist(0, l, 0, l)
+        for a0, a1, b0, b1 in [(0, 128, 0, 128), (3, 104, 5, 6),
+                               (101, 102, 0, l), (301, 602, 301, 602),
+                               (97, 300, 301, 428), (600, l, 1, 46)]:
+            for src in (make(None, None), make((a0, a1), (b0, b1))):
+                npt.assert_array_equal(src.xdist(a0, a1, b0, b1),
+                                       full[a0:a1, b0:b1])

@@ -245,3 +245,68 @@ def test_mpdisted_custom_func_matches_single_node(spark):
     exp = mpdist(T_A, T_B, m, custom_func=selector)
     got = mpdisted(spark, T_A, T_B, m, tile=200, custom_func=selector)
     assert abs(exp - got) < 1e-9
+
+
+def _planted_series(n, seed):
+    """Uniform floats with a constant run, two planted exact repeats and
+    one NaN: exact ties (constant windows, repeat pairs) and masked
+    windows in every tile."""
+    rs = np.random.RandomState(seed)
+    T = rs.uniform(-100, 100, n)
+    T[200:260] = 3.0
+    T[700:760] = T[100:160]
+    T[1100:1130] = T[400:430]
+    T[950] = np.nan
+    return T
+
+
+def _single_task(T, m, normalize, p, k):
+    if normalize:
+        return kernels.matrix_profile(T, m, k=k)
+    return kernels.matrix_profile_absolute(T, m, p=p, k=k)
+
+
+def test_distributed_parity_planted_top1(spark):
+    """Top-1 tiles of a size that is not a multiple of the 128-square
+    cache tile (tile=300) equal the single-task sweep: I/IL/IR exactly,
+    P within 1e-10, for z-norm and p-norm at p=2 and p=3."""
+    T = _planted_series(1400, 83)
+    m = 12
+    for normalize, p in ((True, 2.0), (False, 2.0), (False, 3.0)):
+        got = (distributed_matrix_profile(spark, T, m, tile=300,
+                                          normalize=normalize, p=p)
+               .toPandas().sort_values("i").reset_index(drop=True))
+        P, I, IL, IR = _single_task(T, m, normalize, p, 1)
+        npt.assert_allclose(got.P.to_numpy(), P[:, 0], rtol=0, atol=1e-10)
+        npt.assert_array_equal(got.I.to_numpy(), I[:, 0])
+        npt.assert_array_equal(got.IL.to_numpy(), IL)
+        npt.assert_array_equal(got.IR.to_numpy(), IR)
+
+
+def test_distributed_parity_planted_topk(spark):
+    """k=3 tiles (tile=300) equal the single-task row-block top-k: I
+    exactly, P within 1e-10, for z-norm and p-norm at p=2 and p=3."""
+    T = _planted_series(1400, 89)
+    m, k = 12, 3
+    for normalize, p in ((True, 2.0), (False, 2.0), (False, 3.0)):
+        got = (distributed_matrix_profile(spark, T, m, tile=300, k=k,
+                                          normalize=normalize, p=p)
+               .toPandas().sort_values("i").reset_index(drop=True))
+        P, I, _, _ = _single_task(T, m, normalize, p, k)
+        npt.assert_allclose(np.stack(got.P.to_numpy()), P, rtol=0,
+                            atol=1e-10)
+        npt.assert_array_equal(np.stack(got.I.to_numpy()), I)
+
+
+def test_pnorm_p3_sweep_matches_naive():
+    """The p=3 tile sweep (per-offset accumulation) against the
+    brute-force oracle, on the planted constant run / repeats / NaN."""
+    import naive_oracle
+    T = _planted_series(1400, 97)[80:480]
+    m = 10
+    P, I, IL, IR = kernels.matrix_profile_absolute(T, m, p=3.0)
+    eP, eI, eIL, eIR = naive_oracle.stump(T, m, normalize=False, p=3.0)
+    npt.assert_allclose(P, eP, rtol=1e-12, atol=1e-12)
+    npt.assert_array_equal(I, eI)
+    npt.assert_array_equal(IL, eIL)
+    npt.assert_array_equal(IR, eIR)

@@ -240,6 +240,37 @@ def test_checkpoint_resume(spark, tmp_path):
     assert man.row_count.sum() == 120
 
 
+def _tiny_tier(spark, buckets):
+    rows = [("s0", datetime.datetime(2024, 1, 1) + d, 1, 10)
+            for d in buckets]
+    return spark.createDataFrame(
+        rows, "source string, bucket timestamp, n_seq long, max_n_tok long")
+
+
+def test_gapfill_rejects_duplicate_bucket(spark):
+    """Default-bounds gapfill fails loudly on a repeated (source,
+    bucket) instead of a sequence-boundary error deep in the plan."""
+    h = datetime.timedelta(hours=1)
+    t = _tiny_tier(spark, [0 * h, 1 * h, 1 * h, 3 * h])
+    with pytest.raises(Exception, match="duplicate \\(source, bucket\\)"):
+        gapfill(t, "1h").collect()
+    # explicit bounds (spine join) are unaffected by the fast-path guard
+    assert len(gapfill(t, "1h", start=datetime.datetime(2024, 1, 1),
+                       end=datetime.datetime(2024, 1, 1, 3)).collect()) == 5
+
+
+def test_gapfill_rejects_off_grid_bucket(spark):
+    """A gap that is not a positive multiple of the tier step would drop
+    the observed row silently (NULL metrics at the wrong bucket), so the
+    query fails instead."""
+    h = datetime.timedelta(hours=1)
+    good = _tiny_tier(spark, [0 * h, 1 * h, 4 * h])
+    assert len(gapfill(good, "1h").collect()) == 5
+    bad = _tiny_tier(spark, [0 * h, 1 * h, 2.5 * h])
+    with pytest.raises(Exception, match="not on the 1h step grid"):
+        gapfill(bad, "1h").collect()
+
+
 def test_gapfill_interpolate(raw):
     """Linear interpolation: gap values lie on the line between the
     neighboring observed buckets (time-weighted); observed rows are

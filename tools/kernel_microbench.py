@@ -11,9 +11,15 @@ Interleaved A/B (path alternates within each m) so host DRAM-steal
 drift cannot masquerade as a path difference; BLAS is pinned to one
 thread; DRAM probes bracket the sweep so the regime is on the record.
 
+``--tile`` times the long-series tile instead: one diagonal and one
+off-diagonal 8192-window tile of a ``perfbench/gen.make_series`` integer
+series (m=25, the benchmark's window) through ``kernels._top1_sweep``,
+z-norm and p=2, each including its per-tile source build as
+``plans/longseq.py`` runs it; best of 3, pairs/s.
+
 Usage::
 
-    python tools/kernel_microbench.py [--n 8000] [--out FILE]
+    python tools/kernel_microbench.py [--n 8000] [--tile] [--out FILE]
 
 Prints one JSON line; ``--out`` also writes it to FILE.
 """
@@ -57,8 +63,49 @@ def run_path(T: np.ndarray, m: int, force: str) -> float:
     return pairs / best / 1e6
 
 
+def tile_rates(tile: int = 8192, m: int = 25) -> dict:
+    """Best-of-3 pairs/s of one diagonal and one off-diagonal tile."""
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import gen
+
+    T = gen.make_series(1, 2 * tile + m - 1)
+    ez = kernels.excl_zone(m)
+    nd = tile - ez - 1
+    blocks = {"diag": ((0, tile, 0, tile), nd * (nd + 1) // 2),
+              "offdiag": ((0, tile, tile, 2 * tile), tile * tile)}
+    rows = {}
+    for dist in ("znorm", "p2"):
+        if dist == "znorm":
+            prep = kernels.preprocess(T, m)
+            make = lambda rows, cols: kernels._QTProvider(  # noqa: E731
+                prep, prep, m, rows, cols)
+        else:
+            prep = kernels._preprocess_abs(T, m)
+            make = lambda rows, cols: kernels._PNormSource(  # noqa: E731
+                prep, prep, m, 2.0, rows, cols)
+        for name, ((r0, r1, c0, c1), pairs) in blocks.items():
+            best = float("inf")
+            for _ in range(3):
+                t0 = time.perf_counter()
+                kernels._top1_sweep(make((r0, r1), (c0, c1)),
+                                    r0, r1, c0, c1, ez)
+                best = min(best, time.perf_counter() - t0)
+            rows[f"{dist}_{name}"] = {"s": round(best, 3), "pairs": pairs,
+                                      "mpairs_s": round(pairs / best / 1e6,
+                                                        1)}
+    return {"metric": "longseq_tile_sweep", "tile": tile, "m": m,
+            "unit": "M pairs/s single-thread", "rows": rows}
+
+
 def main() -> None:
     args = sys.argv[1:]
+    if "--tile" in args:
+        probe_before = mem_probe_gbs()
+        out = tile_rates()
+        out["mem_probe_gbs_before"] = probe_before
+        out["mem_probe_gbs_after"] = mem_probe_gbs()
+        _emit(out, args)
+        return
     n = int(args[args.index("--n") + 1]) if "--n" in args else 8000
     rng = np.random.default_rng(7)
     T = rng.integers(0, 1000, n).astype(np.float64)
@@ -93,6 +140,10 @@ def main() -> None:
         "mem_probe_gbs_before": probe_before,
         "mem_probe_gbs_after": probe_after,
     }
+    _emit(out, args)
+
+
+def _emit(out: dict, args: list) -> None:
     line = json.dumps(out)
     print(line)
     if "--out" in args:
