@@ -23,11 +23,14 @@ stumpi / aampi      streaming.StumpiState (egress=True; top-k via k=,
                     wiring)
 scrump/prescrump    anytime.Scrump / anytime.prescrump;
 (scraamp twins)     operators.discovery.scrump (DataFrame)
-mstump / mstumped   anytime.multi_matrix_profile;
+mstump / mstumped   anytime.multi_matrix_profile (maamp with
+                    normalize=False, any p);
                     operators.discovery.mstump (DataFrame);
                     plans.longseq.mstumped (one over-limit multi-dim
                     series tiled across executors; normalize=False is
-                    the maamped twin)
+                    the maamped twin, p=2) — both run kernels.
+                    _top1_sweep over a kernels._MultiSource, the
+                    single-dimension tile sweep and sources
 subspace / mdl      anytime.subspace / anytime.mdl
 motifs / match      mining.motifs / mining.match;
                     operators.discovery.motifs (DataFrame)

@@ -10,9 +10,13 @@ Semantics follow the reference:
   (stumpy/scrump.py:650-1139): each ``update()`` processes a random subset
   of diagonals; P converges monotonically to the exact profile and equals
   it at 100%.
-- :func:`multi_matrix_profile` — mstump (stumpy/mstump.py:1114-1287):
-  per-pair per-dimension z-norm distances, column-sorted, cumulative-mean
-  over the k smallest dims; returns one profile per dimensionality level.
+- :func:`multi_matrix_profile` — mstump / maamp (stumpy/mstump.py:
+  1114-1287): per-pair per-dimension distances (z-norm or p-norm),
+  column-sorted, cumulative-mean over the k smallest dims; returns one
+  profile per dimensionality level.  It is a thin caller of the
+  single-dimension tile sweep (``kernels._top1_sweep`` over a
+  ``kernels._MultiSource``), the same sweep ``plans.longseq.mstumped``
+  runs per tile.
 
 All approximations are **upper bounds** of the exact profile (distances
 only ever decrease as more entries are computed) — that invariant is what
@@ -161,25 +165,11 @@ class Scrump:
             self.update()
 
 
-def _apply_include_rows(Dd: np.ndarray, include: np.ndarray) -> None:
-    """Row-swap so ``include`` dimensions occupy the first rows (the
-    in-place swap of core.py:3893-3960 ``_apply_include``, applied to
-    axis 0 of a (d, ...) distance tensor)."""
-    include = np.asarray(include, dtype=np.int64)
-    r = include.shape[0]
-    restricted = include[include < r]
-    unrestricted = include[include >= r]
-    mask = np.ones(r, dtype=bool)
-    mask[restricted] = False
-    tmp = Dd[:r].copy()
-    Dd[:r] = Dd[include]
-    Dd[unrestricted] = tmp[mask]
-
-
 def multi_matrix_profile(Ts, m: int, normalize: bool = True,
                          p: float = 2.0, include=None,
                          discords: bool = False):
-    """Multi-dimensional matrix profile (mstump semantics).
+    """Multi-dimensional matrix profile (mstump semantics; maamp with
+    ``normalize=False``, any ``p``).
 
     ``Ts``: (d, n) array — rows are dimensions.  Returns (P, I) of shape
     (d, l): row k is the profile using the k+1 best-aligned dimensions
@@ -191,68 +181,18 @@ def multi_matrix_profile(Ts, m: int, normalize: bool = True,
     aggregates the k+1 *worst*-aligned dimensions (mstump.py:538-541).
     The profile itself stays the elementwise min over pairs in both
     modes, exactly as the reference.
+
+    One diagonal-block :func:`kernels._top1_sweep` over a
+    :class:`kernels._MultiSource`: every pair is evaluated once, each
+    dimension's distance from a single-dimension tile source.
     """
     Ts = np.asarray(Ts, dtype=np.float64)
-    d, n = Ts.shape
-    l = n - m + 1
-    ez = kernels.excl_zone(m)
-    # per-dim prepared stats
-    prep = [kernels.preprocess(Ts[dim], m) for dim in range(d)]
-    windows = [np.lib.stride_tricks.sliding_window_view(p[0], m)
-               for p in prep]
-    P = np.full((d, l), np.inf)
-    I = np.full((d, l), -1, dtype=np.int64)
-    block = 512
-    for start in range(0, l, block):
-        stop = min(start + block, l)
-        nb = stop - start
-        # D per dim: (d, nb, l)
-        Dd = np.empty((d, nb, l))
-        for dim in range(d):
-            Tc, mu, sig, fin, con = prep[dim]
-            if normalize:
-                rho = kernels._pearson_block(
-                    windows[dim][start:stop], windows[dim],
-                    mu[start:stop], sig[start:stop], mu, sig, m)
-                D2 = np.abs(2.0 * m * (1.0 - rho))
-                ca = con[start:stop][:, None]
-                D2 = np.where(ca & con[None, :], 0.0, D2)
-                D2 = np.where(ca ^ con[None, :], float(m), D2)
-            else:
-                # maamp path (stumpy/maamp.py): plain p-norm per dim
-                w = windows[dim]
-                if p == 2.0:
-                    cs2 = np.concatenate(([0.0], np.cumsum(Tc * Tc)))
-                    w2 = cs2[m:] - cs2[:-m]
-                    QT = w[start:stop] @ w.T
-                    D2 = w2[start:stop][:, None] - 2.0 * QT + w2[None, :]
-                    np.maximum(D2, 0.0, out=D2)
-                else:
-                    D2 = np.sum(np.abs(w[start:stop, None, :]
-                                       - w[None]) ** p, axis=2) ** (2.0/p)
-            D2[~fin[start:stop], :] = np.inf
-            D2[:, ~fin] = np.inf
-            Dd[dim] = np.sqrt(kernels.snap_to_zero(D2))
-        rows = np.arange(start, stop)
-        cols = np.arange(l)
-        band = np.abs(cols[None, :] - rows[:, None]) <= ez
-        Dd[:, band] = np.inf
-        # include pinning + directional sort across dims, cumulative mean
-        start_row = 0
-        if include is not None:
-            _apply_include_rows(Dd, include)
-            start_row = len(include)
-        if discords:
-            Dd[start_row:][::-1].sort(axis=0)
-        else:
-            Dd[start_row:].sort(axis=0)
-        Dcum = np.cumsum(Dd, axis=0) / np.arange(1, d + 1)[:, None, None]
-        for kdim in range(d):
-            j = np.argmin(Dcum[kdim], axis=1)
-            r = np.arange(nb)
-            vals = Dcum[kdim][r, j]
-            P[kdim, rows] = vals
-            I[kdim, rows] = np.where(np.isfinite(vals), j, -1)
+    prep = kernels.preprocess if normalize else kernels._preprocess_abs
+    src = kernels._MultiSource([prep(X, m) for X in Ts], m, normalize, p,
+                               include, discords)
+    l = Ts.shape[1] - m + 1
+    (P, I, *_), _ = kernels._top1_sweep(src, 0, l, 0, l,
+                                        kernels.excl_zone(m))
     return P, I
 
 

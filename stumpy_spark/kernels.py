@@ -488,7 +488,10 @@ class _TileSource:
     (monotone in the distance, so min/argmin/top-k are unchanged) with
     every special case already applied — snap-to-zero, constant windows,
     and inf for non-finite rows/columns; :meth:`dist` maps finished
-    values back to distances."""
+    values back to distances.  ``lead`` is the shape a tile carries
+    before its (row, column) axes (see :func:`_top1_sweep`)."""
+
+    lead = ()
 
     def __init__(self, fin_A, fin_B, rows, cols):
         self.r0, self.r1 = rows if rows else (0, len(fin_A))
@@ -533,44 +536,71 @@ class _QTProvider(_TileSource):
     into the one GEMM.  Non-finite (``mu == inf``) and constant (``sig ==
     0``) windows become zero rows, a finite placeholder the masks
     overwrite.  Snap-to-zero runs in shifted space (``X < thr - 2m <=>
-    D^2 < thr``); snapped cells land on exactly ``-2m``."""
+    D^2 < thr``); snapped cells land on exactly ``-2m``.
 
-    def __init__(self, prep_A, prep_B, m, rows=None, cols=None):
+    ``pearson=True`` gives up the folding for the reference's per-cell
+    formula (core.py:1107-1168): tiles of ``D^2 = |2m(1 - rho)|`` itself,
+    ``rho = (QT - m*mu_i*mu_j) / max(m*sig_i*sig_j, DENOM_THRESHOLD)``
+    from a GEMM on the raw windows.  On integer series with a
+    power-of-two m every step up to the division is exact, so pairs whose
+    z-normalized windows coincide — offset or mirrored copies — tie
+    exactly, as they do in the SQL oracles; the folded form rounds them
+    apart.  It costs six more passes per tile."""
+
+    def __init__(self, prep_A, prep_B, m, rows=None, cols=None,
+                 pearson=False):
         TA, muA, sigA, finA, conA = prep_A
         TB, muB, sigB, finB, conB = prep_B
         super().__init__(finA, finB, rows, cols)
         self.m = m
-        self._Ax = self._scaled(TA, muA, sigA, self.r0, self.r1, -2.0,
-                                _GEMM_ROWS - 1)
-        self._Bx = self._scaled(TB, muB, sigB, self.c0, self.c1, 1.0, 1)
+        self._pearson = pearson
+        self._shift = 0.0 if pearson else 2.0 * m
+        self._Ax, mu_a = self._side(TA, muA, sigA, self.r0, self.r1,
+                                    -2.0, _GEMM_ROWS - 1)
+        self._Bx, mu_b = self._side(TB, muB, sigB, self.c0, self.c1,
+                                    1.0, 1)
+        if pearson:
+            self._m_mu_a, self._mu_b = (m * mu_a)[:, None], mu_b
+            self._m_sig_a = (m * sigA[self.r0:self.r1])[:, None]
+            self._sig_b = sigB[self.c0:self.c1]
         self._ca = conA[self.r0:self.r1]
         self._cb = conB[self.c0:self.c1]
         self._any_con = bool(self._ca.any()) or bool(self._cb.any())
 
-    def _scaled(self, T, mu, sig, lo, hi, num, pad):
-        W = np.lib.stride_tricks.sliding_window_view(T, self.m)
+    def _side(self, T, mu, sig, lo, hi, num, pad):
+        """GEMM operand of windows lo:hi and their means (0 for
+        non-finite and constant windows); unless ``pearson`` the operand
+        is centered and scaled by ``num/sig`` (zero rows for those)."""
         mu, sig = mu[lo:hi], sig[lo:hi]
         with np.errstate(divide="ignore", invalid="ignore"):
             ok = np.isfinite(mu) & (sig > 0.0)
             fac = np.where(ok, num / sig, 0.0)
-            out = self._operand(W, lo, hi, pad)
-            out[:hi - lo] -= np.where(ok, mu, 0.0)[:, None]
+        mu = np.where(ok, mu, 0.0)
+        W = np.lib.stride_tricks.sliding_window_view(T, self.m)
+        out = self._operand(W, lo, hi, pad)
+        if not self._pearson:
+            out[:hi - lo] -= mu[:, None]
             out[:hi - lo] *= fac[:, None]
-        return out
+        return out, mu
 
     def _tile(self, i0, i1, j0, j1):
-        m = self.m
+        m, shift = self.m, self._shift
         X = self._gemm(i0, i1, j0, j1)
-        X[X < config.P_NORM_THRESHOLD - 2.0 * m] = -2.0 * m
+        if self._pearson:
+            X -= self._m_mu_a[i0:i1] * self._mu_b[j0:j1]
+            X /= np.maximum(self._m_sig_a[i0:i1] * self._sig_b[j0:j1],
+                            config.DENOM_THRESHOLD)
+            X = 2.0 * m * (1.0 - np.minimum(X, 1.0))
+        X[X < config.P_NORM_THRESHOLD - shift] = -shift
         if self._any_con:
             ca = self._ca[i0:i1][:, None]
             cb = self._cb[j0:j1][None, :]
-            X[ca & cb] = -2.0 * m         # D^2 == 0
-            X[ca ^ cb] = -float(m)        # D^2 == m
+            X[ca & cb] = -shift                # D^2 == 0
+            X[ca ^ cb] = float(m) - shift      # D^2 == m
         return X
 
     def dist(self, x):
-        return np.sqrt(x + 2.0 * self.m)
+        return np.sqrt(x + self._shift)
 
 
 def _preprocess_abs(T, m):
@@ -633,26 +663,88 @@ class _PNormSource(_TileSource):
         return np.sqrt(x) if self.p == 2.0 else x ** (1.0 / self.p)
 
 
+def _apply_include_rows(D, include):
+    """Row-swap so ``include`` dimensions occupy the first rows (the
+    in-place swap of core.py:3893-3960 ``_apply_include``, applied to
+    axis 0 of a (d, ...) distance tensor)."""
+    r = include.shape[0]
+    restricted = include[include < r]
+    unrestricted = include[include >= r]
+    mask = np.ones(r, dtype=bool)
+    mask[restricted] = False
+    tmp = D[:r].copy()
+    D[:r] = D[include]
+    D[unrestricted] = tmp[mask]
+
+
+class _MultiSource:
+    """Multi-dimensional self-join source (mstump semantics,
+    mstump.py:534-546) over one :func:`preprocess` (``normalize``) or
+    :func:`_preprocess_abs` tuple per dimension.  A tile is the
+    ``(d, nr, nc)`` stack of the per-dimension distances — one
+    :class:`_QTProvider` or :class:`_PNormSource` per dimension, each
+    mapped through its own ``dist`` — with the ``include`` dimensions
+    pinned to the front, the rest sorted over axis 0 (descending with
+    ``discords``), then cumulatively averaged: plane k holds the mean of
+    the k+1 best- (worst-) aligned dimensions.  Tiles are distances
+    already, so :meth:`dist` is the identity.
+
+    The z-norm dimensions use the ``pearson`` form, so pairs that tie in
+    exact arithmetic — offset copies of a window, or one dimension
+    mirroring another — tie in every level's mean too; the folded form's
+    rounding breaks those ties and the profile's indices drift from the
+    reference formula's."""
+
+    def __init__(self, preps, m, normalize=True, p=2.0, include=None,
+                 discords=False, rows=None, cols=None):
+        if normalize:
+            self._srcs = [_QTProvider(x, x, m, rows, cols, pearson=True)
+                          for x in preps]
+        else:
+            self._srcs = [_PNormSource(x, x, m, p, rows, cols)
+                          for x in preps]
+        self.lead = (len(preps),)
+        self._include = (None if include is None
+                         else np.asarray(include, dtype=np.int64))
+        self._discords = discords
+
+    def xdist(self, a0, a1, b0, b1):
+        D = np.stack([s.dist(s.xdist(a0, a1, b0, b1)) for s in self._srcs])
+        free = D
+        if self._include is not None:
+            _apply_include_rows(D, self._include)
+            free = D[len(self._include):]
+        (free[::-1] if self._discords else free).sort(axis=0)
+        D = np.cumsum(D, axis=0)
+        D /= np.arange(1, len(D) + 1)[:, None, None]
+        return D
+
+    @staticmethod
+    def dist(x):
+        return x
+
+
 def _mask_band(X, a0, b0, ez, lower=False):
     """inf on the exclusion band ``|j - i| <= ez`` of the tile whose
-    first cell is (a0, b0); ``lower=True`` masks every ``j - i <= ez``
-    (band plus lower triangle).  Only the columns the band reaches are
-    touched."""
-    nr, nc = X.shape
+    first cell is (a0, b0), on every leading plane; ``lower=True`` masks
+    every ``j - i <= ez`` (band plus lower triangle).  Only the columns
+    the band reaches are touched."""
+    nr, nc = X.shape[-2:]
     lo = 0 if lower else max(0, a0 - ez - b0)
     hi = min(nc, a0 + nr + ez - b0)
     if lo < hi:
         d = np.arange(b0 + lo, b0 + hi)[None, :] \
             - np.arange(a0, a0 + nr)[:, None]
-        X[:, lo:hi][(d if lower else np.abs(d)) <= ez] = np.inf
+        X[..., lo:hi][..., (d if lower else np.abs(d)) <= ez] = np.inf
 
 
 def _improve(pv, jv, lo, vals, js):
-    """First-strictly-smaller running-min update of ``pv/jv[lo:...]`` —
-    candidates arrive in ascending neighbor order, so this keeps the
+    """First-strictly-smaller running-min update of ``pv/jv[..., lo:...]``
+    — candidates arrive in ascending neighbor order, so this keeps the
     smallest neighbor index among exact ties."""
-    sl_p = pv[lo:lo + len(vals)]
-    sl_j = jv[lo:lo + len(vals)]
+    n = vals.shape[-1]
+    sl_p = pv[..., lo:lo + n]
+    sl_j = jv[..., lo:lo + n]
     better = vals < sl_p
     sl_p[better] = vals[better]
     sl_j[better] = js[better]
@@ -682,6 +774,12 @@ def _top1_sweep(src, r0, r1, c0, c1, ez):
     its candidates in ascending neighbor order and strict-``<`` updates
     keep the first index among exact ties.
 
+    A source's tiles carry its leading shape ``src.lead`` before the
+    (row, column) axes: ``()`` for one distance, ``(d,)`` for the d
+    dimensionality levels of a :class:`_MultiSource`.  Each leading
+    plane is an independent profile over the same tiles and band, and
+    every returned array has shape ``src.lead + (rows,)``.
+
     Returns ``(rows, cols)``: ``rows = (P, I, PL, IL, PR, IR)`` for
     r0:r1 — on a diagonal block the column minima fold into the rows'
     left profile; ``cols`` is the same tuple for c0:c1 (left neighbors
@@ -691,36 +789,44 @@ def _top1_sweep(src, r0, r1, c0, c1, ez):
     br, bc = (nr, nc) if nr * nc <= ONE_TILE_CELLS else (128, 128)
     self_join = ez >= 0
     diag = self_join and (r0, r1) == (c0, c1)
-    pr = np.full(nr, np.inf)
-    ir = np.full(nr, -1, dtype=np.int64)
-    pl = np.full(nc, np.inf)
-    il = np.full(nc, -1, dtype=np.int64)
+    # state is (planes, n) whatever the leading shape; reshaped on return
+    L = math.prod(src.lead)
+    lz = np.arange(L)[:, None]
+    pr = np.full((L, nr), np.inf)
+    ir = np.full((L, nr), -1, dtype=np.int64)
+    pl = np.full((L, nc), np.inf)
+    il = np.full((L, nc), -1, dtype=np.int64)
     for a0 in range(r0, r1, br):
         a1 = min(a0 + br, r1)
         rr = np.arange(a1 - a0)
         for b0 in range(a0 if diag else c0, c1, bc):
             b1 = min(b0 + bc, c1)
-            X = src.xdist(a0, a1, b0, b1)
+            X = src.xdist(a0, a1, b0, b1).reshape(L, a1 - a0, b1 - b0)
             if self_join and b0 <= a1 - 1 + ez:
                 _mask_band(X, a0, b0, ez, lower=True)
-            j = np.argmin(X, axis=1)
-            _improve(pr, ir, a0 - r0, X[rr, j], j + b0)
+            j = np.argmin(X, axis=2)
+            _improve(pr, ir, a0 - r0, X[lz, rr, j], j + b0)
             if self_join:
-                i = np.argmin(X, axis=0)
-                _improve(pl, il, b0 - c0, X[i, np.arange(b1 - b0)], i + a0)
+                i = np.argmin(X, axis=1)
+                _improve(pl, il, b0 - c0, X[lz, i, np.arange(b1 - b0)],
+                         i + a0)
+
+    def out(*arrays):
+        return tuple(x.reshape(src.lead + x.shape[1:]) for x in arrays)
+
     dist = src.dist
-    none_p = np.full(nr, np.inf)
-    none_i = np.full(nr, -1, dtype=np.int64)
+    none_p = np.full((L, nr), np.inf)
+    none_i = np.full((L, nr), -1, dtype=np.int64)
     if not self_join:
-        return (dist(pr), ir, none_p, none_i, none_p, none_i), None
+        return out(dist(pr), ir, none_p, none_i, none_p, none_i), None
     if diag:
-        return (*_top1(pl, pr, il, ir, dist), dist(pl), il,
-                dist(pr), ir), None
+        return out(*_top1(pl, pr, il, ir, dist), dist(pl), il,
+                   dist(pr), ir), None
     PR, PL = dist(pr), dist(pl)
-    none_pc = np.full(nc, np.inf)
-    none_ic = np.full(nc, -1, dtype=np.int64)
-    return ((PR, ir, none_p, none_i, PR, ir),
-            (PL, il, PL, il, none_pc, none_ic))
+    none_pc = np.full((L, nc), np.inf)
+    none_ic = np.full((L, nc), -1, dtype=np.int64)
+    return (out(PR, ir, none_p, none_i, PR, ir),
+            out(PL, il, PL, il, none_pc, none_ic))
 
 
 def _topk_rows(src, k, ez, block_rows, left_right):

@@ -288,6 +288,17 @@ _MSTUMP_SCHEMA = T.StructType([
 ])
 
 
+def _dims_matrix(dims, m: int):
+    """One multi-dim doc as a (d, n) float64 array, or None — the doc is
+    skipped — when it has no dimensions, they differ in length, or they
+    are shorter than 2m."""
+    rows = [np.asarray(x, dtype=np.float64) for x in dims]
+    if (not rows or any(r.ndim != 1 or len(r) != len(rows[0]) for r in rows)
+            or len(rows[0]) < 2 * m):
+        return None
+    return np.stack(rows)
+
+
 def mstump(df: DataFrame, m: int, id_col: str = "doc_id",
            dims_col: str = "dims", include=None,
            discords: bool = False) -> DataFrame:
@@ -306,9 +317,8 @@ def mstump(df: DataFrame, m: int, id_col: str = "doc_id",
         for pdf in batches:
             rows = []
             for did, dims in zip(pdf[id_col], pdf[dims_col]):
-                Ts = np.asarray([np.asarray(d, dtype=np.float64)
-                                 for d in dims])
-                if Ts.ndim != 2 or Ts.shape[1] < 2 * m:
+                Ts = _dims_matrix(dims, m)
+                if Ts is None:
                     continue
                 P, I = multi_matrix_profile(Ts, m, include=include,
                                             discords=discords)
@@ -392,9 +402,8 @@ def mmotifs(df: DataFrame, m: int, max_motifs: int = 1,
         for pdf in batches:
             rows = []
             for did, dims in zip(pdf[id_col], pdf[dims_col]):
-                Ts = np.asarray([np.asarray(d, dtype=np.float64)
-                                 for d in dims])
-                if Ts.ndim != 2 or Ts.shape[1] < 2 * m:
+                Ts = _dims_matrix(dims, m)
+                if Ts is None:
                     continue
                 res = _mmotifs(Ts, m, max_motifs=max_motifs,
                                include=include, discords=discords)

@@ -16,8 +16,10 @@ Differences from the reference's decomposition, on purpose:
   contributions for both its row range and its col range (the symmetric
   update the reference does per diagonal cell, stump.py:219-230).
 - a top-1 tile is one ``kernels._top1_sweep`` — the same sweep the
-  single-task ``kernels.matrix_profile(_absolute)`` runs — over a tile
-  source built on the tile's row and column windows only, so per-task
+  single-task ``kernels.matrix_profile(_absolute)`` and
+  ``anytime.multi_matrix_profile`` run — over a tile source
+  (``mstumped``: one per dimension, combined by ``kernels._MultiSource``)
+  built on the tile's row and column windows only, so per-task
   memory is O(tile × m) operands plus one 128-square cache tile (a
   128 × tile strip for top-k); AQE coalesces the small final merge.
 
@@ -356,33 +358,30 @@ def mstumped(spark: SparkSession, Ts, m: int, tile: int = 2048,
     the (i, j) plane is tiled exactly like ``distributed_matrix_profile``
     and the per-dimension distances are combined inside each task).
 
-    ``Ts``: (d, n) array, rows are dimensions.  Per cell the d distances
-    are include-pinned / directionally sorted and cumulatively averaged
-    (mstump.py:534-546 semantics via ``anytime.multi_matrix_profile``'s
-    exact formulas), then reduced to a per-row top-1 per dimensionality
-    level.  Returns DataFrame (kdim, i, p, j): row kdim uses the kdim+1
-    best- (or worst-, ``discords=True``) aligned dimensions.
+    ``Ts``: (d, n) array, rows are dimensions.  Each tile runs
+    ``kernels._top1_sweep`` over a ``kernels._MultiSource`` built on the
+    tile's row and column windows only (O(tile × m × d) per task) — the
+    same source and sweep as ``anytime.multi_matrix_profile``: per cell
+    the d distances are include-pinned, directionally sorted and
+    cumulatively averaged (mstump.py:534-546), then reduced to a per-row
+    top-1 per dimensionality level.  Returns DataFrame (kdim, i, p, j):
+    row kdim uses the kdim+1 best- (or worst-, ``discords=True``)
+    aligned dimensions.
 
     ``normalize=False`` is the maamped twin (p = 2 only on this path —
-    the general-p maamped stays in ``anytime.multi_matrix_profile``).
+    the general-p maamp stays in ``anytime.multi_matrix_profile``).
 
     The multi-dim cell value is symmetric in (i, j), so tiles cover the
     upper triangle only and each off-diagonal tile also emits column
     candidates — the same halved-work plan as the single-dim path.
     """
-    from ..anytime import _apply_include_rows
-
     Ts = np.asarray(Ts, dtype=np.float64)
     d, n = Ts.shape
     l = n - m + 1
     ez = kernels.excl_zone(m)
-    if include is not None:
-        include = np.asarray(include, dtype=np.int64)
 
     prep_fn = kernels.preprocess if normalize else kernels._preprocess_abs
-    prep = [prep_fn(X, m) for X in Ts]
-    sc = spark.sparkContext
-    b = sc.broadcast((prep, include, discords, normalize))
+    b = spark.sparkContext.broadcast([prep_fn(X, m) for X in Ts])
 
     n_tiles = (l + tile - 1) // tile
     tiles = [(r, c) for r in range(n_tiles) for c in range(r, n_tiles)]
@@ -403,113 +402,29 @@ def mstumped(spark: SparkSession, Ts, m: int, tile: int = 2048,
         T.StructField("p", T.DoubleType()),
         T.StructField("j", T.LongType()),
     ])
-    # smaller sub-blocks than the single-dim path: the strip holds d
-    # distance planes at once and must stay cache-resident
-    BR, BC = 256, 512
+
+    def frame(i0, prof):
+        P, I = prof[:2]
+        nr = P.shape[1]
+        return pd.DataFrame({"kdim": np.repeat(np.arange(d), nr),
+                             "i": np.tile(np.arange(i0, i0 + nr), d),
+                             "p": P.ravel(), "j": I.ravel()})
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prep_w, inc, disc, norm = b.value
-        dd_ = len(prep_w)
-        windows = [np.lib.stride_tricks.sliding_window_view(pw[0], m)
-                   for pw in prep_w]
-
-        def dcum_sub(wr_list, wc_list, a0, a1, b0, b1):
-            """(d, br, bc) include-pinned sorted cumulative-mean distance
-            sub-block for absolute rows a0:a1 x cols b0:b1 — exactly
-            anytime.multi_matrix_profile's per-cell formulas."""
-            Dd = np.empty((dd_, a1 - a0, b1 - b0))
-            for dim in range(dd_):
-                if norm:
-                    Tc, mu, sig, fin, con = prep_w[dim]
-                    rho = kernels._pearson_block(
-                        wr_list[dim], wc_list[dim], mu[a0:a1], sig[a0:a1],
-                        mu[b0:b1], sig[b0:b1], m)
-                    D2 = np.abs(2.0 * m * (1.0 - rho))
-                    ca = con[a0:a1][:, None]
-                    cb = con[b0:b1][None, :]
-                    D2 = np.where(ca & cb, 0.0, D2)
-                    D2 = np.where(ca ^ cb, float(m), D2)
-                else:
-                    Tc, w2, fin = prep_w[dim]
-                    QT = wr_list[dim] @ wc_list[dim].T
-                    D2 = w2[a0:a1][:, None] - 2.0 * QT + w2[b0:b1][None, :]
-                    np.maximum(D2, 0.0, out=D2)
-                D2[~fin[a0:a1], :] = np.inf
-                D2[:, ~fin[b0:b1]] = np.inf
-                Dd[dim] = np.sqrt(kernels.snap_to_zero(D2))
-            # exclusion band (same cells across every dim, so masking
-            # before the sort is equivalent to the single-node order)
-            if b0 <= a1 - 1 + ez and a0 - ez <= b1 - 1:
-                for ra in range(a0, a1):
-                    lo = max(b0, ra - ez) - b0
-                    hi = min(b1, ra + ez + 1) - b0
-                    if lo < hi:
-                        Dd[:, ra - a0, lo:hi] = np.inf
-            start_row = 0
-            if inc is not None:
-                _apply_include_rows(Dd, inc)
-                start_row = len(inc)
-            if disc:
-                Dd[start_row:][::-1].sort(axis=0)
-            else:
-                Dd[start_row:].sort(axis=0)
-            return np.cumsum(Dd, axis=0) / np.arange(
-                1, dd_ + 1)[:, None, None]
-
-        def upd(pv, jv, lo, vals, js):
-            sl_p = pv[:, lo:lo + vals.shape[1]]
-            sl_j = jv[:, lo:lo + vals.shape[1]]
-            better = vals < sl_p
-            sl_p[better] = vals[better]
-            sl_j[better] = js[better]
-
-        def eval_tile(r0, r1, c0, c1, emit_cols):
-            nr, nc = r1 - r0, c1 - c0
-            wr = [np.ascontiguousarray(w[r0:r1]) for w in windows]
-            wc_ = wr if r0 == c0 else \
-                [np.ascontiguousarray(w[c0:c1]) for w in windows]
-            bp = np.full((dd_, nr), np.inf)
-            bj = np.full((dd_, nr), -1, dtype=np.int64)
-            if emit_cols:
-                cp = np.full((dd_, nc), np.inf)
-                cj = np.full((dd_, nc), -1, dtype=np.int64)
-            for sr0 in range(0, nr, BR):
-                sr1 = min(sr0 + BR, nr)
-                a0, a1 = r0 + sr0, r0 + sr1
-                for sc0 in range(0, nc, BC):
-                    sc1 = min(sc0 + BC, nc)
-                    b0, b1 = c0 + sc0, c0 + sc1
-                    Dc = dcum_sub([w[sr0:sr1] for w in wr],
-                                  [w[sc0:sc1] for w in wc_],
-                                  a0, a1, b0, b1)
-                    j = np.argmin(Dc, axis=2)               # (d, br)
-                    v = np.take_along_axis(
-                        Dc, j[:, :, None], axis=2)[:, :, 0]
-                    upd(bp, bj, sr0, v, j + b0)
-                    if emit_cols:
-                        i2 = np.argmin(Dc, axis=1)          # (d, bc)
-                        v2 = np.take_along_axis(
-                            Dc, i2[:, None, :], axis=1)[:, 0, :]
-                        upd(cp, cj, sc0, v2, i2 + a0)
-            frames = []
-            for kd in range(dd_):
-                frames.append(pd.DataFrame({
-                    "kdim": kd, "i": np.arange(r0, r1), "p": bp[kd],
-                    "j": np.where(np.isfinite(bp[kd]), bj[kd], -1),
-                }))
-                if emit_cols:
-                    frames.append(pd.DataFrame({
-                        "kdim": kd, "i": np.arange(c0, c1), "p": cp[kd],
-                        "j": np.where(np.isfinite(cp[kd]), cj[kd], -1),
-                    }))
-            return frames
-
+        prep = b.value
         for pdf in batches:
             out = []
             for tr, tc in zip(pdf["tr"], pdf["tc"]):
                 r0, r1 = tr * tile, min((tr + 1) * tile, l)
                 c0, c1 = tc * tile, min((tc + 1) * tile, l)
-                out.extend(eval_tile(r0, r1, c0, c1, tr != tc))
+                src = kernels._MultiSource(prep, m, normalize,
+                                           include=include,
+                                           discords=discords,
+                                           rows=(r0, r1), cols=(c0, c1))
+                rows, cols = kernels._top1_sweep(src, r0, r1, c0, c1, ez)
+                out.append(frame(r0, rows))
+                if cols is not None:
+                    out.append(frame(c0, cols))
             if out:
                 yield pd.concat(out, ignore_index=True)
 

@@ -10,7 +10,10 @@ Flow (:func:`upsert_late_rows`):
 
 1. kernel stats for the late rows (same fused mapInArrow as the batch
    path — one code path, no divergence),
-2. append them to the raw store (partitioned day/source),
+2. append them to the raw store (partitioned day/source); on a store
+   written by ``jobs/rollup_job.py`` (``raw/slice=N/day=/source=``) they
+   become one more slice, named by the late batch's content hash and
+   written with overwrite,
 3. collect the affected (day, source) set — this is driver-side metadata,
    a handful of tuples, never data,
 4. re-aggregate ONLY those raw partitions into each tier and
@@ -24,10 +27,13 @@ guarantee an Iceberg MERGE gives, at partition granularity.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import tiers as RT
+from .checkpoint import slice_fingerprint
 from .retention import TierStore
 
 
@@ -47,16 +53,26 @@ def upsert_late_rows(spark: SparkSession, root: str, late_df: DataFrame,
     late_raw = _with_partition_cols(
         RT.per_sequence_stats_fused(late_df, m=m,
                                     include_profile=include_profile))
-    (late_raw.repartition("day", "source")
-     .write.mode("append").partitionBy("day", "source")
-     .parquet(raw_store.path))
+    writer = (late_raw.repartition("day", "source")
+              .write.partitionBy("day", "source"))
+    if any(Path(raw_store.path).glob("slice=*")):
+        # a jobs/rollup_job.py store (raw/slice=N/day=/source=): the late
+        # batch is one more slice, keyed by its content and overwritten,
+        # so a retry rewrites it instead of appending duplicates
+        fp = slice_fingerprint(late_df) & (2 ** 64 - 1)
+        writer.mode("overwrite").parquet(
+            str(Path(raw_store.path) / f"slice=late{fp:016x}"))
+    else:
+        writer.mode("append").parquet(raw_store.path)
 
     affected = [(str(r.day), r.source) for r in
                 late_raw.select("day", "source").distinct().collect()]
     if not affected:
         return {"affected": [], "tiers": {}}
 
-    raw_all = spark.read.parquet(raw_store.path)
+    # read as the job does: "slice" is the partition column of its
+    # layout, "bucket" a column only its slices carry
+    raw_all = spark.read.parquet(raw_store.path).drop("slice", "bucket")
     cond = F.lit(False)
     for day, source in affected:
         cond = cond | ((F.col("day") == F.lit(day)) &

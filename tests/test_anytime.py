@@ -51,40 +51,10 @@ def test_scrump_with_prescrump():
     npt.assert_almost_equal(P_exact, sc.P_, decimal=PRECISION)
 
 
-def _naive_mstump(Ts, m):
-    d, n = Ts.shape
-    l = n - m + 1
-    ez = naive.excl_zone(m)
-    P = np.full((d, l), np.inf)
-    I = np.full((d, l), -1, dtype=np.int64)
-    for i in range(l):
-        dists = np.full((d, l), np.inf)
-        for j in range(l):
-            if abs(i - j) <= ez:
-                continue
-            per_dim = sorted(
-                naive.znorm_dist(Ts[dim, i:i + m], Ts[dim, j:j + m])
-                for dim in range(d))
-            c = 0.0
-            for kdim in range(d):
-                c += per_dim[kdim]
-                dists[kdim, j] = c / (kdim + 1)
-        for kdim in range(d):
-            j = int(np.argmin(dists[kdim]))
-            if np.isfinite(dists[kdim, j]):
-                P[kdim, i] = dists[kdim, j]
-                I[kdim, i] = j
-    return P, I
-
-
 def test_mstump_matches_naive():
     rs = np.random.RandomState(13)
     Ts = rs.uniform(-100, 100, (3, 40))
-    m = 5
-    ref_P, ref_I = _naive_mstump(Ts, m)
-    P, I = multi_matrix_profile(Ts, m)
-    npt.assert_almost_equal(ref_P, P, decimal=PRECISION)
-    npt.assert_array_equal(ref_I, I)
+    _check_mstump(Ts, 5)
 
 
 def test_subspace():
@@ -234,22 +204,33 @@ def test_mdl_matches_reference_formula():
     assert int(np.argmin(bs2)) == 1
 
 
-def _naive_mstump_opts(Ts, m, include=None, discords=False):
-    """Naive mstump with include/discords, mirroring the reference's
-    naive oracle (tests/naive.py:555-630 semantics)."""
+#: (multi_matrix_profile keywords, the naive per-dimension distance)
+_DISTANCES = [
+    ({}, naive.znorm_dist),
+    ({"normalize": False}, naive.pnorm_dist),
+    ({"normalize": False, "p": 3.0},
+     lambda a, b: naive.pnorm_dist(a, b, p=3.0)),
+]
+
+
+def _naive_mstump_cube(Ts, m, include=None, discords=False,
+                       dist=naive.znorm_dist):
+    """Naive mstump cell values with include/discords over the
+    per-dimension distance ``dist``, mirroring the reference's naive
+    oracle (tests/naive.py:555-630 semantics): a (d, l, l) array whose
+    [kdim, i, j] is the mean of the kdim+1 pinned-then-sorted per-dim
+    distances of windows i and j, inf on the exclusion band."""
     d, n = Ts.shape
     l = n - m + 1
     ez = naive.excl_zone(m)
-    P = np.full((d, l), np.inf)
-    I = np.full((d, l), -1, dtype=np.int64)
+    cube = np.full((d, l, l), np.inf)
     inc = list(include) if include is not None else []
     for i in range(l):
-        dists = np.full((d, l), np.inf)
         for j in range(l):
             if abs(i - j) <= ez:
                 continue
             per_dim = np.array([
-                naive.znorm_dist(Ts[dim, i:i + m], Ts[dim, j:j + m])
+                dist(Ts[dim, i:i + m], Ts[dim, j:j + m])
                 for dim in range(d)])
             front = [per_dim[x] for x in inc]
             rest = sorted((per_dim[x] for x in range(d) if x not in inc),
@@ -258,43 +239,82 @@ def _naive_mstump_opts(Ts, m, include=None, discords=False):
             c = 0.0
             for kdim in range(d):
                 c += ordered[kdim]
-                dists[kdim, j] = c / (kdim + 1)
-        for kdim in range(d):
-            j = int(np.argmin(dists[kdim]))
-            if np.isfinite(dists[kdim, j]):
-                P[kdim, i] = dists[kdim, j]
-                I[kdim, i] = j
-    return P, I
+                cube[kdim, i, j] = c / (kdim + 1)
+    return cube
+
+
+def _naive_mstump_opts(Ts, m, include=None, discords=False,
+                       dist=naive.znorm_dist):
+    """(P, I) of the naive cube: the first minimum of every row."""
+    cube = _naive_mstump_cube(Ts, m, include, discords, dist)
+    I = np.argmin(cube, axis=2)
+    P = np.take_along_axis(cube, I[:, :, None], axis=2)[:, :, 0]
+    return P, np.where(np.isfinite(P), I, -1)
+
+
+def _check_mstump(Ts, m, include=None, discords=False, ties=False):
+    """multi_matrix_profile == the naive oracle for every distance.
+    ``ties=True`` (inputs with exact repeats, whose neighbors tie up to
+    rounding) accepts any I at which the naive cell equals P."""
+    for kw, dist in _DISTANCES:
+        cube = _naive_mstump_cube(Ts, m, include, discords, dist)
+        ref_I = np.argmin(cube, axis=2)
+        ref_P = np.take_along_axis(cube, ref_I[:, :, None], axis=2)[:, :, 0]
+        P, I = multi_matrix_profile(
+            Ts, m, include=None if include is None else np.array(include),
+            discords=discords, **kw)
+        msg = f"{kw} include={include} discords={discords}"
+        npt.assert_almost_equal(ref_P, P, decimal=PRECISION, err_msg=msg)
+        if ties:
+            at_I = np.take_along_axis(cube, np.where(I < 0, 0, I)[:, :, None],
+                                      axis=2)[:, :, 0]
+            npt.assert_almost_equal(np.where(I < 0, np.inf, at_I), ref_P,
+                                    decimal=PRECISION, err_msg=msg)
+        else:
+            npt.assert_array_equal(np.where(np.isfinite(ref_P), ref_I, -1),
+                                   I, err_msg=msg)
 
 
 def test_mstump_discords_matches_naive():
     rs = np.random.RandomState(41)
     Ts = rs.uniform(-100, 100, (3, 36))
-    m = 5
-    ref_P, ref_I = _naive_mstump_opts(Ts, m, discords=True)
-    P, I = multi_matrix_profile(Ts, m, discords=True)
-    npt.assert_almost_equal(ref_P, P, decimal=PRECISION)
-    npt.assert_array_equal(ref_I, I)
+    _check_mstump(Ts, 5, discords=True)
 
 
 def test_mstump_include_matches_naive():
     rs = np.random.RandomState(43)
     Ts = rs.uniform(-100, 100, (4, 36))
-    m = 5
     for include in ([2], [1, 3], [3, 0]):
-        ref_P, ref_I = _naive_mstump_opts(Ts, m, include=include)
-        P, I = multi_matrix_profile(Ts, m, include=np.array(include))
-        npt.assert_almost_equal(ref_P, P, decimal=PRECISION,
-                                err_msg=f"include={include}")
-        npt.assert_array_equal(ref_I, I)
+        _check_mstump(Ts, 5, include=include)
 
 
 def test_mstump_include_discords_combined():
     rs = np.random.RandomState(47)
     Ts = rs.uniform(-100, 100, (4, 32))
-    m = 4
-    ref_P, ref_I = _naive_mstump_opts(Ts, m, include=[1], discords=True)
-    P, I = multi_matrix_profile(Ts, m, include=np.array([1]),
-                                discords=True)
-    npt.assert_almost_equal(ref_P, P, decimal=PRECISION)
-    npt.assert_array_equal(ref_I, I)
+    _check_mstump(Ts, 4, include=[1], discords=True)
+
+
+def test_mstump_planted_repeat_constant_nan():
+    """An exact repeat planted in every dimension, a constant run in one
+    and one NaN in another, for z-norm and p-norm (p=2, p=3).  The
+    repeat makes every other window's two candidates tie, so I is only
+    held to a naive minimum.  The p-norm repeat is exactly 0 at every
+    kdim (the p=2 source recomputes near-duplicate cells directly).  The
+    z-norm repeat is held to 1e-6: its GEMM form cancels to D^2 ~ 1e-14
+    on an exact repeat, which the 1e-14 snap does not always catch — the
+    same on every single-dimension z-norm route."""
+    rs = np.random.RandomState(59)
+    Ts = rs.uniform(-1000, 1000, (3, 72))
+    m = 8
+    Ts[:, 40:40 + m] = Ts[:, 5:5 + m]
+    Ts[2, 20:32] = 7.0
+    Ts[1, 55] = np.nan
+    _check_mstump(Ts, m, ties=True)
+    for kw, _ in _DISTANCES:
+        P, I = multi_matrix_profile(Ts, m, **kw)
+        npt.assert_array_equal(I[:, 5], 40)
+        npt.assert_array_equal(I[:, 40], 5)
+        if kw:
+            npt.assert_array_equal(P[:, [5, 40]], 0.0, err_msg=str(kw))
+        else:
+            assert np.all(P[:, [5, 40]] < 1e-6)

@@ -157,9 +157,12 @@ def test_mstump_operator(spark):
     for i in range(3):
         dims = rs.uniform(-100, 100, (3, 50))
         rows.append((f"md{i}", [list(d) for d in dims]))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "dims"])
+    # ragged dimensions are skipped without failing the other docs
+    ragged = ("ragged", [list(rs.uniform(-100, 100, n)) for n in (50, 40)])
+    pdf = pd.DataFrame(rows + [ragged], columns=["doc_id", "dims"])
     res = D.mstump(spark.createDataFrame(pdf), 5).toPandas()
     assert set(res.kdim) == {1, 2, 3}
+    assert set(res.doc_id) == {did for did, _ in rows}
     from stumpy_spark.anytime import multi_matrix_profile
     for did, dims in rows:
         Ts = np.asarray(dims)
@@ -194,7 +197,8 @@ def test_mmotifs_operator(spark):
             dims[d, 10:16] = pat
             dims[d, 40:46] = pat + rs.normal(0, 0.001, 6)
         rows.append((f"mm{i}", [list(d) for d in dims]))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "dims"])
+    ragged = ("ragged", [list(rs.uniform(-100, 100, n)) for n in (60, 59)])
+    pdf = pd.DataFrame(rows + [ragged], columns=["doc_id", "dims"])
     res = D.mmotifs(spark.createDataFrame(pdf), 6).toPandas()
     from stumpy_spark.anytime import mmotifs as ref
     assert len(res) == 3

@@ -64,6 +64,35 @@ def test_rollup_job_rerun_after_lost_manifest_is_idempotent(first_run,
     assert m2["tier_rows"] == m1["tier_rows"]
 
 
+def test_upsert_late_rows_on_job_store(first_run, tmp_path, spark):
+    """Late rows on a job-written store (raw/slice=N/day=/source=) land
+    as one more slice: the 1h n_seq total grows by exactly the late
+    docs, and a retry of the same batch leaves every tier unchanged."""
+    import pandas as pd
+
+    from stumpy_spark.rollup.incremental import upsert_late_rows
+    from stumpy_spark.rollup.retention import TierStore
+    from stumpy_spark.sources import tokseq
+
+    out, _ = _copy_of(first_run, tmp_path)
+    late = tokseq.tokseq_df(spark, 1005, partitions=1).where(
+        "doc_id >= 'doc00001000'")       # the fixture holds doc 0..999
+
+    def tiers():
+        return {t: TierStore(out, t).read(spark).toPandas()
+                .sort_values(["source", "bucket"]).reset_index(drop=True)
+                for t in ("1m", "1h", "1d")}
+
+    before = tiers()
+    upsert_late_rows(spark, out, late, m=25)
+    after = tiers()
+    assert after["1h"].n_seq.sum() == before["1h"].n_seq.sum() + 5
+    upsert_late_rows(spark, out, late, m=25)
+    again = tiers()
+    for t in after:
+        pd.testing.assert_frame_equal(after[t], again[t])
+
+
 def test_package_builds():
     r = subprocess.run([sys.executable, "jobs/rollup_job.py", "--package"],
                        capture_output=True, text=True, cwd=REPO)

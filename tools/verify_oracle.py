@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -43,6 +45,21 @@ def value_hash(pdf: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
+def _duckdb_connect(spill: str):
+    """DuckDB capped at 40% of physical memory, spilling to ``spill``
+    (at most 5 GB).  Uncapped, DuckDB takes 80% of RAM and spills into
+    ``.tmp/`` in the cwd; the sf0.1 ``gapfill_1h_modes`` oracle was
+    OOM-killed at 12.8 GB that way on a 15 GB host that also runs the
+    Spark side.  A quarter of that host's RAM was too little for the
+    sf0.01 ``mstump_variants`` oracle, whose operators cannot spill."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{ram * 2 // 5 // 2 ** 20}MB'")
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute("SET max_temp_directory_size = '5GB'")
+    return con
+
+
 def main() -> int:
     args = sys.argv[1:]
     out_path = None
@@ -60,7 +77,8 @@ def main() -> int:
     from stumpy_spark.session import get_spark
 
     spark = get_spark(app_name="verify-oracle", cpus=8)
-    con = duckdb.connect()
+    spill = tempfile.mkdtemp(prefix="verify_oracle_duckdb_")
+    con = _duckdb_connect(spill)
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
@@ -121,6 +139,8 @@ def main() -> int:
                             "spark_sec": round(t_spark, 1),
                             "duckdb_sec": round(t_duck, 1)}
     spark.stop()
+    con.close()
+    shutil.rmtree(spill, ignore_errors=True)
     print("FAILURES:", failures if failures else "none")
     if out_path:
         import json
