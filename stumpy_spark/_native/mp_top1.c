@@ -3,13 +3,11 @@
  * Single-pass diagonal STOMP over blocks of K consecutive diagonals:
  * QT along diagonal d evolves by the exact recurrence
  *     QT[i,d] = QT[i-1,d] + T[i+m-1]*T[i+d+m-1] - T[i-1]*T[i+d-1]
- * (reference stomp.py:146-149).  Eligibility is checked here with the
- * same gate as kernels._qt_recurrence_ok: all values integral, finite,
- * |T| <= 2^25 and m*max^2 < 2^52, so every partial dot product is an
- * exactly-representable float64 integer — the recurrence is drift-free
- * by construction, and the result is bit-identical to the numpy
- * diagonal kernel (_mp_top1_diag), whose arithmetic this file mirrors
- * operation-for-operation (compile with -ffp-contract=off so no FMA
+ * (reference stomp.py:146-149).  The kernel checks its own eligibility:
+ * all values integral, finite, |T| <= 2^25 and m*max^2 < 2^52, so every
+ * partial dot product is an exactly-representable float64 integer and
+ * the recurrence is drift-free by construction.  The arithmetic is fixed
+ * operation by operation (compile with -ffp-contract=off so no FMA
  * contraction changes the rounding route):
  *
  *   stats   : float64 sequential cumsums, mu = ws/m,
@@ -25,11 +23,12 @@
  *             left side (column j, neighbors i < j): explicit
  *             (E < pl) || (E == pl && i < il) keeps the smallest i on
  *             ties regardless of arrival order — the same net tie rule
- *             as the numpy kernel's reversed-argmin + <= update.
+ *             as the numpy tile sweep (kernels._top1_sweep).
  *
  * Series with any constant window (sig == 0) or non-integer /
  * non-finite values return a nonzero status and the caller falls back
- * to the numpy paths (which carry the full special-case contract).
+ * to the numpy GEMM tile sweep (which carries the full special-case
+ * contract).
  */
 
 #include <math.h>
@@ -130,7 +129,7 @@ int mp_top1_self_int(const double *restrict T, int64_t n, int64_t m,
     if (l < 1 || m < 1)
         return 1;
 
-    /* eligibility scan (same gate as kernels._qt_recurrence_ok) */
+    /* eligibility scan: integral, finite, magnitude-bounded */
     double mx = 0.0;
     for (int64_t i = 0; i < n; i++) {
         double v = T[i];

@@ -1,10 +1,11 @@
 """Optional compiled matrix-profile kernel (ctypes, gcc-built at first use).
 
 ``_native/mp_top1.c`` implements the fused top-1 self-join diagonal-STOMP
-kernel for integer series — the same drift-free recurrence and arithmetic
-as :func:`stumpy_spark.kernels._mp_top1_diag`, operation-for-operation
-(compiled with ``-ffp-contract=off`` so no FMA contraction changes the
-rounding route; ``tests/test_kernels.py`` asserts bit-identical outputs).
+kernel for integer series: an exact-integer QT recurrence, so the
+profile carries no recurrence drift.  :func:`stumpy_spark.kernels._mp_top1_c`
+is its one caller in the engine; a series it declines runs the numpy
+GEMM tile sweep, which ``tests/test_kernels.py`` holds to within 1e-8 of
+the kernel.
 
 The shared object is compiled lazily on first use with ``-march=native``
 and cached under ``$STUMPY_SPARK_CKERNEL_DIR`` (default
@@ -141,7 +142,8 @@ def mp_top1_self_int(T, m: int, ez: int, p_norm_threshold: float):
     ``ir``/``il`` the neighbor indices (-1 where absent).  ``status``
     nonzero (or a None return from :func:`load`) means the caller must
     fall back to the numpy paths: 1 = ineligible series (non-integral /
-    non-finite / magnitude bound), 2 = constant window present.
+    non-finite / magnitude bound, or shorter than ``m``), 2 = constant
+    window present, 3 = allocation failure.
     """
     import numpy as np
 

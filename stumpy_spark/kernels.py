@@ -15,10 +15,13 @@ close over.  Semantics reproduce the reference's numerical contracts
 
 Everything is vectorized or BLAS-backed; no per-element Python loops in any
 hot path.  Implementations are written from scratch against the documented
-semantics — this is not a copy of the reference's numba kernels (the
-reference iterates diagonals with O(1) covariance updates; we compute exact
-blocked GEMM dot-product matrices, which is the right shape for a columnar
-Arrow batch and avoids recurrence drift).
+semantics — this is not a copy of the reference's numba kernels.  The
+numpy matrix profiles compute blocked GEMM dot-product tiles, the right
+shape for a columnar Arrow batch.  For batch profiles the reference's
+diagonal recurrence (an O(1) covariance update per cell) exists only as
+the compiled kernel of :mod:`stumpy_spark.cnative`, which takes only
+top-1 self-joins of integer series, where every partial dot product is
+an exact float64 integer.
 """
 
 from __future__ import annotations
@@ -445,24 +448,6 @@ def _pearson_block(windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m):
 ONE_TILE_CELLS = 65536
 
 
-def _qt_recurrence_ok(T: np.ndarray, m: int) -> bool:
-    """True iff the STOMP QT recurrence is *bit-exact* for this series:
-    all values integral and ``m * max(|T|)^2 < 2^52`` so every partial
-    dot product stays an exactly-representable float64 integer.  Token
-    sequences (int vocab ids) always qualify; arbitrary floats never do
-    — they keep the drift-free GEMM path (the reference accepts the
-    recurrence's float drift in stomp.py:146-149; this engine only takes
-    the recurrence when it provably introduces none)."""
-    if T.size == 0:
-        return False
-    mx = float(np.max(np.abs(T)))
-    if not np.isfinite(mx) or mx > 2.0 ** 25:
-        return False
-    if m * mx * mx > 2.0 ** 52:
-        return False
-    return bool(np.all(T == np.floor(T)))
-
-
 #: the row operand of every tile GEMM is padded with zero rows to a
 #: multiple of this, the column operand to at least 2 rows.  OpenBLAS
 #: sums a cell of a call's trailing partial row panel (and of each
@@ -863,230 +848,34 @@ def _topk_rows(src, k, ez, block_rows, left_right):
     return P, I, IL, IR, PL, PR
 
 
-#: per-chunk cell budget for the diagonal kernel: B diagonals x L0 cells
-#: of float64 working set ~1 MB so every elementwise pass runs at cache
-#: bandwidth (immune to this host's DRAM steal; see BENCH/BASELINE.md)
-DIAG_CHUNK_CELLS = 131072
+def _mp_top1_c(T: np.ndarray, m: int, left_right: bool = True):
+    """Top-1 z-norm self-join profile from the compiled kernel, or None
+    when it is unavailable or declines the series (non-integral,
+    non-finite or over-magnitude values, a constant window).
 
-#: pad length for the shifted-slice views (upper bound on chunk height)
-_DIAG_B_CAP = 1024
-
-#: below this many windows the single-tile GEMM path wins (chunk setup
-#: overhead dominates very short series); tuned by microbench
-DIAG_MIN_L = 64
-
-
-def _use_diag(l: int, m: int) -> bool:
-    """Empirical diag-vs-GEMM crossover (interleaved single-thread
-    sweep, BENCH/BASELINE.md round 5).  After the diagonal kernel's
-    min+lazy-argmin reductions and persistent chunk buffers, its rate
-    is m-independent (~55-70 M pairs/s mid-regime) while GEMM falls
-    off as O(m): after the lazy snap-to-zero the measured crossover is
-    m ~ 72-80 (m=64: GEMM 68.5 vs diag 66.4; m=80: 65.4 vs 67.4;
-    m=96: 55.0 vs 67.8; m=128: 43.6 vs 71.3 M pairs/s, interleaved
-    single-thread at n=8000) and the diagonal kernel is the more
-    cache-resident of the two in degraded DRAM regimes."""
-    if l <= DIAG_MIN_L:
-        return False
-    return m >= 80
-
-
-def _mp_top1_diag(T, mu, sig, m, con, fin, any_con, all_fin, ez,
-                  P, I, IL, IR, PL, PR):
-    """Self-join top-1 profile by vectorized diagonal STOMP.
-
-    The reference walks each diagonal with an njit scalar recurrence
-    (stomp.py:146-149); here a whole *chunk* of B consecutive diagonals
-    is one numpy working set: QT along diagonal ``d`` is
-    ``cumsum([QT[0,d], g_0, g_1, ...])`` with
-    ``g_i = T[i+m] T[i+d+m] - T[i] T[i+d]`` — every partial sum is an
-    integer below 2**53 when :func:`_qt_recurrence_ok` holds, so the
-    whole profile is bit-exact (drift-free, stricter than the
-    reference).  No window matrix is ever materialized: the factors are
-    shifted strided views of the 1-D series, so the chunk's DRAM
-    footprint is O(L0) regardless of m — O(n^2) total work with an
-    O(cache) working set.
-
-    Cells are laid out *skewed*: the physical buffer ``W`` stores
-    diagonal ``b`` shifted right by ``b``, making column ``c`` hold all
-    cells of profile column ``j = d0 + c`` — so BOTH the row-direction
-    and column-direction minima are plain axis-0 reductions (no
-    transpose, no gather), and the band ``|j - i| <= ez`` costs nothing
-    because diagonals start at ``d = ez + 1``.
-
-    Tie rule parity with the tile sweep: right-side candidates arrive
-    in ascending ``j`` (strict ``<`` keeps the first), left-side
-    candidates arrive in *descending* ``i`` across chunks (``<=`` keeps
-    the last = smallest ``i``), and the final combine prefers the left
-    neighbor on exact ties — the same "ascending neighbor order" rule
-    :func:`_top1_sweep` implements.
-
-    Minima are tracked in the shifted ``D^2 - 2m`` space of
-    :meth:`_QTProvider.xdist` (snapped cells land on exactly ``-2m``;
-    the ``+2m`` and the sqrt run once over the final l-vectors), and
-    both reductions are ``min(axis=0)`` with *lazy index recovery*:
-    ``np.argmin`` walks the reduced axis scalar-at-a-time (~10x the
-    cost of the vectorized ``min`` on these wide chunks), so the
-    argmin runs only over the columns whose chunk minimum actually
-    improves the running best — a set that thins out harmonically
-    (~ln(#chunks) record-breaks per column on non-degenerate data).
-    """
-    from numpy.lib.stride_tricks import as_strided
-
-    l = mu.shape[0]
-    pr_ = np.full(l, np.inf)
-    ir_ = np.full(l, -1, dtype=np.int64)
-    pl_ = np.full(l, np.inf)
-    il_ = np.full(l, -1, dtype=np.int64)
-    twom = 2.0 * m
-    d0 = ez + 1
-    if d0 < l:
-        pad = _DIAG_B_CAP
-        T_pad = np.concatenate([T, np.zeros(pad)])
-        if any_con:
-            con_pad = np.concatenate([con, np.zeros(pad, dtype=bool)])
-        # QT[0, d] for every diagonal in one exact pass (sums of <= m
-        # integer products, |sum| < 2**52 -> exact in any order)
-        qt0 = np.correlate(T, T[:m], mode="valid")
-        # fused scale: E = D^2 - 2m = QT*f_i*r_j + g_i*a_j with
-        # f = -2/sig, r = 1/sig, g = -m*mu*f, a = mu*r — the per-chunk
-        # outer-subtract of m*mu_i*mu_j folds into one multiply-add and
-        # the f_i factor applies as an in-place row broadcast (one
-        # fewer t2 round-trip per chunk than the subtract form).
-        # sig == 0 (constant or all-NaN windows) maps to factor 0 ->
-        # E = 0 (D^2 = 2m), a harmless finite placeholder always
-        # overwritten by the con/fin masks below.
-        with np.errstate(divide="ignore", invalid="ignore"):
-            negfac = np.where(sig > 0.0, -2.0 / sig, 0.0)
-            rsig = np.where(sig > 0.0, 1.0 / sig, 0.0)
-            gvec = -(m * mu) * negfac
-        rsig_pad = np.concatenate([rsig, np.zeros(pad)])
-        with np.errstate(invalid="ignore"):
-            murs_pad = np.concatenate([mu * rsig, np.zeros(pad)])
-        thr = config.P_NORM_THRESHOLD - twom
-        # persistent chunk buffers: a fresh np.empty per chunk pays
-        # page-fault + first-touch cost on every iteration (~2x on the
-        # elementwise passes); B*(L0+B) <= 2*chunk-cells except when a
-        # single over-long diagonal (B == 1) exceeds the budget
-        L0_max = l - d0
-        wcap = max(2 * DIAG_CHUNK_CELLS, L0_max + _DIAG_B_CAP + 1)
-        wbuf = np.empty(wcap)
-        tbuf = np.empty(max(DIAG_CHUNK_CELLS, L0_max))
-        while d0 < l:
-            L0 = l - d0
-            B = max(1, min(_DIAG_B_CAP, DIAG_CHUNK_CELLS // L0, L0))
-            W = wbuf[:B * (L0 + B)].reshape(B, L0 + B)
-            V = as_strided(W, shape=(B, L0),
-                           strides=(W.strides[0] + 8, 8))
-            t2 = tbuf[:B * L0].reshape(B, L0)
-            V[:, 0] = qt0[d0:d0 + B]
-            if L0 > 1:
-                M1 = as_strided(T_pad[d0 + m:], (B, L0 - 1), (8, 8))
-                M0 = as_strided(T_pad[d0:], (B, L0 - 1), (8, 8))
-                np.multiply(M1, T[m:m + L0 - 1][None, :], out=V[:, 1:])
-                np.multiply(M0, T[:L0 - 1][None, :], out=t2[:, 1:])
-                V[:, 1:] -= t2[:, 1:]
-            np.cumsum(V, axis=1, out=V)
-            # QT -> shifted squared distance (D^2 - 2m, the xdist
-            # convention): E = QT*f_i*r_j + g_i*a_j; sqrt is monotone
-            # and the shift constant, so min/argmin and the snap
-            # threshold are unchanged; +2m and sqrt run once over the
-            # final l-vectors
-            MrsB = as_strided(rsig_pad[d0:], (B, L0), (8, 8))
-            MaB = as_strided(murs_pad[d0:], (B, L0), (8, 8))
-            # non-finite windows (mu = inf) legitimately produce
-            # inf/NaN cells here; the fin mask below overwrites them
-            with np.errstate(invalid="ignore"):
-                V *= negfac[:L0][None, :]
-                V *= MrsB
-                np.multiply(MaB, gvec[:L0][None, :], out=t2)
-                V += t2
-            # snap-to-zero is applied lazily (below) instead of as a
-            # full-chunk pass here: min-then-clamp equals clamp-then-min
-            # (cells below thr all map to -2m, and every unclamped cell
-            # is >= thr > -2m), and the argmin subsets clamp their own
-            # gathered copies so tie selection is bit-identical
-            if any_con:
-                McB = as_strided(con_pad[d0:], (B, L0), (1, 1))
-                ca = con[:L0][None, :]
-                V[ca & McB] = -twom          # D^2 == 0
-                V[ca ^ McB] = -float(m)      # D^2 == m
-            if not all_fin:
-                V[:, ~fin[:L0]] = np.inf       # row i non-finite
-                W[:, :L0][:, ~fin[d0:d0 + L0]] = np.inf   # col j
-            # the padded tail i >= l - d0 - b of each diagonal lands
-            # exactly in physical columns c >= L0 (one contiguous kill);
-            # the never-written left triangle c < b must also be +inf so
-            # the column-side argmin skips it
-            if B > 1:
-                W[:, L0:] = np.inf
-                bi = np.arange(B)
-                W[:, :B][bi[:, None] > np.arange(B)[None, :]] = np.inf
-            # row side: cell (b, i) is row i's right neighbor j=i+d0+b;
-            # first-argmin = smallest b = ascending-j tie rule; the
-            # argmin runs lazily, only over improving columns
-            vmin = V.min(axis=0)
-            vmin[vmin < thr] = -twom          # lazy snap, L0-vector cost
-            upd = vmin < pr_[:L0]
-            if upd.any():
-                cols = np.nonzero(upd)[0]
-                pr_[cols] = vmin[upd]
-                sub = V[:, cols]
-                sub[sub < thr] = -twom        # clamp the gathered copy
-                barg = np.argmin(sub, axis=0)
-                ir_[cols] = cols + d0 + barg
-            # col side: physical column c holds column j = d0 + c;
-            # reversed argmin = largest b = smallest i; <= keeps the
-            # later (smaller-i) candidate on cross-chunk ties
-            Wv = W[:, :L0]
-            wmin = Wv.min(axis=0)
-            wmin[wmin < thr] = -twom          # lazy snap, L0-vector cost
-            upd = wmin <= pl_[d0:d0 + L0]
-            np.logical_and(upd, np.isfinite(wmin), out=upd)
-            if upd.any():
-                cols = np.nonzero(upd)[0]
-                pl_[d0 + cols] = wmin[upd]
-                sub = Wv[::-1][:, cols]
-                sub[sub < thr] = -twom        # clamp the gathered copy
-                bargr = np.argmin(sub, axis=0)
-                il_[d0 + cols] = cols - (B - 1 - bargr)
-            d0 += B
-    P[:, 0], I[:, 0] = top1_from_shifted(pl_, pr_, il_, ir_, m)
-    PL[:] = np.sqrt(pl_ + twom)
-    PR[:] = np.sqrt(pr_ + twom)
-    IL[:] = il_
-    IR[:] = ir_
-
-
-def top1_from_shifted(pl, pr, il, ir, m):
-    """Top-1 epilogue of the diagonal kernels (numpy and compiled).
-
-    ``pl``/``pr`` are the left/right running minima in the shifted
-    ``D^2 - 2m`` space, ``il``/``ir`` their neighbor indices.  Returns
-    the l-vectors ``P0 = sqrt(min(pl, pr) + 2m)`` and ``I0`` by the
-    :func:`_top1` tie rule."""
-    return _top1(pl, pr, il, ir, lambda x: np.sqrt(x + 2.0 * m))
-
-
-def _mp_top1_c(A: np.ndarray, m: int):
-    """Compiled-kernel wrapper: returns ``(P, I, IL, IR, PL, PR)`` or
-    None when the C kernel is unavailable or the series is ineligible
-    (non-integer values, constant windows, ...).  Same epilogue as
-    :func:`_mp_top1_diag` (bit-identical outputs, asserted by
-    tests/test_kernels.py::test_ckernel_bit_parity_with_diag)."""
+    The kernel returns its left/right running minima in the shifted
+    ``D^2 - 2m`` space; the epilogue maps them to ``P0``/``I0`` (l,)
+    by the :func:`_top1` tie rule.  Returns ``(P0, I0)`` when not
+    ``left_right``, else ``(P, I, IL, IR, PL, PR)`` with P/I of shape
+    (l, 1) as :func:`matrix_profile` returns them."""
     from . import cnative
 
-    if A.shape[0] < m:
+    T = np.ascontiguousarray(T, dtype=np.float64)
+    if T.shape[0] < m:
         return None
-    res = cnative.mp_top1_self_int(A, m, excl_zone(m),
+    res = cnative.mp_top1_self_int(T, m, excl_zone(m),
                                    config.P_NORM_THRESHOLD)
     if res is None or res[0] != 0:
         return None
-    _, pr_, ir_, pl_, il_ = res
-    P0, I0 = top1_from_shifted(pl_, pr_, il_, ir_, m)
-    twom = 2.0 * m
-    return (P0[:, None], I0[:, None], il_, ir_,
-            np.sqrt(pl_ + twom), np.sqrt(pr_ + twom))
+    _, pr, ir, pl, il = res
+
+    def dist(x):
+        return np.sqrt(x + 2.0 * m)
+
+    P0, I0 = _top1(pl, pr, il, ir, dist)
+    if not left_right:
+        return P0, I0
+    return P0[:, None], I0[:, None], il, ir, dist(pl), dist(pr)
 
 
 def matrix_profile(
@@ -1107,20 +896,21 @@ def matrix_profile(
     plus top-1 left/right neighbors for self-joins.  Routes, first match
     wins (all exact and memory-bounded):
 
-    1. compiled diagonal STOMP (:func:`_mp_top1_c`): top-1 self-join of
-       an integer series without constant windows or a constant hook;
-    2. numpy diagonal STOMP (:func:`_mp_top1_diag`): top-1 self-join of
-       an integer series where :func:`_use_diag` says it beats GEMM
-       (bit-identical to route 1);
-    3. the GEMM tile sweep (:func:`_top1_sweep` over a
+    1. the compiled diagonal-STOMP kernel (:func:`_mp_top1_c`): top-1
+       self-join of an integer series without constant windows or a
+       constant hook;
+    2. the GEMM tile sweep (:func:`_top1_sweep` over a
        :class:`_QTProvider`): any other top-1 profile;
-    4. GEMM row blocks of ``block_rows`` with a tie-aware top-k
+    3. GEMM row blocks of ``block_rows`` with a tie-aware top-k
        (:func:`_topk_rows`, same source): ``k > 1``.
 
-    Routes 2 and 3 may differ by an ULP on a pair: the GEMM folds the
-    normalization into its operands, the diagonal kernel applies it per
-    cell.  The 6-decimal rounding of the correctness oracle absorbs it.
-    ``compute_left_right=False`` saves work on route 4 only; the other
+    Routes 1 and 2 may differ in the last bits of a distance: the GEMM
+    folds the normalization into its operands, the compiled kernel
+    applies it per cell.  The kernel tests hold them within 1e-8, or
+    within 1e-12 in squared distance at exact repeats, whose ``D^2``
+    either route can leave a few ULPs of 2m above the snap; the
+    oracle compares at 5 decimals.
+    ``compute_left_right=False`` saves work on route 3 only; the other
     routes get left/right neighbors for free.
 
     Returns ``(P, I, IL, IR)``: P (l, k) float64, I (l, k) int64,
@@ -1128,47 +918,23 @@ def matrix_profile(
     returned as -1, matching ignore_trivial=False semantics).
     """
     self_join = T_B is None
-    # compiled fast path (self-join top-1, integer series, no user
-    # constant hook): the fused C diagonal-STOMP kernel mirrors
-    # _mp_top1_diag's arithmetic bit-for-bit and checks its own
-    # eligibility (integral, finite, magnitude-bounded, no constant
-    # windows) — any other series falls through to the numpy paths
     if self_join and k == 1 and T_A_subseq_isconstant is None:
-        A0 = np.ascontiguousarray(T_A, dtype=np.float64)
-        res = _mp_top1_c(A0, m)
+        res = _mp_top1_c(T_A, m)
         if res is not None:
-            if return_left_right_P:
-                return res
-            return res[:4]
+            return res if return_left_right_P else res[:4]
     prep_A = preprocess(np.asarray(T_A, np.float64), m,
                         T_A_subseq_isconstant)
     prep_B = prep_A if self_join else preprocess(
         np.asarray(T_B, np.float64), m, T_B_subseq_isconstant)
-    A, mu_A, sig_A, fin_A, con_A = prep_A
-    la = A.shape[0] - m + 1
+    src = _QTProvider(prep_A, prep_B, m)
     ez = excl_zone(m) if self_join else -1
-    # diagonal fast path (self-join top-1): O(n^2) exact cumsum-STOMP
-    # with an O(cache) working set and no window matrix at all — taken
-    # for any m when provably drift-free (integer series)
-    if (self_join and k == 1 and _use_diag(la, m)
-            and _qt_recurrence_ok(A, m)):
-        P = np.full((la, 1), np.inf)
-        I = np.full((la, 1), -1, dtype=np.int64)
-        IL = np.full(la, -1, dtype=np.int64)
-        IR = np.full(la, -1, dtype=np.int64)
-        PL = np.full(la, np.inf)
-        PR = np.full(la, np.inf)
-        _mp_top1_diag(A, mu_A, sig_A, m, con_A, fin_A, bool(con_A.any()),
-                      bool(fin_A.all()), ez, P, I, IL, IR, PL, PR)
+    if k == 1:
+        (P0, I0, PL, IL, PR, IR), _ = _top1_sweep(src, 0, src.r1, 0,
+                                                  src.c1, ez)
+        P, I = P0[:, None], I0[:, None]
     else:
-        src = _QTProvider(prep_A, prep_B, m)
-        if k == 1:
-            (P0, I0, PL, IL, PR, IR), _ = _top1_sweep(src, 0, la, 0,
-                                                      src.c1, ez)
-            P, I = P0[:, None], I0[:, None]
-        else:
-            P, I, IL, IR, PL, PR = _topk_rows(
-                src, k, ez, block_rows, self_join and compute_left_right)
+        P, I, IL, IR, PL, PR = _topk_rows(
+            src, k, ez, block_rows, self_join and compute_left_right)
     if return_left_right_P:
         return P, I, IL, IR, PL, PR
     return P, I, IL, IR

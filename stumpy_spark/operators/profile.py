@@ -192,22 +192,21 @@ def stump(df: DataFrame, m: int, k: int = 1, normalize: bool = True,
 def _profile_top1(a, m: int, normalize: bool, p: float):
     """Top-1 self-join profile ``(P0, I0)`` of one series.
 
-    Integer z-normalized series take the lean compiled route: the
-    kernel's shifted-space minima go straight through the shared
-    epilogue, without the P/I/PL/PR arrays.  Everything else reads
-    column 0 of the full kernels."""
+    Integer z-normalized series take the lean compiled route, without
+    the P/I/PL/PR arrays.  A series the kernel declines, and every
+    p-norm series, runs the GEMM tile sweep directly."""
     if normalize:
-        from .. import cnative
-
-        res = cnative.mp_top1_self_int(
-            a, m, kernels.excl_zone(m), kernels.config.P_NORM_THRESHOLD)
-        if res is not None and res[0] == 0:
-            _, pr, ir, pl, il = res
-            return kernels.top1_from_shifted(pl, pr, il, ir, m)
-        P, I, _, _ = kernels.matrix_profile(a, m, compute_left_right=False)
+        res = kernels._mp_top1_c(a, m, left_right=False)
+        if res is not None:
+            return res
+        prep = kernels.preprocess(a, m)
+        src = kernels._QTProvider(prep, prep, m)
     else:
-        P, I, _, _ = kernels.matrix_profile_absolute(a, m, p=p)
-    return P[:, 0], I[:, 0]
+        prep = kernels._preprocess_abs(a, m)
+        src = kernels._PNormSource(prep, prep, m, p)
+    (P0, I0, *_), _ = kernels._top1_sweep(src, 0, src.r1, 0, src.c1,
+                                          kernels.excl_zone(m))
+    return P0, I0
 
 
 def _flat_profile_summary(flat, off, m: int, normalize: bool = True,

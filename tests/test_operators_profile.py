@@ -136,13 +136,12 @@ def _planted_batch(m, seed):
 
 def test_profile_summary_fast_path_parity(monkeypatch):
     """The per-batch profile summary gives the same rows with the
-    compiled kernel loaded and without it.  m=96 falls back to the
-    numpy diagonal kernel: bit-identical, motif indices included.  m=8
-    falls back to GEMM tiles, whose squared distances differ from the
-    diagonal kernel's in the last bits (~1e-14): discords match at
-    1e-9, motif values at 1e-12 in squared space (sqrt magnifies
-    near-zero differences), and every reported motif pair lies outside
-    the exclusion zone at distance ``min_p``."""
+    compiled kernel loaded and without it.  Without it every document
+    runs the GEMM tile sweep, whose squared distances differ from the
+    compiled kernel's in the last bits (a few ULPs of 2m): discords
+    match at 1e-9, motif values at 1e-12 in squared space (sqrt
+    magnifies near-zero differences), and every reported motif pair
+    lies outside the exclusion zone at distance ``min_p``."""
     from stumpy_spark import cnative, kernels
 
     if cnative.load() is None:
@@ -157,10 +156,6 @@ def test_profile_summary_fast_path_parity(monkeypatch):
         keep = on[0]
         assert keep.sum() >= 30 and (~keep).sum() >= 5
         assert (on[2][keep] == 0).sum() >= 5        # planted repeats
-        if m == 96:
-            for a, b in zip(on, fb):
-                assert np.array_equal(a, b, equal_nan=True)
-            continue
         for a, b in zip(on[:2], fb[:2]):
             assert np.array_equal(a, b)
         npt.assert_allclose(on[3][keep], fb[3][keep], rtol=0, atol=1e-9)
@@ -172,6 +167,34 @@ def test_profile_summary_fast_path_parity(monkeypatch):
                 assert abs(mi[r] - mj[r]) > kernels.excl_zone(m)
                 d = naive.znorm_dist(T[mi[r]:mi[r] + m], T[mj[r]:mj[r] + m])
                 assert abs(d * d - minp[r] ** 2) < 1e-9, (r, mi[r], mj[r])
+
+
+def test_declined_doc_calls_kernel_once(monkeypatch):
+    """A document the compiled kernel declines (a constant window) costs
+    one kernel call — its eligibility scan, stats pass and allocation
+    are not repeated — and then runs the tile sweep."""
+    from stumpy_spark import cnative, kernels
+
+    calls = []
+    real = cnative.mp_top1_self_int
+
+    def counting(*args):
+        calls.append(args[1])
+        return real(*args)
+
+    monkeypatch.setattr(cnative, "mp_top1_self_int", counting)
+    m = 8
+    a = np.random.default_rng(0).integers(0, 1000, 200).astype(np.float64)
+    a[50:50 + m + 2] = 9.0
+    P0, I0 = ops._profile_top1(a, m, True, 2.0)
+    assert calls == [m]
+    ref_P, ref_I, _, _ = naive.stump(a, m)
+    npt.assert_almost_equal(P0, ref_P[:, 0], decimal=PRECISION)
+    npt.assert_array_equal(I0, ref_I[:, 0])
+    if cnative.load() is not None:
+        st = real(a, m, kernels.excl_zone(m),
+                  kernels.config.P_NORM_THRESHOLD)[0]
+        assert st == 2                              # constant window
 
 
 def test_fused_tier_profile_matches_profile_summary(spark):

@@ -1,14 +1,14 @@
 """Single-thread matrix-profile kernel m-slope microbench.
 
 Measures self-join throughput (M pair-distances/s) across window sizes
-for the two kernel paths — blocked GEMM and the vectorized diagonal
-cumsum-STOMP (``kernels._mp_top1_diag``) — on an integer series of the
-workload's token shape.  This is the reproducible source of the
-"large-m slope" table in BENCH/BASELINE.md: the VERDICT r4 #5 bar was
-m=512 within ~1.3x of the m=25 rate.
+for the two routes of a top-1 z-norm self-join — the compiled
+diagonal-STOMP kernel (``kernels._mp_top1_c``) and the numpy GEMM tile
+sweep (``kernels._top1_sweep`` over a ``kernels._QTProvider``, including
+its preprocessing) — on an integer series of the workload's token shape.
+The C column is null when the compiled kernel is not loaded.
 
-Interleaved A/B (path alternates within each m) so host DRAM-steal
-drift cannot masquerade as a path difference; BLAS is pinned to one
+Interleaved A/B (route alternates within each m) so host DRAM-steal
+drift cannot masquerade as a route difference; BLAS is pinned to one
 thread; DRAM probes bracket the sweep so the regime is on the record.
 
 ``--tile`` times the long-series tile instead: one diagonal and one
@@ -40,26 +40,28 @@ sys.path.insert(0, REPO)
 import numpy as np  # noqa: E402
 
 from bench import mem_probe_gbs  # noqa: E402
-from stumpy_spark import kernels  # noqa: E402
+from stumpy_spark import cnative, kernels  # noqa: E402
 
 
-def run_path(T: np.ndarray, m: int, force: str) -> float:
-    """Best-of-2 wall for one (m, path) cell; returns M pairs/s."""
+def _sweep(T: np.ndarray, m: int):
+    prep = kernels.preprocess(T, m)
+    src = kernels._QTProvider(prep, prep, m)
+    return kernels._top1_sweep(src, 0, src.r1, 0, src.c1,
+                               kernels.excl_zone(m))
+
+
+ROUTES = {"c": kernels._mp_top1_c, "sweep": _sweep}
+
+
+def run_route(T: np.ndarray, m: int, route: str) -> float:
+    """Best-of-2 wall for one (m, route) cell; returns M pairs/s."""
     l = len(T) - m + 1
     pairs = l * (l - 1) / 2
     best = float("inf")
     for _ in range(2):
-        orig = kernels._use_diag
-        try:
-            # route the dispatch, not the kernel internals, so each cell
-            # times exactly what production would run on that path
-            kernels._use_diag = (lambda l_, m_: False) if force == "gemm" \
-                else (lambda l_, m_: True)
-            t0 = time.perf_counter()
-            kernels.matrix_profile(T, m)
-            best = min(best, time.perf_counter() - t0)
-        finally:
-            kernels._use_diag = orig
+        t0 = time.perf_counter()
+        ROUTES[route](T, m)
+        best = min(best, time.perf_counter() - t0)
     return pairs / best / 1e6
 
 
@@ -111,32 +113,31 @@ def main() -> None:
     T = rng.integers(0, 1000, n).astype(np.float64)
 
     ms = [25, 64, 128, 192, 256, 512]
+    has_c = cnative.load() is not None
     probe_before = mem_probe_gbs()
     rows = {}
-    # interleave the paths inside each m so a regime shift between cells
-    # cannot read as a kernel difference
+    # interleave the routes inside each m so a regime shift between
+    # cells cannot read as a kernel difference
     for m in ms:
-        l = n - m + 1
-        diag_ok = kernels._qt_recurrence_ok(T, m)
-        gemm = run_path(T, m, "gemm")
-        diag = run_path(T, m, "diag") if diag_ok else None
-        gemm2 = run_path(T, m, "gemm")
-        chosen = "diag" if (diag_ok and kernels._use_diag(l, m)) else "gemm"
-        rows[str(m)] = {
-            "gemm_mpairs_s": round(max(gemm, gemm2), 1),
-            "diag_mpairs_s": round(diag, 1) if diag else None,
-            "dispatched": chosen,
-        }
+        c = run_route(T, m, "c") if has_c else None
+        sweep = run_route(T, m, "sweep")
+        if has_c:
+            c = max(c, run_route(T, m, "c"))
+        rows[str(m)] = {"c_mpairs_s": round(c, 1) if has_c else None,
+                        "sweep_mpairs_s": round(sweep, 1)}
     probe_after = mem_probe_gbs()
 
-    best = {m: max(v["gemm_mpairs_s"], v["diag_mpairs_s"] or 0)
-            for m, v in rows.items()}
+    def slope(key):
+        lo, hi = rows["25"][key], rows["512"][key]
+        return round(lo / hi, 2) if lo else None
+
     out = {
         "metric": "kernel_m_slope",
         "n": n,
         "unit": "M pairs/s single-thread",
         "rows": rows,
-        "slope_m512_vs_m25": round(best["25"] / best["512"], 2),
+        "slope_m512_vs_m25": {"c": slope("c_mpairs_s"),
+                              "sweep": slope("sweep_mpairs_s")},
         "mem_probe_gbs_before": probe_before,
         "mem_probe_gbs_after": probe_after,
     }
