@@ -1,11 +1,17 @@
 """Optional compiled matrix-profile kernel (ctypes, gcc-built at first use).
 
-``_native/mp_top1.c`` implements the fused top-1 self-join diagonal-STOMP
-kernel for integer series: an exact-integer QT recurrence, so the
-profile carries no recurrence drift.  :func:`stumpy_spark.kernels._mp_top1_c`
-is its one caller in the engine; a series it declines runs the numpy
-GEMM tile sweep, which ``tests/test_kernels.py`` holds to within 1e-8 of
-the kernel.
+``_native/mp_top1.c`` implements one diagonal-STOMP loop for integer
+series: the top-1 minima of any row-range x column-range block of the
+distance matrix, self-join or AB-join, over an exact-integer QT
+recurrence, so the profile carries no recurrence drift and a block's
+result does not depend on the blocking.  :func:`window_stats` checks a
+series once and computes the stats every block of it reads;
+:func:`top1_block` runs one block (``kernels._CSource``, behind
+``kernels._top1_sweep``, for AB-joins and the long-series tiles);
+:func:`mp_top1_self_int` is the whole self-join of one series in one
+call (``kernels._mp_top1_c``, the per-document route).  A series the
+kernel declines runs the numpy GEMM tile sweep, which
+``tests/test_kernels.py`` holds to within 1e-8 of the kernel.
 
 The shared object is compiled lazily on first use with ``-march=native``
 and cached under ``$STUMPY_SPARK_CKERNEL_DIR`` (default
@@ -118,6 +124,16 @@ def load():
             ss.argtypes = [ip, lp, ctypes.c_int64, ctypes.c_int64,
                            ip, lp, dp, dp, dp, dp]
             fn._sliding_stats = ss
+            ws = lib.mp_window_stats
+            ws.restype = ctypes.c_int
+            ws.argtypes = [dp, ctypes.c_int64, ctypes.c_int64, dp]
+            fn._window_stats = ws
+            blk = lib.mp_top1_block
+            blk.restype = None
+            blk.argtypes = [dp, dp, ctypes.c_int64, dp, dp, ctypes.c_int64,
+                            *[ctypes.c_int64] * 6, ctypes.c_double,
+                            dp, lp, dp, lp]
+            fn._block = blk
             _fn = fn
         except Exception as e:
             _failed = True
@@ -135,7 +151,9 @@ def status() -> dict:
 
 
 def mp_top1_self_int(T, m: int, ez: int, p_norm_threshold: float):
-    """Run the compiled kernel on one series.
+    """The whole top-1 self-join of one series in one kernel call: its
+    :func:`window_stats`, then one :func:`top1_block` over the full
+    square.
 
     Returns ``(status, pr, ir, pl, il)`` where ``pr``/``pl`` are the
     right/left running minima in the shifted ``D^2 - 2m`` space and
@@ -162,6 +180,67 @@ def mp_top1_self_int(T, m: int, ez: int, p_norm_threshold: float):
                 pr.ctypes.data_as(dp), ir.ctypes.data_as(lp),
                 pl.ctypes.data_as(dp), il.ctypes.data_as(lp))
     return status, pr, ir, pl, il
+
+
+def window_stats(T, m: int):
+    """Check one contiguous float64 series and compute the window stats
+    that every :func:`top1_block` over it reads, once per series.
+
+    Returns ``(status, st)``: ``st`` is the (4, l) stats array, valid
+    when ``status`` is 0 (the codes of :func:`mp_top1_self_int`); None
+    when the compiled library is unavailable.
+    """
+    import numpy as np
+
+    if T.dtype != np.float64 or not T.flags.c_contiguous:
+        raise ValueError("window_stats needs a contiguous float64 series")
+    fn = load()
+    if fn is None:
+        return None
+    l = max(T.shape[0] - m + 1, 0)
+    st = np.empty((4, l))
+    dp = ctypes.POINTER(ctypes.c_double)
+    status = fn._window_stats(T.ctypes.data_as(dp), T.shape[0], m,
+                              st.ctypes.data_as(dp))
+    return status, st
+
+
+def top1_block(A, sa, B, sb, m: int, r0: int, r1: int, c0: int, c1: int,
+               ez: int, p_norm_threshold: float):
+    """Top-1 minima of rows ``r0:r1`` of ``A`` against columns ``c0:c1``
+    of ``B`` (contiguous float64 series with their :func:`window_stats`
+    ``sa``/``sb``, status 0).  ``ez >= 0`` is a self-join (``B is A``):
+    only cells with ``j - i > ez`` are evaluated, so a block is the
+    diagonal block or lies above it; ``ez < 0`` an AB-join.
+
+    Returns ``(pr, ir, pl, il)`` in the shifted ``D^2 - 2m`` space: the
+    minima of rows r0:r1 with their column index, and (self-join only,
+    else inf / -1) of columns c0:c1 with their row index.  The library
+    must be loaded.
+    """
+    import numpy as np
+
+    la, lb = A.shape[0] - m + 1, B.shape[0] - m + 1
+    if not (0 <= r0 <= r1 <= la and 0 <= c0 <= c1 <= lb
+            and sa.shape == (4, la) and sb.shape == (4, lb)
+            and all(x.dtype == np.float64 and x.flags.c_contiguous
+                    for x in (A, sa, B, sb))):
+        raise ValueError(f"block rows {r0}:{r1} x cols {c0}:{c1} outside "
+                         f"series of {la} x {lb} windows, or stats or "
+                         f"series not contiguous float64")
+    fn = load()
+    pr = np.empty(r1 - r0)
+    ir = np.empty(r1 - r0, dtype=np.int64)
+    pl = np.empty(c1 - c0)
+    il = np.empty(c1 - c0, dtype=np.int64)
+    dp = ctypes.POINTER(ctypes.c_double)
+    lp = ctypes.POINTER(ctypes.c_int64)
+    fn._block(A.ctypes.data_as(dp), sa.ctypes.data_as(dp), A.shape[0],
+              B.ctypes.data_as(dp), sb.ctypes.data_as(dp), B.shape[0], m,
+              r0, r1, c0, c1, ez, p_norm_threshold,
+              pr.ctypes.data_as(dp), ir.ctypes.data_as(lp),
+              pl.ctypes.data_as(dp), il.ctypes.data_as(lp))
+    return pr, ir, pl, il
 
 
 def sliding_stats_int32(vals, off, m: int):

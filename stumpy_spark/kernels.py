@@ -20,7 +20,8 @@ numpy matrix profiles compute blocked GEMM dot-product tiles, the right
 shape for a columnar Arrow batch.  For batch profiles the reference's
 diagonal recurrence (an O(1) covariance update per cell) exists only as
 the compiled kernel of :mod:`stumpy_spark.cnative`, which takes only
-top-1 self-joins of integer series, where every partial dot product is
+top-1 self-joins and AB-joins of integer series (whole, or one block at
+a time behind :func:`_top1_sweep`), where every partial dot product is
 an exact float64 integer.
 """
 
@@ -709,6 +710,51 @@ class _MultiSource:
         return x
 
 
+class _CSource:
+    """Integer z-norm source for the compiled block kernel: whole series
+    A (rows) and B (columns) with the window stats
+    ``cnative.window_stats`` computed once per series (see
+    :func:`_c_source`).  It has no tiles: :func:`_top1_sweep` asks it
+    for a block's running minima (:meth:`minima`) in the shifted ``D^2 -
+    2m`` space of :class:`_QTProvider`.  QT heads are exact integers, so
+    a block's minima are bit-identical whatever the blocking."""
+
+    lead = ()
+
+    def __init__(self, A, sa, B, sb, m):
+        self.A, self.sa, self.B, self.sb, self.m = A, sa, B, sb, m
+        self.r0, self.r1 = 0, sa.shape[1]
+        self.c0, self.c1 = 0, sb.shape[1]
+
+    def minima(self, r0, r1, c0, c1, ez):
+        from . import cnative
+        return cnative.top1_block(self.A, self.sa, self.B, self.sb,
+                                  self.m, r0, r1, c0, c1, ez,
+                                  config.P_NORM_THRESHOLD)
+
+    def dist(self, x):
+        return np.sqrt(x + 2.0 * self.m)
+
+
+def _c_source(T_A, m, T_B=None):
+    """A :class:`_CSource` over ``T_A`` (and ``T_B`` for an AB-join), or
+    None when the compiled kernel is unavailable or declines a series:
+    non-integral, non-finite or over-magnitude values, a constant
+    window, shorter than ``m`` — the :func:`_mp_top1_c` rule, decided
+    once per series so every block of it takes the same route."""
+    from . import cnative
+
+    sides = []
+    for T in (T_A,) if T_B is None else (T_A, T_B):
+        T = np.ascontiguousarray(T, dtype=np.float64)
+        res = cnative.window_stats(T, m)
+        if res is None or res[0] != 0:
+            return None
+        sides.append((T, res[1]))
+    (A, sa), (B, sb) = sides[0], sides[-1]
+    return _CSource(A, sa, B, sb, m)
+
+
 def _mask_band(X, a0, b0, ez, lower=False):
     """inf on the exclusion band ``|j - i| <= ez`` of the tile whose
     first cell is (a0, b0), on every leading plane; ``lower=True`` masks
@@ -744,38 +790,13 @@ def _top1(pl, pr, il, ir, dist):
     return dist(np.minimum(pl, pr)), I
 
 
-def _top1_sweep(src, r0, r1, c0, c1, ez):
-    """The top-1 GEMM matrix profile of rows r0:r1 against columns c0:c1
-    of a tile-distance source; ``ez >= 0`` is a self-join (exclusion
-    band ``|j - i| <= ez``, left/right profiles), ``ez < 0`` an AB-join.
-
-    A self-join block is either diagonal (same row and column range) or
-    strictly above the diagonal (``c0 >= r1``).  Every pair is evaluated
-    once, in the orientation row < column, on the upper triangle of
-    (``ONE_TILE_CELLS``-single, else 128-square) cache tiles: a tile's
-    row minima are its rows' right neighbors, its column minima its
-    columns' left neighbors, and cells with ``j - i <= ez`` are masked.
-    Tiles run in ascending row, then column order, so each index sees
-    its candidates in ascending neighbor order and strict-``<`` updates
-    keep the first index among exact ties.
-
-    A source's tiles carry its leading shape ``src.lead`` before the
-    (row, column) axes: ``()`` for one distance, ``(d,)`` for the d
-    dimensionality levels of a :class:`_MultiSource`.  Each leading
-    plane is an independent profile over the same tiles and band, and
-    every returned array has shape ``src.lead + (rows,)``.
-
-    Returns ``(rows, cols)``: ``rows = (P, I, PL, IL, PR, IR)`` for
-    r0:r1 — on a diagonal block the column minima fold into the rows'
-    left profile; ``cols`` is the same tuple for c0:c1 (left neighbors
-    only) on a block strictly above the diagonal, else None.  AB-joins
-    report PL/PR = inf, IL/IR = -1 (``ignore_trivial=False``)."""
+def _sweep_minima(src, r0, r1, c0, c1, ez, diag, L):
+    """Running minima ``(pr, ir, pl, il)`` of the GEMM tile walk that
+    :func:`_top1_sweep` describes, each of shape (L, n) in the source's
+    root-deferred space."""
     nr, nc = r1 - r0, c1 - c0
     br, bc = (nr, nc) if nr * nc <= ONE_TILE_CELLS else (128, 128)
     self_join = ez >= 0
-    diag = self_join and (r0, r1) == (c0, c1)
-    # state is (planes, n) whatever the leading shape; reshaped on return
-    L = math.prod(src.lead)
     lz = np.arange(L)[:, None]
     pr = np.full((L, nr), np.inf)
     ir = np.full((L, nr), -1, dtype=np.int64)
@@ -795,6 +816,47 @@ def _top1_sweep(src, r0, r1, c0, c1, ez):
                 i = np.argmin(X, axis=1)
                 _improve(pl, il, b0 - c0, X[lz, i, np.arange(b1 - b0)],
                          i + a0)
+    return pr, ir, pl, il
+
+
+def _top1_sweep(src, r0, r1, c0, c1, ez):
+    """The top-1 matrix profile of rows r0:r1 against columns c0:c1 of a
+    tile-distance source; ``ez >= 0`` is a self-join (exclusion band
+    ``|j - i| <= ez``, left/right profiles), ``ez < 0`` an AB-join.
+
+    A self-join block is either diagonal (same row and column range) or
+    strictly above the diagonal (``c0 >= r1``).  Every pair is evaluated
+    once, in the orientation row < column, on the upper triangle of
+    (``ONE_TILE_CELLS``-single, else 128-square) cache tiles: a tile's
+    row minima are its rows' right neighbors, its column minima its
+    columns' left neighbors, and cells with ``j - i <= ez`` are masked.
+    Tiles run in ascending row, then column order, so each index sees
+    its candidates in ascending neighbor order and strict-``<`` updates
+    keep the first index among exact ties.  A :class:`_CSource` has no
+    tiles: the compiled kernel walks the block's diagonals itself, with
+    the same cells, value space and tie rule (``_native/mp_top1.c``),
+    and only the epilogue below runs here.
+
+    A source's tiles carry its leading shape ``src.lead`` before the
+    (row, column) axes: ``()`` for one distance, ``(d,)`` for the d
+    dimensionality levels of a :class:`_MultiSource`.  Each leading
+    plane is an independent profile over the same tiles and band, and
+    every returned array has shape ``src.lead + (rows,)``.
+
+    Returns ``(rows, cols)``: ``rows = (P, I, PL, IL, PR, IR)`` for
+    r0:r1 — on a diagonal block the column minima fold into the rows'
+    left profile; ``cols`` is the same tuple for c0:c1 (left neighbors
+    only) on a block strictly above the diagonal, else None.  AB-joins
+    report PL/PR = inf, IL/IR = -1 (``ignore_trivial=False``)."""
+    nr, nc = r1 - r0, c1 - c0
+    self_join = ez >= 0
+    diag = self_join and (r0, r1) == (c0, c1)
+    # state is (planes, n) whatever the leading shape; reshaped on return
+    L = math.prod(src.lead)
+    if isinstance(src, _CSource):
+        pr, ir, pl, il = (x[None] for x in src.minima(r0, r1, c0, c1, ez))
+    else:
+        pr, ir, pl, il = _sweep_minima(src, r0, r1, c0, c1, ez, diag, L)
 
     def out(*arrays):
         return tuple(x.reshape(src.lead + x.shape[1:]) for x in arrays)
@@ -896,9 +958,10 @@ def matrix_profile(
     plus top-1 left/right neighbors for self-joins.  Routes, first match
     wins (all exact and memory-bounded):
 
-    1. the compiled diagonal-STOMP kernel (:func:`_mp_top1_c`): top-1
-       self-join of an integer series without constant windows or a
-       constant hook;
+    1. the compiled diagonal-STOMP kernel: top-1 profile of integer
+       series without constant windows or a constant hook — a
+       self-join by :func:`_mp_top1_c` in one kernel call, an AB-join
+       by :func:`_top1_sweep` over a :class:`_CSource`;
     2. the GEMM tile sweep (:func:`_top1_sweep` over a
        :class:`_QTProvider`): any other top-1 profile;
     3. GEMM row blocks of ``block_rows`` with a tie-aware top-k
@@ -918,15 +981,21 @@ def matrix_profile(
     returned as -1, matching ignore_trivial=False semantics).
     """
     self_join = T_B is None
-    if self_join and k == 1 and T_A_subseq_isconstant is None:
-        res = _mp_top1_c(T_A, m)
-        if res is not None:
-            return res if return_left_right_P else res[:4]
-    prep_A = preprocess(np.asarray(T_A, np.float64), m,
-                        T_A_subseq_isconstant)
-    prep_B = prep_A if self_join else preprocess(
-        np.asarray(T_B, np.float64), m, T_B_subseq_isconstant)
-    src = _QTProvider(prep_A, prep_B, m)
+    src = None
+    if (k == 1 and T_A_subseq_isconstant is None
+            and T_B_subseq_isconstant is None):
+        if self_join:
+            res = _mp_top1_c(T_A, m)
+            if res is not None:
+                return res if return_left_right_P else res[:4]
+        else:
+            src = _c_source(T_A, m, T_B)
+    if src is None:
+        prep_A = preprocess(np.asarray(T_A, np.float64), m,
+                            T_A_subseq_isconstant)
+        prep_B = prep_A if self_join else preprocess(
+            np.asarray(T_B, np.float64), m, T_B_subseq_isconstant)
+        src = _QTProvider(prep_A, prep_B, m)
     ez = excl_zone(m) if self_join else -1
     if k == 1:
         (P0, I0, PL, IL, PR, IR), _ = _top1_sweep(src, 0, src.r1, 0,

@@ -15,13 +15,24 @@ Differences from the reference's decomposition, on purpose:
   Upper-triangle tiles are enumerated only once and each tile emits
   contributions for both its row range and its col range (the symmetric
   update the reference does per diagonal cell, stump.py:219-230).
-- a top-1 tile is one ``kernels._top1_sweep`` — the same sweep the
+- a top-1 tile is one ``kernels._top1_sweep`` — the same call the
   single-task ``kernels.matrix_profile(_absolute)`` and
-  ``anytime.multi_matrix_profile`` run — over a tile source
-  (``mstumped``: one per dimension, combined by ``kernels._MultiSource``)
-  built on the tile's row and column windows only, so per-task
-  memory is O(tile × m) operands plus one 128-square cache tile (a
-  128 × tile strip for top-k); AQE coalesces the small final merge.
+  ``anytime.multi_matrix_profile`` make.  The route is decided once per
+  series on the driver: a top-1 z-norm plan over integer series the
+  compiled kernel takes (``kernels._c_source``: integral, finite,
+  magnitude-bounded, no constant window) broadcasts the series and
+  their window stats, and every tile runs the kernel's diagonal
+  recurrence over its block — bit-identical to the single-task profile
+  whatever the tiling.  Any other plan (floats, NaN, p-norm, top-k,
+  ``mstumped``) runs the numpy GEMM sweep over a tile source built on
+  the tile's row and column windows only (``mstumped``: one per
+  dimension, combined by ``kernels._MultiSource``), so per-task memory
+  is O(tile × m) operands plus one 128-square cache tile (a 128 × tile
+  strip for top-k); AQE coalesces the small final merge.
+- the plan carries no rows through Python but Arrow batches: the tile
+  bins are the rows of a ``spark.range`` (one per partition) and each
+  partition's ``mapInArrow`` returns its tiles' partials as one Arrow
+  batch built from numpy arrays (see :func:`_tile_plan`).
 
 Top-k (``k > 1``): each tile emits its per-row k smallest (p, j)
 candidates; because the tiles partition the column space for any row, a
@@ -37,78 +48,74 @@ raise ``tile`` accordingly (tile 65536 → 153 partials per row at n=10^7).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import kernels
 
-_PARTIAL_SCHEMA = T.StructType([
-    T.StructField("i", T.LongType()),
-    T.StructField("p", T.DoubleType()),
-    T.StructField("j", T.LongType()),
-    T.StructField("pl", T.DoubleType()),
-    T.StructField("jl", T.LongType()),
-    T.StructField("pr", T.DoubleType()),
-    T.StructField("jr", T.LongType()),
-])
+_PARTIAL_SCHEMA = ("idx long, p double, j long, pl double, jl long, "
+                   "pr double, jr long")
 
-_PARTIAL_SCHEMA_TOPK = T.StructType([
-    T.StructField("i", T.LongType()),
-    T.StructField("p", T.DoubleType()),
-    T.StructField("j", T.LongType()),
-])
+_PARTIAL_SCHEMA_TOPK = "idx long, p double, j long"
 
 
-def _profile_frame(i0, prof) -> pd.DataFrame:
-    """Partial top-1 rows from a ``kernels._top1_sweep`` profile tuple."""
+def _profile_part(i0, prof) -> dict:
+    """Partial top-1 columns from a ``kernels._top1_sweep`` profile
+    tuple."""
     P, I, PL, IL, PR, IR = prof
-    return pd.DataFrame({"i": np.arange(i0, i0 + len(P)), "p": P, "j": I,
-                         "pl": PL, "jl": IL, "pr": PR, "jr": IR})
+    return {"idx": np.arange(i0, i0 + len(P)), "p": P, "j": I,
+            "pl": PL, "jl": IL, "pr": PR, "jr": IR}
 
 
-def _topk_frame(src, i0, vals, js) -> pd.DataFrame:
-    """Partial top-k rows: per-row candidates in root-deferred space."""
+def _topk_part(src, i0, vals, js) -> dict:
+    """Partial top-k columns: per-row candidates in root-deferred
+    space."""
     nr, kk = vals.shape
-    return pd.DataFrame({
-        "i": np.repeat(np.arange(i0, i0 + nr), kk),
-        "p": src.dist(vals.ravel()),
-        "j": np.where(np.isfinite(vals.ravel()), js.ravel(), -1),
-    })
+    return {"idx": np.repeat(np.arange(i0, i0 + nr), kk),
+            "p": src.dist(vals.ravel()),
+            "j": np.where(np.isfinite(vals.ravel()), js.ravel(), -1)}
 
 
-def _binned_tiles_df(spark: SparkSession, tiles, work) -> DataFrame:
-    """LPT-bin (tr, tc) tiles by the given work function onto an identity
-    partitioner, as a DataFrame (tr long, tc long).
+def _tile_plan(spark: SparkSession, tiles, work, eval_tile,
+               schema: str) -> DataFrame:
+    """Partial rows of ``eval_tile(tr, tc)`` over every (tr, tc) tile,
+    run across the cluster, as a DataFrame of ``schema``.
 
-    Greedy longest-processing-time binning over actual per-tile work is
-    the Spark analog of the reference's per-diagonal work weighting
-    (core.py:2424-2466): every stage partition carries near-equal work —
-    no straggler tail at 100x.  The identity partitioner maps bin b to
-    Spark partition b exactly; a hash repartition would collide balanced
-    bins into uneven partitions.
+    Greedy longest-processing-time binning over actual per-tile work
+    (``work(tr, tc)``) is the Spark analog of the reference's
+    per-diagonal work weighting (core.py:2424-2466): every stage
+    partition carries near-equal work — no straggler tail at 100x.  Bin
+    b is row b of ``spark.range(n_bins, numPartitions=n_bins)``, whose
+    partition b holds exactly that row, so each partition runs one bin;
+    a hash repartition would collide balanced bins into uneven
+    partitions.  ``eval_tile`` returns a list of column-name → numpy
+    array dicts, and each partition's ``mapInArrow`` yields its bin's
+    partials as one Arrow batch built from them.
     """
     import heapq
-    sc = spark.sparkContext
-    n_bins = min(len(tiles), sc.defaultParallelism * 4)
+    n_bins = min(len(tiles), spark.sparkContext.defaultParallelism * 4)
     order = sorted(range(len(tiles)), key=lambda t: -work(*tiles[t]))
     heap = [(0, bi) for bi in range(n_bins)]
     heapq.heapify(heap)
-    bins = [0] * len(tiles)
+    bins = [[] for _ in range(n_bins)]
     for t in order:
         load, bi = heapq.heappop(heap)
-        bins[t] = bi
+        bins[bi].append(tiles[t])
         heapq.heappush(heap, (load + work(*tiles[t]), bi))
-    pairs = sc.parallelize(
-        [(bins[t], tiles[t]) for t in range(len(tiles))], n_bins)
-    binned = pairs.partitionBy(n_bins, lambda b: b).map(
-        lambda kv: (int(kv[1][0]), int(kv[1][1])))
-    return spark.createDataFrame(binned, schema="tr long, tc long")
+
+    def run(batches):
+        import pyarrow as pa
+        for batch in batches:
+            for b in batch.column(0).to_pylist():
+                parts = [part for tr, tc in bins[b]
+                         for part in eval_tile(tr, tc)]
+                yield pa.RecordBatch.from_pydict(
+                    {c: np.concatenate([part[c] for part in parts])
+                     for c in parts[0]})
+
+    return spark.range(n_bins, numPartitions=n_bins).mapInArrow(run, schema)
 
 
 def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
@@ -123,9 +130,12 @@ def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
     ``kernels.matrix_profile``).  ``normalize=False`` computes the p-norm
     (aamp/aamped) profile instead — same tiling, non-normalized distances.
 
-    Returns DataFrame (i, P, I, PL, IL, PR, IR) for k == 1, else
-    (i, P: array<double>, I: array<long>) with rows sorted ascending by
-    distance (ties to the smaller index).
+    Returns DataFrame (idx, P, I, PL, IL, PR, IR) for k == 1, else
+    (idx, P: array<double>, I: array<long>) with rows sorted ascending by
+    distance (ties to the smaller index).  ``idx`` is the row position:
+    Spark resolves column names case-insensitively, so a column ``i``
+    beside ``I`` could be neither selected by name nor written to
+    parquet.
     """
     T_arr = np.asarray(T_arr, dtype=np.float64)
     self_join = T_B is None
@@ -133,13 +143,20 @@ def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
     lb = l if self_join else len(T_B) - m + 1
     ez = kernels.excl_zone(m) if self_join else -1
 
-    # z-norm (stumped) or aamp (aamped.py:38-55) preprocessing, once
-    # before the tiles fan out: O(n) arrays, broadcast to every task
-    prep = kernels.preprocess if normalize else kernels._preprocess_abs
-    prepA = prep(T_arr, m)
-    prepB = prepA if self_join else prep(
-        np.asarray(T_B, dtype=np.float64), m)
-    b = spark.sparkContext.broadcast((prepA, prepB))
+    # the route, decided once before the tiles fan out: the compiled
+    # kernel's source (the series and their window stats) when it takes
+    # a top-1 z-norm plan, else the z-norm (stumped) or aamp
+    # (aamped.py:38-55) preprocessing; O(n) arrays, broadcast to every
+    # task
+    shared = kernels._c_source(T_arr, m, T_B) if normalize and k == 1 \
+        else None
+    if shared is None:
+        prep = kernels.preprocess if normalize else kernels._preprocess_abs
+        prepA = prep(T_arr, m)
+        prepB = prepA if self_join else prep(
+            np.asarray(T_B, dtype=np.float64), m)
+        shared = (prepA, prepB)
+    b = spark.sparkContext.broadcast(shared)
 
     n_tiles = (l + tile - 1) // tile
     nb_tiles = (lb + tile - 1) // tile
@@ -149,11 +166,8 @@ def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
     else:
         tiles = [(r, c) for r in range(n_tiles) for c in range(nb_tiles)]
 
-    # weighted work assignment (the Spark analog of the reference's
-    # per-diagonal work weighting, core.py:2424-2466): tile work = actual
-    # cell count (remainder tiles are smaller; a diagonal tile evaluates
-    # its upper triangle only), greedily LPT-binned so every stage
-    # partition carries near-equal work — no straggler tail at 100x
+    # tile work = actual cell count (remainder tiles are smaller; a
+    # diagonal tile evaluates its upper triangle only)
     def _work(r, c):
         h = min(tile, l - r * tile)
         w = min(tile, lb - c * tile)
@@ -162,86 +176,85 @@ def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
             cells = max(cells // 2, 1)
         return cells
 
-    tiles_df = _binned_tiles_df(spark, tiles, _work)
+    def source(r0, r1, c0, c1):
+        """The compiled kernel's whole-series source, or a tile-distance
+        source over this tile's row and column windows only: O(tile * m)
+        per task."""
+        src = b.value
+        if isinstance(src, kernels._CSource):
+            return src
+        prep_a, prep_b = src
+        if normalize:
+            return kernels._QTProvider(prep_a, prep_b, m, (r0, r1),
+                                       (c0, c1))
+        return kernels._PNormSource(prep_a, prep_b, m, p, (r0, r1),
+                                    (c0, c1))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pa, pb = b.value
+    def bounds(tr, tc):
+        return (tr * tile, min((tr + 1) * tile, l),
+                tc * tile, min((tc + 1) * tile, lb))
 
-        def source(r0, r1, c0, c1):
-            """Tile-distance source over this tile's row and column
-            windows only: O(tile * m) per task."""
-            if normalize:
-                return kernels._QTProvider(pa, pb, m, (r0, r1), (c0, c1))
-            return kernels._PNormSource(pa, pb, m, p, (r0, r1), (c0, c1))
+    def tile_top1(tr, tc):
+        r0, r1, c0, c1 = bounds(tr, tc)
+        rows, cols = kernels._top1_sweep(source(r0, r1, c0, c1),
+                                         r0, r1, c0, c1, ez)
+        parts = [_profile_part(r0, rows)]
+        if cols is not None:
+            parts.append(_profile_part(c0, cols))
+        return parts
 
-        def tile_top1(src, r0, r1, c0, c1):
-            rows, cols = kernels._top1_sweep(src, r0, r1, c0, c1, ez)
-            frames = [_profile_frame(r0, rows)]
-            if cols is not None:
-                frames.append(_profile_frame(c0, cols))
-            return frames
-
-        def tile_topk(src, r0, r1, c0, c1):
-            # 128-row strips x the whole tile width: a strip's row top-k
-            # is already the tile's; column candidates (left neighbors of
-            # a tile strictly above the diagonal) merge across strips
-            emit_cols = ez >= 0 and c0 >= r1
-            frames, col_v, col_j = [], [], []
-            for a0 in range(r0, r1, 128):
-                a1 = min(a0 + 128, r1)
-                D = src.xdist(a0, a1, c0, c1)
-                if ez >= 0:
-                    kernels._mask_band(D, a0, c0, ez)
-                vals, js = kernels.topk_tie_aware(D, min(k, c1 - c0))
-                frames.append(_topk_frame(src, a0, vals, js + c0))
-                if emit_cols:
-                    vals, js = kernels.topk_tie_aware(D.T, min(k, a1 - a0))
-                    col_v.append(vals)
-                    col_j.append(js + a0)
+    def tile_topk(tr, tc):
+        # 128-row strips x the whole tile width: a strip's row top-k is
+        # already the tile's; column candidates (left neighbors of a tile
+        # strictly above the diagonal) merge across strips
+        r0, r1, c0, c1 = bounds(tr, tc)
+        src = source(r0, r1, c0, c1)
+        emit_cols = ez >= 0 and c0 >= r1
+        parts, col_v, col_j = [], [], []
+        for a0 in range(r0, r1, 128):
+            a1 = min(a0 + 128, r1)
+            D = src.xdist(a0, a1, c0, c1)
+            if ez >= 0:
+                kernels._mask_band(D, a0, c0, ez)
+            vals, js = kernels.topk_tie_aware(D, min(k, c1 - c0))
+            parts.append(_topk_part(src, a0, vals, js + c0))
             if emit_cols:
-                # per-column top-k of the strips' candidates: they lie in
-                # ascending i among equal values, so the tie-aware
-                # selection keeps the smaller i
-                vals = np.concatenate(col_v, axis=1)
-                js = np.concatenate(col_j, axis=1)
-                top, pos = kernels.topk_tie_aware(vals,
-                                                  min(k, vals.shape[1]))
-                frames.append(_topk_frame(
-                    src, c0, top, np.take_along_axis(js, pos, axis=1)))
-            return frames
-
-        eval_tile = tile_topk if k > 1 else tile_top1
-        for pdf in batches:
-            out = []
-            for tr, tc in zip(pdf["tr"], pdf["tc"]):
-                r0, r1 = tr * tile, min((tr + 1) * tile, l)
-                c0, c1 = tc * tile, min((tc + 1) * tile, lb)
-                out.extend(eval_tile(source(r0, r1, c0, c1),
-                                     r0, r1, c0, c1))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+                vals, js = kernels.topk_tie_aware(D.T, min(k, a1 - a0))
+                col_v.append(vals)
+                col_j.append(js + a0)
+        if emit_cols:
+            # per-column top-k of the strips' candidates: they lie in
+            # ascending i among equal values, so the tie-aware selection
+            # keeps the smaller i
+            vals = np.concatenate(col_v, axis=1)
+            js = np.concatenate(col_j, axis=1)
+            top, pos = kernels.topk_tie_aware(vals, min(k, vals.shape[1]))
+            parts.append(_topk_part(
+                src, c0, top, np.take_along_axis(js, pos, axis=1)))
+        return parts
 
     if k > 1:
-        partial = tiles_df.mapInPandas(run, schema=_PARTIAL_SCHEMA_TOPK)
+        partial = _tile_plan(spark, tiles, _work, tile_topk,
+                             _PARTIAL_SCHEMA_TOPK)
         # global top-k per row: every (i, j) candidate is emitted exactly
         # once, so sort + slice is the complete merge (ties -> smaller j)
         pad = F.array_repeat(
             F.struct(F.lit(float("inf")).alias("p"),
                      F.lit(-1).cast("long").alias("j")), k)
-        topk = (partial.groupBy("i")
+        topk = (partial.groupBy("idx")
                 .agg(F.slice(F.concat(F.array_sort(F.collect_list(
                     F.struct("p", "j"))), pad), 1, k).alias("_tk")))
         return topk.select(
-            "i",
+            "idx",
             F.transform("_tk", lambda x: x["p"]).alias("P"),
             F.transform("_tk", lambda x: F.when(
                 x["p"] != float("inf"), x["j"]).otherwise(F.lit(-1)))
             .alias("I"))
 
-    partial = tiles_df.mapInPandas(run, schema=_PARTIAL_SCHEMA)
+    partial = _tile_plan(spark, tiles, _work, tile_top1, _PARTIAL_SCHEMA)
     # final commutative merge (the reference's gather + _merge_topk_PI,
     # stumped.py:181-197, as a Catalyst aggregation)
-    return (partial.groupBy("i").agg(
+    return (partial.groupBy("idx").agg(
         F.min("p").alias("P"),
         F.min_by("j", F.struct(F.col("p"), F.col("j"))).alias("I"),
         F.min("pl").alias("PL"),
@@ -281,20 +294,15 @@ def mpdisted(spark: SparkSession, T_A, T_B, m: int,
 
     T_A = np.asarray(T_A, dtype=np.float64)
     T_B = np.asarray(T_B, dtype=np.float64)
-    # positional rename: the profile DF carries both `i` and `I`, which
-    # Spark's case-insensitive resolver refuses to select by name
-    _names = ["row_i", "P", "I_", "PL", "IL", "PR", "IR"]
     pab = distributed_matrix_profile(
         spark, T_A, m, tile=tile, T_B=T_B, normalize=normalize,
-        p=p).toDF(*_names).select("row_i", "P")
+        p=p).select("idx", "P")
     pba = distributed_matrix_profile(
         spark, T_B, m, tile=tile, T_B=T_A, normalize=normalize,
-        p=p).toDF(*_names).select("row_i", "P")
+        p=p).select("idx", "P")
     if custom_func is not None:
-        va = pab.orderBy("row_i").toPandas()["P"].to_numpy(
-            dtype=np.float64)
-        vb = pba.orderBy("row_i").toPandas()["P"].to_numpy(
-            dtype=np.float64)
+        va, vb = (prof.orderBy("idx").select("P").toArrow().column("P")
+                  .to_numpy() for prof in (pab, pba))
         return float(custom_func(np.concatenate([va, vb])))
     abba = pab.select("P").unionByName(pba.select("P"))
     la = len(T_A) - m + 1
@@ -339,10 +347,8 @@ def stimped(spark: SparkSession, T_arr, m_values, tile: int = 8192,
             continue
         prof = distributed_matrix_profile(
             spark, T_arr, int(m), tile=tile, normalize=normalize, p=p)
-        # positional rename: "i" and "I" collide under Spark's
-        # case-insensitive column resolution
-        prof = prof.toDF("i", "P", "I_nn", "PL", "IL", "PR", "IR")
-        row = prof.select(F.lit(int(m)).alias("m"), "i", "P")
+        row = prof.select(F.lit(int(m)).alias("m"),
+                          F.col("idx").alias("i"), "P")
         out = row if out is None else out.unionByName(row)
     if out is None:
         raise ValueError("no window size fits the series (need n >= 2m)")
@@ -394,41 +400,27 @@ def mstumped(spark: SparkSession, Ts, m: int, tile: int = 2048,
             cells = max(cells // 2, 1)
         return cells * d
 
-    tiles_df = _binned_tiles_df(spark, tiles, _work)
-
-    schema = T.StructType([
-        T.StructField("kdim", T.LongType()),
-        T.StructField("i", T.LongType()),
-        T.StructField("p", T.DoubleType()),
-        T.StructField("j", T.LongType()),
-    ])
-
-    def frame(i0, prof):
+    def part(i0, prof):
         P, I = prof[:2]
         nr = P.shape[1]
-        return pd.DataFrame({"kdim": np.repeat(np.arange(d), nr),
-                             "i": np.tile(np.arange(i0, i0 + nr), d),
-                             "p": P.ravel(), "j": I.ravel()})
+        return {"kdim": np.repeat(np.arange(d), nr),
+                "i": np.tile(np.arange(i0, i0 + nr), d),
+                "p": P.ravel(), "j": I.ravel()}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prep = b.value
-        for pdf in batches:
-            out = []
-            for tr, tc in zip(pdf["tr"], pdf["tc"]):
-                r0, r1 = tr * tile, min((tr + 1) * tile, l)
-                c0, c1 = tc * tile, min((tc + 1) * tile, l)
-                src = kernels._MultiSource(prep, m, normalize,
-                                           include=include,
-                                           discords=discords,
-                                           rows=(r0, r1), cols=(c0, c1))
-                rows, cols = kernels._top1_sweep(src, r0, r1, c0, c1, ez)
-                out.append(frame(r0, rows))
-                if cols is not None:
-                    out.append(frame(c0, cols))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def tile_top1(tr, tc):
+        r0, r1 = tr * tile, min((tr + 1) * tile, l)
+        c0, c1 = tc * tile, min((tc + 1) * tile, l)
+        src = kernels._MultiSource(b.value, m, normalize, include=include,
+                                   discords=discords, rows=(r0, r1),
+                                   cols=(c0, c1))
+        rows, cols = kernels._top1_sweep(src, r0, r1, c0, c1, ez)
+        parts = [part(r0, rows)]
+        if cols is not None:
+            parts.append(part(c0, cols))
+        return parts
 
-    partial = tiles_df.mapInPandas(run, schema=schema)
+    partial = _tile_plan(spark, tiles, _work, tile_top1,
+                         "kdim long, i long, p double, j long")
     return (partial.groupBy("kdim", "i").agg(
         F.min("p").alias("p"),
         F.min_by("j", F.struct(F.col("p"), F.col("j"))).alias("j"),

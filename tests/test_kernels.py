@@ -559,6 +559,45 @@ def test_ckernel_parity_with_sweep():
     assert checked >= 20
 
 
+def test_ckernel_ab_parity_with_sweep():
+    """Top-1 AB-joins of integer series take the compiled block kernel
+    (a _CSource behind _top1_sweep) inside matrix_profile.  It must
+    agree with the GEMM tile sweep at the tolerance of
+    test_ckernel_parity_with_sweep, every I neighbour must lie at naive
+    distance P, IL/IR stay -1, and a B with a constant window sends the
+    join to the sweep."""
+    from stumpy_spark import cnative
+
+    if cnative.load() is None:
+        pytest.skip("compiled kernel unavailable (no gcc?)")
+    rng = np.random.default_rng(23)
+    for trial in range(20):
+        na, nb = (int(x) for x in rng.choice([60, 300, 900], 2))
+        m = int(rng.choice([3, 8, 16, 25, 64]))
+        m = min(m, min(na, nb) // 2)
+        vocab = int(rng.choice([5, 1000, 50257]))
+        A = rng.integers(0, vocab, na).astype(float)
+        B = rng.integers(0, vocab, nb).astype(float)
+        i0 = int(rng.integers(0, na - m))
+        j0 = int(rng.integers(0, nb - m))
+        B[j0:j0 + m] = A[i0:i0 + m]             # an exact AB repeat
+        if kernels._c_source(A, m, B) is None:  # constant window
+            continue
+        P, I, IL, IR = kernels.matrix_profile(A, m, T_B=B)
+        prep_a, prep_b = kernels.preprocess(A, m), kernels.preprocess(B, m)
+        (ref, *_), _ = kernels._top1_sweep(
+            kernels._QTProvider(prep_a, prep_b, m), 0, na - m + 1, 0,
+            nb - m + 1, -1)
+        assert _close(P[:, 0], ref).all(), (trial, na, nb, m)
+        dn = np.array([naive.znorm_dist(A[i:i + m], B[j:j + m])
+                       for i, j in enumerate(I[:, 0])])
+        assert _close(dn, P[:, 0]).all(), (trial, na, nb, m)
+        assert (IL == -1).all() and (IR == -1).all()
+    B = rng.integers(0, 1000, 300).astype(float)
+    B[100:120] = 4.0
+    assert kernels._c_source(rng.integers(0, 1000, 300), 16, B) is None
+
+
 def test_ckernel_fallback_gates():
     """Non-integer, non-finite, over-magnitude, constant-window and
     hooked series must skip the compiled kernel (status fallback), and

@@ -4,6 +4,7 @@ tests/test_stumped.py analog)."""
 
 import numpy as np
 import numpy.testing as npt
+import pytest
 
 from stumpy_spark import kernels
 from stumpy_spark.plans.longseq import distributed_matrix_profile
@@ -14,7 +15,7 @@ def test_distributed_equals_single_task(spark):
     T = rs.uniform(-1000, 1000, 3000)
     m = 25
     got = (distributed_matrix_profile(spark, T, m, tile=512)
-           .toPandas().sort_values("i").reset_index(drop=True))
+           .toPandas().sort_values("idx").reset_index(drop=True))
     P, I, IL, IR, PL, PR = kernels.matrix_profile(
         T, m, return_left_right_P=True)
     npt.assert_almost_equal(P[:, 0], got.P.to_numpy(), decimal=10)
@@ -31,7 +32,7 @@ def test_distributed_with_nans(spark):
     T[700] = np.inf
     m = 10
     got = (distributed_matrix_profile(spark, T, m, tile=256)
-           .toPandas().sort_values("i").reset_index(drop=True))
+           .toPandas().sort_values("idx").reset_index(drop=True))
     P, I, _, _ = kernels.matrix_profile(T, m)
     npt.assert_almost_equal(P[:, 0], got.P.to_numpy(), decimal=10)
     npt.assert_array_equal(I[:, 0], got.I.to_numpy())
@@ -43,7 +44,7 @@ def test_distributed_ab_join(spark):
     T_B = rs.uniform(-1000, 1000, 900)
     m = 20
     got = (distributed_matrix_profile(spark, T_A, m, tile=256, T_B=T_B)
-           .toPandas().sort_values("i").reset_index(drop=True))
+           .toPandas().sort_values("idx").reset_index(drop=True))
     P, I, _, _ = kernels.matrix_profile(T_A, m, T_B=T_B)
     npt.assert_almost_equal(P[:, 0], got.P.to_numpy(), decimal=10)
     npt.assert_array_equal(I[:, 0], got.I.to_numpy())
@@ -60,7 +61,7 @@ def test_distributed_topk_equals_single_task(spark):
     T = rs.uniform(-1000, 1000, 1500)
     m, k = 16, 4
     got = (distributed_matrix_profile(spark, T, m, tile=256, k=k)
-           .toPandas().sort_values("i").reset_index(drop=True))
+           .toPandas().sort_values("idx").reset_index(drop=True))
     P, I, _, _ = kernels.matrix_profile(T, m, k=k)
     gotP = np.stack(got.P.to_numpy())
     gotI = np.stack(got.I.to_numpy())
@@ -75,7 +76,7 @@ def test_distributed_topk_ab_join(spark):
     m, k = 12, 3
     got = (distributed_matrix_profile(spark, T_A, m, tile=128, T_B=T_B,
                                       k=k)
-           .toPandas().sort_values("i").reset_index(drop=True))
+           .toPandas().sort_values("idx").reset_index(drop=True))
     P, I, _, _ = kernels.matrix_profile(T_A, m, T_B=T_B, k=k)
     npt.assert_almost_equal(P, np.stack(got.P.to_numpy()), decimal=10)
     npt.assert_array_equal(I, np.stack(got.I.to_numpy()))
@@ -90,7 +91,7 @@ def test_distributed_pnorm_self_and_ab(spark):
     m = 15
     got = (distributed_matrix_profile(spark, T_A, m, tile=256,
                                       normalize=False)
-           .toPandas().sort_values("i").reset_index(drop=True))
+           .toPandas().sort_values("idx").reset_index(drop=True))
     P, I, IL, IR = kernels.matrix_profile_absolute(T_A, m)
     npt.assert_almost_equal(P[:, 0], got.P.to_numpy(), decimal=8)
     npt.assert_array_equal(I[:, 0], got.I.to_numpy())
@@ -98,7 +99,7 @@ def test_distributed_pnorm_self_and_ab(spark):
     npt.assert_array_equal(IR, got.IR.to_numpy())
     got_ab = (distributed_matrix_profile(spark, T_A, m, tile=256,
                                          T_B=T_B, normalize=False)
-              .toPandas().sort_values("i").reset_index(drop=True))
+              .toPandas().sort_values("idx").reset_index(drop=True))
     P2, I2, _, _ = kernels.matrix_profile_absolute(T_A, m, T_B=T_B)
     npt.assert_almost_equal(P2[:, 0], got_ab.P.to_numpy(), decimal=8)
     npt.assert_array_equal(I2[:, 0], got_ab.I.to_numpy())
@@ -110,7 +111,7 @@ def test_distributed_pnorm_p3(spark):
     m = 8
     got = (distributed_matrix_profile(spark, T, m, tile=128,
                                       normalize=False, p=3.0)
-           .toPandas().sort_values("i").reset_index(drop=True))
+           .toPandas().sort_values("idx").reset_index(drop=True))
     P, I, _, _ = kernels.matrix_profile_absolute(T, m, p=3.0)
     npt.assert_almost_equal(P[:, 0], got.P.to_numpy(), decimal=8)
     npt.assert_array_equal(I[:, 0], got.I.to_numpy())
@@ -277,7 +278,7 @@ def test_distributed_parity_planted_top1(spark):
     for normalize, p in ((True, 2.0), (False, 2.0), (False, 3.0)):
         got = (distributed_matrix_profile(spark, T, m, tile=300,
                                           normalize=normalize, p=p)
-               .toPandas().sort_values("i").reset_index(drop=True))
+               .toPandas().sort_values("idx").reset_index(drop=True))
         P, I, IL, IR = _single_task(T, m, normalize, p, 1)
         npt.assert_allclose(got.P.to_numpy(), P[:, 0], rtol=0, atol=1e-10)
         npt.assert_array_equal(got.I.to_numpy(), I[:, 0])
@@ -293,7 +294,7 @@ def test_distributed_parity_planted_topk(spark):
     for normalize, p in ((True, 2.0), (False, 2.0), (False, 3.0)):
         got = (distributed_matrix_profile(spark, T, m, tile=300, k=k,
                                           normalize=normalize, p=p)
-               .toPandas().sort_values("i").reset_index(drop=True))
+               .toPandas().sort_values("idx").reset_index(drop=True))
         P, I, _, _ = _single_task(T, m, normalize, p, k)
         npt.assert_allclose(np.stack(got.P.to_numpy()), P, rtol=0,
                             atol=1e-10)
@@ -312,3 +313,105 @@ def test_pnorm_p3_sweep_matches_naive():
     npt.assert_array_equal(I, eI)
     npt.assert_array_equal(IL, eIL)
     npt.assert_array_equal(IR, eIR)
+
+
+def _planted_int_series(n, seed):
+    """Integer series (1000 ids) with two planted exact repeats: exact
+    ties at distance 0 in several tiles."""
+    rs = np.random.RandomState(seed)
+    T = rs.randint(0, 1000, n).astype(np.float64)
+    T[700:760] = T[100:160]
+    T[1100:1130] = T[400:430]
+    return T
+
+
+def _sweep_P(T_A, m, T_B=None):
+    """Top-1 P of the GEMM tile sweep, whatever route matrix_profile
+    takes."""
+    prep_a = kernels.preprocess(T_A, m)
+    prep_b = prep_a if T_B is None else kernels.preprocess(T_B, m)
+    src = kernels._QTProvider(prep_a, prep_b, m)
+    ez = kernels.excl_zone(m) if T_B is None else -1
+    (P, *_), _ = kernels._top1_sweep(src, 0, src.r1, 0, src.c1, ez)
+    return P
+
+
+@pytest.mark.parametrize("tile", [300, 512])
+def test_distributed_integer_tiles_equal_single_task(spark, tile):
+    """Integer series run every tile on the compiled block kernel when
+    it is loaded (the GEMM sweep otherwise), and the single-task
+    profile takes the same route, so the plan equals
+    kernels.matrix_profile bit for bit: P/PL/PR and I/IL/IR exactly,
+    self-join and AB-join, with planted exact repeats.  Either way P
+    stays within the kernel/sweep tolerance of the GEMM sweep (1e-8, or
+    1e-12 in squared distance at exact repeats), so the output does not
+    depend on gcc."""
+    from stumpy_spark import cnative
+
+    T = _planted_int_series(1400, 101)
+    T_B = _planted_int_series(1150, 103)
+    T_B[500:540] = T[200:240]                   # an exact AB repeat
+    m = 16
+    for B in (None, T_B):
+        assert ((kernels._c_source(T, m, B) is not None)
+                == (cnative.load() is not None))
+        got = (distributed_matrix_profile(spark, T, m, tile=tile, T_B=B)
+               .toPandas().sort_values("idx").reset_index(drop=True))
+        P, I, IL, IR, PL, PR = kernels.matrix_profile(
+            T, m, T_B=B, return_left_right_P=True)
+        for col, exp in (("P", P[:, 0]), ("I", I[:, 0]), ("IL", IL),
+                         ("IR", IR), ("PL", PL), ("PR", PR)):
+            npt.assert_array_equal(got[col].to_numpy(), exp, err_msg=col)
+        gP = got.P.to_numpy()
+        assert (gP < 1e-6).sum() >= 20           # the planted repeats
+        ref = _sweep_P(T, m, B)
+        assert ((np.abs(gP - ref) < 1e-8)
+                | (np.abs(gP * gP - ref * ref) < 1e-12)).all()
+
+
+def test_distributed_integer_constant_window_runs_sweep(spark):
+    """One constant window sends the whole plan to the GEMM sweep, like
+    the single-task profile, which it matches."""
+    T = _planted_int_series(1400, 107)
+    T[900:930] = 5.0
+    m = 16
+    assert kernels._c_source(T, m) is None
+    got = (distributed_matrix_profile(spark, T, m, tile=300)
+           .toPandas().sort_values("idx").reset_index(drop=True))
+    P, I, IL, IR = kernels.matrix_profile(T, m)
+    npt.assert_allclose(got.P.to_numpy(), P[:, 0], rtol=0, atol=1e-10)
+    npt.assert_array_equal(got.I.to_numpy(), I[:, 0])
+    npt.assert_array_equal(got.IL.to_numpy(), IL)
+    npt.assert_array_equal(got.IR.to_numpy(), IR)
+
+
+def test_tile_plans_cross_python_as_arrow_only(spark):
+    """Every tile plan reads its bins from a Range and runs its tiles in
+    mapInArrow: no RDD scan, no pandas node."""
+    from stumpy_spark.plans.longseq import mstumped
+
+    T = _planted_int_series(1400, 109)
+    plans = [distributed_matrix_profile(spark, T, 16, tile=512),
+             distributed_matrix_profile(spark, T, 16, tile=512, k=3),
+             distributed_matrix_profile(spark, T, 16, tile=512,
+                                        normalize=False),
+             mstumped(spark, np.stack([T, T[::-1].copy()]), 16, tile=512)]
+    for df in plans:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "Range" in plan, plan
+        assert "ExistingRDD" not in plan and "Pandas" not in plan, plan
+
+
+def test_profile_writes_parquet_and_selects_by_name(spark, tmp_path):
+    """The row position is ``idx``, so ``I`` resolves by name and the
+    profile writes straight to parquet."""
+    rs = np.random.RandomState(11)
+    T = rs.uniform(-1000, 1000, 800)
+    m = 12
+    out = str(tmp_path / "mp")
+    distributed_matrix_profile(spark, T, m, tile=256).write.parquet(out)
+    back = (spark.read.parquet(out).select("idx", "I").toPandas()
+            .sort_values("idx"))
+    _, I, _, _ = kernels.matrix_profile(T, m)
+    npt.assert_array_equal(back.idx.to_numpy(), np.arange(len(I)))
+    npt.assert_array_equal(back.I.to_numpy(), I[:, 0])

@@ -13,9 +13,12 @@ thread; DRAM probes bracket the sweep so the regime is on the record.
 
 ``--tile`` times the long-series tile instead: one diagonal and one
 off-diagonal 8192-window tile of a ``perfbench/gen.make_series`` integer
-series (m=25, the benchmark's window) through ``kernels._top1_sweep``,
-z-norm and p=2, each including its per-tile source build as
-``plans/longseq.py`` runs it; best of 3, pairs/s.
+series (m=25, the benchmark's window) through ``kernels._top1_sweep``:
+the GEMM sweep at z-norm and p=2, each including its per-tile source
+build as ``plans/longseq.py`` runs it, and the compiled block kernel
+(``c_*`` rows, over the ``kernels._c_source`` the plan builds once per
+series; null when the kernel is not loaded) on the same tiles; best of
+3, pairs/s.
 
 Usage::
 
@@ -76,15 +79,21 @@ def tile_rates(tile: int = 8192, m: int = 25) -> dict:
     blocks = {"diag": ((0, tile, 0, tile), nd * (nd + 1) // 2),
               "offdiag": ((0, tile, tile, 2 * tile), tile * tile)}
     rows = {}
-    for dist in ("znorm", "p2"):
+    for dist in ("znorm", "p2", "c"):
         if dist == "znorm":
             prep = kernels.preprocess(T, m)
             make = lambda rows, cols: kernels._QTProvider(  # noqa: E731
                 prep, prep, m, rows, cols)
-        else:
+        elif dist == "p2":
             prep = kernels._preprocess_abs(T, m)
             make = lambda rows, cols: kernels._PNormSource(  # noqa: E731
                 prep, prep, m, 2.0, rows, cols)
+        else:
+            csrc = kernels._c_source(T, m)
+            if csrc is None:
+                rows.update({f"c_{name}": None for name in blocks})
+                continue
+            make = lambda rows, cols: csrc  # noqa: E731
         for name, ((r0, r1, c0, c1), pairs) in blocks.items():
             best = float("inf")
             for _ in range(3):
