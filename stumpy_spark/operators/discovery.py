@@ -1,24 +1,25 @@
 """Spark operators for motif/discord/segmentation/snippet/chain mining.
 
-Each is a mapInPandas over sequences (one row = one series, zero shuffle),
-closing over the numpy kernels in :mod:`stumpy_spark.mining`.  MPdist and
-ostinato take *pairs/groups* of sequences: pairs are built with a self-join
-on a pre-shuffled id relation; groups use groupBy().applyInPandas (the
-group is the reference's "list of series" unit, ostinato.py:148-157).
+Each runs its kernel once per sequence through the per-document Arrow
+driver of :mod:`~stumpy_spark.operators.profile` (one ``mapInArrow``,
+one row = one series, zero shuffle), closing over the numpy kernels in
+:mod:`stumpy_spark.mining`.  MPdist and ostinato take *pairs/groups* of
+sequences: pairs are built with a self-join on a pre-shuffled id
+relation and run through the same driver with two sequence columns;
+groups use ``groupBy().applyInArrow`` (the group is the reference's
+"list of series" unit, ostinato.py:148-157).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import kernels, mining
+from .profile import _per_doc, _seq_reader
 
 _MOTIF_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -33,28 +34,16 @@ def motifs(df: DataFrame, m: int, max_motifs: int = 3,
            max_matches: int = 10, max_distance=None, cutoff=None,
            min_neighbors: int = 1, id_col: str = "doc_id",
            tokens_col: str = "tokens") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, toks in zip(pdf[id_col], pdf[tokens_col]):
-                a = np.asarray(toks, dtype=np.float64)
-                if len(a) < 2 * m:
-                    continue
-                P = kernels.matrix_profile(a, m)[0][:, 0]
-                md, mi = mining.motifs(a, P, m, max_motifs=max_motifs,
-                                       max_matches=max_matches,
-                                       max_distance=max_distance,
-                                       cutoff=cutoff,
-                                       min_neighbors=min_neighbors)
-                for rank, (ds, isx) in enumerate(zip(md, mi)):
-                    rows.append((did, rank, isx[0], isx, ds))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "motif_rank", "motif_idx", "match_idxs",
-                    "match_dists"])
+    def find(a):
+        P = kernels.matrix_profile(a, m)[0][:, 0]
+        md, mi = mining.motifs(a, P, m, max_motifs=max_motifs,
+                               max_matches=max_matches,
+                               max_distance=max_distance, cutoff=cutoff,
+                               min_neighbors=min_neighbors)
+        return np.arange(len(mi)), [isx[0] for isx in mi], mi, md
 
-    return df.select(id_col, tokens_col).mapInPandas(
-        run, schema=_MOTIF_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _MOTIF_SCHEMA, find,
+                    min_len=2 * m)
 
 
 _FLUSS_SCHEMA = T.StructType([
@@ -67,23 +56,14 @@ _FLUSS_SCHEMA = T.StructType([
 def fluss(df: DataFrame, m: int, n_regimes: int = 2,
           excl_factor: int = 2, id_col: str = "doc_id",
           tokens_col: str = "tokens") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, toks in zip(pdf[id_col], pdf[tokens_col]):
-                a = np.asarray(toks, dtype=np.float64)
-                if len(a) < 2 * m or len(a) < 2 * m * excl_factor + 2:
-                    continue
-                I = kernels.matrix_profile(a, m)[1][:, 0]
-                c, regs = mining.fluss(I, L=m, n_regimes=n_regimes,
-                                       excl_factor=excl_factor)
-                rows.append((did, [int(r) for r in regs], float(c.min())))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "regimes", "cac_min"])
+    def segment(a):
+        I = kernels.matrix_profile(a, m)[1][:, 0]
+        c, regs = mining.fluss(I, L=m, n_regimes=n_regimes,
+                               excl_factor=excl_factor)
+        return [[int(r) for r in regs]], [c.min()]
 
-    return df.select(id_col, tokens_col).mapInPandas(
-        run, schema=_FLUSS_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _FLUSS_SCHEMA, segment,
+                    min_len=max(2 * m, 2 * m * excl_factor + 2))
 
 
 _MPDIST_SCHEMA = T.StructType([
@@ -114,24 +94,13 @@ def mpdist_pairs(df: DataFrame, pairs: DataFrame, m: int,
                   F.col(tokens_col).alias("_toks_b"))
     joined = pairs.join(a, "id_a").join(b, "id_b")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ia, ib, ta_, tb_ in zip(pdf["id_a"], pdf["id_b"],
-                                        pdf["_toks_a"], pdf["_toks_b"]):
-                ta = np.asarray(ta_, dtype=np.float64)
-                tb = np.asarray(tb_, dtype=np.float64)
-                if min(len(ta), len(tb)) < m:
-                    continue
-                d = mining.mpdist(ta, tb, m, percentage=percentage,
-                                  normalize=normalize,
-                                  custom_func=custom_func, mp_func=mp_func)
-                rows.append((ia, ib, d))
-            if rows:
-                yield pd.DataFrame(rows, columns=["id_a", "id_b",
-                                                  "mpdist"])
+    def dist(ta, tb):
+        return [[mining.mpdist(ta, tb, m, percentage=percentage,
+                               normalize=normalize, custom_func=custom_func,
+                               mp_func=mp_func)]]
 
-    return joined.mapInPandas(run, schema=_MPDIST_SCHEMA)
+    return _per_doc(joined, ["id_a", "id_b"], ["_toks_a", "_toks_b"],
+                    _MPDIST_SCHEMA, dist, min_len=m)
 
 
 _SNIPPET_SCHEMA = T.StructType([
@@ -145,24 +114,12 @@ _SNIPPET_SCHEMA = T.StructType([
 
 def snippets(df: DataFrame, m: int, k: int = 2, id_col: str = "doc_id",
              tokens_col: str = "tokens") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, toks in zip(pdf[id_col], pdf[tokens_col]):
-                a = np.asarray(toks, dtype=np.float64)
-                if len(a) < 2 * m:
-                    continue
-                idxs, fracs, areas = mining.snippets(a, m, k)
-                for rank in range(len(idxs)):
-                    rows.append((did, rank, int(idxs[rank]),
-                                 float(fracs[rank]), float(areas[rank])))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "snippet_rank", "snippet_idx", "fraction",
-                    "area"])
+    def pick(a):
+        idxs, fracs, areas = mining.snippets(a, m, k)
+        return np.arange(len(idxs)), idxs, fracs, areas
 
-    return df.select(id_col, tokens_col).mapInPandas(
-        run, schema=_SNIPPET_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _SNIPPET_SCHEMA, pick,
+                    min_len=2 * m)
 
 
 _CHAIN_SCHEMA = T.StructType([
@@ -175,23 +132,13 @@ _CHAIN_SCHEMA = T.StructType([
 def longest_chain(df: DataFrame, m: int, id_col: str = "doc_id",
                   tokens_col: str = "tokens") -> DataFrame:
     """Longest unanchored time-series chain per sequence (allc)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, toks in zip(pdf[id_col], pdf[tokens_col]):
-                a = np.asarray(toks, dtype=np.float64)
-                if len(a) < 2 * m:
-                    continue
-                _, _, IL, IR = kernels.matrix_profile(a, m)
-                _, longest = mining.allc(IL, IR)
-                rows.append((did, [int(x) for x in longest],
-                             len(longest)))
-            if rows:
-                yield pd.DataFrame(rows, columns=["doc_id", "chain",
-                                                  "chain_len"])
+    def chain(a):
+        _, _, IL, IR = kernels.matrix_profile(a, m)
+        _, longest = mining.allc(IL, IR)
+        return [[int(x) for x in longest]], [len(longest)]
 
-    return df.select(id_col, tokens_col).mapInPandas(
-        run, schema=_CHAIN_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _CHAIN_SCHEMA, chain,
+                    min_len=2 * m)
 
 
 _OSTINATO_SCHEMA = T.StructType([
@@ -205,11 +152,11 @@ _OSTINATO_SCHEMA = T.StructType([
 def ostinato(df: DataFrame, m: int, group_col: str = "source",
              id_col: str = "doc_id", tokens_col: str = "tokens",
              max_group_size: int = 64) -> DataFrame:
-    """Consensus motif per group of sequences (groupBy + applyInPandas;
+    """Consensus motif per group of sequences (groupBy + applyInArrow;
     the group is the reference's list-of-series unit, ostinato.py:148-157).
 
-    Scale bound: ``groupBy().applyInPandas`` concentrates a whole group
-    into one task's pandas frame, which OOMs/straggles on zipf-skewed
+    Scale bound: ``groupBy().applyInArrow`` concentrates a whole group
+    into one task's Arrow table, which OOMs/straggles on zipf-skewed
     group keys at 100x.  Groups larger than ``max_group_size`` are
     therefore reduced to a deterministic evenly-spaced subsample of the
     id-sorted members (loudly, via an emitted ``n_used``/``n_group``
@@ -217,32 +164,35 @@ def ostinato(df: DataFrame, m: int, group_col: str = "source",
     spread sample is the documented approximation.  Pass
     ``max_group_size=None`` to disable the cap.
     """
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        n_group = len(pdf)
-        if max_group_size is not None and n_group > max_group_size:
-            pick = np.linspace(0, n_group - 1, max_group_size).astype(int)
-            pdf = pdf.iloc[np.unique(pick)]
-        Ts = [np.asarray(t, dtype=np.float64) for t in pdf[tokens_col]]
-        ids = list(pdf[id_col])
-        keep = [i for i, t in enumerate(Ts) if len(t) >= 2 * m]
-        if len(keep) < 2:
-            return pd.DataFrame(columns=["group", "radius", "doc_id",
-                                         "subseq_idx", "n_used",
-                                         "n_group"])
-        Ts = [Ts[i] for i in keep]
-        ids = [ids[i] for i in keep]
-        rad, ts_i, idx = mining.ostinato(Ts, m)
-        return pd.DataFrame([(pdf[group_col].iloc[0], rad, ids[ts_i],
-                              idx, len(keep), n_group)],
-                            columns=["group", "radius", "doc_id",
-                                     "subseq_idx", "n_used", "n_group"])
-
     schema = T.StructType(list(_OSTINATO_SCHEMA.fields)
                           + [T.StructField("n_used", T.IntegerType()),
                              T.StructField("n_group", T.IntegerType())])
+
+    def run(table):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out = to_arrow_schema(schema)
+        table = table.sort_by(id_col)
+        n_group = table.num_rows
+        if max_group_size is not None and n_group > max_group_size:
+            pick = np.linspace(0, n_group - 1, max_group_size).astype(int)
+            table = table.take(np.unique(pick))
+        read = _seq_reader(table.column(tokens_col).combine_chunks())
+        Ts = [read(r) for r in range(table.num_rows)]
+        keep = [i for i, t in enumerate(Ts) if len(t) >= 2 * m]
+        if len(keep) < 2:
+            return out.empty_table()
+        rad, ts_i, idx = mining.ostinato([Ts[i] for i in keep], m)
+        return pa.Table.from_arrays(
+            [pa.array(v, type=t, from_pandas=True) for v, t in zip(
+                [[table.column(group_col)[0].as_py()], [rad],
+                 [table.column(id_col)[keep[ts_i]].as_py()], [idx],
+                 [len(keep)], [n_group]], out.types)],
+            schema=out)
+
     return (df.select(group_col, id_col, tokens_col)
-            .groupBy(group_col).applyInPandas(run, schema=schema))
+            .groupBy(group_col).applyInArrow(run, schema=schema))
 
 
 _STIMP_SCHEMA = T.StructType([
@@ -259,24 +209,13 @@ def stimp(df: DataFrame, m_values: list[int], id_col: str = "doc_id",
     reference's BFS (anytime) order."""
     order = mining.bfs_order(list(m_values))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, toks in zip(pdf[id_col], pdf[tokens_col]):
-                a = np.asarray(toks, dtype=np.float64)
-                pan = mining.stimp_pan(a, order)
-                for m, P in pan.items():
-                    finite = P[np.isfinite(P)]
-                    if not len(finite):
-                        continue
-                    rows.append((did, m, float(finite.min()),
-                                 float(finite.max())))
-            if rows:
-                yield pd.DataFrame(rows, columns=["doc_id", "m", "min_p",
-                                                  "max_p"])
+    def pan(a):
+        out = [(m, P[np.isfinite(P)])
+               for m, P in mining.stimp_pan(a, order).items()]
+        return tuple(zip(*[(m, f.min(), f.max()) for m, f in out
+                           if len(f)]))
 
-    return df.select(id_col, tokens_col).mapInPandas(
-        run, schema=_STIMP_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _STIMP_SCHEMA, pan)
 
 
 _MSTUMP_SCHEMA = T.StructType([
@@ -286,17 +225,6 @@ _MSTUMP_SCHEMA = T.StructType([
     T.StructField("motif_i", T.LongType()),
     T.StructField("motif_j", T.LongType()),
 ])
-
-
-def _dims_matrix(dims, m: int):
-    """One multi-dim doc as a (d, n) float64 array, or None — the doc is
-    skipped — when it has no dimensions, they differ in length, or they
-    are shorter than 2m."""
-    rows = [np.asarray(x, dtype=np.float64) for x in dims]
-    if (not rows or any(r.ndim != 1 or len(r) != len(rows[0]) for r in rows)
-            or len(rows[0]) < 2 * m):
-        return None
-    return np.stack(rows)
 
 
 def mstump(df: DataFrame, m: int, id_col: str = "doc_id",
@@ -313,28 +241,19 @@ def mstump(df: DataFrame, m: int, id_col: str = "doc_id",
     """
     from ..anytime import multi_matrix_profile
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, dims in zip(pdf[id_col], pdf[dims_col]):
-                Ts = _dims_matrix(dims, m)
-                if Ts is None:
-                    continue
-                P, I = multi_matrix_profile(Ts, m, include=include,
-                                            discords=discords)
-                for kdim in range(P.shape[0]):
-                    finite = np.isfinite(P[kdim])
-                    if not finite.any():
-                        continue
-                    mi = int(np.argmin(np.where(finite, P[kdim], np.inf)))
-                    rows.append((did, kdim + 1, float(P[kdim, mi]), mi,
-                                 int(I[kdim, mi])))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "kdim", "min_p", "motif_i", "motif_j"])
+    def levels(Ts):
+        P, I = multi_matrix_profile(Ts, m, include=include,
+                                    discords=discords)
+        out = []
+        for kdim in range(P.shape[0]):
+            finite = np.isfinite(P[kdim])
+            if finite.any():
+                mi = int(np.argmin(np.where(finite, P[kdim], np.inf)))
+                out.append((kdim + 1, P[kdim, mi], mi, I[kdim, mi]))
+        return tuple(zip(*out))
 
-    return df.select(id_col, dims_col).mapInPandas(
-        run, schema=_MSTUMP_SCHEMA)
+    return _per_doc(df, [id_col], [dims_col], _MSTUMP_SCHEMA, levels,
+                    min_len=2 * m)
 
 
 _SCRUMP_SCHEMA = T.StructType([
@@ -353,29 +272,18 @@ def scrump(df: DataFrame, m: int, percentage: float = 0.1,
     ``percentage`` — the cheap preview tier for rollup pipelines."""
     from ..anytime import Scrump
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, toks in zip(pdf[id_col], pdf[tokens_col]):
-                a = np.asarray(toks, dtype=np.float64)
-                if len(a) < 2 * m:
-                    continue
-                sc = Scrump(a, m, percentage=percentage,
-                            pre_scrump=pre_scrump)
-                for _ in range(rounds):
-                    sc.update()
-                finite = np.isfinite(sc.P_)
-                if not finite.any():
-                    continue
-                mi = int(np.argmin(np.where(finite, sc.P_, np.inf)))
-                rows.append((did, len(sc.P_), float(sc.P_[mi]), mi))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "n_windows", "approx_min_p",
-                    "approx_motif_i"])
+    def preview(a):
+        sc = Scrump(a, m, percentage=percentage, pre_scrump=pre_scrump)
+        for _ in range(rounds):
+            sc.update()
+        finite = np.isfinite(sc.P_)
+        if not finite.any():
+            return None
+        mi = int(np.argmin(np.where(finite, sc.P_, np.inf)))
+        return [len(sc.P_)], [sc.P_[mi]], [mi]
 
-    return df.select(id_col, tokens_col).mapInPandas(
-        run, schema=_SCRUMP_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _SCRUMP_SCHEMA, preview,
+                    min_len=2 * m)
 
 
 _MMOTIFS_SCHEMA = T.StructType([
@@ -398,22 +306,10 @@ def mmotifs(df: DataFrame, m: int, max_motifs: int = 1,
     and subspace dimensions (in subspace-selection order)."""
     from ..anytime import mmotifs as _mmotifs
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, dims in zip(pdf[id_col], pdf[dims_col]):
-                Ts = _dims_matrix(dims, m)
-                if Ts is None:
-                    continue
-                res = _mmotifs(Ts, m, max_motifs=max_motifs,
-                               include=include, discords=discords)
-                for rank, (mi, ni, kdim, sdims) in enumerate(res):
-                    rows.append((did, rank, mi, ni, kdim,
-                                 [int(x) for x in sdims]))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "motif_rank", "motif_i", "nn_i", "kdim",
-                    "dims"])
+    def find(Ts):
+        res = _mmotifs(Ts, m, max_motifs=max_motifs, include=include,
+                       discords=discords)
+        return (np.arange(len(res)), *zip(*res))
 
-    return df.select(id_col, dims_col).mapInPandas(
-        run, schema=_MMOTIFS_SCHEMA)
+    return _per_doc(df, [id_col], [dims_col], _MMOTIFS_SCHEMA, find,
+                    min_len=2 * m)

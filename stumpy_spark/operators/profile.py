@@ -2,9 +2,12 @@
 
 Spark-first design (SURVEY §2.3): one input row = one sequence, so these
 are per-batch map operators — zero shuffle, each Arrow batch processed
-independently.  ``sliding_stats`` and ``profile_summary`` are
-``mapInArrow`` over the batch's flat token values + offsets; ``stump``
-and ``mass`` are ``mapInPandas``.  The reference's thread-chunked
+independently, all of them ``mapInArrow``.  ``sliding_stats`` and
+``profile_summary`` are vectorized over the batch's flat token values +
+offsets; ``stump`` and ``mass`` — and every operator in
+:mod:`~stumpy_spark.operators.discovery` — call their kernel once per
+row through one driver, :func:`_per_doc`, which reads each sequence as
+a slice of the same flat view.  The reference's thread-chunked
 diagonal scheme (stumpy/stump.py:252-506) maps to "one task per Arrow
 batch of sequences"; its Dask scatter/gather (stumpy/stumped.py:13-203)
 maps to Spark's own task scheduling — no driver-side collect anywhere.
@@ -14,8 +17,10 @@ one task are the job of :mod:`stumpy_spark.plans.longseq` (overlapping
 segments + seam merge), which callers choose explicitly.
 
 Column contract: ``id_col`` (string), ``tokens_col`` (array<numeric>).
-Outputs are exploded long-form ``(doc_id, i, ...)`` or per-sequence
-summaries, both with explicit aliases so oracle SQL can mirror them.
+A null sequence reads as empty and is skipped; a null element reads as
+NaN.  Outputs are exploded long-form ``(doc_id, i, ...)`` or
+per-sequence summaries, both with explicit aliases so oracle SQL can
+mirror them.
 """
 
 from __future__ import annotations
@@ -23,10 +28,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import kernels
@@ -68,28 +71,99 @@ _SLIDING_SCHEMA = T.StructType([
 ])
 
 
-def _seq_iter(batches: Iterator[pd.DataFrame], id_col: str, tokens_col: str):
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        yield pdf[id_col].to_numpy(), pdf[tokens_col].to_numpy()
-
-
 def _flat_tokens(rb, tokens_col: str):
     """Zero-copy flat view of an Arrow batch's token lists.
 
     Returns ``(flat_int64, offsets_int64)``: the concatenated token
     values and the per-row boundaries into them.  Avoids the
-    per-row numpy-object materialization that ``mapInPandas`` performs
+    per-row numpy-object materialization that a pandas UDF performs
     for list columns (guide §4.1: pass batches, not rows, across the
     boundary).
     """
-    import numpy as np
-
     col = rb.column(rb.schema.get_field_index(tokens_col))
     off = col.offsets.to_numpy().astype(np.int64)
     flat = col.values.to_numpy(zero_copy_only=False)
     return flat, off
+
+
+def _seq_reader(col):
+    """Row reader of one Arrow sequence column: ``r`` → float64 array.
+
+    An ``array<numeric>`` row reads as a 1-D slice of the flat token
+    view, an ``array<array<numeric>>`` row as a ``(d, n)`` matrix — or
+    ``None`` when it has no dimensions or they differ in length.  A null
+    row reads as empty (so does a null dimension, which makes its row
+    ragged), and a null element as NaN."""
+    import pyarrow as pa
+
+    def bounds(c):
+        off = c.offsets.to_numpy().astype(np.int64)
+        if not c.null_count:
+            return off[:-1], off[1:]
+        valid = c.is_valid().to_numpy(zero_copy_only=False)
+        return off[:-1], np.where(valid, off[1:], off[:-1])
+
+    start, end = bounds(col)
+    if not pa.types.is_list(col.type.value_type):
+        flat = col.values.to_numpy(zero_copy_only=False)
+        return lambda r: flat[start[r]:end[r]].astype(np.float64)
+    flat = col.values.values.to_numpy(zero_copy_only=False)
+    d_start, d_end = bounds(col.values)
+
+    def read(r):
+        s = d_start[start[r]:end[r]]
+        n = d_end[start[r]:end[r]] - s
+        if not len(n) or (n != n[0]).any():
+            return None
+        return flat[s[0]:s[0] + n.sum()].astype(np.float64).reshape(
+            len(n), n[0])
+    return read
+
+
+def _per_doc(df: DataFrame, keys: list[str], seqs: list[str],
+             schema: T.StructType, fn, min_len: int = 1) -> DataFrame:
+    """One ``mapInArrow`` that calls ``fn`` once per row of ``df``.
+
+    ``fn`` gets one float64 array per column of ``seqs`` (see
+    :func:`_seq_reader`) and returns, for the fields of ``schema`` after
+    the key fields, one sequence of values each, all of one length (the
+    row's output rows, maybe none), or ``None``.  Rows where a sequence
+    is ``None`` or shorter than ``min_len`` along its last axis, a null
+    sequence among them, are skipped.  The output repeats the ``keys``
+    columns of each row once per output row, one typed Arrow batch per
+    input batch; NaN in an output becomes null, as in the output of a
+    pandas UDF."""
+    n_keys = len(keys)
+
+    def run(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out = to_arrow_schema(schema)
+        types = out.types[n_keys:]
+        for rb in batches:
+            read = [_seq_reader(rb.column(n_keys + c))
+                    for c in range(len(seqs))]
+            rows, parts = [], []
+            for r in range(rb.num_rows):
+                args = [rd(r) for rd in read]
+                if any(a is None or a.shape[-1] < min_len for a in args):
+                    continue
+                res = fn(*args)
+                if not res or not len(res[0]):
+                    continue
+                rows.append(np.full(len(res[0]), r))
+                parts.append([pa.array(v, type=t, from_pandas=True)
+                              for v, t in zip(res, types)])
+            if not parts:
+                continue
+            take = pa.array(np.concatenate(rows))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(c).take(take) for c in range(n_keys)]
+                + [pa.concat_arrays(list(col)) for col in zip(*parts)],
+                schema=out)
+
+    return df.select(*keys, *seqs).mapInArrow(run, schema)
 
 
 def _flat_sliding_stats(flat, off, m: int):
@@ -108,8 +182,6 @@ def _flat_sliding_stats(flat, off, m: int):
     min_std, max_std)`` where the per-doc arrays cover eligible
     (n >= m) documents in batch order.
     """
-    import numpy as np
-
     n_tok = off[1:] - off[:-1]
     elig = n_tok >= m
     if len(flat) < m or not elig.any():
@@ -161,32 +233,15 @@ def stump(df: DataFrame, m: int, k: int = 1, normalize: bool = True,
     ``normalize=False`` reroute to the aamp kernel (core.py:72-152) folded
     in as a parameter.  Returns (doc_id, i, P[k], I[k], IL, IR).
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for ids, seqs in _seq_iter(batches, id_col, tokens_col):
-            out = []
-            for did, toks in zip(ids, seqs):
-                a = np.asarray(toks, dtype=np.float64)
-                if len(a) < 2 * m:
-                    continue
-                if normalize:
-                    P, I, IL, IR = kernels.matrix_profile(a, m, k=k)
-                else:
-                    P, I, IL, IR = kernels.matrix_profile_absolute(
-                        a, m, p=p, k=k)
-                l = P.shape[0]
-                out.append(pd.DataFrame({
-                    "doc_id": np.repeat(did, l),
-                    "i": np.arange(l, dtype=np.int32),
-                    "P": list(P),
-                    "I": list(I),
-                    "IL": IL,
-                    "IR": IR,
-                }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def profile(a):
+        if normalize:
+            P, I, IL, IR = kernels.matrix_profile(a, m, k=k)
+        else:
+            P, I, IL, IR = kernels.matrix_profile_absolute(a, m, p=p, k=k)
+        return np.arange(len(P)), list(P), list(I), IL, IR
 
-    return df.select(id_col, tokens_col).mapInPandas(
-        run, schema=_PROFILE_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _PROFILE_SCHEMA, profile,
+                    min_len=2 * m)
 
 
 def _profile_top1(a, m: int, normalize: bool, p: float):
@@ -291,28 +346,20 @@ def mass(df: DataFrame, Q, normalize: bool = True, p: float = 2.0,
     Qa = np.asarray(Q, dtype=np.float64)
     m = len(Qa)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for ids, seqs in _seq_iter(batches, id_col, tokens_col):
-            rows = []
-            for did, toks in zip(ids, seqs):
-                a = np.asarray(toks, dtype=np.float64)
-                if len(a) < m:
-                    continue
-                if normalize:
-                    D = kernels.mass(Qa, a)
-                else:
-                    D = kernels.mass_absolute(Qa, a, p=p)
-                finite = np.isfinite(D)
-                if not finite.any():
-                    continue
-                j = int(np.argmin(np.where(finite, D, np.inf)))
-                jm = int(np.argmax(np.where(finite, D, -np.inf)))
-                rows.append((did, len(D), float(D[j]), j, float(D[jm])))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "n_windows", "min_d", "min_idx", "max_d"])
+    def distances(a):
+        if normalize:
+            D = kernels.mass(Qa, a)
+        else:
+            D = kernels.mass_absolute(Qa, a, p=p)
+        finite = np.isfinite(D)
+        if not finite.any():
+            return None
+        j = int(np.argmin(np.where(finite, D, np.inf)))
+        jm = int(np.argmax(np.where(finite, D, -np.inf)))
+        return [len(D)], [D[j]], [j], [D[jm]]
 
-    return df.select(id_col, tokens_col).mapInPandas(run, schema=_MASS_SCHEMA)
+    return _per_doc(df, [id_col], [tokens_col], _MASS_SCHEMA, distances,
+                    min_len=m)
 
 
 def sliding_stats(df: DataFrame, m: int, id_col: str = "doc_id",

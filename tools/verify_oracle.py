@@ -6,6 +6,10 @@ views), and compares row count, column names, and an order-insensitive
 value hash.  Usage::
 
     python tools/verify_oracle.py [sf_dir] [query ...]
+
+A query name may also be a constituent of a ``_MERGE_SPEC`` composite;
+the composite runs in its place.  A name that matches nothing is an
+error.
 """
 
 from __future__ import annotations
@@ -45,6 +49,25 @@ def value_hash(pdf: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
+def resolve_names(names, query_names, merge_spec):
+    """Map requested names onto ``queries()`` names.
+
+    Returns ``(run, via, unknown)``: the set of queries to run, the
+    ``(constituent, composite)`` pairs resolved through ``merge_spec``,
+    and the names that match neither a query nor a constituent."""
+    part_of = {tag: new for new, parts in merge_spec for tag, _ in parts}
+    run, via, unknown = set(), [], []
+    for name in names:
+        if name in query_names:
+            run.add(name)
+        elif name in part_of:
+            run.add(part_of[name])
+            via.append((name, part_of[name]))
+        else:
+            unknown.append(name)
+    return run, via, unknown
+
+
 def _duckdb_connect(spill: str):
     """DuckDB capped at 40% of physical memory, spilling to ``spill``
     (at most 5 GB).  Uncapped, DuckDB takes 80% of RAM and spills into
@@ -76,6 +99,14 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from stumpy_spark.session import get_spark
 
+    qs = entrymod.queries()
+    only, via, unknown = resolve_names(only, qs, entrymod._MERGE_SPEC)
+    if unknown:
+        print("UNKNOWN query name(s):", " ".join(unknown))
+        return 2
+    for name, composite in via:
+        print(f"{name} → {composite}")
+
     spark = get_spark(app_name="verify-oracle", cpus=8)
     spill = tempfile.mkdtemp(prefix="verify_oracle_duckdb_")
     con = _duckdb_connect(spill)
@@ -85,7 +116,6 @@ def main() -> int:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     record = {}
