@@ -28,6 +28,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import kernels
+from .kernels import _z_norm_rows
 
 
 def prescrump(T, m: int, s: int | None = None, normalize: bool = True,
@@ -35,33 +36,22 @@ def prescrump(T, m: int, s: int | None = None, normalize: bool = True,
     """Sampled-query approximate MP (prescraamp when normalize=False).
     Returns (P, I)."""
     T = np.asarray(T, dtype=np.float64)
-    n = len(T)
-    l = n - m + 1
+    l = len(T) - m + 1
     ez = kernels.excl_zone(m)
     if s is None:
         s = ez if ez > 0 else 1
-    Tc, M_T, Sigma_T, fin, con = kernels.preprocess(T, m)
+    if normalize:
+        Tc, M_T, Sigma_T, fin, con = kernels.preprocess(T, m)
     P = np.full(l, np.inf)
     I = np.full(l, -1, dtype=np.int64)
     for i in range(0, l, s):
-        Q = Tc[i:i + m]
-        if not normalize:
-            D = kernels.mass_absolute(T[i:i + m], T, p=p)
+        if normalize:
+            D = np.sqrt(kernels.squared_distance_profile(
+                kernels.sliding_dot_product(Tc[i:i + m], Tc), M_T[i],
+                Sigma_T[i], M_T, Sigma_T, m, con[i], con, fin[i], fin))
             kernels.apply_exclusion_zone(D, i, np.inf, ez)
-            j = int(np.argmin(D))
-            if D[j] < P[i]:
-                P[i] = D[j]
-                I[i] = j
-            upd = D < P
-            P[upd] = D[upd]
-            I[upd] = i
-            continue
-        QT = kernels.sliding_dot_product(Q, Tc)
-        D2 = kernels.squared_distance_profile(
-            QT, M_T[i], Sigma_T[i], M_T, Sigma_T, m,
-            bool(con[i]), con, bool(fin[i]), fin)
-        D = np.sqrt(kernels.snap_to_zero(D2))
-        kernels.apply_exclusion_zone(D, i, np.inf, ez)
+        else:
+            D = kernels.mass_absolute(T[i:i + m], T, p=p, query_idx=i)
         j = int(np.argmin(D))
         if D[j] < P[i]:
             P[i] = D[j]
@@ -73,7 +63,14 @@ def prescrump(T, m: int, s: int | None = None, normalize: bool = True,
 
 
 class Scrump:
-    """Anytime SCRIMP-style MP over random diagonal subsets."""
+    """Anytime SCRIMP-style MP over random diagonal subsets.
+
+    Each diagonal's distances come from the engine's shared formulas:
+    :func:`kernels.squared_distance_profile` (z-norm), the p = 2
+    expansion :func:`kernels._sq_euclid` on the series minus its
+    :func:`kernels._int_shift`, or :func:`kernels._pnorm_direct` (other
+    p).  At 100% the profile equals the batch ``matrix_profile`` /
+    ``matrix_profile_absolute`` up to rounding, float input included."""
 
     def __init__(self, T, m: int, percentage: float = 0.01,
                  pre_scrump: bool = False, s: int | None = None,
@@ -84,12 +81,12 @@ class Scrump:
         self.p = p
         self.l = len(T) - m + 1
         self.ez = kernels.excl_zone(m)
-        (self.T, self.M_T, self.Sigma_T,
-         self.fin, self.con) = kernels.preprocess(T, m)
+        if normalize:
+            (self.T, self.M_T, self.Sigma_T,
+             self.fin, self.con) = kernels.preprocess(T, m)
+        else:
+            self.T, self.w2, self.fin = kernels._preprocess_abs(T, m)
         self.windows = np.lib.stride_tricks.sliding_window_view(self.T, m)
-        if not normalize:
-            cs2 = np.concatenate(([0.0], np.cumsum(self.T * self.T)))
-            self.w2 = cs2[m:] - cs2[:-m]
         self.P = np.full(self.l, np.inf)
         self.I = np.full(self.l, -1, dtype=np.int64)
         if pre_scrump:
@@ -115,44 +112,23 @@ class Scrump:
         m, l = self.m, self.l
         for g in take:
             k = l - g
-            QT = np.einsum("ij,ij->i", self.windows[:k],
-                           self.windows[g:g + k])
-            if not self.normalize:
-                if self.p == 2.0:
-                    D2 = self.w2[:k] - 2.0 * QT + self.w2[g:g + k]
-                    np.maximum(D2, 0.0, out=D2)
-                    D = np.sqrt(D2)
-                else:
-                    D = np.power(np.sum(np.abs(
-                        self.windows[:k] - self.windows[g:g + k])
-                        ** self.p, axis=1), 1.0 / self.p)
-                D[~self.fin[:k]] = np.inf
-                D[~self.fin[g:g + k]] = np.inf
-                ii = np.arange(k)
-                jj = ii + g
-                upd = D < self.P[ii]
-                self.P[ii[upd]] = D[upd]
-                self.I[ii[upd]] = jj[upd]
-                upd = D < self.P[jj]
-                self.P[jj[upd]] = D[upd]
-                self.I[jj[upd]] = ii[upd]
-                continue
-            mu_a, sig_a = self.M_T[:k], self.Sigma_T[:k]
-            mu_b, sig_b = self.M_T[g:g + k], self.Sigma_T[g:g + k]
-            denom = m * sig_a * sig_b
-            denom = np.where(np.abs(denom) < kernels.config.DENOM_THRESHOLD,
-                             kernels.config.DENOM_THRESHOLD, denom)
-            rho = (QT - m * mu_a * mu_b) / denom
-            np.minimum(rho, 1.0, out=rho)
-            D2 = np.abs(2.0 * m * (1.0 - rho))
-            ca, cb = self.con[:k], self.con[g:g + k]
-            D2 = np.where(ca & cb, 0.0, D2)
-            D2 = np.where(ca ^ cb, float(m), D2)
-            D2[~self.fin[:k]] = np.inf
-            D2[~self.fin[g:g + k]] = np.inf
-            D = np.sqrt(kernels.snap_to_zero(D2))
             ii = np.arange(k)
             jj = ii + g
+            A, B = self.windows[:k], self.windows[g:]
+            if self.normalize:
+                D = np.sqrt(kernels.squared_distance_profile(
+                    np.einsum("ij,ij->i", A, B), self.M_T[:k],
+                    self.Sigma_T[:k], self.M_T[g:], self.Sigma_T[g:], m,
+                    self.con[:k], self.con[g:], self.fin[:k],
+                    self.fin[g:]))
+            elif self.p == 2.0:
+                D = np.sqrt(kernels._sq_euclid(
+                    np.einsum("ij,ij->i", A, B), self.w2[:k], self.w2[g:],
+                    A, B))
+            else:
+                D = kernels._p_root(kernels._pnorm_direct(A, B, self.p),
+                                    self.p)
+            D[~(self.fin[:k] & self.fin[g:])] = np.inf
             upd = D < self.P[ii]
             self.P[ii[upd]] = D[upd]
             self.I[ii[upd]] = jj[upd]
@@ -263,18 +239,6 @@ def _inverse_norm_bins(bits: int = 8) -> np.ndarray:
 def _discretize(a: np.ndarray, bins: np.ndarray) -> np.ndarray:
     """``np.digitize(a, bins, right=True)`` (mstump.py:265-291)."""
     return np.digitize(a, bins, right=True)
-
-
-def _z_norm_rows(a: np.ndarray) -> np.ndarray:
-    """Per-row z-norm with the reference's constant-row contract:
-    sigma below STDDEV_THRESHOLD acts as 1 (core.py:359-383), and fully
-    constant rows are zeroed afterwards (mstump.py:418-427)."""
-    mu = a.mean(axis=1, keepdims=True)
-    sig = a.std(axis=1, keepdims=True)
-    sig = np.where(sig < kernels.config.STDDEV_THRESHOLD, 1.0, sig)
-    z = (a - mu) / sig
-    z[np.ptp(a, axis=1) == 0] = 0.0
-    return z
 
 
 def _subspace_from_D(D: np.ndarray, k: int, include=None,

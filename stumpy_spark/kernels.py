@@ -7,17 +7,28 @@ close over.  Semantics reproduce the reference's numerical contracts
 - sliding mean/std via the two-cumulative-sum trick
   (contract of stumpy/core.py:1018-1100 ``compute_mean_std``)
 - sliding dot product, direct and FFT (core.py:652-715)
-- z-normalized squared-distance formula with constant / non-finite special
-  cases (core.py:1107-1168 ``_calculate_squared_distance``)
+- one z-normalized squared-distance formula with constant / non-finite
+  special cases and snap-to-zero (core.py:1107-1168
+  ``_calculate_squared_distance``), :func:`squared_distance_profile`
+- one direct p-norm accumulator, :func:`_pnorm_direct`, and one p = 2
+  expansion ``|a|^2 + |b|^2 - 2 a.b``, :func:`_sq_euclid`, which
+  recomputes its cancellation-suspect cells directly and runs on the
+  series minus one integer shift per join (:func:`_int_shift`)
 - exclusion zone (core.py:2047-2106), rolling isfinite (core.py:2522-2579),
   rolling isconstant (core.py:2583-2687)
 - top-k merge rules (core.py:3325-3516)
 
-Everything is vectorized or BLAS-backed; no per-element Python loops in any
-hot path.  Implementations are written from scratch against the documented
-semantics — this is not a copy of the reference's numba kernels.  The
-numpy matrix profiles compute blocked GEMM dot-product tiles, the right
-shape for a columnar Arrow batch.  For batch profiles the reference's
+Every numpy distance except the folded :class:`_QTProvider` tile,
+:func:`idx_to_mp` and :func:`mueen_calculate_distance_profile` comes
+from those three routines: ``mass``, ``mass_absolute``,
+``mass_distance_matrix``, the Pearson and p-norm tiles, and the anytime
+and streaming states of :mod:`stumpy_spark.anytime` and
+:mod:`stumpy_spark.streaming`.  Everything is vectorized or BLAS-backed;
+no per-element Python loops in any hot path.  Implementations are
+written from scratch against the documented semantics — this is not a
+copy of the reference's numba kernels.  The numpy matrix profiles
+compute blocked GEMM dot-product tiles, the right shape for a columnar
+Arrow batch.  For batch profiles the reference's
 diagonal recurrence (an O(1) covariance update per cell) exists only as
 the compiled kernel of :mod:`stumpy_spark.cnative`, which takes only
 top-1 self-joins and AB-joins of integer series (whole, or one block at
@@ -53,11 +64,14 @@ def rolling_isconstant(T: np.ndarray, m: int) -> np.ndarray:
     """True where max(window) - min(window) == 0 (core.py:2583-2687).
 
     Non-finite windows are forced non-constant
-    (core.py:2690-2734 ``fix_isconstant_isfinite_conflicts``).
+    (core.py:2690-2734 ``fix_isconstant_isfinite_conflicts``); their
+    values are zeroed before the min/max scan, so it raises no warning.
     """
-    mins = sliding_min(T, m)
-    maxs = sliding_max(T, m)
-    out = (maxs - mins) == 0
+    fin = np.isfinite(T)
+    if fin.all():
+        return (sliding_max(T, m) - sliding_min(T, m)) == 0
+    Tz = np.where(fin, T, 0.0)
+    out = (sliding_max(Tz, m) - sliding_min(Tz, m)) == 0
     out &= rolling_isfinite(T, m)
     return out
 
@@ -140,31 +154,17 @@ def preprocess(T: np.ndarray, m: int, T_subseq_isconstant=None):
         # indicator cumsum, the inf->nan->0 rewrite passes, and the
         # mean-inf overwrite — drops to a single ones() fill
         isfinite_w = np.ones(max(T.shape[0] - m + 1, 0), dtype=bool)
-        if T_subseq_isconstant is None:
-            isconstant = (sliding_max(T, m) - sliding_min(T, m)) == 0
-        else:
-            isconstant = process_isconstant(T, m, T_subseq_isconstant)
+        isconstant = process_isconstant(T, m, T_subseq_isconstant)
         M_T, Sigma_T = sliding_mean_std(T, m)
         return T, M_T, Sigma_T, isfinite_w, isconstant
     isfinite_w = rolling_isfinite(T, m)
     T[~fin_el] = np.nan
-    if T_subseq_isconstant is None:
-        isconstant = _rolling_isconstant_nan(T, m)
-    else:
-        isconstant = process_isconstant(T, m, T_subseq_isconstant)
-    T[np.isnan(T)] = 0.0
+    isconstant = process_isconstant(T, m, T_subseq_isconstant)
+    T[~fin_el] = 0.0
     M_T, Sigma_T = sliding_mean_std(T, m)
     # Windows with any non-finite value get mean inf (core.py:1092-1093)
     M_T[~isfinite_w] = np.inf
     return T, M_T, Sigma_T, isfinite_w, isconstant
-
-
-def _rolling_isconstant_nan(T: np.ndarray, m: int) -> np.ndarray:
-    finite = rolling_isfinite(T, m)
-    Tz = np.where(np.isnan(T), 0.0, T)
-    out = (sliding_max(Tz, m) - sliding_min(Tz, m)) == 0
-    out &= finite
-    return out
 
 
 def process_isconstant(T: np.ndarray, m: int,
@@ -178,9 +178,8 @@ def process_isconstant(T: np.ndarray, m: int,
     T = np.asarray(T, dtype=np.float64)
     l = len(T) - m + 1
     if T_subseq_isconstant is None:
-        out = _rolling_isconstant_nan(np.where(np.isfinite(T), T, np.nan),
-                                      m)
-    elif callable(T_subseq_isconstant):
+        return rolling_isconstant(T, m)
+    if callable(T_subseq_isconstant):
         out = np.asarray(T_subseq_isconstant(T, m))
         if out.dtype != np.bool_:
             raise ValueError(
@@ -218,11 +217,16 @@ def check_P(P: np.ndarray, threshold: float = 1e-6) -> None:
                       "unreliable")
 
 
-def _z_norm_rows(X: np.ndarray) -> np.ndarray:
-    mu = X.mean(axis=1, keepdims=True)
-    sig = X.std(axis=1, keepdims=True)
-    sig = np.where(sig == 0, 1.0, sig)
-    return (X - mu) / sig
+def _z_norm_rows(a: np.ndarray) -> np.ndarray:
+    """Per-row z-norm with the reference's constant-row contract:
+    sigma below STDDEV_THRESHOLD acts as 1 (core.py:359-383), and fully
+    constant rows are zeroed afterwards (mstump.py:418-427)."""
+    mu = a.mean(axis=1, keepdims=True)
+    sig = a.std(axis=1, keepdims=True)
+    sig = np.where(sig < config.STDDEV_THRESHOLD, 1.0, sig)
+    z = (a - mu) / sig
+    z[np.ptp(a, axis=1) == 0] = 0.0
+    return z
 
 
 def idx_to_mp(I: np.ndarray, T: np.ndarray, m: int, normalize: bool = True,
@@ -303,33 +307,92 @@ def squared_distance_profile(
     Q_isfinite: bool = True,
     T_isfinite: np.ndarray | None = None,
 ) -> np.ndarray:
-    """z-normalized squared distances of one query vs all windows.
+    """z-normalized squared distances from sliding dot products — the one
+    Pearson per-cell formula of the engine.
 
     Vectorized restatement of core.py:1107-1168 ``_calculate_squared_distance``:
     ``rho = (QT - m mu_Q M_T) / (m sigma_Q Sigma_T)`` with the denominator
-    clamped at DENOM_THRESHOLD, rho clamped <= 1, ``D^2 = |2m(1 - rho)|``;
+    clamped at DENOM_THRESHOLD, rho clamped <= 1, ``D^2 = 2m(1 - rho)``,
+    snapped to 0 below P_NORM_THRESHOLD (stump.py:488-497);
     both-constant -> 0; exactly-one-constant -> m; non-finite -> inf.
+    The query-side arguments broadcast against the series-side ones, so
+    one query (scalars), a column of queries against a row of windows
+    (a GEMM tile) and aligned pairs (a diagonal) all run here; ``QT`` is
+    left untouched.
     """
-    denom = m * sigma_Q * Sigma_T
-    denom = np.where(np.abs(denom) < config.DENOM_THRESHOLD,
-                     config.DENOM_THRESHOLD, denom)
-    rho = (QT - m * mu_Q * M_T) / denom
-    np.minimum(rho, 1.0, out=rho)
-    D2 = np.abs(2.0 * m * (1.0 - rho))
-    both_const = T_isconstant & Q_isconstant
-    one_const = T_isconstant ^ Q_isconstant
-    D2 = np.where(both_const, 0.0, D2)
-    D2 = np.where(one_const, float(m), D2)
+    D2 = (m * mu_Q) * M_T
+    np.subtract(QT, D2, out=D2)
+    denom = (m * sigma_Q) * Sigma_T
+    np.maximum(denom, config.DENOM_THRESHOLD, out=denom)
+    D2 /= denom
+    np.minimum(D2, 1.0, out=D2)
+    np.subtract(1.0, D2, out=D2)
+    D2 *= 2.0 * m
+    D2[D2 < config.P_NORM_THRESHOLD] = 0.0
+    # count_nonzero: the any()/all() test that stays cheap on a GEMM
+    # tile's short flag slices and on plain bools alike
+    if np.count_nonzero(Q_isconstant) or np.count_nonzero(T_isconstant):
+        np.copyto(D2, 0.0, where=Q_isconstant & T_isconstant)
+        np.copyto(D2, float(m), where=Q_isconstant ^ T_isconstant)
     if T_isfinite is not None:
-        D2 = np.where(~T_isfinite, np.inf, D2)
-    if not Q_isfinite:
-        D2 = np.full_like(D2, np.inf)
+        np.copyto(D2, np.inf, where=~T_isfinite)
+    if np.count_nonzero(Q_isfinite) < np.size(Q_isfinite):
+        np.copyto(D2, np.inf, where=~np.asarray(Q_isfinite))
     return D2
 
 
-def snap_to_zero(D2: np.ndarray) -> np.ndarray:
-    """Squared distances < P_NORM_THRESHOLD -> 0 (stump.py:488-497)."""
-    D2 = np.where(D2 < config.P_NORM_THRESHOLD, 0.0, D2)
+def _int_shift(T: np.ndarray) -> float:
+    """The integer a p-norm join subtracts from both of its series:
+    ``round(median)`` of the finite values (0 if there are none).
+    p-norm distances do not change under a common shift, but the p = 2
+    expansion (:func:`_sq_euclid`) cancels in proportion to the window
+    norms, so offset series (values near 1e6 that vary by 100) lose
+    most of their digits unshifted.  An integer shift keeps integer
+    series integer, so their sums stay exact."""
+    T = np.asarray(T, dtype=np.float64)
+    fin = T[np.isfinite(T)]
+    return float(np.round(np.median(fin))) if fin.size else 0.0
+
+
+def _pnorm_direct(WA: np.ndarray, WB: np.ndarray, p: float) -> np.ndarray:
+    """``sum_o |WA[..., o] - WB[..., o]|^p`` accumulated offset by offset
+    — the one direct p-norm accumulator.  The window axis is last and
+    the other axes broadcast: one query against a window matrix, a
+    column of windows against a row of windows (a tile), or aligned
+    pairs.  Memory is O(result), and no expansion means no cancellation:
+    exact repeats come out exactly 0."""
+    X = np.zeros(np.broadcast_shapes(WA.shape[:-1], WB.shape[:-1]))
+    for o in range(WA.shape[-1]):
+        d = WA[..., o] - WB[..., o]
+        X += d * d if p == 2.0 else np.abs(d) ** p
+    return X
+
+
+def _p_root(X: np.ndarray, p: float) -> np.ndarray:
+    """Distances from accumulated ``D^p``."""
+    return np.sqrt(X) if p == 2.0 else X ** (1.0 / p)
+
+
+def _sq_euclid(QT, a2, b2, WA, WB) -> np.ndarray:
+    """Squared Euclidean distances by the p = 2 expansion
+    ``|a|^2 + |b|^2 - 2 QT`` — the one expansion of the engine — from dot
+    products ``QT`` and window square sums ``a2``/``b2`` (broadcasting
+    like ``QT``); ``QT`` is left untouched.  The expansion cancels
+    catastrophically at near-duplicate pairs (and can go negative), so
+    every cell at most ``1e-8 * (a2 + b2)`` is recomputed directly, as
+    the :func:`_sq_norms` of its window difference ``WA - WB`` (window
+    axis last, broadcasting like ``QT``): exact repeats come out exactly
+    0.  Callers pass series shifted by :func:`_int_shift`."""
+    s = a2 + b2
+    D2 = QT * -2.0
+    D2 += s
+    s *= 1e-8
+    suspect = D2 <= s
+    if suspect.any():
+        idx = np.nonzero(suspect)
+        shape = D2.shape + WA.shape[-1:]
+        D2[idx] = _sq_norms(np.broadcast_to(WA, shape)[idx]
+                            - np.broadcast_to(WB, shape)[idx])
     return D2
 
 
@@ -379,11 +442,9 @@ def mass(
     sigma_Q = Qc.std()
     Q_isconstant = Q_isfinite and (np.ptp(Qc) == 0)
     QT = sliding_dot_product(Qc, T_clean)
-    D2 = squared_distance_profile(
+    D = np.sqrt(squared_distance_profile(
         QT, mu_Q, sigma_Q, M_T, Sigma_T, m,
-        Q_isconstant, T_isconstant, Q_isfinite, T_isfinite)
-    D2 = snap_to_zero(D2)
-    D = np.sqrt(D2)
+        Q_isconstant, T_isconstant, Q_isfinite, T_isfinite))
     if query_idx is not None:
         apply_exclusion_zone(D, query_idx, np.inf, excl_zone(m))
     return D
@@ -425,22 +486,6 @@ def mueen_calculate_distance_profile(Q: np.ndarray,
 # ---------------------------------------------------------------------------
 # matrix profile (batch, one series pair, exact)
 # ---------------------------------------------------------------------------
-
-def _pearson_block(windows_A, windows_B, mu_A, sig_A, mu_B, sig_B, m):
-    """QT block via GEMM -> rho block (clamped <= 1), all in-place on the
-    GEMM output.
-
-    Exact (no recurrence drift).  sigma==0 columns produce denom 0 →
-    clamped to DENOM_THRESHOLD (callers overwrite constant/non-finite
-    cells afterwards anyway)."""
-    QT = windows_A @ windows_B.T            # (ba, lb) BLAS
-    QT -= np.outer(m * mu_A, mu_B)
-    denom = np.outer(m * sig_A, sig_B)
-    np.maximum(denom, config.DENOM_THRESHOLD, out=denom)
-    QT /= denom
-    np.minimum(QT, 1.0, out=QT)
-    return QT
-
 
 #: matrices up to this many cells run as a single tile (no blocking
 #: overhead); above it, 128-square cache tiles.  Tuned on the real
@@ -525,13 +570,12 @@ class _QTProvider(_TileSource):
     D^2 < thr``); snapped cells land on exactly ``-2m``.
 
     ``pearson=True`` gives up the folding for the reference's per-cell
-    formula (core.py:1107-1168): tiles of ``D^2 = |2m(1 - rho)|`` itself,
-    ``rho = (QT - m*mu_i*mu_j) / max(m*sig_i*sig_j, DENOM_THRESHOLD)``
-    from a GEMM on the raw windows.  On integer series with a
-    power-of-two m every step up to the division is exact, so pairs whose
-    z-normalized windows coincide — offset or mirrored copies — tie
-    exactly, as they do in the SQL oracles; the folded form rounds them
-    apart.  It costs six more passes per tile."""
+    formula: tiles of ``D^2`` itself, :func:`squared_distance_profile` of
+    a GEMM on the raw windows.  On integer series with a power-of-two m
+    every step up to the division is exact, so pairs whose z-normalized
+    windows coincide — offset or mirrored copies — tie exactly, as they
+    do in the SQL oracles; the folded form rounds them apart.  It costs
+    about five more passes per tile."""
 
     def __init__(self, prep_A, prep_B, m, rows=None, cols=None,
                  pearson=False):
@@ -543,12 +587,11 @@ class _QTProvider(_TileSource):
         self._shift = 0.0 if pearson else 2.0 * m
         self._Ax, mu_a = self._side(TA, muA, sigA, self.r0, self.r1,
                                     -2.0, _GEMM_ROWS - 1)
-        self._Bx, mu_b = self._side(TB, muB, sigB, self.c0, self.c1,
-                                    1.0, 1)
-        if pearson:
-            self._m_mu_a, self._mu_b = (m * mu_a)[:, None], mu_b
-            self._m_sig_a = (m * sigA[self.r0:self.r1])[:, None]
-            self._sig_b = sigB[self.c0:self.c1]
+        self._Bx, self._mu_b = self._side(TB, muB, sigB, self.c0, self.c1,
+                                          1.0, 1)
+        self._mu_a = mu_a[:, None]
+        self._sig_a = sigA[self.r0:self.r1, None]
+        self._sig_b = sigB[self.c0:self.c1]
         self._ca = conA[self.r0:self.r1]
         self._cb = conB[self.c0:self.c1]
         self._any_con = bool(self._ca.any()) or bool(self._cb.any())
@@ -572,15 +615,14 @@ class _QTProvider(_TileSource):
     def _tile(self, i0, i1, j0, j1):
         m, shift = self.m, self._shift
         X = self._gemm(i0, i1, j0, j1)
+        ca = self._ca[i0:i1, None]
+        cb = self._cb[j0:j1]
         if self._pearson:
-            X -= self._m_mu_a[i0:i1] * self._mu_b[j0:j1]
-            X /= np.maximum(self._m_sig_a[i0:i1] * self._sig_b[j0:j1],
-                            config.DENOM_THRESHOLD)
-            X = 2.0 * m * (1.0 - np.minimum(X, 1.0))
+            return squared_distance_profile(
+                X, self._mu_a[i0:i1], self._sig_a[i0:i1], self._mu_b[j0:j1],
+                self._sig_b[j0:j1], m, ca, cb)
         X[X < config.P_NORM_THRESHOLD - shift] = -shift
         if self._any_con:
-            ca = self._ca[i0:i1][:, None]
-            cb = self._cb[j0:j1][None, :]
             X[ca & cb] = -shift                # D^2 == 0
             X[ca ^ cb] = float(m) - shift      # D^2 == m
         return X
@@ -589,64 +631,59 @@ class _QTProvider(_TileSource):
         return np.sqrt(x + self._shift)
 
 
-def _preprocess_abs(T, m):
+def _preprocess_abs(T, m, shift=None):
     """aamp preprocessing (aamp.py:38-55): ``(T_clean, sq, fin)`` —
-    non-finite values zeroed (not nan_to_num, whose inf -> 1.8e308
-    overflows the sums of masked cells), window square sums for the
-    p == 2 GEMM expansion, and the finite-window mask."""
+    the series minus ``shift`` (default: its own :func:`_int_shift`; an
+    AB-join passes one shift for both sides) with non-finite values
+    zeroed (not nan_to_num, whose inf -> 1.8e308 overflows the sums of
+    masked cells), window square sums for the p == 2 expansion, and the
+    finite-window mask.  The square sums are :func:`_sq_norms`, not
+    cumsum differences, so equal windows get equal sums wherever they
+    sit and exact repeats tie exactly."""
     T = np.asarray(T, dtype=np.float64)
-    Tc = np.where(np.isfinite(T), T, 0.0)
-    cs = np.concatenate(([0.0], np.cumsum(Tc * Tc)))
-    return Tc, cs[m:] - cs[:-m], rolling_isfinite(T, m)
+    if shift is None:
+        shift = _int_shift(T)
+    Tc = np.where(np.isfinite(T), T - shift, 0.0)
+    return (Tc, _sq_norms(np.lib.stride_tricks.sliding_window_view(Tc, m)),
+            rolling_isfinite(T, m))
+
+
+def _sq_norms(W: np.ndarray) -> np.ndarray:
+    """Square sums of the window rows of ``W``, one fixed summation order
+    per row, so equal windows get equal sums."""
+    return np.einsum("ij,ij->i", W, W)
 
 
 class _PNormSource(_TileSource):
     """p-norm (aamp) source over :func:`_preprocess_abs` tuples: tiles of
-    ``D^p``.  p == 2 uses the GEMM expansion ``|a|^2 - 2 a.b + |b|^2``
-    (``Ax = -2 * windows`` folds the factor into the GEMM) and recomputes
-    the cells where it cancels catastrophically — near-duplicate pairs —
-    directly, so exact repeats come out exactly 0; any other p
-    accumulates ``|a_o - b_o|^p`` offset by offset, O(tile) memory."""
+    ``D^p``.  p == 2 runs :func:`_sq_euclid` on one GEMM of the windows;
+    any other p runs :func:`_pnorm_direct`, O(tile) memory."""
 
     def __init__(self, prep_A, prep_B, m, p=2.0, rows=None, cols=None):
         TA, a2, finA = prep_A
         TB, b2, finB = prep_B
         super().__init__(finA, finB, rows, cols)
         self.m, self.p = m, p
-        self._TA, self._TB = TA, TB
+        W = np.lib.stride_tricks.sliding_window_view
         if p == 2.0:
-            W = np.lib.stride_tricks.sliding_window_view
             self._Ax = self._operand(W(TA, m), self.r0, self.r1,
                                      _GEMM_ROWS - 1)
-            self._Ax *= -2.0
             self._Bx = self._operand(W(TB, m), self.c0, self.c1, 1)
-            self._a2 = a2[self.r0:self.r1]
+            self._a2 = a2[self.r0:self.r1, None]
             self._b2 = b2[self.c0:self.c1]
+        else:
+            self._Ax = W(TA, m)[self.r0:self.r1]
+            self._Bx = W(TB, m)[self.c0:self.c1]
 
     def _tile(self, i0, i1, j0, j1):
+        WA, WB = self._Ax[i0:i1, None], self._Bx[j0:j1]
         if self.p != 2.0:
-            a0, b0 = self.r0 + i0, self.c0 + j0
-            nr, nc = i1 - i0, j1 - j0
-            X = np.zeros((nr, nc))
-            for o in range(self.m):
-                X += np.abs(self._TA[a0 + o:a0 + o + nr, None]
-                            - self._TB[None, b0 + o:b0 + o + nc]) ** self.p
-            return X
-        a2 = self._a2[i0:i1][:, None]
-        b2 = self._b2[j0:j1][None, :]
-        X = self._gemm(i0, i1, j0, j1)
-        X += a2
-        X += b2
-        np.maximum(X, 0.0, out=X)
-        suspect = X <= 1e-8 * (a2 + b2)
-        if suspect.any():
-            si, sj = np.nonzero(suspect)
-            diff = self._Ax[i0 + si] * -0.5 - self._Bx[j0 + sj]
-            X[si, sj] = np.einsum("ij,ij->i", diff, diff)
-        return X
+            return _pnorm_direct(WA, WB, self.p)
+        return _sq_euclid(self._gemm(i0, i1, j0, j1), self._a2[i0:i1],
+                          self._b2[j0:j1], WA, WB)
 
     def dist(self, x):
-        return np.sqrt(x) if self.p == 2.0 else x ** (1.0 / self.p)
+        return _p_root(x, self.p)
 
 
 def _apply_include_rows(D, include):
@@ -1015,30 +1052,11 @@ def matrix_profile(
 
 def mass_absolute(Q: np.ndarray, T: np.ndarray, p: float = 2.0,
                   query_idx: int | None = None) -> np.ndarray:
-    """Non-normalized distance profile (contract of core.py:1369-1462)."""
-    Q = np.asarray(Q, dtype=np.float64)
-    T = np.asarray(T, dtype=np.float64)
-    m = Q.shape[0]
-    T_isfinite = rolling_isfinite(T, m)
-    Q_isfinite = bool(np.all(np.isfinite(Q)))
-    # zero (not clamp-to-1.8e308) non-finite values: the distances at
-    # those positions are masked to inf below anyway, and clamped infs
-    # overflow |diff|**p (same contract as the aamp kernels)
-    Qc = np.nan_to_num(Q, nan=0.0, posinf=0.0, neginf=0.0)
-    Tc = np.nan_to_num(T, nan=0.0, posinf=0.0, neginf=0.0)
-    windows = np.lib.stride_tricks.sliding_window_view(Tc, m)
-    if p == 2.0:
-        # direct (w - Q)^2 sum: O(n m) but cancellation-free, exact at the
-        # query's own position (the GEMM expansion loses ~sqrt(eps)·scale)
-        diff = windows - Qc
-        D = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-    else:
-        D = np.power(np.sum(np.abs(windows - Qc) ** p, axis=1), 1.0 / p)
-    D[~T_isfinite] = np.inf
-    if not Q_isfinite:
-        D[:] = np.inf
+    """Non-normalized distance profile (contract of core.py:1369-1462):
+    the one-query row of :func:`mass_distance_matrix`."""
+    D = mass_distance_matrix(Q, T, normalize=False, p=p)[0]
     if query_idx is not None:
-        apply_exclusion_zone(D, query_idx, np.inf, excl_zone(m))
+        apply_exclusion_zone(D, query_idx, np.inf, excl_zone(len(Q)))
     return D
 
 
@@ -1047,50 +1065,37 @@ def mass_distance_matrix(Q_mat: np.ndarray, T: np.ndarray,
                          T_subseq_isconstant=None) -> np.ndarray:
     """All-queries × all-subsequences distance matrix — the reference's
     ``core._mass_distance_matrix`` (core.py:1836-2005, a loop of MASS
-    rows) and its p-norm twin, as one blocked GEMM / offset accumulation.
+    rows) and its p-norm twin: z-norm is one GEMM of dot products through
+    :func:`squared_distance_profile`, p-norm one :func:`_pnorm_direct`
+    accumulation over every (query, window) pair.
 
     ``Q_mat``: (nq, m) query rows.  Returns (nq, l), l = len(T) − m + 1,
     with every per-row MASS special case: constant windows (both → 0,
     one → √m), non-finite query rows / T windows → inf, snap-to-zero.
-    Row q equals ``mass(Q_mat[q], T)`` / ``mass_absolute(Q_mat[q], T)``.
+    Row q equals ``mass(Q_mat[q], T)`` / ``mass_absolute(Q_mat[q], T)``
+    up to rounding, float input included.
     """
     Q_mat = np.atleast_2d(np.asarray(Q_mat, dtype=np.float64))
-    nq, m = Q_mat.shape
-    q_fin = np.isfinite(Q_mat).all(axis=1)
+    m = Q_mat.shape[1]
+    q_fin = np.isfinite(Q_mat).all(axis=1)[:, None]
     Qc = np.nan_to_num(Q_mat, nan=0.0, posinf=0.0, neginf=0.0)
     if normalize:
         Tc, M_T, Sigma_T, T_fin, T_con = preprocess(
             T, m, T_subseq_isconstant)
-        mu_q = Qc.mean(axis=1)
-        sig_q = Qc.std(axis=1)
-        q_con = q_fin & (np.ptp(Qc, axis=1) == 0)
         wT = np.ascontiguousarray(
             np.lib.stride_tricks.sliding_window_view(Tc, m))
-        rho = _pearson_block(Qc, wT, mu_q, sig_q, M_T, Sigma_T, m)
-        D2 = np.abs(2.0 * m * (1.0 - rho))
-        ca = q_con[:, None]
-        cb = T_con[None, :]
-        D2 = np.where(ca & cb, 0.0, D2)
-        D2 = np.where(ca ^ cb, float(m), D2)
-        D2[~q_fin, :] = np.inf
-        D2[:, ~T_fin] = np.inf
-        return np.sqrt(snap_to_zero(D2))
+        q_con = q_fin & (np.ptp(Qc, axis=1) == 0)[:, None]
+        return np.sqrt(squared_distance_profile(
+            Qc @ wT.T, Qc.mean(axis=1)[:, None], Qc.std(axis=1)[:, None],
+            M_T, Sigma_T, m, q_con, T_con, q_fin, T_fin))
     T = np.asarray(T, dtype=np.float64)
     T_fin = rolling_isfinite(T, m)
-    Tc = np.nan_to_num(T)
-    l = len(T) - m + 1
-    # per-offset accumulation: memory-safe (no (nq, l, m) cube) and the
-    # same element order as mass_absolute's per-row sum — no GEMM
-    # expansion, so no catastrophic cancellation at near-duplicates
-    acc = np.zeros((nq, l))
-    for o in range(m):
-        d = np.abs(Qc[:, o][:, None] - Tc[None, o:o + l])
-        if p == 2.0:
-            acc += d * d
-        else:
-            acc += d ** p
-    D = np.sqrt(acc) if p == 2.0 else acc ** (1.0 / p)
-    D[~q_fin, :] = np.inf
+    # zero (not clamp-to-1.8e308) non-finite values: their distances are
+    # masked to inf below anyway, and clamped infs overflow |diff|**p
+    Tc = np.where(np.isfinite(T), T, 0.0)
+    D = _p_root(_pnorm_direct(
+        Qc[:, None], np.lib.stride_tricks.sliding_window_view(Tc, m), p), p)
+    D[~q_fin[:, 0], :] = np.inf
     D[:, ~T_fin] = np.inf
     return D
 
@@ -1111,8 +1116,9 @@ def matrix_profile_absolute(
     ``k > 1``.
     """
     self_join = T_B is None
-    prep_A = _preprocess_abs(T_A, m)
-    prep_B = prep_A if self_join else _preprocess_abs(T_B, m)
+    shift = _int_shift(T_A)
+    prep_A = _preprocess_abs(T_A, m, shift)
+    prep_B = prep_A if self_join else _preprocess_abs(T_B, m, shift)
     src = _PNormSource(prep_A, prep_B, m, p)
     ez = excl_zone(m) if self_join else -1
     if k == 1:

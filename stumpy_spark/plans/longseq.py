@@ -48,6 +48,8 @@ raise ``tile`` accordingly (tile 65536 → 153 partials per row at n=10^7).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
@@ -151,7 +153,9 @@ def distributed_matrix_profile(spark: SparkSession, T_arr, m: int,
     shared = kernels._c_source(T_arr, m, T_B) if normalize and k == 1 \
         else None
     if shared is None:
-        prep = kernels.preprocess if normalize else kernels._preprocess_abs
+        # both sides of a p-norm AB-join take the same shift
+        prep = kernels.preprocess if normalize else functools.partial(
+            kernels._preprocess_abs, shift=kernels._int_shift(T_arr))
         prepA = prep(T_arr, m)
         prepB = prepA if self_join else prep(
             np.asarray(T_B, dtype=np.float64), m)

@@ -7,8 +7,12 @@ incremental profile (aampi).
   seeded simulated idealized arc curve (the reference fits the IAC by
   simulation too, floss.py:50-116).
 - :class:`AampiState` — stumpy/aampi.py:11-388: the p=2 non-normalized
-  twin of stumpi, O(n) per update via the same diagonal QT recurrence plus
-  rolling sum-of-squares.
+  twin of stumpi.  Each update is one matrix-vector product of the
+  window matrix with the new window (O(l·m), no QT recurrence, so a
+  pair's distance depends on its two windows only and exact repeats tie
+  exactly) through the engine's one p = 2 expansion,
+  ``kernels._sq_euclid``, on the series minus a fixed integer shift
+  (``kernels._int_shift`` of the initial window, kept in the state).
 
 Both plug into the same applyInPandasWithState wiring as
 :func:`stumpy_spark.streaming.stumpi.stumpi_stream`.
@@ -97,10 +101,9 @@ class FlossState:
         self.Sig[-1] = float(w.std())
         self.finw[-1] = wfin
         self.con[-1] = wfin and (np.ptp(w) == 0)
-        D2 = kernels.squared_distance_profile(
+        D = np.sqrt(kernels.squared_distance_profile(
             self.QT, self.M[-1], self.Sig[-1], self.M, self.Sig, m,
-            bool(self.con[-1]), self.con, bool(self.finw[-1]), self.finw)
-        D = np.sqrt(kernels.snap_to_zero(D2))
+            bool(self.con[-1]), self.con, bool(self.finw[-1]), self.finw))
         kernels.apply_exclusion_zone(D, l - 1, np.inf,
                                      kernels.excl_zone(m))
         # the new window sits to the RIGHT of every existing one
@@ -131,12 +134,15 @@ class GrowingAampiState:
     """Incremental non-normalized (p-norm) matrix profile, growing mode —
     the reference's ``aampi(egress=False)``.  After any number of appends
     ``P_``/``I_`` equal the batch ``matrix_profile_absolute`` of the full
-    series.  Non-finite appends are zeroed with a tracked mask (same
-    contract as GrowingStumpiState); state arrays grow geometrically.
+    series up to rounding, float input included.  Non-finite appends are
+    zeroed with a tracked mask (same contract as GrowingStumpiState);
+    state arrays grow geometrically.
 
-    ``p == 2`` uses the QT / rolling-square-sum recurrences (O(l) per
-    append); other p recompute the new window's distance profile directly
-    (O(l·m) per append, matching the reference's general-p path).
+    The stored series is the input minus the integer shift of the initial
+    series (``kernels._int_shift``).  Each append computes the new
+    window's distance profile in O(l·m): ``kernels._sq_euclid`` on one
+    matrix-vector product for ``p == 2``, ``kernels._pnorm_direct`` for
+    any other p.
     """
 
     def __init__(self, T: np.ndarray, m: int, k: int = 1, p: float = 2.0):
@@ -148,17 +154,17 @@ class GrowingAampiState:
         n = len(T)
         self._n = n
         isfin = np.isfinite(T)
-        Tz = np.where(isfin, T, 0.0)
+        self._shift = kernels._int_shift(T)
+        Tz, w2, _ = kernels._preprocess_abs(T, m, self._shift)
         P, I, IL, IR = kernels.matrix_profile_absolute(T, m, p=p, k=k)
         # left profile values from the left indices (the reference's
         # stumpi-style left_P reconstruction), vectorized
-        la = n - m + 1
-        PL = np.full(la, np.inf)
+        PL = np.full(n - m + 1, np.inf)
         valid = np.flatnonzero(IL >= 0)
         if len(valid):
             wins = np.lib.stride_tricks.sliding_window_view(Tz, m)
-            diff = np.abs(wins[valid] - wins[IL[valid]])
-            PL[valid] = np.power(np.sum(diff ** p, axis=1), 1.0 / p)
+            PL[valid] = kernels._p_root(kernels._pnorm_direct(
+                wins[valid], wins[IL[valid]], p), p)
         cap = max(2 * n, n + 64)
         lcap = cap - m + 1
         self._T = _grow(Tz, cap)
@@ -167,10 +173,7 @@ class GrowingAampiState:
         self._I = _grow(I.astype(np.int64), lcap)
         self._lP = _grow(PL, lcap)
         self._lI = _grow(IL, lcap)
-        if p == 2.0:
-            cs2 = np.concatenate(([0.0], np.cumsum(Tz * Tz)))
-            self._w2 = _grow(cs2[m:] - cs2[:-m], lcap)
-            self._QT = kernels.sliding_dot_product(Tz[-m:], Tz)
+        self._w2 = _grow(w2, lcap)
 
     @property
     def _l(self):
@@ -200,10 +203,10 @@ class GrowingAampiState:
         n = self._n
         l = n - m + 1
         finite = bool(np.isfinite(t))
-        tz = float(t) if finite else 0.0
+        tz = float(t) - self._shift if finite else 0.0
         self._T = _grow(self._T, n + 1)
         self._isfin = _grow(self._isfin, n + 1)
-        for name in ("_P", "_I", "_lP", "_lI"):
+        for name in ("_P", "_I", "_lP", "_lI", "_w2"):
             setattr(self, name, _grow(getattr(self, name), l + 1))
         self._T[n] = tz
         self._isfin[n] = finite
@@ -211,24 +214,14 @@ class GrowingAampiState:
         T = self._T[:n + 1]
         fin_w = kernels.rolling_isfinite(
             np.where(self._isfin[:n + 1], 0.0, np.nan), m)
+        W = np.lib.stride_tricks.sliding_window_view(T, m)
+        S = W[l]
+        self._w2[l] = kernels._sq_norms(W[l:])[0]
         if self.p == 2.0:
-            self._w2 = _grow(self._w2, l + 1)
-            S = T[l:l + m]
-            w2_new = float(S @ S)
-            QT_new = np.empty(l + 1)
-            t_drop = T[l - 1]
-            QT_new[1:] = self._QT[:l] - T[:l] * t_drop + T[m:n + 1] * tz
-            QT_new[0] = float(T[:m] @ S)
-            self._QT = QT_new
-            self._w2[l] = w2_new
-            D2 = self._w2[:l + 1] - 2.0 * QT_new + w2_new
-            np.maximum(D2, 0.0, out=D2)
-            D = np.sqrt(D2)
+            D = np.sqrt(kernels._sq_euclid(W @ S, self._w2[:l + 1],
+                                           self._w2[l], W, S))
         else:
-            S = T[l:l + m]
-            windows = np.lib.stride_tricks.sliding_window_view(T, m)
-            D = np.power(np.sum(np.abs(windows - S[None, :]) ** self.p,
-                                axis=1), 1.0 / self.p)
+            D = kernels._p_root(kernels._pnorm_direct(W, S, self.p), self.p)
         D[~fin_w] = np.inf
         if not fin_w[-1]:
             D[:] = np.inf
@@ -246,10 +239,10 @@ class AampiState:
     (aampi semantics).
 
     Non-finite appends follow the reference contract (stumpy/aampi.py):
-    the point is zeroed in the stored ring (keeping the QT / ||W||^2
-    recurrences finite forever — previously one NaN poisoned QT even
-    after the point egressed), a per-point finite mask is tracked, and
-    distances of affected windows are forced to inf.
+    the point is zeroed in the stored ring (so one NaN cannot poison the
+    square sums or dot products after it egresses), a per-point finite
+    mask is tracked, and distances of affected windows are forced to
+    inf.
 
     Indices are stored **absolute** (stream positions), like
     :class:`~stumpy_spark.streaming.stumpi.StumpiState`, with the same
@@ -257,7 +250,11 @@ class AampiState:
     absolute indices (the reference's egress contract — they may point
     at already-egressed points); the default reports egressed neighbors
     as -1.  ``I`` is the window-relative view kept for the incremental
-    naive oracles."""
+    naive oracles.
+
+    The ring holds the stream minus the integer shift of the initial
+    window (``kernels._int_shift``); the shift rides in the stream
+    tuple's otherwise unused ``M`` slot."""
 
     def __init__(self, T: np.ndarray, m: int,
                  absolute_indices: bool = False, mp=None):
@@ -271,7 +268,8 @@ class AampiState:
         l = self.n - m + 1
         self.absolute_indices = absolute_indices
         self.isfin = np.isfinite(T)
-        self.T = np.where(self.isfin, T, 0.0)
+        self.shift = kernels._int_shift(T)
+        self.T, self.w2, _ = kernels._preprocess_abs(T, m, self.shift)
         if mp is not None:
             P, I = np.asarray(mp[0]), np.asarray(mp[1])
             if P.reshape(l, -1).shape != (l, 1):
@@ -284,9 +282,6 @@ class AampiState:
             P, I, _, _ = kernels.matrix_profile_absolute(T, m)
         self.P = P[:, 0].copy()
         self._I = I[:, 0].copy()              # absolute; -1 sentinel
-        self.QT = kernels.sliding_dot_product(self.T[-m:], self.T)
-        cs2 = np.concatenate(([0.0], np.cumsum(self.T * self.T)))
-        self.w2 = cs2[m:] - cs2[:-m]          # rolling ||W_i||^2
         self.n_appended = 0
 
     @property
@@ -299,29 +294,20 @@ class AampiState:
         m, n = self.m, self.n
         l = n - m + 1
         finite = bool(np.isfinite(t))
-        tz = float(t) if finite else 0.0
         T = self.T
-        t_drop = T[n - m]
-        QT_new = np.empty(l)
-        QT_new[:l - 1] = (self.QT[:l - 1] - T[:l - 1] * t_drop
-                          + T[m:n] * tz)
-        # rolling sum-of-squares slides with the windows
-        w2_new = np.empty(l)
-        w2_new[:l - 1] = self.w2[1:l]
         T[:-1] = T[1:]
-        T[-1] = tz
+        T[-1] = float(t) - self.shift if finite else 0.0
         self.isfin[:-1] = self.isfin[1:]
         self.isfin[-1] = finite
-        w2_new[l - 1] = float(T[-m:] @ T[-m:])
-        QT_new[l - 1] = w2_new[l - 1]
-        self.QT = QT_new
-        self.w2 = w2_new
+        W = np.lib.stride_tricks.sliding_window_view(T, m)
+        # square sums slide with the windows
+        self.w2[:-1] = self.w2[1:]
+        self.w2[-1] = kernels._sq_norms(W[-1:])[0]
         self.n_appended += 1
         self.P[:-1] = self.P[1:]
         self._I[:-1] = self._I[1:]            # absolute: no drift
-        D2 = self.w2 - 2.0 * self.QT + self.w2[l - 1]
-        np.maximum(D2, 0.0, out=D2)
-        D = np.sqrt(D2)
+        D = np.sqrt(kernels._sq_euclid(W @ W[-1], self.w2, self.w2[-1], W,
+                                       W[-1]))
         fin = kernels.rolling_isfinite(np.where(self.isfin, 0.0, np.nan),
                                        m)
         D[~fin] = np.inf
@@ -355,23 +341,24 @@ class AampiState:
         return np.where((rel >= 0) & (self._I >= 0), self._I, -1)
 
     def to_tuple(self):
-        # left_P slot carries the rolling ||W||^2 (w2) for aampi; the
-        # M/Sig slots of the shared stream tuple are unused
+        # left_P slot carries the rolling ||W||^2 (w2) for aampi, the M
+        # slot the shift; the QT and Sig slots of the shared stream tuple
+        # are unused
         return (self.m, self.n, self.n_appended,
                 self.T.tolist(), self.P.tolist(), self._I.tolist(),
-                self.w2.tolist(), [], self.QT.tolist(),
-                [bool(x) for x in self.isfin], [], [])
+                self.w2.tolist(), [], [],
+                [bool(x) for x in self.isfin], [self.shift], [])
 
     @classmethod
     def from_tuple(cls, tup):
         obj = cls.__new__(cls)
-        (obj.m, obj.n, obj.n_appended, T, P, I, w2, _unused, QT,
-         isfin, _M, _Sig) = tup
+        (obj.m, obj.n, obj.n_appended, T, P, I, w2, _unused, _QT,
+         isfin, shift, _Sig) = tup
+        obj.shift = float(shift[0]) if len(shift) else 0.0
         obj.T = np.asarray(T, dtype=np.float64)
         obj.P = np.asarray(P, dtype=np.float64)
         obj._I = np.asarray(I, dtype=np.int64)
         obj.w2 = np.asarray(w2, dtype=np.float64)
-        obj.QT = np.asarray(QT, dtype=np.float64)
         obj.isfin = np.asarray(isfin, dtype=bool)
         obj.absolute_indices = False
         return obj

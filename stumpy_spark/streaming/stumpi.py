@@ -190,10 +190,9 @@ class GrowingStumpiState:
         self._finw[l] = q_fin
         self._con[l] = con_Q
         # distance profile of the new window vs all windows
-        D2 = kernels.squared_distance_profile(
+        D = np.sqrt(kernels.squared_distance_profile(
             self._QT, mu_Q, sig_Q, self._M[:l + 1], self._Sig[:l + 1], m,
-            con_Q, self._con[:l + 1], q_fin, self._finw[:l + 1])
-        D = np.sqrt(kernels.snap_to_zero(D2))
+            con_Q, self._con[:l + 1], q_fin, self._finw[:l + 1]))
         kernels.apply_exclusion_zone(D, l, np.inf, kernels.excl_zone(m))
         # top-k merges (core.py:4448-4511, n_appended=0)
         _topk_insert_rows(self._P[:l + 1], self._I[:l + 1], D, l, l)
@@ -346,10 +345,9 @@ class StumpiState:
         self.finw[-1] = q_fin
         self.con[-1] = con_Q
         # distance profile of the new last window vs all visible windows
-        D2 = kernels.squared_distance_profile(
+        D = np.sqrt(kernels.squared_distance_profile(
             self.QT, mu_Q, sig_Q, self.M, self.Sig, m,
-            con_Q, self.con, q_fin, self.finw)
-        D = np.sqrt(kernels.snap_to_zero(D2))
+            con_Q, self.con, q_fin, self.finw))
         kernels.apply_exclusion_zone(D, l - 1, np.inf,
                                      kernels.excl_zone(m))
         # top-k merge; the new window's absolute index

@@ -88,19 +88,24 @@ def test_mdl_and_mmotifs():
 
 def test_non_normalized_twins():
     """The normalize=False reroute (reference @non_normalized decorator
-    parity, tests/test_non_normalized_decorator.py analog)."""
-    rs = np.random.RandomState(31)
-    T = rs.uniform(-100, 100, 100)
+    parity, tests/test_non_normalized_decorator.py analog).  The
+    scraamp/prescraamp checks also run on an offset float series
+    (values near 1e6) with one planted exact repeat."""
     m = 6
-    P_exact = kernels.matrix_profile_absolute(T, m)[0][:, 0]
-    # scraamp: converges to the exact aamp profile
-    sc = Scrump(T, m, percentage=1.0, normalize=False)
-    sc.run_to_completion()
-    npt.assert_almost_equal(P_exact, sc.P_, decimal=PRECISION)
-    # prescraamp: upper bound, sampled rows exact
-    P, I = prescrump(T, m, s=3, normalize=False)
-    assert np.all(P >= P_exact - 1e-9)
-    npt.assert_almost_equal(P[::3], P_exact[::3], decimal=PRECISION)
+    for offset in (0.0, 1e6):
+        rs = np.random.RandomState(31)
+        T = rs.uniform(-100, 100, 100) + offset
+        if offset:
+            T[70:70 + m] = T[20:20 + m]
+        P_exact = kernels.matrix_profile_absolute(T, m)[0][:, 0]
+        # scraamp: converges to the exact aamp profile
+        sc = Scrump(T, m, percentage=1.0, normalize=False)
+        sc.run_to_completion()
+        npt.assert_almost_equal(P_exact, sc.P_, decimal=PRECISION)
+        # prescraamp: upper bound, sampled rows exact
+        P, I = prescrump(T, m, s=3, normalize=False)
+        assert np.all(P >= P_exact - 1e-9)
+        npt.assert_almost_equal(P[::3], P_exact[::3], decimal=PRECISION)
     # maamp
     Ts = rs.uniform(-100, 100, (2, 40))
     Pm, Im = multi_matrix_profile(Ts, 5, normalize=False)

@@ -43,16 +43,22 @@ class NaiveAampiEgress:
 
 
 def test_aampi_matches_incremental_oracle():
-    rs = np.random.RandomState(5)
-    T0 = rs.uniform(-100, 100, 40)
-    st = AampiState(T0, 5)
-    ora = NaiveAampiEgress(T0, 5)
-    for step, t in enumerate(rs.uniform(-100, 100, 60)):
-        st.update(t)
-        ora.update(t)
-        npt.assert_almost_equal(ora.P, st.P, decimal=PRECISION,
-                                err_msg=f"step {step}")
-        npt.assert_array_equal(ora.I, st.I, err_msg=f"step {step}")
+    """Also on an offset float series (values near 1e6) whose stream
+    replays one window exactly."""
+    for offset in (0.0, 1e6):
+        rs = np.random.RandomState(5)
+        T0 = rs.uniform(-100, 100, 40) + offset
+        stream = rs.uniform(-100, 100, 60) + offset
+        if offset:
+            stream[:5] = T0[20:25]
+        st = AampiState(T0, 5)
+        ora = NaiveAampiEgress(T0, 5)
+        for step, t in enumerate(stream):
+            st.update(t)
+            ora.update(t)
+            npt.assert_almost_equal(ora.P, st.P, decimal=PRECISION,
+                                    err_msg=f"step {step}")
+            npt.assert_array_equal(ora.I, st.I, err_msg=f"step {step}")
 
 
 def test_floss_right_profile_correct():
@@ -134,26 +140,31 @@ def test_aampi_structured_streaming(spark, tmp_path):
 def test_growing_aampi_equals_batch(k, p):
     """aampi(egress=False): after every append the growing profile must
     equal the batch non-normalized matrix profile of the full series,
-    including across NaN appends and for top-k."""
+    including across NaN appends and for top-k — also on an offset
+    float series (values near 1e6) whose stream replays one window
+    exactly."""
     from stumpy_spark import kernels
     from stumpy_spark.streaming.floss import GrowingAampiState
-    rs = np.random.RandomState(83)
-    T0 = rs.uniform(-100, 100, 40)
-    stream = list(rs.uniform(-100, 100, 25))
-    stream[6] = np.nan
     m = 5
-    st = GrowingAampiState(T0, m, k=k, p=p)
-    full = list(T0)
-    for step, t in enumerate(stream):
-        st.update(t)
-        full.append(t)
-        P, I, _, _ = kernels.matrix_profile_absolute(
-            np.asarray(full), m, p=p, k=k)
-        exp_P = P[:, 0] if k == 1 else P
-        exp_I = I[:, 0] if k == 1 else I
-        npt.assert_almost_equal(exp_P, st.P_, decimal=PRECISION,
-                                err_msg=f"step {step}")
-        npt.assert_array_equal(exp_I, st.I_, err_msg=f"step {step}")
+    for offset in (0.0, 1e6):
+        rs = np.random.RandomState(83)
+        T0 = rs.uniform(-100, 100, 40) + offset
+        stream = list(rs.uniform(-100, 100, 25) + offset)
+        stream[6] = np.nan
+        if offset:
+            stream[10:15] = T0[20:25]
+        st = GrowingAampiState(T0, m, k=k, p=p)
+        full = list(T0)
+        for step, t in enumerate(stream):
+            st.update(t)
+            full.append(t)
+            P, I, _, _ = kernels.matrix_profile_absolute(
+                np.asarray(full), m, p=p, k=k)
+            exp_P = P[:, 0] if k == 1 else P
+            exp_I = I[:, 0] if k == 1 else I
+            npt.assert_almost_equal(exp_P, st.P_, decimal=PRECISION,
+                                    err_msg=f"step {step}")
+            npt.assert_array_equal(exp_I, st.I_, err_msg=f"step {step}")
 
 
 def test_floss_nonfinite_append_recovers():

@@ -190,6 +190,19 @@ def test_matrix_profile_absolute(p):
     npt.assert_array_equal(ref_I[:, 0], I[:, 0])
 
 
+def test_matrix_profile_absolute_offset_floats():
+    """Offset float series (values near 1e6 that vary by 1000): the p = 2
+    expansion runs on the series minus an integer shift, so it keeps
+    its digits and matches the brute-force profile."""
+    rs = np.random.RandomState(37)
+    T = rs.uniform(-1000, 1000, 800) + 1e6
+    m = 8
+    ref_P, ref_I, _, _ = naive.stump(T, m, normalize=False)
+    P, I, _, _ = kernels.matrix_profile_absolute(T, m)
+    npt.assert_almost_equal(ref_P[:, 0], P[:, 0], decimal=PRECISION)
+    npt.assert_array_equal(ref_I[:, 0], I[:, 0])
+
+
 def test_mass_absolute():
     rs = np.random.RandomState(31)
     T = rs.uniform(-1000, 1000, 64)
@@ -462,8 +475,8 @@ def test_mueen_distance_profile_equals_mass():
 
 def test_xdist_matches_pearson_shifted():
     """_QTProvider.xdist (scaled-centered GEMM operands, shifted
-    D^2 - 2m space) must equal -2m * rho from the unfolded Pearson
-    tile (_pearson_block), snapped the same way — including
+    D^2 - 2m space) must equal D^2 - 2m = -2m * rho from the unfolded
+    Pearson formula (squared_distance_profile), snapped — including
     NaN-punctured, constant, and sig==0 placeholder cells.  The operand
     fold changes the rounding route (per-element scaling vs per-cell
     outer), so values compare at 1e-9 absolute, and snapped cells must
@@ -488,10 +501,9 @@ def test_xdist_matches_pearson_shifted():
         r0, r1 = 3, min(l, 90)
         c0, c1 = 1, min(l, 77)
         X = qtp.xdist(r0, r1, c0, c1)
-        ref = kernels._pearson_block(
-            w[r0:r1], w[c0:c1], mu[r0:r1], sig[r0:r1], mu[c0:c1],
-            sig[c0:c1], m) * (-2.0 * m)
-        ref[ref < kernels.config.P_NORM_THRESHOLD - 2.0 * m] = -2.0 * m
+        ref = kernels.squared_distance_profile(
+            w[r0:r1] @ w[c0:c1].T, mu[r0:r1, None], sig[r0:r1, None],
+            mu[c0:c1], sig[c0:c1], m, False, False) - 2.0 * m
         # compare only rows/cols both paths treat as live: xdist masks
         # non-finite windows to inf and constant ones to -2m / -m, the
         # unfolded tile leaves NaN/inf or placeholder values there

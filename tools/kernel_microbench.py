@@ -15,10 +15,12 @@ thread; DRAM probes bracket the sweep so the regime is on the record.
 off-diagonal 8192-window tile of a ``perfbench/gen.make_series`` integer
 series (m=25, the benchmark's window) through ``kernels._top1_sweep``:
 the GEMM sweep at z-norm and p=2, each including its per-tile source
-build as ``plans/longseq.py`` runs it, and the compiled block kernel
-(``c_*`` rows, over the ``kernels._c_source`` the plan builds once per
-series; null when the kernel is not loaded) on the same tiles; best of
-3, pairs/s.
+build as ``plans/longseq.py`` runs it, the one-dimension
+``kernels._MultiSource`` z-norm tile (``pearson``: the per-cell
+``kernels.squared_distance_profile`` formula), and the compiled block
+kernel (``c_*`` rows, over the ``kernels._c_source`` the plan builds
+once per series; null when the kernel is not loaded) on the same tiles;
+best of 3, pairs/s.
 
 Usage::
 
@@ -79,11 +81,15 @@ def tile_rates(tile: int = 8192, m: int = 25) -> dict:
     blocks = {"diag": ((0, tile, 0, tile), nd * (nd + 1) // 2),
               "offdiag": ((0, tile, tile, 2 * tile), tile * tile)}
     rows = {}
-    for dist in ("znorm", "p2", "c"):
+    for dist in ("znorm", "p2", "pearson", "c"):
         if dist == "znorm":
             prep = kernels.preprocess(T, m)
             make = lambda rows, cols: kernels._QTProvider(  # noqa: E731
                 prep, prep, m, rows, cols)
+        elif dist == "pearson":
+            prep = kernels.preprocess(T, m)
+            make = lambda rows, cols: kernels._MultiSource(  # noqa: E731
+                [prep], m, rows=rows, cols=cols)
         elif dist == "p2":
             prep = kernels._preprocess_abs(T, m)
             make = lambda rows, cols: kernels._PNormSource(  # noqa: E731
