@@ -32,8 +32,21 @@
  *             ties regardless of arrival order — the same net tie rule
  *             as the numpy tile sweep (kernels._top1_sweep).
  *
+ * In the full region of a self-join lane group (all K lanes alive),
+ * row i touches columns j0 .. j0+K-1 (j0 = i + d0) and row i+1 the same
+ * window shifted by one.  Loading and storing those column minima from
+ * memory every row would read back, one row later, values the previous
+ * row's stores have not yet retired (a load-after-store stall on every
+ * row), so the window lives in registers instead: each row retires
+ * column j0-1, final for this lane group, with one scalar store, shifts
+ * the window down one lane and pulls column j0+K-1 in with one scalar
+ * load.  Each column still sees its rows in the same order, so the
+ * minima are bit-identical to a memory-resident update.
+ *
  * mp_top1_self_int is the whole self-join of one series: its stats,
- * then one block over the full square.
+ * then one block over the full square.  mp_summary_batch does the same
+ * for every doc of a flat Arrow batch (values + offsets) and reduces
+ * each profile to its summary (motif, discord) in the same call.
  *
  * Series with any constant window (sig == 0) or non-integer /
  * non-finite values get a nonzero status and the caller falls back
@@ -127,22 +140,12 @@ void sliding_stats_int32(const int32_t *restrict vals,
     }
 }
 
-/* Window stats of one series for mp_top1_block, four arrays of
- * l = n - m + 1 laid out back to back in st[4 * l]:
- *   negfac = -2/sig, rsig = 1/sig, gvec = -(m*mu)*negfac, murs = mu*rsig
- * from float64 sequential cumsums (bit-identical to numpy's
- * sliding_mean_std on this data).
- * status: 0 = done; 1 = ineligible (non-finite / non-integral /
- * magnitude bound, or n < m); 2 = constant window (sig == 0) present;
- * 3 = allocation failure. */
-int mp_window_stats(const double *restrict T, int64_t n, int64_t m,
-                    double *restrict st)
+/* Eligibility scan of mp_window_stats: 0 when every value is
+ * integral and finite, |T| <= 2^25 and m*max^2 < 2^52, else 1. */
+static int window_eligible(const double *restrict T, int64_t n, int64_t m)
 {
-    int64_t l = n - m + 1;
-    if (l < 1 || m < 1)
+    if (n - m + 1 < 1 || m < 1)
         return 1;
-
-    /* eligibility scan: integral, finite, magnitude-bounded */
     double mx = 0.0;
     for (int64_t i = 0; i < n; i++) {
         double v = T[i];
@@ -156,10 +159,17 @@ int mp_window_stats(const double *restrict T, int64_t n, int64_t m,
         return 1;
     if ((double)m * mx * mx > 4503599627370496.0)   /* 2^52 */
         return 1;
+    return 0;
+}
 
-    double *cs = malloc((size_t)(2 * (n + 1)) * sizeof(double));
-    if (cs == NULL)
-        return 3;
+/* The stats of an eligible series into st[4 * l], with the caller's
+ * scratch cs[2 * (n + 1)] for the cumsums; 0, or 2 on a constant
+ * window. */
+static int window_stats_into(const double *restrict T, int64_t n,
+                             int64_t m, double *restrict st,
+                             double *restrict cs)
+{
+    int64_t l = n - m + 1;
     double *cs2 = cs + (n + 1);
     double *negfac = st, *rsig = st + l, *gvec = st + 2 * l,
            *murs = st + 3 * l;
@@ -173,23 +183,41 @@ int mp_window_stats(const double *restrict T, int64_t n, int64_t m,
         cs[i + 1] = a1;
         cs2[i + 1] = a2;
     }
-    int status = 0;
     for (int64_t i = 0; i < l; i++) {
         double mu = (cs[i + m] - cs[i]) / dm;
         double var = (cs2[i + m] - cs2[i]) / dm - mu * mu;
         if (var < 0.0)
             var = 0.0;
         double sig = sqrt(var);
-        if (sig == 0.0) {             /* constant window: fall back */
-            status = 2;
-            break;
-        }
+        if (sig == 0.0)               /* constant window: fall back */
+            return 2;
         double nf = -2.0 / sig;
         negfac[i] = nf;
         rsig[i] = 1.0 / sig;
         gvec[i] = (-(dm * mu)) * nf;
         murs[i] = mu * rsig[i];
     }
+    return 0;
+}
+
+/* Window stats of one series for mp_top1_block, four arrays of
+ * l = n - m + 1 laid out back to back in st[4 * l]:
+ *   negfac = -2/sig, rsig = 1/sig, gvec = -(m*mu)*negfac, murs = mu*rsig
+ * from float64 sequential cumsums (bit-identical to numpy's
+ * sliding_mean_std on this data).
+ * status: 0 = done; 1 = ineligible (non-finite / non-integral /
+ * magnitude bound, or n < m); 2 = constant window (sig == 0) present;
+ * 3 = allocation failure. */
+int mp_window_stats(const double *restrict T, int64_t n, int64_t m,
+                    double *restrict st)
+{
+    int status = window_eligible(T, n, m);
+    if (status)
+        return status;
+    double *cs = malloc((size_t)(2 * (n + 1)) * sizeof(double));
+    if (cs == NULL)
+        return 3;
+    status = window_stats_into(T, n, m, st, cs);
     free(cs);
     return status;
 }
@@ -270,6 +298,16 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
         __m512d qtv1 = _mm512_loadu_pd(qt + 8);
         const __m512d thrv = _mm512_set1_pd(thr);
         const __m512d ntwomv = _mm512_set1_pd(-twom);
+        /* the column window: minima of columns j0 .. j0+15 of the
+         * current row, lanes 0-7 in (plv0, ilv0), 8-15 in (plv1, ilv1) */
+        __m512d plv0 = ntwomv, plv1 = ntwomv;
+        __m512i ilv0 = _mm512_setzero_si512(), ilv1 = ilv0;
+        if (cols && F1 > F0) {
+            plv0 = _mm512_loadu_pd(pl + (F0 + d0 - c0));
+            plv1 = _mm512_loadu_pd(pl + (F0 + d0 - c0) + 8);
+            ilv0 = _mm512_loadu_si512(il + (F0 + d0 - c0));
+            ilv1 = _mm512_loadu_si512(il + (F0 + d0 - c0) + 8);
+        }
         for (int64_t i = F0; i < F1; i++) {
             int64_t j0 = i + d0;
             if (i > F0) {
@@ -285,6 +323,23 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
                 qtv1 = _mm512_add_pd(qtv1,
                     _mm512_sub_pd(_mm512_mul_pd(ta, Ta1),
                                   _mm512_mul_pd(ts, Ts1)));
+                if (cols) {
+                    /* retire column j0-1 (final for this lane group),
+                     * shift the window down one lane, pull j0+15 in */
+                    int64_t jc = j0 - c0;
+                    pl[jc - 1] = _mm512_cvtsd_f64(plv0);
+                    il[jc - 1] = _mm_cvtsi128_si64(
+                        _mm512_castsi512_si128(ilv0));
+                    plv0 = _mm512_castsi512_pd(_mm512_alignr_epi64(
+                        _mm512_castpd_si512(plv1),
+                        _mm512_castpd_si512(plv0), 1));
+                    ilv0 = _mm512_alignr_epi64(ilv1, ilv0, 1);
+                    plv1 = _mm512_castsi512_pd(_mm512_alignr_epi64(
+                        _mm512_castpd_si512(_mm512_set1_pd(pl[jc + 15])),
+                        _mm512_castpd_si512(plv1), 1));
+                    ilv1 = _mm512_alignr_epi64(
+                        _mm512_set1_epi64(il[jc + 15]), ilv1, 1);
+                }
             }
             __m512d nf = _mm512_set1_pd(negfac[i]);
             __m512d gv = _mm512_set1_pd(gvec[i]);
@@ -301,26 +356,19 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
             ev1 = _mm512_mask_blend_pd(
                 _mm512_cmp_pd_mask(ev1, thrv, _CMP_LT_OQ), ev1, ntwomv);
             if (cols) {
-                /* col side, block 0 then block 1 (disjoint j ranges) */
                 __m512i iv = _mm512_set1_epi64(i);
-                double *plj = pl + (j0 - c0);
-                int64_t *ilj = il + (j0 - c0);
-                __m512d plv0 = _mm512_loadu_pd(plj);
-                __m512i ilv0 = _mm512_loadu_si512(ilj);
                 __mmask8 take0 =
                     _mm512_cmp_pd_mask(ev0, plv0, _CMP_LT_OQ) |
                     (_mm512_cmp_pd_mask(ev0, plv0, _CMP_EQ_OQ) &
                      _mm512_cmplt_epi64_mask(iv, ilv0));
-                _mm512_mask_storeu_pd(plj, take0, ev0);
-                _mm512_mask_storeu_epi64(ilj, take0, iv);
-                __m512d plv1 = _mm512_loadu_pd(plj + 8);
-                __m512i ilv1 = _mm512_loadu_si512(ilj + 8);
                 __mmask8 take1 =
                     _mm512_cmp_pd_mask(ev1, plv1, _CMP_LT_OQ) |
                     (_mm512_cmp_pd_mask(ev1, plv1, _CMP_EQ_OQ) &
                      _mm512_cmplt_epi64_mask(iv, ilv1));
-                _mm512_mask_storeu_pd(plj + 8, take1, ev1);
-                _mm512_mask_storeu_epi64(ilj + 8, take1, iv);
+                plv0 = _mm512_mask_blend_pd(take0, plv0, ev0);
+                ilv0 = _mm512_mask_blend_epi64(take0, ilv0, iv);
+                plv1 = _mm512_mask_blend_pd(take1, plv1, ev1);
+                ilv1 = _mm512_mask_blend_epi64(take1, ilv1, iv);
             }
             /* row side: only when some lane beats the running minimum,
              * the min over both blocks, lowest j on ties */
@@ -336,6 +384,13 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
                                  : j0 + 8 + __builtin_ctz((unsigned)em1);
             }
         }
+        if (cols && F1 > F0) {
+            int64_t jc = F1 - 1 + d0 - c0;
+            _mm512_storeu_pd(pl + jc, plv0);
+            _mm512_storeu_pd(pl + jc + 8, plv1);
+            _mm512_storeu_si512(il + jc, ilv0);
+            _mm512_storeu_si512(il + jc + 8, ilv1);
+        }
         _mm512_storeu_pd(qt, qtv0);
         _mm512_storeu_pd(qt + 8, qtv1);
 #else
@@ -345,6 +400,15 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
         double q16[K];
         for (int k = 0; k < K; k++)
             q16[k] = qt[k];
+        /* the column window, as in the AVX-512 loop: minima of columns
+         * j0 .. j0+15 of the current row */
+        double wpl[K];
+        int64_t wil[K];
+        if (cols && F1 > F0)
+            for (int k = 0; k < K; k++) {
+                wpl[k] = pl[F0 + d0 - c0 + k];
+                wil[k] = il[F0 + d0 - c0 + k];
+            }
         for (int64_t i = F0; i < F1; i++) {
             int64_t j0 = i + d0;
             if (i > F0) {
@@ -353,6 +417,17 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
                 const double *Ts = B + j0 - 1;
                 for (int k = 0; k < K; k++)
                     q16[k] += ta * Ta[k] - ts * Ts[k];
+                if (cols) {
+                    int64_t jc = j0 - c0;
+                    pl[jc - 1] = wpl[0];
+                    il[jc - 1] = wil[0];
+                    for (int k = 0; k < K - 1; k++) {
+                        wpl[k] = wpl[k + 1];
+                        wil[k] = wil[k + 1];
+                    }
+                    wpl[K - 1] = pl[jc + K - 1];
+                    wil[K - 1] = il[jc + K - 1];
+                }
             }
             double nf = negfac[i], gv = gvec[i];
             const double *rs = rsig + j0;
@@ -362,14 +437,12 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
                 e[k] = (v < thr) ? -twom : v;
             }
             if (cols) {
-                double *plj = pl + (j0 - c0);
-                int64_t *ilj = il + (j0 - c0);
                 for (int k = 0; k < K; k++) {
                     double v = e[k];
-                    int take = (v < plj[k]) |
-                               ((v == plj[k]) & (i < ilj[k]));
-                    plj[k] = take ? v : plj[k];
-                    ilj[k] = take ? i : ilj[k];
+                    int take = (v < wpl[k]) |
+                               ((v == wpl[k]) & (i < wil[k]));
+                    wpl[k] = take ? v : wpl[k];
+                    wil[k] = take ? i : wil[k];
                 }
             }
             double emin = e[0];
@@ -384,6 +457,11 @@ lane_group(const double *restrict A, const double *restrict B, int64_t m,
                 ir[i - r0] = j0 + kmin;
             }
         }
+        if (cols && F1 > F0)
+            for (int k = 0; k < K; k++) {
+                pl[F1 - 1 + d0 - c0 + k] = wpl[k];
+                il[F1 - 1 + d0 - c0 + k] = wil[k];
+            }
         for (int k = 0; k < K; k++)
             qt[k] = q16[k];
 #endif
@@ -484,4 +562,96 @@ int mp_top1_self_int(const double *restrict T, int64_t n, int64_t m,
                       p_norm_threshold, pr, ir, pl, il);
     free(st);
     return status;
+}
+
+/* Top-1 profile summaries of a batch of series in the flat Arrow
+ * layout: float64 values, int64 offsets[n_docs + 1].  For every doc of
+ * at least 2m values: mp_window_stats, one full-square mp_top1_block,
+ * then the kernels._top1 epilogue — the left neighbor wins ties,
+ * P = sqrt(min(pl, pr) + 2m) — and the first argmin and argmax over
+ * finite P, compared in P space.  Scratch memory is allocated once per
+ * call, for the longest doc.
+ *
+ * Per doc: status as mp_window_stats (0 for a doc shorter than 2m,
+ * which is not summarised; a nonzero status is left for the caller's
+ * fallback); keep = 1 when the doc was summarised and has a finite P,
+ * and then n_windows = l, min_p/max_p the minimum/maximum finite P,
+ * motif_i its first argmin and motif_j that row's neighbor.  A doc
+ * not kept has keep = 0, n_windows = 0, min_p = max_p = NaN and
+ * motif_i = motif_j = 0. */
+void mp_summary_batch(const double *restrict vals,
+                      const int64_t *restrict off, int64_t n_docs,
+                      int64_t m, int64_t ez, double p_norm_threshold,
+                      int32_t *restrict status, uint8_t *restrict keep,
+                      int32_t *restrict n_windows,
+                      double *restrict min_p, double *restrict max_p,
+                      int64_t *restrict motif_i,
+                      int64_t *restrict motif_j)
+{
+    int64_t nmax = 0;
+    for (int64_t d = 0; d < n_docs; d++) {
+        int64_t n = off[d + 1] - off[d];
+        if (n >= 2 * m && n > nmax)
+            nmax = n;
+    }
+    const int64_t lmax = nmax - m + 1;
+    /* st[4 lmax] | cs[2 (nmax + 1)] | pr[lmax] | pl[lmax] | ir | il */
+    double *scratch = NULL;
+    if (nmax > 0)
+        scratch = malloc((size_t)(6 * lmax + 2 * (nmax + 1)) *
+                             sizeof(double) +
+                         (size_t)(2 * lmax) * sizeof(int64_t));
+    double *st = scratch, *cs = st + 4 * lmax,
+           *pr = cs + 2 * (nmax + 1), *pl = pr + lmax;
+    int64_t *ir = (int64_t *)(pl + lmax), *il = ir + lmax;
+    const double twom = 2.0 * (double)m;
+
+    for (int64_t d = 0; d < n_docs; d++) {
+        const double *T = vals + off[d];
+        const int64_t n = off[d + 1] - off[d], l = n - m + 1;
+        status[d] = 0;
+        keep[d] = 0;
+        n_windows[d] = 0;
+        min_p[d] = NAN;
+        max_p[d] = NAN;
+        motif_i[d] = 0;
+        motif_j[d] = 0;
+        if (n < 2 * m)
+            continue;
+        int s = scratch == NULL ? 3 : window_eligible(T, n, m);
+        if (s == 0)
+            s = window_stats_into(T, n, m, st, cs);
+        status[d] = s;
+        if (s)
+            continue;
+        mp_top1_block(T, st, n, T, st, n, m, 0, l, 0, l, ez,
+                      p_norm_threshold, pr, ir, pl, il);
+        int64_t imin = -1, imax = -1;
+        double pmin = 0.0, pmax = 0.0;
+        for (int64_t i = 0; i < l; i++) {
+            double x = pl[i] < pr[i] ? pl[i] : pr[i];
+            double p = sqrt(x + twom);
+            if (!isfinite(p))
+                continue;
+            if (imin < 0 || p < pmin) {
+                imin = i;
+                pmin = p;
+            }
+            if (imax < 0 || p > pmax) {
+                imax = i;
+                pmax = p;
+            }
+        }
+        if (imin < 0)
+            continue;
+        keep[d] = 1;
+        n_windows[d] = (int32_t)l;
+        min_p[d] = pmin;
+        max_p[d] = pmax;
+        motif_i[d] = imin;
+        motif_j[d] = (pl[imin] <= pr[imin] && isfinite(pl[imin]))
+                         ? il[imin]
+                         : (isfinite(pr[imin]) ? ir[imin] : -1);
+    }
+    free(scratch);
 }

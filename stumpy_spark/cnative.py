@@ -9,8 +9,12 @@ series once and computes the stats every block of it reads;
 :func:`top1_block` runs one block (``kernels._CSource``, behind
 ``kernels._top1_sweep``, for AB-joins and the long-series tiles);
 :func:`mp_top1_self_int` is the whole self-join of one series in one
-call (``kernels._mp_top1_c``, the per-document route).  A series the
-kernel declines runs the numpy GEMM tile sweep, which
+call (``kernels._mp_top1_c``, the route of ``kernels.matrix_profile``);
+:func:`summary_batch` is the same self-join for every document of a
+flat Arrow batch, reduced to its motif/discord summary in the same call
+(``operators.profile._flat_profile_summary``); :func:`sliding_stats_int32`
+is the one-pass sliding-window stats of a flat int32 batch.  A series
+the kernel declines runs the numpy GEMM tile sweep, which
 ``tests/test_kernels.py`` holds to within 1e-8 of the kernel.
 
 The shared object is compiled lazily on first use with ``-march=native``
@@ -96,6 +100,39 @@ def _load_lib():
     return ctypes.CDLL(so)
 
 
+def _bind(lib):
+    """The library's entry points with their ctypes signatures, hung on
+    its ``mp_top1_self_int`` (the object :func:`load` returns)."""
+    dp = ctypes.POINTER(ctypes.c_double)
+    lp = ctypes.POINTER(ctypes.c_int64)
+    ip = ctypes.POINTER(ctypes.c_int32)
+    vp = ctypes.c_void_p
+    fn = lib.mp_top1_self_int
+    fn.restype = ctypes.c_int
+    fn.argtypes = [dp, ctypes.c_int64, ctypes.c_int64, ctypes.c_int64,
+                   ctypes.c_double, dp, lp, dp, lp]
+    ss = lib.sliding_stats_int32
+    ss.restype = None
+    ss.argtypes = [ip, lp, ctypes.c_int64, ctypes.c_int64,
+                   ip, lp, dp, dp, dp, dp]
+    fn._sliding_stats = ss
+    ws = lib.mp_window_stats
+    ws.restype = ctypes.c_int
+    ws.argtypes = [dp, ctypes.c_int64, ctypes.c_int64, dp]
+    fn._window_stats = ws
+    blk = lib.mp_top1_block
+    blk.restype = None
+    blk.argtypes = [dp, dp, ctypes.c_int64, dp, dp, ctypes.c_int64,
+                    *[ctypes.c_int64] * 6, ctypes.c_double, dp, lp, dp, lp]
+    fn._block = blk
+    sb = lib.mp_summary_batch
+    sb.restype = None
+    sb.argtypes = [vp, vp, ctypes.c_int64, ctypes.c_int64, ctypes.c_int64,
+                   ctypes.c_double, *[vp] * 7]
+    fn._summary_batch = sb
+    return fn
+
+
 def load():
     """Return the ctypes kernel entry point, or None if unavailable
     (the reason is then in :func:`status`)."""
@@ -110,31 +147,7 @@ def load():
             _reason = "disabled by STUMPY_SPARK_NO_CKERNEL"
             return None
         try:
-            lib = _load_lib()
-            fn = lib.mp_top1_self_int
-            fn.restype = ctypes.c_int
-            dp = ctypes.POINTER(ctypes.c_double)
-            lp = ctypes.POINTER(ctypes.c_int64)
-            ip = ctypes.POINTER(ctypes.c_int32)
-            fn.argtypes = [dp, ctypes.c_int64, ctypes.c_int64,
-                           ctypes.c_int64, ctypes.c_double,
-                           dp, lp, dp, lp]
-            ss = lib.sliding_stats_int32
-            ss.restype = None
-            ss.argtypes = [ip, lp, ctypes.c_int64, ctypes.c_int64,
-                           ip, lp, dp, dp, dp, dp]
-            fn._sliding_stats = ss
-            ws = lib.mp_window_stats
-            ws.restype = ctypes.c_int
-            ws.argtypes = [dp, ctypes.c_int64, ctypes.c_int64, dp]
-            fn._window_stats = ws
-            blk = lib.mp_top1_block
-            blk.restype = None
-            blk.argtypes = [dp, dp, ctypes.c_int64, dp, dp, ctypes.c_int64,
-                            *[ctypes.c_int64] * 6, ctypes.c_double,
-                            dp, lp, dp, lp]
-            fn._block = blk
-            _fn = fn
+            _fn = _bind(_load_lib())
         except Exception as e:
             _failed = True
             _reason = f"{type(e).__name__}: {e}"
@@ -241,6 +254,43 @@ def top1_block(A, sa, B, sb, m: int, r0: int, r1: int, c0: int, c1: int,
               pr.ctypes.data_as(dp), ir.ctypes.data_as(lp),
               pl.ctypes.data_as(dp), il.ctypes.data_as(lp))
     return pr, ir, pl, il
+
+
+def summary_batch(vals, off, m: int, ez: int, p_norm_threshold: float):
+    """Top-1 self-join profile summaries of a whole flat batch in one
+    kernel call: per doc of at least ``2m`` values, its
+    :func:`window_stats`, one :func:`top1_block` over the full square,
+    the ``kernels._top1`` epilogue and the first argmin/argmax over the
+    finite ``P``.
+
+    ``vals``: contiguous float64 values; ``off``: int64 offsets
+    (n_docs + 1).  Returns ``(status, keep, n_windows, min_p, max_p,
+    motif_i, motif_j)`` per doc, or None when the compiled library is
+    unavailable.  ``status`` is that of :func:`mp_top1_self_int`: a doc
+    with nonzero status is left unsummarised for the caller's fallback;
+    a doc shorter than ``2m`` has status 0.  ``keep`` marks the docs
+    summarised with one finite ``P`` at least; elsewhere ``min_p`` and
+    ``max_p`` are NaN and the other arrays 0.
+    """
+    import numpy as np
+
+    if not (vals.dtype == np.float64 and vals.flags.c_contiguous
+            and off.dtype == np.int64 and off.flags.c_contiguous
+            and len(off) and off[0] >= 0 and off[-1] <= len(vals)
+            and (off[1:] >= off[:-1]).all()):
+        raise ValueError("summary_batch needs contiguous float64 values "
+                         "and non-decreasing int64 offsets into them")
+    fn = load()
+    if fn is None:
+        return None
+    n_docs = len(off) - 1
+    out = (np.empty(n_docs, dtype=np.int32), np.empty(n_docs, dtype=bool),
+           np.empty(n_docs, dtype=np.int32), np.empty(n_docs),
+           np.empty(n_docs), np.empty(n_docs, dtype=np.int64),
+           np.empty(n_docs, dtype=np.int64))
+    fn._summary_batch(vals.ctypes.data, off.ctypes.data, n_docs, m, ez,
+                      p_norm_threshold, *[a.ctypes.data for a in out])
+    return out
 
 
 def sliding_stats_int32(vals, off, m: int):

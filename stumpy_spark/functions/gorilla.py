@@ -31,9 +31,10 @@ fixed-stride gathers for headers, cumsum offsets for payloads, sign-extend
 via arithmetic shifts, then ``cumsum`` (timestamps) and
 ``np.bitwise_xor.accumulate`` (values) to undo the deltas.
 
-Used inside a pandas UDF (`rollup.compress.compress_tier`) producing one
-``binary`` cell per (source, bucket-range) chunk — executor-side Arrow
-buffers, never the driver.
+Used inside a grouped Arrow UDF (`rollup.compress.compress_tier`) producing
+one ``binary`` cell per (source, day) chunk, and decoded inside an Arrow
+map (`rollup.compress.decompress_tier`) — executor-side Arrow buffers,
+never the driver.
 """
 
 from __future__ import annotations

@@ -947,16 +947,15 @@ def _topk_rows(src, k, ez, block_rows, left_right):
     return P, I, IL, IR, PL, PR
 
 
-def _mp_top1_c(T: np.ndarray, m: int, left_right: bool = True):
+def _mp_top1_c(T: np.ndarray, m: int):
     """Top-1 z-norm self-join profile from the compiled kernel, or None
     when it is unavailable or declines the series (non-integral,
     non-finite or over-magnitude values, a constant window).
 
     The kernel returns its left/right running minima in the shifted
     ``D^2 - 2m`` space; the epilogue maps them to ``P0``/``I0`` (l,)
-    by the :func:`_top1` tie rule.  Returns ``(P0, I0)`` when not
-    ``left_right``, else ``(P, I, IL, IR, PL, PR)`` with P/I of shape
-    (l, 1) as :func:`matrix_profile` returns them."""
+    by the :func:`_top1` tie rule.  Returns ``(P, I, IL, IR, PL, PR)``
+    with P/I of shape (l, 1) as :func:`matrix_profile` returns them."""
     from . import cnative
 
     T = np.ascontiguousarray(T, dtype=np.float64)
@@ -972,8 +971,6 @@ def _mp_top1_c(T: np.ndarray, m: int, left_right: bool = True):
         return np.sqrt(x + 2.0 * m)
 
     P0, I0 = _top1(pl, pr, il, ir, dist)
-    if not left_right:
-        return P0, I0
     return P0[:, None], I0[:, None], il, ir, dist(pl), dist(pr)
 
 

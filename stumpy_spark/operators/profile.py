@@ -4,7 +4,8 @@ Spark-first design (SURVEY §2.3): one input row = one sequence, so these
 are per-batch map operators — zero shuffle, each Arrow batch processed
 independently, all of them ``mapInArrow``.  ``sliding_stats`` and
 ``profile_summary`` are vectorized over the batch's flat token values +
-offsets; ``stump`` and ``mass`` — and every operator in
+offsets, one compiled call per batch where the kernel runs; ``stump``
+and ``mass`` — and every operator in
 :mod:`~stumpy_spark.operators.discovery` — call their kernel once per
 row through one driver, :func:`_per_doc`, which reads each sequence as
 a slice of the same flat view.  The reference's thread-chunked
@@ -12,7 +13,7 @@ diagonal scheme (stumpy/stump.py:252-506) maps to "one task per Arrow
 batch of sequences"; its Dask scatter/gather (stumpy/stumped.py:13-203)
 maps to Spark's own task scheduling — no driver-side collect anywhere.
 
-Every sequence is one kernel call inside its task; series too long for
+Every sequence runs whole inside one task; series too long for
 one task are the job of :mod:`stumpy_spark.plans.longseq` (overlapping
 segments + seam merge), which callers choose explicitly.
 
@@ -244,16 +245,11 @@ def stump(df: DataFrame, m: int, k: int = 1, normalize: bool = True,
                     min_len=2 * m)
 
 
-def _profile_top1(a, m: int, normalize: bool, p: float):
-    """Top-1 self-join profile ``(P0, I0)`` of one series.
-
-    Integer z-normalized series take the lean compiled route, without
-    the P/I/PL/PR arrays.  A series the kernel declines, and every
-    p-norm series, runs the GEMM tile sweep directly."""
+def _sweep_top1(a, m: int, normalize: bool, p: float):
+    """Top-1 self-join profile ``(P0, I0)`` of one float64 series on the
+    GEMM tile sweep: the route of every p-norm series and of every
+    z-norm series the compiled kernel declines or cannot run."""
     if normalize:
-        res = kernels._mp_top1_c(a, m, left_right=False)
-        if res is not None:
-            return res
         prep = kernels.preprocess(a, m)
         src = kernels._QTProvider(prep, prep, m)
     else:
@@ -271,22 +267,40 @@ def _flat_profile_summary(flat, off, m: int, normalize: bool = True,
     Returns ``(keep, n_windows, min_p, max_p, motif_i, motif_j)``, each
     of length ``n_docs``.  ``keep`` marks documents with at least ``2m``
     tokens and one finite profile value; ``min_p``/``max_p`` are NaN and
-    the other arrays 0 elsewhere.  Motif and discord are the first
-    argmin/argmax over the same finite ``P0`` on every route, so the
-    output does not depend on whether the compiled kernel is loaded."""
+    the other arrays 0 elsewhere.
+
+    A z-norm batch casts its tokens to float64 once and makes one
+    compiled call for all its documents (``cnative.summary_batch``).
+    The documents it declines (non-integral or over-magnitude values, a
+    constant window), every p-norm batch and every batch on a host
+    without the compiled kernel run the GEMM tile sweep
+    (:func:`_sweep_top1`) one document at a time.  Motif and discord
+    are the first argmin/argmax over the same finite ``P0`` on every
+    route, so the output does not depend on whether the compiled kernel
+    is loaded."""
+    from .. import cnative
+
     n_docs = len(off) - 1
-    keep = np.zeros(n_docs, dtype=bool)
-    nw = np.zeros(n_docs, dtype=np.int32)
-    minp = np.full(n_docs, np.nan)
-    maxp = np.full(n_docs, np.nan)
-    mi = np.zeros(n_docs, dtype=np.int64)
-    mj = np.zeros(n_docs, dtype=np.int64)
-    for r in range(n_docs):
-        s, e = off[r], off[r + 1]
-        if e - s < 2 * m:
-            continue
-        P0, I0 = _profile_top1(flat[s:e].astype(np.float64), m,
-                               normalize, p)
+    off = np.ascontiguousarray(off, dtype=np.int64)
+    res = None
+    if normalize:
+        flat = np.ascontiguousarray(flat, dtype=np.float64)
+        res = cnative.summary_batch(flat, off, m, kernels.excl_zone(m),
+                                    kernels.config.P_NORM_THRESHOLD)
+    if res is None:
+        sweep = off[1:] - off[:-1] >= 2 * m
+        keep = np.zeros(n_docs, dtype=bool)
+        nw = np.zeros(n_docs, dtype=np.int32)
+        minp = np.full(n_docs, np.nan)
+        maxp = np.full(n_docs, np.nan)
+        mi = np.zeros(n_docs, dtype=np.int64)
+        mj = np.zeros(n_docs, dtype=np.int64)
+    else:
+        status, keep, nw, minp, maxp, mi, mj = res
+        sweep = status > 0
+    for r in np.flatnonzero(sweep):
+        P0, I0 = _sweep_top1(flat[off[r]:off[r + 1]].astype(np.float64),
+                             m, normalize, p)
         finite = np.isfinite(P0)
         if not finite.any():
             continue
@@ -304,8 +318,11 @@ def profile_summary(df: DataFrame, m: int, normalize: bool = True,
                     p: float = 2.0, id_col: str = "doc_id",
                     tokens_col: str = "tokens") -> DataFrame:
     """Per-sequence matrix-profile summary: motif (min P) and discord (max
-    finite P) with positions.  One output row per input sequence — the
-    shape rollup tiers consume."""
+    finite P) with positions.  One output row per input sequence with a
+    finite profile — the shape rollup tiers consume.  Each Arrow batch
+    is summarised by :func:`_flat_profile_summary`: one compiled call
+    for the whole batch of a z-norm summary, the GEMM tile sweep per
+    document for the rest."""
     def run(batches) -> "Iterator":
         import pyarrow as pa
 

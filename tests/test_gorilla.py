@@ -103,6 +103,25 @@ def test_spark_compress_tier(spark):
     assert (cp.encoded_bytes < cp.raw_bytes).all()
 
 
+def test_spark_gorilla_plans_are_arrow_native(spark):
+    """Packing runs as a grouped Arrow UDF and unpacking as an Arrow
+    map, with no pandas node in either executed plan."""
+    from stumpy_spark.rollup import compress as C
+
+    df = spark.createDataFrame(pd.DataFrame({
+        "source": ["web", "web", "books"],
+        "bucket": pd.to_datetime(["2025-01-01 00:00", "2025-01-01 01:00",
+                                  "2025-01-02 05:00"]),
+        "n_seq": [1.0, 2.0, 3.0]}))
+    chunks = C.compress_tier(df, ["n_seq"])
+    points = C.decompress_tier(chunks)
+    assert sorted(points.toPandas().value) == [1.0, 2.0, 3.0]
+    for out, node in ((chunks, "FlatMapGroupsInArrow"),
+                      (points, "MapInArrow")):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert node in plan and "Pandas" not in plan, plan
+
+
 def test_unknown_format_version_rejected():
     blob = bytearray(gorilla.encode(np.array([1, 2]), np.array([1.0, 2.0])))
     blob[0] ^= 0xFF                       # corrupt the version byte

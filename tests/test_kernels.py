@@ -691,6 +691,87 @@ def test_c_sliding_stats_bit_parity():
             assert np.array_equal(a, b), (m, i)
 
 
+def _tie_heavy_series(seed, count):
+    """Small-vocabulary integer series (vocab 3-5, m 3-8, n from 2m to
+    400): exact ties on both sides, lane groups of every fill (kb < K
+    and tails) and constant windows the kernel declines."""
+    rng = np.random.default_rng(seed)
+    for _ in range(count):
+        m = int(rng.integers(3, 9))
+        n = int(rng.integers(2 * m, 401))
+        yield rng.integers(0, int(rng.integers(3, 6)), n).astype(float), m
+
+
+def test_ckernel_column_window_bits():
+    """The kernel's row and column minima equal, bit for bit, a numpy
+    model of its cell formula ``E = (QT*negfac[i])*rsig[j] +
+    murs[j]*gvec[i]`` over exact integer QT and the kernel's own window
+    stats, snapped to -2m below the threshold, with first-index minima
+    per row (right neighbours) and per column (left neighbours) outside
+    the exclusion band."""
+    from stumpy_spark import cnative
+
+    if cnative.load() is None:
+        pytest.skip("compiled kernel unavailable (no gcc?)")
+    thr = kernels.config.P_NORM_THRESHOLD
+    checked = 0
+    for T, m in _tie_heavy_series(29, 160):
+        ez = kernels.excl_zone(m)
+        st, pr, ir, pl, il = cnative.mp_top1_self_int(T, m, ez, thr)
+        if st:
+            continue
+        l = len(T) - m + 1
+        W = np.lib.stride_tricks.sliding_window_view(
+            T.astype(np.int64), m)
+        QT = (W @ W.T).astype(np.float64)
+        negfac, rsig, gvec, murs = cnative.window_stats(T, m)[1]
+        E = (QT * negfac[:, None]) * rsig[None, :] \
+            + murs[None, :] * gvec[:, None]
+        E[E < thr - 2.0 * m] = -2.0 * m
+        E[np.arange(l)[None, :] - np.arange(l)[:, None] <= ez] = np.inf
+        for got_p, got_i, X in ((pr, ir, E), (pl, il, E.T)):
+            i = np.argmin(X, axis=1)
+            p = X[np.arange(l), i]
+            assert np.array_equal(got_p, p), (len(T), m)
+            assert np.array_equal(got_i, np.where(np.isinf(p), -1, i)), \
+                (len(T), m)
+        checked += 1
+    assert checked >= 40
+
+
+def test_ckernel_portable_loop_parity(tmp_path, monkeypatch):
+    """The kernel built without AVX-512 (its portable lane loop) gives
+    the loaded build's self-join minima and batch summaries bit for
+    bit."""
+    import shutil
+
+    from stumpy_spark import cnative
+
+    if shutil.which("gcc") is None or cnative.load() is None:
+        pytest.skip("compiled kernel unavailable (no gcc?)")
+    loaded = cnative.load()
+    monkeypatch.setenv("STUMPY_SPARK_CKERNEL_DIR", str(tmp_path))
+    monkeypatch.setattr(cnative, "_CFLAGS",
+                        cnative._CFLAGS + ["-mno-avx512f"])
+    portable = cnative._bind(cnative._load_lib())
+    thr = kernels.config.P_NORM_THRESHOLD
+    series = list(_tie_heavy_series(31, 60))
+    series += [(np.random.default_rng(k).integers(0, 50257, 900)
+                .astype(float), m) for k, m in enumerate((8, 25, 96))]
+    for T, m in series:
+        ez = kernels.excl_zone(m)
+        outs = []
+        for fn in (loaded, portable):
+            monkeypatch.setattr(cnative, "_fn", fn)
+            res = cnative.mp_top1_self_int(T, m, ez, thr)
+            outs.append(res[:1 + 4 * (res[0] == 0)])
+            for cut in ([0, len(T)], [0, len(T) // 2, len(T)]):
+                outs[-1] += cnative.summary_batch(
+                    T, np.array(cut, dtype=np.int64), m, ez, thr)
+        for a, b in zip(*outs):
+            assert np.array_equal(a, b, equal_nan=True), (len(T), m)
+
+
 def _fresh_cnative(monkeypatch, cache_dir):
     """Point cnative at ``cache_dir`` with no kernel loaded yet (state is
     restored by monkeypatch after the test)."""

@@ -169,32 +169,117 @@ def test_profile_summary_fast_path_parity(monkeypatch):
                 assert abs(d * d - minp[r] ** 2) < 1e-9, (r, mi[r], mj[r])
 
 
-def test_declined_doc_calls_kernel_once(monkeypatch):
-    """A document the compiled kernel declines (a constant window) costs
-    one kernel call — its eligibility scan, stats pass and allocation
-    are not repeated — and then runs the tile sweep."""
+def _per_doc_summary(flat, off, m):
+    """The summary of a flat batch built one document at a time: one
+    ``cnative.mp_top1_self_int`` call, the ``kernels._top1`` epilogue and
+    the first argmin/argmax over finite ``P0``; a declined document runs
+    the tile sweep."""
     from stumpy_spark import cnative, kernels
 
+    n_docs = len(off) - 1
+    out = (np.zeros(n_docs, dtype=bool), np.zeros(n_docs, dtype=np.int32),
+           np.full(n_docs, np.nan), np.full(n_docs, np.nan),
+           np.zeros(n_docs, dtype=np.int64), np.zeros(n_docs, dtype=np.int64))
+    keep, nw, minp, maxp, mi, mj = out
+    for r in range(n_docs):
+        T = flat[off[r]:off[r + 1]].astype(np.float64)
+        if len(T) < 2 * m:
+            continue
+        st, pr, ir, pl, il = cnative.mp_top1_self_int(
+            T, m, kernels.excl_zone(m), kernels.config.P_NORM_THRESHOLD)
+        if st == 0:
+            P0, I0 = kernels._top1(pl, pr, il, ir,
+                                   lambda x: np.sqrt(x + 2.0 * m))
+        else:
+            P0, I0 = ops._sweep_top1(T, m, True, 2.0)
+        finite = np.isfinite(P0)
+        if not finite.any():
+            continue
+        i = int(np.argmin(np.where(finite, P0, np.inf)))
+        keep[r], nw[r], mi[r], mj[r] = True, len(P0), i, I0[i]
+        minp[r] = P0[i]
+        maxp[r] = P0[int(np.argmax(np.where(finite, P0, -np.inf)))]
+    return out
+
+
+def test_summary_batch_matches_per_doc_reference():
+    """The one-call batch summary (``cnative.summary_batch`` behind
+    ``_flat_profile_summary``) equals, bit for bit, the summary built
+    one document at a time from ``mp_top1_self_int`` and the numpy
+    epilogue, on planted batches plus an empty doc, a doc of exactly
+    2m tokens, a doc over the kernel's magnitude bound (status 1) and a
+    constant run (status 2)."""
+    from stumpy_spark import cnative, kernels
+
+    if cnative.load() is None:
+        pytest.skip("compiled kernel unavailable")
+    for m in (8, 25, 96):
+        flat, off = _planted_batch(m, seed=m)
+        rng = np.random.default_rng(m)
+        big = rng.integers(0, 1000, 3 * m)
+        big[m] = 2 ** 25 + 1
+        const = rng.integers(0, 1000, 3 * m)
+        const[m:2 * m + 1] = 7
+        extra = [np.empty(0, np.int64), rng.integers(0, 1000, 2 * m),
+                 big, const]
+        flat = np.concatenate([flat] + extra).astype(np.int32)
+        off = np.concatenate(
+            [off, off[-1] + np.cumsum([len(d) for d in extra])])
+        status = cnative.summary_batch(
+            flat.astype(np.float64), off, m, kernels.excl_zone(m),
+            kernels.config.P_NORM_THRESHOLD)[0]
+        assert list(status[-4:]) == [0, 0, 1, 2]
+        got = ops._flat_profile_summary(flat, off, m)
+        ref = _per_doc_summary(flat, off, m)
+        assert got[0][-4:].tolist() == [False, True, True, True]
+        for k, (a, b) in enumerate(zip(got, ref)):
+            assert a.dtype == b.dtype, (m, k)
+            assert np.array_equal(a, b, equal_nan=True), (m, k)
+
+
+def test_declined_doc_calls_kernel_once(monkeypatch):
+    """A document the compiled kernel declines (a constant window) costs
+    one pass of the batch's single kernel call — no per-document kernel
+    entry runs it again — and then runs the tile sweep, whose profile
+    matches the naive one."""
+    from stumpy_spark import cnative
+
     calls = []
-    real = cnative.mp_top1_self_int
 
-    def counting(*args):
-        calls.append(args[1])
-        return real(*args)
+    def counted(name, f):
+        def wrapper(*args):
+            out = f(*args)
+            calls.append((name, args, out))
+            return out
+        return wrapper
 
-    monkeypatch.setattr(cnative, "mp_top1_self_int", counting)
+    for name in ("mp_top1_self_int", "window_stats", "top1_block",
+                 "summary_batch"):
+        monkeypatch.setattr(cnative, name,
+                            counted(name, getattr(cnative, name)))
+    monkeypatch.setattr(ops, "_sweep_top1",
+                        counted("sweep", ops._sweep_top1))
     m = 8
-    a = np.random.default_rng(0).integers(0, 1000, 200).astype(np.float64)
-    a[50:50 + m + 2] = 9.0
-    P0, I0 = ops._profile_top1(a, m, True, 2.0)
-    assert calls == [m]
-    ref_P, ref_I, _, _ = naive.stump(a, m)
+    a = np.random.default_rng(0).integers(0, 1000, 200)
+    a[50:50 + m + 2] = 9
+    b = np.random.default_rng(1).integers(0, 1000, 120)
+    flat = np.concatenate([b, a]).astype(np.int32)
+    off = np.array([0, len(b), len(b) + len(a)], dtype=np.int64)
+    keep, *_ = ops._flat_profile_summary(flat, off, m)
+    assert keep.all()
+    kernel_calls = [c for c in calls if c[0] != "sweep"]
+    swept = [(args[0], out) for name, args, out in calls if name == "sweep"]
+    assert [c[0] for c in kernel_calls] == ["summary_batch"]
+    if cnative.load() is not None:
+        assert list(kernel_calls[0][2][0]) == [0, 2]    # constant window
+        (T, (P0, I0)), = swept                  # only the declined doc
+    else:
+        assert len(swept) == 2
+        T, (P0, I0) = swept[1]
+    npt.assert_array_equal(T, a.astype(np.float64))
+    ref_P, ref_I, _, _ = naive.stump(T, m)
     npt.assert_almost_equal(P0, ref_P[:, 0], decimal=PRECISION)
     npt.assert_array_equal(I0, ref_I[:, 0])
-    if cnative.load() is not None:
-        st = real(a, m, kernels.excl_zone(m),
-                  kernels.config.P_NORM_THRESHOLD)[0]
-        assert st == 2                              # constant window
 
 
 def test_fused_tier_profile_matches_profile_summary(spark):

@@ -22,9 +22,19 @@ kernel (``c_*`` rows, over the ``kernels._c_source`` the plan builds
 once per series; null when the kernel is not loaded) on the same tiles;
 best of 3, pairs/s.
 
+``--docs`` times the per-document profile summary instead: the
+compiled-kernel docs of ``perfbench/gen.make_docs(1, 10000)`` at m=25,
+once through the batch entry (``cnative.summary_batch``: one float64
+cast and one call for the whole batch) and once through the per-doc
+loop (one float64 copy, one ``cnative.mp_top1_self_int`` call and the
+numpy ``kernels._top1`` epilogue plus argmin/argmax per doc);
+interleaved, best of 3, pairs/s.  Docs the kernel declines are left
+out of both.
+
 Usage::
 
-    python tools/kernel_microbench.py [--n 8000] [--tile] [--out FILE]
+    python tools/kernel_microbench.py [--n 8000] [--tile] [--docs]
+        [--out FILE]
 
 Prints one JSON line; ``--out`` also writes it to FILE.
 """
@@ -114,8 +124,63 @@ def tile_rates(tile: int = 8192, m: int = 25) -> dict:
             "unit": "M pairs/s single-thread", "rows": rows}
 
 
+def doc_rates(n_docs: int = 10000, m: int = 25) -> dict:
+    """Best-of-3 pairs/s of the batch summary entry against the per-doc
+    kernel loop, interleaved, over the docs the kernel runs."""
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import gen
+
+    d = gen.make_docs(1, n_docs)
+    ez, thr = kernels.excl_zone(m), kernels.config.P_NORM_THRESHOLD
+    status = cnative.summary_batch(d.tokens.astype(np.float64), d.offsets,
+                                   m, ez, thr)[0]
+    n_tok = np.diff(d.offsets)
+    run = (n_tok >= 2 * m) & (status == 0)
+    off = np.concatenate([[0], np.cumsum(n_tok[run])]).astype(np.int64)
+    flat = np.concatenate([d.tokens[d.offsets[r]:d.offsets[r + 1]]
+                           for r in np.flatnonzero(run)])
+    l = n_tok[run] - m + 1
+    pairs = float((l * (l - 1) / 2).sum())
+
+    def batch():
+        cnative.summary_batch(flat.astype(np.float64), off, m, ez, thr)
+
+    def per_doc():
+        out = []
+        for r in range(len(off) - 1):
+            T = flat[off[r]:off[r + 1]].astype(np.float64)
+            _, pr, ir, pl, il = cnative.mp_top1_self_int(T, m, ez, thr)
+            P0, I0 = kernels._top1(pl, pr, il, ir,
+                                   lambda x: np.sqrt(x + 2.0 * m))
+            finite = np.isfinite(P0)
+            i = int(np.argmin(np.where(finite, P0, np.inf)))
+            out.append((P0[i], I0[i],
+                        P0[int(np.argmax(np.where(finite, P0, -np.inf)))]))
+
+    best = {"batch": float("inf"), "per_doc": float("inf")}
+    for _ in range(3):
+        for name, f in (("batch", batch), ("per_doc", per_doc)):
+            t0 = time.perf_counter()
+            f()
+            best[name] = min(best[name], time.perf_counter() - t0)
+    return {"metric": "profile_summary_docs", "docs": int(run.sum()),
+            "m": m, "unit": "M pairs/s single-thread",
+            "rows": {k: {"s": round(v, 3), "pairs": pairs,
+                         "mpairs_s": round(pairs / v / 1e6, 1)}
+                     for k, v in best.items()}}
+
+
 def main() -> None:
     args = sys.argv[1:]
+    if "--docs" in args:
+        if cnative.load() is None:
+            sys.exit(f"--docs needs the compiled kernel: {cnative.status()}")
+        probe_before = mem_probe_gbs()
+        out = doc_rates()
+        out["mem_probe_gbs_before"] = probe_before
+        out["mem_probe_gbs_after"] = mem_probe_gbs()
+        _emit(out, args)
+        return
     if "--tile" in args:
         probe_before = mem_probe_gbs()
         out = tile_rates()
