@@ -494,17 +494,19 @@ def mueen_calculate_distance_profile(Q: np.ndarray,
 ONE_TILE_CELLS = 65536
 
 
-#: the row operand of every tile GEMM is padded with zero rows to a
-#: multiple of this, the column operand to at least 2 rows.  OpenBLAS
-#: sums a cell of a call's trailing partial row panel (and of each
-#: thread's share of a threaded call) in a different order than a cell
-#: of a full panel, and numpy sends a 1-row or 1-column product to
-#: gemv/dot; without the padding a cell's value would depend on the tile
-#: geometry, so a tiled plan could disagree with the single-task sweep
-#: in the last ULP and flip a near-tie.  Observed bit-identical across
-#: tile shapes, offsets and 1 vs 2 BLAS threads for m <= 256 (an
-#: OpenBLAS 0.3.23 build); a threaded call with m > 256 splits the inner
-#: dimension differently.
+#: both operands of every tile GEMM are padded with zero rows to whole
+#: panels of this many rows, the column operand to at least two panels.
+#: OpenBLAS sums a cell of a partial panel in a different order than a
+#: cell of a full panel, and numpy sends a 1-row or 1-column product to
+#: gemv/dot.  Two shapes were seen to disagree with the full-square
+#: product on OpenBLAS 0.3.23's SapphireRapids core (a DYNAMIC_ARCH
+#: build), at 1 and 2 threads: a trailing partial column panel, and a
+#: 32 x 32 product with an inner dimension of 32 or more.  Without the
+#: padding a cell's value would depend on the tile geometry, so a tiled
+#: plan could disagree with the single-task sweep in the last ULP and
+#: flip a near-tie.  Observed bit-identical across tile shapes, offsets
+#: and 1 vs 2 BLAS threads for m <= 256; a threaded call with m > 256
+#: splits the inner dimension differently.
 _GEMM_ROWS = 32
 
 
@@ -534,18 +536,23 @@ class _TileSource:
     @staticmethod
     def _operand(W, lo, hi, pad):
         """Contiguous ``W[lo:hi]`` plus ``pad`` trailing zero rows (BLAS
-        GEMM on strided sliding-window views is ~10x slower)."""
+        GEMM on strided sliding-window views is ~10x slower): a row
+        operand takes ``_GEMM_ROWS - 1`` of them, a column operand ``2 *
+        _GEMM_ROWS - 1``, so :meth:`_gemm` can cut whole panels at any
+        offset."""
         out = np.zeros((hi - lo + pad, W.shape[1]))
         out[:hi - lo] = W[lo:hi]
         return out
 
     def _gemm(self, i0, i1, j0, j1):
-        """``Ax[i0:i1] @ Bx[j0:j1].T`` (local offsets), shaped per
-        :data:`_GEMM_ROWS` so every cell's value is independent of the
-        tile geometry."""
+        """``Ax[i0:i1] @ Bx[j0:j1].T`` (local offsets), run on whole
+        :data:`_GEMM_ROWS` panels of both operands — at least two of the
+        column operand, so the product is never 32 x 32 — so every
+        cell's value is independent of the tile geometry."""
         nr, nc = i1 - i0, j1 - j0
         X = (self._Ax[i0:i0 + -(-nr // _GEMM_ROWS) * _GEMM_ROWS]
-             @ self._Bx[j0:j0 + max(nc, 2)].T)
+             @ self._Bx[j0:j0 + max(-(-nc // _GEMM_ROWS), 2)
+                        * _GEMM_ROWS].T)
         return X[:nr, :nc]
 
     def xdist(self, a0, a1, b0, b1):
@@ -588,7 +595,7 @@ class _QTProvider(_TileSource):
         self._Ax, mu_a = self._side(TA, muA, sigA, self.r0, self.r1,
                                     -2.0, _GEMM_ROWS - 1)
         self._Bx, self._mu_b = self._side(TB, muB, sigB, self.c0, self.c1,
-                                          1.0, 1)
+                                          1.0, 2 * _GEMM_ROWS - 1)
         self._mu_a = mu_a[:, None]
         self._sig_a = sigA[self.r0:self.r1, None]
         self._sig_b = sigB[self.c0:self.c1]
@@ -668,7 +675,8 @@ class _PNormSource(_TileSource):
         if p == 2.0:
             self._Ax = self._operand(W(TA, m), self.r0, self.r1,
                                      _GEMM_ROWS - 1)
-            self._Bx = self._operand(W(TB, m), self.c0, self.c1, 1)
+            self._Bx = self._operand(W(TB, m), self.c0, self.c1,
+                                     2 * _GEMM_ROWS - 1)
             self._a2 = a2[self.r0:self.r1, None]
             self._b2 = b2[self.c0:self.c1]
         else:

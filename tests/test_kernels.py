@@ -854,3 +854,30 @@ def test_tile_source_geometry_independent():
             for src in (make(None, None), make((a0, a1), (b0, b1))):
                 npt.assert_array_equal(src.xdist(a0, a1, b0, b1),
                                        full[a0:a1, b0:b1])
+
+
+@pytest.mark.parametrize("tile", [(0, 32, 0, 32), (5, 30, 200, 222),
+                                  (300, 332, 97, 129)])
+@pytest.mark.parametrize("normalize", [True, False])
+@pytest.mark.parametrize("m", [32, 64, 128])
+def test_tile_source_small_tiles_match_full_square(m, normalize, tile):
+    """Tiles of at most 32 x 32 cells, whose GEMM would be one 32 x 32
+    product with an inner dimension of m >= 32 if only whole row panels
+    were cut, still match the full-square product bit for bit."""
+    rng = np.random.default_rng(11)
+    T = rng.uniform(-100, 100, 700)
+    T[300:340] = T[100:140]
+    l = len(T) - m + 1
+    if normalize:
+        prep = kernels.preprocess(T, m)
+        make = lambda rows, cols: kernels._QTProvider(  # noqa: E731
+            prep, prep, m, rows, cols)
+    else:
+        prep = kernels._preprocess_abs(T, m)
+        make = lambda rows, cols: kernels._PNormSource(  # noqa: E731
+            prep, prep, m, 2.0, rows, cols)
+    full = make(None, None).xdist(0, l, 0, l)
+    a0, a1, b0, b1 = tile
+    for src in (make(None, None), make((a0, a1), (b0, b1))):
+        npt.assert_array_equal(src.xdist(a0, a1, b0, b1),
+                               full[a0:a1, b0:b1])
