@@ -18,9 +18,11 @@ mass/mass_absolute  operators.mass / kernels.mass, kernels.mass_absolute
 stumpi / aampi      streaming.StumpiState (egress=True; top-k via k=,
                     reference egress indexing via absolute_indices=) /
                     streaming.GrowingStumpiState (egress=False, absolute
-                    indices, top-k) / streaming.floss.AampiState
-                    (+ streaming.stumpi_stream Structured-Streaming
-                    wiring)
+                    indices, top-k) / streaming.floss.AampiState /
+                    streaming.floss.GrowingAampiState (any p): one
+                    incremental state, one matrix-vector product per
+                    appended point, no recurrence (+ streaming.
+                    stumpi_stream Structured-Streaming wiring)
 scrump/prescrump    anytime.Scrump / anytime.prescrump;
 (scraamp twins)     operators.discovery.scrump (DataFrame)
 mstump / mstumped   anytime.multi_matrix_profile (maamp with
@@ -40,7 +42,8 @@ mpdist / mpdisted   mining.mpdist; operators.discovery.mpdist_pairs;
                     tiled AB-joins + Catalyst k-th-smallest)
                     (mining.mpdist(normalize=False) = aampdist)
 fluss / floss       mining.fluss (cac/rea); operators.discovery.fluss;
-                    streaming.floss.FlossState (streaming)
+                    streaming.floss.FlossState (streaming right
+                    profile on the same incremental state)
 ostinato(ed)        mining.ostinato; operators.discovery.ostinato
 snippets            mining.snippets; operators.discovery.snippets
 atsc / allc         mining.atsc / mining.allc;

@@ -7,15 +7,17 @@ recurrence, so the profile carries no recurrence drift and a block's
 result does not depend on the blocking.  :func:`window_stats` checks a
 series once and computes the stats every block of it reads;
 :func:`top1_block` runs one block (``kernels._CSource``, behind
-``kernels._top1_sweep``, for AB-joins and the long-series tiles);
+``kernels._top1_sweep``: the whole square of a self-join or AB-join in
+``kernels.matrix_profile``, and the long-series tiles);
 :func:`mp_top1_self_int` is the whole self-join of one series in one
-call (``kernels._mp_top1_c``, the route of ``kernels.matrix_profile``);
-:func:`summary_batch` is the same self-join for every document of a
-flat Arrow batch, reduced to its motif/discord summary in the same call
-(``operators.profile._flat_profile_summary``); :func:`sliding_stats_int32`
-is the one-pass sliding-window stats of a flat int32 batch.  A series
-the kernel declines runs the numpy GEMM tile sweep, which
-``tests/test_kernels.py`` holds to within 1e-8 of the kernel.
+call, kept as the benchmark's per-document probe and as a test
+reference; :func:`summary_batch` is the same self-join for every
+document of a flat Arrow batch, reduced to its motif/discord summary in
+the same call (``operators.profile._flat_profile_summary``);
+:func:`sliding_stats_int32` is the one-pass sliding-window stats of a
+flat int32 batch.  A series the kernel declines runs the numpy GEMM
+tile sweep, which ``tests/test_kernels.py`` holds to within 1e-8 of the
+kernel.
 
 The shared object is compiled lazily on first use with ``-march=native``
 and cached under ``$STUMPY_SPARK_CKERNEL_DIR`` (default
@@ -118,12 +120,12 @@ def _bind(lib):
     fn._sliding_stats = ss
     ws = lib.mp_window_stats
     ws.restype = ctypes.c_int
-    ws.argtypes = [dp, ctypes.c_int64, ctypes.c_int64, dp]
+    ws.argtypes = [vp, ctypes.c_int64, ctypes.c_int64, vp]
     fn._window_stats = ws
     blk = lib.mp_top1_block
     blk.restype = None
-    blk.argtypes = [dp, dp, ctypes.c_int64, dp, dp, ctypes.c_int64,
-                    *[ctypes.c_int64] * 6, ctypes.c_double, dp, lp, dp, lp]
+    blk.argtypes = [vp, vp, ctypes.c_int64, vp, vp, ctypes.c_int64,
+                    *[ctypes.c_int64] * 6, ctypes.c_double, *[vp] * 4]
     fn._block = blk
     sb = lib.mp_summary_batch
     sb.restype = None
@@ -212,9 +214,7 @@ def window_stats(T, m: int):
         return None
     l = max(T.shape[0] - m + 1, 0)
     st = np.empty((4, l))
-    dp = ctypes.POINTER(ctypes.c_double)
-    status = fn._window_stats(T.ctypes.data_as(dp), T.shape[0], m,
-                              st.ctypes.data_as(dp))
+    status = fn._window_stats(T.ctypes.data, T.shape[0], m, st.ctypes.data)
     return status, st
 
 
@@ -242,18 +242,14 @@ def top1_block(A, sa, B, sb, m: int, r0: int, r1: int, c0: int, c1: int,
                          f"series of {la} x {lb} windows, or stats or "
                          f"series not contiguous float64")
     fn = load()
-    pr = np.empty(r1 - r0)
-    ir = np.empty(r1 - r0, dtype=np.int64)
-    pl = np.empty(c1 - c0)
-    il = np.empty(c1 - c0, dtype=np.int64)
-    dp = ctypes.POINTER(ctypes.c_double)
-    lp = ctypes.POINTER(ctypes.c_int64)
-    fn._block(A.ctypes.data_as(dp), sa.ctypes.data_as(dp), A.shape[0],
-              B.ctypes.data_as(dp), sb.ctypes.data_as(dp), B.shape[0], m,
-              r0, r1, c0, c1, ez, p_norm_threshold,
-              pr.ctypes.data_as(dp), ir.ctypes.data_as(lp),
-              pl.ctypes.data_as(dp), il.ctypes.data_as(lp))
-    return pr, ir, pl, il
+    out = (np.empty(r1 - r0), np.empty(r1 - r0, dtype=np.int64),
+           np.empty(c1 - c0), np.empty(c1 - c0, dtype=np.int64))
+    # raw addresses, each taken once: a self-join passes one series twice
+    a, s = A.ctypes.data, sa.ctypes.data
+    b, t = (a, s) if B is A and sb is sa else (B.ctypes.data, sb.ctypes.data)
+    fn._block(a, s, A.shape[0], b, t, B.shape[0], m, r0, r1, c0, c1, ez,
+              p_norm_threshold, *[x.ctypes.data for x in out])
+    return out
 
 
 def summary_batch(vals, off, m: int, ez: int, p_norm_threshold: float):

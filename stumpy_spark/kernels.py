@@ -21,19 +21,19 @@ close over.  Semantics reproduce the reference's numerical contracts
 Every numpy distance except the folded :class:`_QTProvider` tile,
 :func:`idx_to_mp` and :func:`mueen_calculate_distance_profile` comes
 from those three routines: ``mass``, ``mass_absolute``,
-``mass_distance_matrix``, the Pearson and p-norm tiles, and the anytime
-and streaming states of :mod:`stumpy_spark.anytime` and
-:mod:`stumpy_spark.streaming`.  Everything is vectorized or BLAS-backed;
-no per-element Python loops in any hot path.  Implementations are
-written from scratch against the documented semantics — this is not a
-copy of the reference's numba kernels.  The numpy matrix profiles
-compute blocked GEMM dot-product tiles, the right shape for a columnar
-Arrow batch.  For batch profiles the reference's
-diagonal recurrence (an O(1) covariance update per cell) exists only as
-the compiled kernel of :mod:`stumpy_spark.cnative`, which takes only
-top-1 self-joins and AB-joins of integer series (whole, or one block at
-a time behind :func:`_top1_sweep`), where every partial dot product is
-an exact float64 integer.
+``mass_distance_matrix``, the Pearson and p-norm tiles, the anytime
+states of :mod:`stumpy_spark.anytime` and the one incremental state of
+:mod:`stumpy_spark.streaming` (one matrix-vector product per appended
+point).  Everything is vectorized or BLAS-backed; no per-element Python
+loops in any hot path.  Implementations are written from scratch
+against the documented semantics — this is not a copy of the
+reference's numba kernels.  The numpy matrix profiles compute blocked
+GEMM dot-product tiles, the right shape for a columnar Arrow batch.
+The reference's diagonal recurrence (an O(1) covariance update per
+cell) exists only as the compiled kernel of :mod:`stumpy_spark.cnative`,
+which takes only top-1 self-joins and AB-joins of integer series, one
+block at a time behind :func:`_top1_sweep`, where every partial dot
+product is an exact float64 integer.
 """
 
 from __future__ import annotations
@@ -785,8 +785,8 @@ def _c_source(T_A, m, T_B=None):
     """A :class:`_CSource` over ``T_A`` (and ``T_B`` for an AB-join), or
     None when the compiled kernel is unavailable or declines a series:
     non-integral, non-finite or over-magnitude values, a constant
-    window, shorter than ``m`` — the :func:`_mp_top1_c` rule, decided
-    once per series so every block of it takes the same route."""
+    window, shorter than ``m`` — decided once per series, so every
+    block of it takes the same route."""
     from . import cnative
 
     sides = []
@@ -907,13 +907,13 @@ def _top1_sweep(src, r0, r1, c0, c1, ez):
         return tuple(x.reshape(src.lead + x.shape[1:]) for x in arrays)
 
     dist = src.dist
+    if diag:
+        return out(*_top1(pl, pr, il, ir, dist), dist(pl), il,
+                   dist(pr), ir), None
     none_p = np.full((L, nr), np.inf)
     none_i = np.full((L, nr), -1, dtype=np.int64)
     if not self_join:
         return out(dist(pr), ir, none_p, none_i, none_p, none_i), None
-    if diag:
-        return out(*_top1(pl, pr, il, ir, dist), dist(pl), il,
-                   dist(pr), ir), None
     PR, PL = dist(pr), dist(pl)
     none_pc = np.full((L, nc), np.inf)
     none_ic = np.full((L, nc), -1, dtype=np.int64)
@@ -955,33 +955,6 @@ def _topk_rows(src, k, ez, block_rows, left_right):
     return P, I, IL, IR, PL, PR
 
 
-def _mp_top1_c(T: np.ndarray, m: int):
-    """Top-1 z-norm self-join profile from the compiled kernel, or None
-    when it is unavailable or declines the series (non-integral,
-    non-finite or over-magnitude values, a constant window).
-
-    The kernel returns its left/right running minima in the shifted
-    ``D^2 - 2m`` space; the epilogue maps them to ``P0``/``I0`` (l,)
-    by the :func:`_top1` tie rule.  Returns ``(P, I, IL, IR, PL, PR)``
-    with P/I of shape (l, 1) as :func:`matrix_profile` returns them."""
-    from . import cnative
-
-    T = np.ascontiguousarray(T, dtype=np.float64)
-    if T.shape[0] < m:
-        return None
-    res = cnative.mp_top1_self_int(T, m, excl_zone(m),
-                                   config.P_NORM_THRESHOLD)
-    if res is None or res[0] != 0:
-        return None
-    _, pr, ir, pl, il = res
-
-    def dist(x):
-        return np.sqrt(x + 2.0 * m)
-
-    P0, I0 = _top1(pl, pr, il, ir, dist)
-    return P0[:, None], I0[:, None], il, ir, dist(pl), dist(pr)
-
-
 def matrix_profile(
     T_A: np.ndarray,
     m: int,
@@ -1001,9 +974,9 @@ def matrix_profile(
     wins (all exact and memory-bounded):
 
     1. the compiled diagonal-STOMP kernel: top-1 profile of integer
-       series without constant windows or a constant hook — a
-       self-join by :func:`_mp_top1_c` in one kernel call, an AB-join
-       by :func:`_top1_sweep` over a :class:`_CSource`;
+       series without constant windows or a constant hook, by
+       :func:`_top1_sweep` over a :class:`_CSource` (one block, the
+       whole square);
     2. the GEMM tile sweep (:func:`_top1_sweep` over a
        :class:`_QTProvider`): any other top-1 profile;
     3. GEMM row blocks of ``block_rows`` with a tie-aware top-k
@@ -1026,12 +999,7 @@ def matrix_profile(
     src = None
     if (k == 1 and T_A_subseq_isconstant is None
             and T_B_subseq_isconstant is None):
-        if self_join:
-            res = _mp_top1_c(T_A, m)
-            if res is not None:
-                return res if return_left_right_P else res[:4]
-        else:
-            src = _c_source(T_A, m, T_B)
+        src = _c_source(T_A, m, T_B)
     if src is None:
         prep_A = preprocess(np.asarray(T_A, np.float64), m,
                             T_A_subseq_isconstant)

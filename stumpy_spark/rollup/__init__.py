@@ -1,5 +1,5 @@
 from .tiers import (  # noqa: F401
-    per_sequence_stats, rollup_tier, cascade, TIER_SECONDS,
+    rollup_tier, cascade, TIER_SECONDS,
 )
 from .gapfill import gapfill  # noqa: F401
 from .sessions import sessionize, streaming_sessionize  # noqa: F401

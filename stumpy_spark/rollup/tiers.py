@@ -3,8 +3,9 @@
 The engine's rollup contract (BASELINE.json north_rule):
 
 - **raw** tier: one row per sequence with its per-sequence kernel stats
-  (:func:`per_sequence_stats` — integer-exact sliding-window stats from
-  :mod:`stumpy_spark.operators.profile`).
+  (:func:`per_sequence_stats_fused` — integer-exact sliding-window stats
+  of :mod:`stumpy_spark.operators.profile`, computed in one mapInArrow
+  pass that carries ``source``/``event_ts`` through, no join).
 - each higher tier **re-aggregates the tier below it** (never the raw data):
   counts/sums add, mins/mins, maxs/maxs — the compositional set, so a 1d
   point is bit-identical whether computed from raw or from 1h.  Means are
@@ -30,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.profile import sliding_stats
 
 TIER_SECONDS = {"raw": 1, "1m": 60, "1h": 3600, "1d": 86400}
 _TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
@@ -66,27 +66,12 @@ def _aggs_for(df: DataFrame):
     return aggs
 
 
-def per_sequence_stats(df: DataFrame, m: int = 25) -> DataFrame:
-    """Raw tier: tokseq rows joined with their sliding-stat summaries.
-
-    The kernel output joins back on doc_id; both sides keep their original
-    partitioning and the join is a cheap shuffle on the (high-cardinality,
-    unskewed) doc_id.  At 10^12 scale this would instead be a single
-    mapInArrow pass emitting the combined row — provided here as the
-    default ``fused=True`` path.
-    """
-    stats = sliding_stats(df, m)
-    base = df.select("doc_id", "source", "event_ts", "n_tok")
-    return base.join(stats.drop("n_windows"), "doc_id")
-
-
 def per_sequence_stats_fused(df: DataFrame, m: int = 25,
                              include_profile: bool = False) -> DataFrame:
     """Zero-shuffle raw tier: carry source/event_ts through the kernel UDF.
 
-    Equivalent to :func:`per_sequence_stats` but emits the combined row in
-    one mapInArrow pass over the batch's flat tokens — the 100 TB-scale
-    default (no join, no shuffle).
+    Emits the tokseq row's keys with its sliding-window stats in one
+    mapInArrow pass over the batch's flat tokens (no join, no shuffle).
 
     ``include_profile=True`` additionally carries the top-1 matrix-profile
     min/max per sequence (FIXTURES.md F3's per-sequence kernel outputs)

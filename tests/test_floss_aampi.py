@@ -76,7 +76,7 @@ def test_floss_right_profile_correct():
         l = len(T) - m + 1
         D = naive.mass(T[-m:], T, query_idx=l - 1)
         PR = np.append(PR[1:], np.inf)
-        IR = np.append(IR[1:] - 1, -1)
+        IR = np.append(np.where(IR[1:] >= 0, IR[1:] - 1, -1), -1)
         improved = D[:l - 1] < PR[:l - 1]
         PR[:l - 1] = np.where(improved, D[:l - 1], PR[:l - 1])
         IR[:l - 1] = np.where(improved, l - 1, IR[:l - 1])
@@ -187,7 +187,7 @@ def test_floss_nonfinite_append_recovers():
         l = len(T) - m + 1
         D = naive.mass(T[-m:], T, query_idx=l - 1)
         PR = np.append(PR[1:], np.inf)
-        IR = np.append(IR[1:] - 1, -1)
+        IR = np.append(np.where(IR[1:] >= 0, IR[1:] - 1, -1), -1)
         improved = D[:l - 1] < PR[:l - 1]
         PR[:l - 1] = np.where(improved, D[:l - 1], PR[:l - 1])
         IR[:l - 1] = np.where(improved, l - 1, IR[:l - 1])
@@ -215,3 +215,27 @@ def test_aampi_mp_resume_equals_cold_init():
         warm.update(v)
     npt.assert_array_equal(cold.P, warm.P)
     npt.assert_array_equal(cold.I, warm.I)
+
+
+def test_aampi_state_roundtrip_across_nan():
+    """The stream state's to_tuple/from_tuple mid-stream, across a NaN
+    append, on an offset float series (a nonzero integer shift): the
+    rehydrated state must stay bit-identical to the live one through
+    more updates than the window holds (both buffers compact, at
+    different appends)."""
+    rs = np.random.RandomState(43)
+    T = rs.uniform(-10, 10, 30) + 1e3
+    st = AampiState(T, 4)
+    for v in (1.005e3, np.nan, 998.5):
+        st.update(v)
+    st2 = AampiState.from_tuple(st.to_tuple())
+    npt.assert_array_equal(st.P_, st2.P_)
+    npt.assert_array_equal(st.I_, st2.I_)
+    stream = rs.uniform(-10, 10, 45) + 1e3
+    stream[[2, 10]] = np.nan
+    for step, v in enumerate(stream):
+        st.update(v)
+        st2.update(v)
+        npt.assert_array_equal(st.P_, st2.P_, err_msg=f"step {step}")
+        npt.assert_array_equal(st.I_, st2.I_, err_msg=f"step {step}")
+    assert np.isfinite(st.P_).all()

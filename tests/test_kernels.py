@@ -387,9 +387,9 @@ def test_qt_recurrence_gates():
                 (2.0 ** 24 - np.arange(1100.0), 1024)]  # m*max^2 > 2^52
     ramp = np.arange(300.0)
     for T, m in declined:
-        assert kernels._mp_top1_c(T, m) is None
+        assert kernels._c_source(T, m) is None
     loaded = cnative.load() is not None
-    assert (kernels._mp_top1_c(ramp, 256) is not None) == loaded
+    assert (kernels._c_source(ramp, 256) is not None) == loaded
     if loaded:
         # kernel status codes: 1 = ineligible, 0 = done
         def status(T, m):
@@ -552,10 +552,10 @@ def test_ckernel_parity_with_sweep():
             i0 = int(rng.integers(0, n - 2 * m))
             j0 = int(rng.integers(0, n - m))
             T[j0:j0 + m] = T[i0:i0 + m]
-        got = kernels._mp_top1_c(T, m)
-        if got is None:              # constant window -> fallback
+        if kernels._c_source(T, m) is None:  # constant window -> fallback
             continue
-        P, I, IL, IR, PL, PR = got
+        P, I, IL, IR, PL, PR = kernels.matrix_profile(
+            T, m, return_left_right_P=True)
         ref = _gemm_top1_self(T, m)
         for a, b in zip((P, PL, PR), (ref[0], ref[4], ref[5])):
             a, b = np.ravel(a), np.ravel(b)
@@ -620,12 +620,12 @@ def test_ckernel_fallback_gates():
     from stumpy_spark import cnative, kernels
 
     rs = np.random.RandomState(3)
-    assert kernels._mp_top1_c(rs.normal(size=100), 8) is None
-    assert kernels._mp_top1_c(np.ones(100), 8) is None
+    assert kernels._c_source(rs.normal(size=100), 8) is None
+    assert kernels._c_source(np.ones(100), 8) is None
     bad = rs.randint(0, 50, 100).astype(float)
     bad[7] = np.inf
-    assert kernels._mp_top1_c(bad, 8) is None
-    assert kernels._mp_top1_c(np.full(100, 2.0 ** 26), 8) is None
+    assert kernels._c_source(bad, 8) is None
+    assert kernels._c_source(np.full(100, 2.0 ** 26), 8) is None
     # hook forces the numpy path inside matrix_profile (C path is gated
     # on T_subseq_isconstant is None)
     T = rs.randint(0, 1000, 400).astype(float)

@@ -2,9 +2,10 @@
 
 Measures self-join throughput (M pair-distances/s) across window sizes
 for the two routes of a top-1 z-norm self-join — the compiled
-diagonal-STOMP kernel (``kernels._mp_top1_c``) and the numpy GEMM tile
-sweep (``kernels._top1_sweep`` over a ``kernels._QTProvider``, including
-its preprocessing) — on an integer series of the workload's token shape.
+diagonal-STOMP kernel and the numpy GEMM tile sweep, both through
+``kernels._top1_sweep`` (over a ``kernels._c_source`` or a
+``kernels._QTProvider``, each including its source build) — on an
+integer series of the workload's token shape.
 The C column is null when the compiled kernel is not loaded.
 
 Interleaved A/B (route alternates within each m) so host DRAM-steal
@@ -58,14 +59,13 @@ from bench import mem_probe_gbs  # noqa: E402
 from stumpy_spark import cnative, kernels  # noqa: E402
 
 
-def _sweep(T: np.ndarray, m: int):
+def _sweep_source(T: np.ndarray, m: int):
     prep = kernels.preprocess(T, m)
-    src = kernels._QTProvider(prep, prep, m)
-    return kernels._top1_sweep(src, 0, src.r1, 0, src.c1,
-                               kernels.excl_zone(m))
+    return kernels._QTProvider(prep, prep, m)
 
 
-ROUTES = {"c": kernels._mp_top1_c, "sweep": _sweep}
+#: each route's tile-distance source, built inside the timed region
+ROUTES = {"c": kernels._c_source, "sweep": _sweep_source}
 
 
 def run_route(T: np.ndarray, m: int, route: str) -> float:
@@ -75,7 +75,8 @@ def run_route(T: np.ndarray, m: int, route: str) -> float:
     best = float("inf")
     for _ in range(2):
         t0 = time.perf_counter()
-        ROUTES[route](T, m)
+        src = ROUTES[route](T, m)
+        kernels._top1_sweep(src, 0, src.r1, 0, src.c1, kernels.excl_zone(m))
         best = min(best, time.perf_counter() - t0)
     return pairs / best / 1e6
 
