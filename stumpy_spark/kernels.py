@@ -269,7 +269,9 @@ def sliding_dot_product(Q: np.ndarray, T: np.ndarray) -> np.ndarray:
     """QT[i] = Q . T[i:i+m] for all i (contract of core.py:652-715).
 
     Picks the FFT path for large m (the reference's O(n log n) vs O(nm)
-    heuristic, SURVEY §4 row 2), else a strided BLAS matvec.
+    heuristic, SURVEY §4 row 2), else a direct ``np.correlate`` (numpy
+    cannot hand the overlapping window view to BLAS, so a window matvec
+    runs its slow generic loop).
     """
     Q = np.asarray(Q, dtype=np.float64)
     T = np.asarray(T, dtype=np.float64)
@@ -277,8 +279,9 @@ def sliding_dot_product(Q: np.ndarray, T: np.ndarray) -> np.ndarray:
     n = T.shape[0]
     if m > 128 and n > 4096:
         return _sliding_dot_product_fft(Q, T)
-    windows = np.lib.stride_tricks.sliding_window_view(T, m)
-    return windows @ Q
+    if m > n:   # np.correlate would swap its operands
+        raise ValueError(f"window {m} longer than series {n}")
+    return np.correlate(T, Q, "valid")
 
 
 def _sliding_dot_product_fft(Q: np.ndarray, T: np.ndarray) -> np.ndarray:

@@ -16,7 +16,7 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: default horizons (seconds) per tier — raw ages out fastest
@@ -26,6 +26,19 @@ DEFAULT_HORIZONS = {
     "1h": 90 * 86400,
     "1d": 3650 * 86400,
 }
+
+
+def observed(obs: Observation, **empty) -> dict:
+    """The metrics of a write that ran ``df.observe(obs, ...)``.
+
+    A write over zero rows has none (Spark plans the empty input away,
+    metrics node included, and ``obs.get`` fails), so it reads as
+    ``empty``.
+    """
+    try:
+        return obs.get
+    except Exception:
+        return empty
 
 
 @dataclass
@@ -38,12 +51,23 @@ class TierStore:
     def path(self) -> str:
         return str(Path(self.root) / self.tier)
 
-    def write(self, df: DataFrame) -> None:
+    def write(self, df: DataFrame, dynamic: bool = False) -> int:
+        """Overwrite the tier with ``df``; returns the rows written.
+
+        ``dynamic`` replaces only the (day, source) partitions ``df``
+        holds, and the others keep their files; the default replaces the
+        whole tier.  Either way the session's overwrite mode is untouched.
+        """
+        obs = Observation()
         (df.withColumn("day", F.to_date("bucket"))
+         .observe(obs, F.count(F.lit(1)).alias("rows"))
          .repartition("day", "source")
          .write.mode("overwrite")
+         .option("partitionOverwriteMode",
+                 "dynamic" if dynamic else "static")
          .partitionBy("day", "source")
          .parquet(self.path))
+        return observed(obs, rows=0)["rows"]
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path).drop("day")

@@ -28,8 +28,10 @@ path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .retention import TierStore
 
 
 TIER_SECONDS = {"raw": 1, "1m": 60, "1h": 3600, "1d": 86400}
@@ -182,6 +184,28 @@ def cascade(raw: DataFrame, salt_buckets: int = 0) -> dict[str, DataFrame]:
     tiers["1h"] = rollup_from_previous(tiers["1m"], "1h")
     tiers["1d"] = rollup_from_previous(tiers["1h"], "1d")
     return tiers
+
+
+def write_tiers(raw: DataFrame, root: str, only: Column | None = None,
+                salt_buckets: int = 0) -> dict[str, int]:
+    """Materialize the cascade under ``root``; returns rows per tier.
+
+    Writes 1m from ``raw``, then 1h from the 1m partitions just written
+    (read back), then 1d from that 1h.  With ``only`` (a condition on
+    ``day``/``source``; ``raw`` then carries ``day``), each tier reads
+    just those partitions and replaces just those; the rest keep their
+    files.  Without it every tier is rewritten whole.
+    """
+    rows = {}
+    for prev, tier in zip([None] + TIER_ORDER, TIER_ORDER):
+        src = raw if prev is None else raw.sparkSession.read.parquet(
+            TierStore(root, prev).path)
+        if only is not None:
+            src = src.where(only)
+        tdf = (rollup_tier(src, tier, salt_buckets) if prev is None
+               else rollup_from_previous(src, tier))
+        rows[tier] = TierStore(root, tier).write(tdf, dynamic=only is not None)
+    return rows
 
 
 def with_read_time_means(tier_df: DataFrame) -> DataFrame:

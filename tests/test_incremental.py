@@ -66,13 +66,39 @@ def test_upsert_idempotent_retry(spark, tmp_path):
     # and re-upserting the tiers from raw yields identical results
     from stumpy_spark.rollup import incremental as INC
     raw_all = spark.read.parquet(str(tmp_path / "raw"))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     for tier, tdf in RT.cascade(raw_all.drop("day")).items():
         part = tdf.withColumn("day", F.to_date("bucket"))
         (part.repartition("day", "source").write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
          .partitionBy("day", "source")
          .parquet(TierStore(root, tier).path))
     for t in ("1m", "1h", "1d"):
         again = _norm(TierStore(root, t).read(spark).toPandas())
         pd.testing.assert_frame_equal(snap[t], again[snap[t].columns],
                                       check_dtype=False)
+
+
+def test_upsert_keeps_session_overwrite_mode(spark, tmp_path):
+    """The upsert's dynamic partition overwrite is an option of its own
+    writes, not a session setting: a later full overwrite in the same
+    session still replaces the whole directory."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    root = str(tmp_path)
+    base = tokseq.tokseq_df(spark, 60, partitions=1)
+    late = tokseq.tokseq_df(spark, 70, partitions=1).where(
+        "doc_id >= 'doc00000060'")
+    raw = RT.per_sequence_stats_fused(base, m=25).withColumn(
+        "day", F.to_date("event_ts"))
+    (raw.write.mode("overwrite").partitionBy("day", "source")
+     .parquet(str(tmp_path / "raw")))
+    RT.write_tiers(raw, root)
+
+    before = spark.conf.get(conf)
+    assert upsert_late_rows(spark, root, late, m=25)["affected"]
+    assert spark.conf.get(conf) == before
+    out = str(tmp_path / "full")
+    for p in (1, 2):
+        (spark.range(1).withColumn("p", F.lit(p)).write.mode("overwrite")
+         .partitionBy("p").parquet(out))
+    assert sorted(x.name for x in tmp_path.joinpath("full").glob("p=*")) \
+        == ["p=2"]

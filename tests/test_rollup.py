@@ -235,9 +235,20 @@ def test_checkpoint_resume(spark, tmp_path):
     assert ran2 == []
     assert len(calls) == 3
     # lineage rows recorded with counts
-    man = manifest.read(spark).toPandas()
+    man = manifest.read().to_pandas()
     assert len(man) == 3
     assert man.row_count.sum() == 120
+
+
+def test_manifest_skips_partial_commit(tmp_path):
+    """A commit interrupted before its rename leaves a hidden partial
+    file, which the manifest does not read."""
+    manifest = CK.Manifest(str(tmp_path / "manifest"))
+    manifest.append("job1", 0, 7, 10, {"rows": 10}, 0.5)
+    (tmp_path / "manifest" / ".commit-partial.parquet").write_bytes(b"PAR1")
+    t = manifest.read()
+    assert t.num_rows == 1
+    assert t.to_pylist()[0]["row_count"] == 10
 
 
 def _tiny_tier(spark, buckets):

@@ -93,6 +93,67 @@ def test_upsert_late_rows_on_job_store(first_run, tmp_path, spark):
         pd.testing.assert_frame_equal(after[t], again[t])
 
 
+def test_run_rollup_empty_slices(spark, tmp_path):
+    """Slices with no rows still commit, with row_count 0; the commits
+    sum to the job's n_docs, and a second call runs no slice."""
+    from pyspark.sql import functions as F
+
+    from stumpy_spark.rollup.checkpoint import Manifest
+    from stumpy_spark.rollup.job import run_rollup
+    from stumpy_spark.sources import tokseq
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    tokseq.tokseq_df(spark, 3, partitions=1).write.parquet(inp)
+    want = {r[0]: r[1] for r in spark.read.parquet(inp).groupBy(
+        F.pmod(F.xxhash64("doc_id"), F.lit(8))).count().collect()}
+    assert len(want) < 8
+    m1 = run_rollup(spark, inp, out, 8, "e")
+    assert m1["slices_run"] == list(range(8)) and m1["n_docs"] == 3
+    man = Manifest(f"{out}/_manifest").read().to_pydict()
+    assert dict(zip(man["slice_id"], man["row_count"])) == \
+        {s: want.get(s, 0) for s in range(8)}
+    assert sum(man["row_count"]) == m1["n_docs"]
+    m2 = run_rollup(spark, inp, out, 8, "e")
+    assert m2["slices_run"] == [] and m2["tier_rows"] == m1["tier_rows"]
+
+
+def test_resume_from_spark_written_manifest(first_run, tmp_path, spark):
+    """A manifest of Spark-written commit-<uuid> directories (the layout
+    of earlier versions) resumes without re-running its slices."""
+    import uuid
+
+    from stumpy_spark.rollup.checkpoint import Manifest
+    from stumpy_spark.rollup.job import run_rollup
+
+    out, m1 = _copy_of(first_run, tmp_path)
+    manifest = Manifest(f"{out}/_manifest")
+    rows = manifest.read().sort_by("slice_id").to_pylist()
+    shutil.rmtree(manifest.path)
+    for row in rows:
+        (spark.createDataFrame([row]).coalesce(1).write
+         .parquet(f"{manifest.path}/commit-{uuid.uuid4().hex}"))
+    assert manifest.read().sort_by("slice_id").to_pylist() == rows
+    m2 = run_rollup(spark, JOB[1], out, 4, "t1")
+    assert m2["slices_run"] == []
+    assert m2["tier_rows"] == m1["tier_rows"]
+
+
+def test_run_rollup_spark_job_count(spark, tmp_path):
+    """A fresh 4-slice rollup of tokseq_sf0.001 runs a fixed number of
+    Spark jobs: the slice fingerprints are one action, and no action
+    exists only to count rows or to commit a manifest row."""
+    from stumpy_spark.rollup.job import run_rollup
+
+    sc = spark.sparkContext
+    group = f"rollup-{tmp_path.name}"
+    sc.setJobGroup(group, "job count")
+    try:
+        run_rollup(spark, JOB[1], str(tmp_path / "out"), 4, "t1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 32
+
+
 def test_package_builds():
     r = subprocess.run([sys.executable, "jobs/rollup_job.py", "--package"],
                        capture_output=True, text=True, cwd=REPO)
