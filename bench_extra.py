@@ -11,12 +11,20 @@ extra instrumentation the optimization round needs:
   query into ``plans/r06/<query>_{before,after}.txt``.
 - ``--kernel``: single-thread kernel microbench on the real sf0.1 doc mix
   (C kernel vs numpy GEMM dispatch), with DRAM probes.
+- ``--worker [N] [ROUNDS]``: the fixed Python-worker cost of one task.  An
+  identity ``mapInArrow`` over N one-row partitions (default 16), run
+  ROUNDS times (default 4); each task reports the Python CPU its worker
+  spent since that worker's previous task ended, the share of it spent
+  in garbage collection, and the zip-archive directory reads
+  (``zipimport._read_directory`` calls) in between.  Quartiles over the
+  tasks of reused workers, plus the CPU of each worker's first task.
 
 Usage::
 
     python bench_extra.py --isolate
     python bench_extra.py --plans plans/r06 --tag after
     python bench_extra.py --kernel
+    python bench_extra.py --worker 16 4
 """
 
 from __future__ import annotations
@@ -158,6 +166,80 @@ def kernel():
     print(json.dumps(out))
 
 
+def _worker_task(batches):
+    """Identity ``mapInArrow`` body that reports its worker's cost since
+    the worker's previous task ended (None on a worker's first task):
+    Python CPU, the part of it spent in garbage collection (the daemon's
+    worker runs ``gc.collect()`` after every task) and zip-archive
+    directory reads."""
+    import gc
+    import time
+    import zipimport
+
+    import pyarrow as pa
+
+    import stumpy_spark  # noqa: F401  (what unpickling an engine UDF does)
+
+    read = zipimport._read_directory
+    if not hasattr(read, "calls"):
+        def counted(archive, _read=read):
+            counted.calls += 1
+            return _read(archive)
+
+        def timed_gc(phase, info):
+            if phase == "start":
+                counted.gc_t0 = time.process_time()
+            else:
+                counted.gc_s += time.process_time() - counted.gc_t0
+
+        counted.calls, counted.gc_s, counted.mark = 0, 0.0, None
+        zipimport._read_directory = read = counted
+        gc.callbacks.append(timed_gc)
+    for _ in batches:
+        pass
+    mark = (time.process_time(), read.gc_s, read.calls)
+    prev, read.mark = read.mark, mark
+    hooked = (zipimport.zipimporter.invalidate_caches.__module__
+              == "stumpy_spark._worker")
+    yield pa.RecordBatch.from_pylist([{
+        "pid": os.getpid(), "hook": hooked,
+        "cpu_s": mark[0] - prev[0] if prev else mark[0],
+        "gc_s": mark[1] - prev[1] if prev else None,
+        "reads": mark[2] - prev[2] if prev else None}])
+
+
+def worker(n: int = 16, rounds: int = 4):
+    import statistics
+
+    spark = _spark()
+    try:
+        df = spark.range(n, numPartitions=n)
+        schema = ("pid long, hook boolean, cpu_s double, gc_s double, "
+                  "reads long")
+        rows = [r for _ in range(rounds)
+                for r in df.mapInArrow(_worker_task, schema).collect()]
+    finally:
+        spark.stop()
+    reused = [r for r in rows if r.reads is not None]
+
+    def quartiles(xs):
+        q = statistics.quantiles(xs, n=4) if len(xs) > 1 else xs * 3
+        return [round(v, 4) for v in q]
+
+    print(json.dumps({
+        "metric": "python_worker_task", "cpus": CPUS, "partitions": n,
+        "rounds": rounds, "tasks": len(rows),
+        "workers": len({r.pid for r in rows}),
+        "hook": all(r.hook for r in rows),
+        "first_task_cpu_s": quartiles([r.cpu_s for r in rows
+                                       if r.reads is None]),
+        "reused_tasks": len(reused),
+        "cpu_per_task_s": quartiles([r.cpu_s for r in reused]),
+        "gc_per_task_s": quartiles([r.gc_s for r in reused]),
+        "rereads_per_task": quartiles([float(r.reads) for r in reused]),
+    }))
+
+
 def main():
     args = sys.argv[1:]
     if args and args[0] == "--isolate":
@@ -168,6 +250,8 @@ def main():
         plans(outdir, tag)
     elif args and args[0] == "--kernel":
         kernel()
+    elif args and args[0] == "--worker":
+        worker(*[int(a) for a in args[1:3]])
     else:
         print(__doc__)
 

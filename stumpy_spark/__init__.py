@@ -82,8 +82,18 @@ functions.textfns.top_tokens (exact per-group heavy hitters),
 functions.codecs (real pure-stdlib PNG + PCM16 WAV codecs) with
 functions.multimodal.decode_features / decode_meta / resize_images
 (mapInPandas media decode; video remains a documented stub).
+
+Importing this package inside a Spark Python worker (every engine UDF's
+unpickling does) installs ``_worker``'s hook once per worker: Spark's
+per-task ``importlib.invalidate_caches()`` then re-reads no unchanged zip
+archive (``pyspark.zip``, ``py4j``, the ``spark-core`` jar), which cost
+0.13-0.26 CPU s per task on a 4-CPU host.  Each worker's first task still
+pays one full re-read, and the saving needs ``spark.python.worker.reuse``
+on (Spark's default); ``session.py`` has the details.
 """
 
-from . import anytime, config, kernels, mining  # noqa: F401
+from . import _worker, anytime, config, kernels, mining  # noqa: F401
+
+_worker.install_in_spark_worker()
 
 __version__ = "0.2.0"

@@ -79,4 +79,4 @@ def upsert_late_rows(spark: SparkSession, root: str, late_df: DataFrame,
     # read as the job does: "slice" is the partition column of its
     # layout, "bucket" a column only its slices carry
     raw = spark.read.parquet(raw_store.path).drop("slice", "bucket")
-    return {"affected": affected, "tiers": RT.write_tiers(raw, root, cond)}
+    return {"affected": affected, "tiers": RT.write_tiers(raw, root, cond)[0]}

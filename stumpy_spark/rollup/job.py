@@ -40,14 +40,16 @@ def run_rollup(spark: SparkSession, input: str, output: str, slices: int,
     df = spark.read.parquet(input)
     raw_path = TierStore(output, "raw").path
 
-    def process(slice_id, sdf):
-        raw = RT.per_sequence_stats_fused(sdf, m=m).withColumn(
+    def raw_of(sdf):
+        return RT.per_sequence_stats_fused(sdf, m=m).withColumn(
             "bucket", F.date_trunc("minute", "event_ts"))
+
+    def process(slice_id, sdf):
         # idempotent slice write: deterministic slice-keyed subdirectory
         # with overwrite — a crash between this write and the manifest
         # commit makes the resumed re-run rewrite the same directory
         # instead of appending duplicate raw rows
-        n = TierStore(raw_path, f"slice={slice_id}").write(raw)
+        n = TierStore(raw_path, f"slice={slice_id}").write(raw_of(sdf))
         return n, {"rows": n}
 
     ran = run_with_checkpoints(
@@ -57,12 +59,13 @@ def run_rollup(spark: SparkSession, input: str, output: str, slices: int,
 
     # "slice" is the partition-discovery column of the slice-keyed layout
     docs = Observation()
-    raw = (spark.read.parquet(raw_path).drop("day", "bucket", "slice")
+    raw = (spark.read.schema(TierStore.schema(raw_of(df), "slice"))
+           .parquet(raw_path).drop("day", "bucket", "slice")
            .observe(docs, F.count(F.lit(1)).alias("n")))
-    tier_rows = RT.write_tiers(raw, output, salt_buckets=salt_buckets)
-    for tier in tier_rows:
-        (compress_tier(TierStore(output, tier).read(spark),
-                       ["n_seq", "sum_n_tok"])
+    tier_rows, stored = RT.write_tiers(raw, output,
+                                       salt_buckets=salt_buckets)
+    for tier, tdf in stored.items():
+        (compress_tier(tdf.drop("day"), ["n_seq", "sum_n_tok"])
          .write.mode("overwrite")
          .parquet(os.path.join(output, f"{tier}_gorilla")))
     return {

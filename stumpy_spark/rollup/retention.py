@@ -18,6 +18,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: default horizons (seconds) per tier — raw ages out fastest
 DEFAULT_HORIZONS = {
@@ -71,6 +72,19 @@ class TierStore:
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path).drop("day")
+
+    @staticmethod
+    def schema(df: DataFrame, *outer: str) -> T.StructType:
+        """The schema ``spark.read.parquet`` gives a store of
+        :meth:`write` ``(df)`` writes nested under the ``outer`` (string)
+        partition directories; reading with it skips Spark's
+        schema-inference job."""
+        data = [T.StructField(f.name, f.dataType) for f in df.schema
+                if f.name not in ("day", "source")]
+        parts = [T.StructField(c, T.StringType()) for c in outer]
+        return T.StructType(data + parts + [
+            T.StructField("day", T.DateType()),
+            T.StructField("source", T.StringType())])
 
     def partitions(self) -> list[str]:
         return sorted(p.name for p in Path(self.path).glob("day=*"))

@@ -187,25 +187,31 @@ def cascade(raw: DataFrame, salt_buckets: int = 0) -> dict[str, DataFrame]:
 
 
 def write_tiers(raw: DataFrame, root: str, only: Column | None = None,
-                salt_buckets: int = 0) -> dict[str, int]:
-    """Materialize the cascade under ``root``; returns rows per tier.
+                salt_buckets: int = 0
+                ) -> tuple[dict[str, int], dict[str, DataFrame]]:
+    """Materialize the cascade under ``root``; returns rows per tier and
+    each tier's store read back (``day`` and ``source`` last).
 
     Writes 1m from ``raw``, then 1h from the 1m partitions just written
     (read back), then 1d from that 1h.  With ``only`` (a condition on
     ``day``/``source``; ``raw`` then carries ``day``), each tier reads
     just those partitions and replaces just those; the rest keep their
-    files.  Without it every tier is rewritten whole.
+    files.  Without it every tier is rewritten whole.  Every read-back
+    takes the schema of the frame that was written, so none runs a
+    schema-inference job.
     """
-    rows = {}
-    for prev, tier in zip([None] + TIER_ORDER, TIER_ORDER):
-        src = raw if prev is None else raw.sparkSession.read.parquet(
-            TierStore(root, prev).path)
+    rows, stored = {}, {}
+    src = raw
+    for tier in TIER_ORDER:
         if only is not None:
             src = src.where(only)
-        tdf = (rollup_tier(src, tier, salt_buckets) if prev is None
+        tdf = (rollup_tier(src, tier, salt_buckets) if tier == "1m"
                else rollup_from_previous(src, tier))
-        rows[tier] = TierStore(root, tier).write(tdf, dynamic=only is not None)
-    return rows
+        store = TierStore(root, tier)
+        rows[tier] = store.write(tdf, dynamic=only is not None)
+        src = stored[tier] = raw.sparkSession.read.schema(
+            TierStore.schema(tdf)).parquet(store.path)
+    return rows, stored
 
 
 def with_read_time_means(tier_df: DataFrame) -> DataFrame:

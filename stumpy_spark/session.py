@@ -4,6 +4,18 @@ Single place where execution knobs live, so bench/tests/driver all run the
 same physical configuration: AQE on (skew-join splitting at 100 TB scale),
 Arrow exchange on (all kernels are pandas/Arrow UDFs), and a bounded Arrow
 batch size so one batch of token arrays never blows executor memory.
+
+Python workers: every Arrow/pandas UDF task starts with a fixed cost in its
+worker before it reads a row.  Spark's ``importlib.invalidate_caches()``
+made each of the worker's 16 zip importers (``pyspark.zip``, ``py4j``, the
+``spark-core`` jar) re-read its archive's directory, 0.13-0.26 CPU s per
+task on a 4-CPU host.  Importing ``stumpy_spark`` in a worker, which
+unpickling any engine UDF does, installs ``stumpy_spark._worker``'s hook:
+an unchanged archive is not re-read, so a reused worker's later tasks pay
+none of it.  Each worker's first task still pays one full re-read (plus
+one read per archive for the hook's stamps).  The hook relies on
+``spark.python.worker.reuse`` staying on (Spark's default); a worker that
+is not reused, or one started without the daemon, gains nothing from it.
 """
 
 from __future__ import annotations

@@ -151,7 +151,7 @@ def test_run_rollup_spark_job_count(spark, tmp_path):
         run_rollup(spark, JOB[1], str(tmp_path / "out"), 4, "t1")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 32
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 26
 
 
 def test_package_builds():
