@@ -58,10 +58,10 @@ def install() -> bool:
     versions nothing is wrapped.  Importers that exist now are read once
     more (once per archive) so that each has a stamp to compare against.
     """
-    cls = zipimport.zipimporter
-    current = getattr(cls, "invalidate_caches", None)
-    if current is None or sys.version_info[:2] not in ((3, 10), (3, 11)):
+    if sys.version_info[:2] not in ((3, 10), (3, 11)):
         return False
+    cls = zipimport.zipimporter
+    current = cls.invalidate_caches
     if current.__module__ != __name__:
         cls.invalidate_caches = _skip_unchanged(current)
         for finder in list(sys.path_importer_cache.values()):
